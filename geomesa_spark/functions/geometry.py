@@ -698,18 +698,6 @@ def line_boundary_points(coords: np.ndarray, ring_offsets: np.ndarray) -> np.nda
     return np.asarray(pts, dtype=np.float64).reshape(-1, 2)
 
 
-def _hole_probes(coords, ring_offsets):
-    """One interior probe point per hole ring (the ring's centroid when it
-    actually lies inside that ring; otherwise skipped — conservative)."""
-    probes = []
-    for ridx in range(1, len(ring_offsets) - 1):
-        ring = coords[ring_offsets[ridx]:ring_offsets[ridx + 1]]
-        cx, cy = polygon_centroid(ring, np.asarray([0, len(ring)]))
-        if bool(points_in_polygon([cx], [cy], ring, np.asarray([0, len(ring)]))[0]):
-            probes.append((cx, cy))
-    return probes
-
-
 def _escape_witness(ca, oa, cb, ob) -> bool:
     """EXACT disproof of "B ⊆ closure(A)" for regions B's boundary never
     enters: True iff some point OUTSIDE closure(A) lies strictly inside
@@ -738,8 +726,11 @@ def _escape_witness(ca, oa, cb, ob) -> bool:
             continue
         mids = (xs[:-1] + xs[1:]) / 2.0
         # interval k (between xs[k], xs[k+1]) has k+1 crossings to its
-        # left: odd ⇒ inside A, even ⇒ outside — take the even ones
-        outside = mids[(np.arange(len(mids)) + 1) % 2 == 0]
+        # left: odd ⇒ inside A, even ⇒ outside — take the even ones.
+        # A zero-width interval (duplicate xs from a doubled or
+        # self-touching edge) has its midpoint ON A's boundary, so it
+        # witnesses nothing
+        outside = mids[((np.arange(len(mids)) + 1) % 2 == 0) & (np.diff(xs) > 0)]
         if len(outside) == 0:
             continue
         cls = classify_points_in_polygon(outside, np.full(len(outside), ym), cb, np.asarray(ob))
@@ -1511,6 +1502,8 @@ def multipolygon_parts(coords: np.ndarray, ring_offsets: np.ndarray) -> list[tup
     parity representation is grouping-agnostic)."""
     nrings = len(ring_offsets) - 1
     rings = [coords[ring_offsets[r]:ring_offsets[r + 1]] for r in range(nrings)]
+    lo = [r.min(axis=0) if len(r) else np.full(2, np.inf) for r in rings]
+    hi = [r.max(axis=0) if len(r) else np.full(2, -np.inf) for r in rings]
     containers: list[list[int]] = [[] for _ in range(nrings)]
     for i in range(nrings):
         # majority vote over the ring's vertices AND edge midpoints
@@ -1523,7 +1516,11 @@ def multipolygon_parts(coords: np.ndarray, ring_offsets: np.ndarray) -> list[tup
         px = np.concatenate([rings[i][:-1, 0], (rings[i][:-1, 0] + rings[i][1:, 0]) / 2.0])
         py = np.concatenate([rings[i][:-1, 1], (rings[i][:-1, 1] + rings[i][1:, 1]) / 2.0])
         for j in range(nrings):
-            if i == j:
+            # a winning vote needs a point strictly inside ring j, hence
+            # inside its bbox: rings with no point there are outside
+            if i == j or not (
+                (px >= lo[j][0]) & (px <= hi[j][0]) & (py >= lo[j][1]) & (py <= hi[j][1])
+            ).any():
                 continue
             off_j = np.asarray([0, len(rings[j])])
             cls = classify_points_in_polygon(px, py, rings[j], off_j)

@@ -1,12 +1,12 @@
-"""Slab-sweep boolean overlay for (MULTI)POLYGON pairs — the
-degenerate-contact fallback of last resort.
+"""Slab-sweep boolean overlay for (MULTI)POLYGON pairs — the primary
+areal path of st_intersection / st_union / st_difference /
+st_symDifference (st_functions._areal_overlay).
 
-The crossing-based kernels (Greiner–Hormann fold, half-plane clips,
-boundary rechaining) refuse inputs whose boundaries interact
-degenerately (partially shared edges, vertex-on-edge chains,
-checkerboard corners). This module computes the boolean by vertical
-trapezoidal decomposition instead, which has NO special cases for
-degeneracy:
+Crossing-based kernels (Greiner–Hormann, half-plane clips, boundary
+rechaining) must special-case boundaries that interact degenerately
+(partially shared edges, vertex-on-edge chains, checkerboard corners).
+This module computes the boolean by vertical trapezoidal decomposition
+instead, which has NO special cases for degeneracy:
 
 1. Cut the plane into vertical slabs at every vertex x of either
    operand plus every proper A×B edge-crossing x. Inside a slab no two
@@ -18,13 +18,19 @@ degeneracy:
    toggle both parities at once. The op's indicator (∩, ∪, \\, Δ) over
    (inA, inB) marks result trapezoids.
 3. The result boundary = edge pieces where the indicator flips across
-   an edge, plus the XOR of left/right vertical coverage at each slab
-   border. Pieces chain into closed rings (chain_closed_rings: every
-   junction must have degree 2 — ambiguity refuses), shells/holes
-   recover by containment parity, and the assembled area must match
-   the trapezoid-accumulated area exactly (1e-9 relative) — the same
+   an edge (a piece going straight on into the next slab extends, so
+   slab cuts add no vertices to straight runs), plus the XOR of
+   left/right vertical coverage at each slab border. Pieces chain into closed
+   rings (chain_closed_rings: every junction must have degree 2;
+   degree-4 crossings go to a planar face walk), shells/holes recover
+   by containment parity, and the assembled area must match the
+   trapezoid-accumulated area exactly (1e-9 relative) — the same
    honest gate the rechainer uses. Wrong answers are structurally
    excluded; failure modes return None.
+
+The result is areal by construction: lower-dimensional contact (the
+shared edge of two touching squares) is invisible here, and the caller
+asks the DE-9IM relate fallback for it.
 
 Cost: O((V + K)·V) per pair with tiny constants — the same
 dimension-table cost class as the GH fold documented in PLANS.md.
@@ -175,7 +181,19 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
             + _crossing_xs(ea, eb)
         )
     )
-    edge_pieces: list = []          # ((x0,ya0),(x1,ya1)) result boundary on edges
+    tagged = [(e, True) for e in ea] + [(e, False) for e in eb]
+    edge_pieces: list = []          # [tail, head] result boundary on edges
+    # a boundary piece that goes straight on from the previous slab's
+    # piece in the same direction — along an edge the whole piece lies
+    # on, or exactly collinear with it — extends that piece instead of
+    # starting a new one, so slab cuts and collinear edge joins leave no
+    # vertices on straight runs. Only a joint no other boundary piece
+    # meets is joined: the ring chaining and the face walk need every
+    # piece split where boundaries touch. Along a shared edge the joint
+    # is computed from that edge on both sides, so the join is exact;
+    # with the region on the same side before and after the joint no
+    # vertical piece ends there
+    ends: dict = {}                 # y at x0 -> [(piece index, region above, edges it lies on)]
     vleft: dict = {}                # border x -> intervals approaching from the left slab
     vright: dict = {}               # border x -> intervals from the right slab
     area = 0.0
@@ -184,21 +202,21 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
         if x1 <= x0:
             continue
         groups: dict = {}
-        for (ex1, ey1, ex2, ey2), is_a in (
-            [(e, True) for e in ea] + [(e, False) for e in eb]
-        ):
+        for k, ((ex1, ey1, ex2, ey2), is_a) in enumerate(tagged):
             lo, hi = (ex1, ex2) if ex1 < ex2 else (ex2, ex1)
             if lo > x0 or hi < x1 or lo == hi:
                 continue  # doesn't cover the slab, or vertical
             s = (ey2 - ey1) / (ex2 - ex1)
             y0 = ey1 + (x0 - ex1) * s
             y1 = ey1 + (x1 - ex1) * s
-            g = groups.setdefault((y0, y1), [0, 0])
+            g = groups.setdefault((y0, y1), [0, 0, []])
             g[0 if is_a else 1] += 1
+            g[2].append(k)
         order = sorted(groups.items(), key=lambda kv: kv[0][0] + kv[0][1])
         in_a = in_b = False
         prev = None  # (y0, y1) of the last group, if status below..above it True
-        for (y0, y1), (na, nb) in order:
+        flips: list = []            # (y0, y1, edge ids, region above) boundary groups
+        for (y0, y1), (na, nb, ids) in order:
             below = ind(in_a, in_b)
             if na % 2:
                 in_a = not in_a
@@ -206,12 +224,7 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
                 in_b = not in_b
             above = ind(in_a, in_b)
             if below != above:
-                # direct the piece with the REGION ON ITS LEFT: region
-                # above a left-to-right edge is on the left
-                if above:
-                    edge_pieces.append(((x0, y0), (x1, y1)))
-                else:
-                    edge_pieces.append(((x1, y1), (x0, y0)))
+                flips.append((y0, y1, ids, above))
             if below and prev is not None:
                 p0, p1 = prev
                 area += (x1 - x0) * ((y0 - p0) + (y1 - p1)) / 2.0
@@ -220,6 +233,35 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
                 if y1 - p1 > tol:
                     vleft.setdefault(x1, []).append((p1, y1))
             prev = (y0, y1) if above else None
+        starts: dict = {}
+        for f in flips:
+            starts[f[0]] = starts.get(f[0], 0) + 1
+        next_ends: dict = {}
+        for y0, y1, ids, above in flips:
+            # direct the piece with the REGION ON ITS LEFT: region above
+            # a left-to-right edge is on the left
+            end = 1 if above else 0  # a run's endpoint at this x0
+            on = set(ids)
+            at = ends.get(y0, ())
+            run = at[0] if len(at) == 1 and starts[y0] == 1 and at[0][1] == above else None
+            if run is not None:
+                if on & run[2]:
+                    on &= run[2]
+                else:
+                    fx, fy = edge_pieces[run[0]][1 - end]
+                    if (x0 - fx) * (y1 - y0) != (y0 - fy) * (x1 - x0):
+                        run = None  # another edge, turning: a real vertex
+            if run is not None:
+                j = run[0]
+                edge_pieces[j][end] = (x1, y1)
+            elif above:
+                j = len(edge_pieces)
+                edge_pieces.append([(x0, y0), (x1, y1)])
+            else:
+                j = len(edge_pieces)
+                edge_pieces.append([(x1, y1), (x0, y0)])
+            next_ends.setdefault(y1, []).append((j, above, on))
+        ends = next_ends
         if in_a or in_b or prev is not None:
             return None  # open parity: numerically inconsistent slab
     pieces = [np.asarray(p, dtype=np.float64) for p in edge_pieces]
@@ -235,6 +277,7 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
         cl = cr = 0
         start = None
         start_left = False
+        last = None  # (start, end, left side) of the last piece emitted at x
         for y, dl, dr in evs:
             was = (cl % 2) != (cr % 2)
             cl += dl
@@ -242,12 +285,17 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
             now = (cl % 2) != (cr % 2)
             if not was and now:
                 start, start_left = y, (cl % 2 == 1)
+                if last is not None and last[1] == y and last[2] == start_left:
+                    # coverage split at a non-boundary edge: same piece
+                    start = last[0]
+                    pieces.pop()
             elif was and not now and start is not None:
                 if y - start > tol:
                     # region-left direction: region on the LEFT slab
                     # side (x-) → upward; on the right → downward
                     p = [(x, start), (x, y)] if start_left else [(x, y), (x, start)]
                     pieces.append(np.asarray(p, dtype=np.float64))
+                    last = (start, y, start_left)
                 start = None
     if not pieces:
         return [] if abs(area) <= tol else None

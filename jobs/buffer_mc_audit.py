@@ -11,7 +11,8 @@ convention the kernel documents). Erosion: probe ∈ erode(P, r) ⟺
 probe ∈ P and dist(probe, ∂P) > |r|, same band. A None result counts as
 an honest null, never a mismatch.
 
-Pure numpy — no Spark. Writes BENCH/buffer_mc_audit.json.
+Pure numpy — no Spark. Writes BENCH/buffer_mc_audit.json and exits with
+status 1 when any probe mismatches.
 
     python jobs/buffer_mc_audit.py [N_PER_CLASS] [PROBES_PER_INPUT]
 """
@@ -115,7 +116,7 @@ def gen_input(rng, cls) -> str | None:
     raise ValueError(cls)
 
 
-def main() -> None:
+def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 512
     rng = np.random.default_rng(20260818)
@@ -198,7 +199,8 @@ def main() -> None:
         print(cls, rrow)
     for e in examples[:3]:
         print(json.dumps(e))
+    return bad
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(1 if main() else 0)

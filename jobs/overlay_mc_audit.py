@@ -14,7 +14,8 @@ the result are excluded, matching tests/test_overlay_holes.py's
 estimator). A mismatch is a reproducible wrong answer, printed with the
 operand WKTs and the probe.
 
-Pure numpy — no Spark. Writes BENCH/overlay_mc_audit.json.
+Pure numpy — no Spark. Writes BENCH/overlay_mc_audit.json and exits
+with status 1 when any probe mismatches.
 
     python jobs/overlay_mc_audit.py [N_PER_CLASS] [PROBES_PER_PAIR]
 """
@@ -108,10 +109,11 @@ def _bbox(g):
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
-    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-    rng = np.random.default_rng(20260818)
+def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
+    """Run the membership identity over ``n`` pairs of every class with
+    ``n_probes`` probes each. Returns (per-class per-op counters of
+    checked/null/probes/mismatch, up to 10 mismatch examples)."""
+    rng = np.random.default_rng(seed)
     report: dict = {}
     examples: list = []
     for cls in (
@@ -168,6 +170,13 @@ def main() -> None:
                             }
                         )
         report[cls] = row
+    return report, examples
+
+
+def main() -> int:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
+    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
+    report, examples = audit(n, n_probes)
     here = os.path.dirname(os.path.abspath(__file__))
     out = {
         "n_per_class": n,
@@ -186,7 +195,8 @@ def main() -> None:
         print("FIRST EXAMPLES:")
         for e in examples[:3]:
             print(json.dumps(e))
+    return total_bad
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(1 if main() else 0)

@@ -17,7 +17,8 @@ Probes within ``tol`` of any polygon edge abstain (classification there
 is legitimately boundary). Mismatches are reproducible wrong answers,
 reported with operand WKTs.
 
-Pure numpy — no Spark. Writes BENCH/relate_mc_audit.json.
+Pure numpy — no Spark. Writes BENCH/relate_mc_audit.json and exits with
+status 1 when any pair mismatches.
 
     python jobs/relate_mc_audit.py [N_PER_CLASS] [PROBES_PER_PAIR]
 """
@@ -36,7 +37,7 @@ from geomesa_spark.functions import geometry as geo  # noqa: E402
 from jobs.overlay_mc_audit import _bbox, _member, _near_any_edge, gen_pair_ext  # noqa: E402
 
 
-def main() -> None:
+def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 500
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
     rng = np.random.default_rng(20260818)
@@ -110,7 +111,8 @@ def main() -> None:
         print(cls, rrow)
     for e in examples[:3]:
         print(json.dumps(e))
+    return total_bad
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(1 if main() else 0)

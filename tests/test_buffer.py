@@ -258,8 +258,8 @@ def test_buffer_self_crossing_polyline():
     """Round-5: a self-intersecting polyline's capsules cross each other,
     which the _shell_union GH fold refuses (was honest null ~20% of
     random zig-zags). _ring_union_fallback now folds the capsules
-    through the full _overlay_union ladder (slab-sweep terminal rung,
-    exact-identity gated). Distance-field equivalence on the audit's
+    through _overlay_union (the slab sweep, exact-identity gated).
+    Distance-field equivalence on the audit's
     first previously-null input."""
     rng = np.random.default_rng(44)
     w = _check_buffer(

@@ -443,8 +443,18 @@ def test_symdifference():
     B = g("POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))")
     w = stf._overlay_symdifference(A, B)
     k, c, o = geo.parse_wkt(w)
-    assert k == "POLYGON" and len(o) == 3  # one ring + the A∩B hole
-    assert stf._areal_area(c, o) == pytest.approx(24.0)
+    # two hole-free L-shaped members meeting at (2 4) and (4 2): the
+    # OGC-valid form (JTS returns the same), not one ring whose A∩B hole
+    # pinches the shell at two points
+    members = geo.geom_parts(k, c, o)
+    assert k == "MULTIPOLYGON" and len(members) == 2
+    assert all(len(mo) == 2 for _mk, _mc, mo in members)
+    assert stf._areal_area(c, o) == 24.0
+    rng = np.random.default_rng(19)
+    probes = np.column_stack([rng.uniform(-1, 7, 4000), rng.uniform(-1, 7, 4000)])
+    near = _near_any_edge(probes, [A, B, (k, c, o)], tol=1e-9)
+    in_a, in_b, in_r = _member(probes, *A), _member(probes, *B), _member(probes, k, c, o)
+    assert not ((in_r != (in_a ^ in_b)) & ~near).any()
     assert stf._overlay_symdifference(A, A) == "POLYGON EMPTY"
     assert stf._overlay_symdifference(
         g("LINESTRING (0 0, 4 0)"), g("LINESTRING (2 0, 6 0)")
@@ -707,9 +717,8 @@ def test_areal_difference_disjoint_piece_gate():
     a 4-member degenerate intersection drove the member-subtraction
     chain into overlapping sliver pieces (duplicated zero-area parts, a
     piece holed by its own fp-noise twin) without any step nulling —
-    parity area 72.74 vs the true 68.69. _areal_difference now enforces
-    its own disjoint-piece-list invariant as an exact output gate; the
-    ladder's slab rung recovers the exact answer."""
+    parity area 72.74 vs the true 68.69. The slab sweep answers the
+    pair directly, gated by its exact area identity."""
     A = geo.parse_wkt(
         "POLYGON ((-5 -3, 1 -4, 4 -1, 2 7, -4 7, -5 6, -5 -3), "
         "(-2 0, 0.5 0, 0.5 2.5, -2 2.5, -2 0))"
@@ -734,3 +743,102 @@ def test_areal_difference_disjoint_piece_gate():
     B2 = geo.parse_wkt("POLYGON ((0 5, 9 5, 9 9, 0 9, 0 5))")
     w2 = stf._overlay_symdifference(A2, B2)
     assert w2 is not None
+
+
+def _assert_probe_identity(A, B, w, op, rng, box):
+    """p ∈ op(A, B) == BOOL_op(p ∈ A, p ∈ B) off every edge of A, B and
+    the result."""
+    gr = geo.parse_wkt(w)
+    x0, y0, x1, y1 = box
+    probes = np.column_stack([rng.uniform(x0, x1, 4000), rng.uniform(y0, y1, 4000)])
+    near = _near_any_edge(probes, [A, B, gr], tol=1e-9)
+    in_a, in_b = _member(probes, *A), _member(probes, *B)
+    want = {
+        "intersection": in_a & in_b,
+        "union": in_a | in_b,
+        "difference": in_a & ~in_b,
+        "symdifference": in_a ^ in_b,
+    }[op]
+    got = np.zeros(len(probes), dtype=bool) if w.endswith(" EMPTY") else _member(probes, *gr)
+    assert not ((got != want) & ~near).any(), (op, w)
+
+
+def test_symdifference_overlapping_squares_two_members():
+    """Two overlapping squares: A Δ B is the two L-shaped members that
+    meet at the corners (2 4) and (4 2) — a valid MULTIPOLYGON of area
+    24, not one ring with a hole pinching the shell at two points."""
+    A = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    B = geo.parse_wkt("POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))")
+    w = stf._overlay_symdifference(A, B)
+    k, c, o = geo.parse_wkt(w)
+    assert k == "MULTIPOLYGON"
+    members = geo.geom_parts(k, c, o)
+    assert len(members) == 2 and all(len(mo) == 2 for _mk, _mc, mo in members)
+    assert [stf._areal_area(mc, mo) for _mk, mc, mo in members] == [12.0, 12.0]
+    assert stf._areal_area(c, o) == 24.0
+    _assert_probe_identity(A, B, w, "symdifference", np.random.default_rng(41), (-1, -1, 7, 7))
+
+
+def test_areal_overlay_empty_interior_meet():
+    """Operands whose interiors do not meet: the slab sweep finds no
+    area, and the intersection is the shared boundary linework when the
+    operands touch, POLYGON EMPTY when they do not — also when their
+    bounding boxes overlap."""
+    g = geo.parse_wkt
+    sq = g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+    right = g("POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))")
+    assert stf._overlay_intersection(sq, right) == "LINESTRING (1 0, 1 1)"
+    corner = g("POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))")
+    assert stf._overlay_intersection(sq, corner) == "POINT (1 1)"
+    # concave × concave, bboxes disjoint (the i6 pair of test_st_functions)
+    assert stf._overlay_intersection(
+        g("POLYGON ((0 0, 4 0, 4 4, 2 1, 0 4, 0 0))"),
+        g("POLYGON ((0 5, 4 5, 4 9, 2 6, 0 9, 0 5))"),
+    ) == "POLYGON EMPTY"
+    # a bar inside a U's notch: bboxes overlap, interiors and boundaries
+    # disjoint; lowered onto the notch floor it touches along an edge
+    u = g("POLYGON ((0 0, 6 0, 6 6, 4 6, 4 2, 2 2, 2 6, 0 6, 0 0))")
+    bar = g("POLYGON ((2.5 3, 3.5 3, 3.5 7, 2.5 7, 2.5 3))")
+    assert stf._overlay_intersection(u, bar) == "POLYGON EMPTY"
+    assert stf._overlay_difference(u, bar) == geo.wkt_any(*u)
+    floor = g("POLYGON ((2.5 2, 3.5 2, 3.5 7, 2.5 7, 2.5 2))")
+    assert stf._overlay_intersection(u, floor) == "LINESTRING (3.5 2, 2.5 2)"
+    rng = np.random.default_rng(43)
+    for op, fn in (
+        ("union", stf._overlay_union),
+        ("difference", stf._overlay_difference),
+        ("symdifference", stf._overlay_symdifference),
+    ):
+        for b in (bar, floor):
+            w = fn(u, b)
+            assert w is not None, (op, b)
+            _assert_probe_identity(u, b, w, op, rng, (-1, -1, 7, 8))
+    assert stf._areal_area(*geo.parse_wkt(stf._overlay_union(u, floor))[1:]) == 28.0 + 5.0
+
+
+def test_relate_fallback_symdifference():
+    """The DE-9IM fallback answers every op, symdifference included, for
+    equal, covered and touching operands (it runs when the slab sweep
+    refuses)."""
+    g = geo.parse_wkt
+    big = g("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    small = g("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")  # shares two edges
+    right = g("POLYGON ((4 0, 6 0, 6 4, 4 4, 4 0))")
+    assert stf._areal_relate_fallback(big, big, "symdifference") == "POLYGON EMPTY"
+    rng = np.random.default_rng(47)
+    for A, B, area in ((small, big, 12.0), (big, small, 12.0), (big, right, 24.0)):
+        w = stf._areal_relate_fallback(A, B, "symdifference")
+        assert w is not None
+        assert stf._areal_area(*geo.parse_wkt(w)[1:]) == area
+        _assert_probe_identity(A, B, w, "symdifference", rng, (-1, -1, 7, 5))
+
+
+def test_covers_slit_square():
+    """A square with a zero-width inward slit (a doubled edge) covers the
+    plain square: the duplicate scanline crossings of the slit bound a
+    zero-width interval whose midpoint lies ON A's boundary, so it is no
+    escape witness."""
+    slit = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 2 4, 2 2, 2 4, 0 4, 0 0))")
+    sq = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    assert not geo._escape_witness(slit[1], slit[2], sq[1], sq[2])
+    assert geo.pred_covers(geo.relate_geoms(*slit, *sq))

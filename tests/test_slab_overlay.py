@@ -1,6 +1,6 @@
-"""Slab-sweep boolean fallback (functions/slab_overlay.py): the
-degenerate-contact overlay of last resort. Deterministic goldens for the
-shared-edge cases the GH fold refuses, plus a randomized property sweep:
+"""Slab-sweep boolean (functions/slab_overlay.py): the primary areal
+overlay path. Deterministic goldens for shared-edge cases that
+crossing-based kernels must special-case, plus a randomized property sweep:
 every non-None answer across all four ops must agree with Monte-Carlo
 membership of the operands (the area-identity gate makes wrong answers
 structurally impossible — these tests check it stays that way)."""
@@ -121,3 +121,42 @@ def test_random_snapped_property_sweep():
                 want = _want(op, _member(ga, px, py), _member(gb, px, py))
                 assert _member(g, px, py) == want, (op, out)
     assert answered > 300  # the fallback answers the vast majority
+
+
+def test_slab_output_has_no_cut_vertices():
+    """Slab cuts at the other operand's vertex xs leave no vertices on
+    straight edges: a boundary piece that continues along the same edge
+    extends across the cut. On integer rect pairs every output vertex is
+    then a real turn (exact cross products), and a pair whose result is
+    one operand returns that operand's own ring."""
+    g = geo.parse_wkt
+    big = g("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")
+    assert sf._slab_fallback(big, g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"), "union") == (
+        "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+    )
+    u = g("POLYGON ((0 0, 6 0, 6 6, 4 6, 4 2, 2 2, 2 6, 0 6, 0 0))")
+    bar = g("POLYGON ((2.5 3, 3.5 3, 3.5 7, 2.5 7, 2.5 3))")
+    assert sf._slab_fallback(u, bar, "difference") == geo.wkt_any(*u)
+    rng = np.random.default_rng(5)
+
+    def rect():
+        x0, y0 = int(rng.integers(0, 9)), int(rng.integers(0, 9))
+        w, h = int(rng.integers(1, 10 - x0)), int(rng.integers(1, 10 - y0))
+        return geo.parse_wkt(
+            f"POLYGON (({x0} {y0}, {x0+w} {y0}, {x0+w} {y0+h}, {x0} {y0+h}, {x0} {y0}))"
+        )
+
+    for _ in range(150):
+        ga, gb = rect(), rect()
+        for op in OPS:
+            out = sf._slab_fallback(ga, gb, op)
+            if out is None or out.endswith(" EMPTY"):
+                continue
+            for _k, c, o in geo.geom_parts(*geo.parse_wkt(out)):
+                for r in range(len(o) - 1):
+                    ring = c[o[r]:o[r + 1] - 1]
+                    prv, nxt = np.roll(ring, 1, axis=0), np.roll(ring, -1, axis=0)
+                    cross = (ring[:, 0] - prv[:, 0]) * (nxt[:, 1] - ring[:, 1]) - (
+                        ring[:, 1] - prv[:, 1]
+                    ) * (nxt[:, 0] - ring[:, 0])
+                    assert (cross != 0).all(), (op, out)
