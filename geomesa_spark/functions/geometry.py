@@ -1721,7 +1721,7 @@ def boundary_wkt(kind: str, coords, ring_offsets) -> str:
     raise ValueError(kind)
 
 
-# --- convex overlay (Sutherland–Hodgman) -----------------------------------
+# --- ring orientation --------------------------------------------------------
 
 
 def ring_signed_area(ring: np.ndarray) -> float:
@@ -1730,94 +1730,9 @@ def ring_signed_area(ring: np.ndarray) -> float:
     return float(0.5 * np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
-def is_convex_ring(ring: np.ndarray) -> bool:
-    """Closed ring with all turns the same orientation (collinear runs
-    allowed)."""
-    r = np.asarray(ring, dtype=np.float64)
-    if len(r) < 4 or not (r[0] == r[-1]).all():
-        return False
-    p = r[:-1]
-    a, b, c = p, np.roll(p, -1, axis=0), np.roll(p, -2, axis=0)
-    cross = (b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0])
-    return bool((cross >= 0).all() or (cross <= 0).all())
-
-
 def _ccw_ring(ring: np.ndarray) -> np.ndarray:
     r = np.asarray(ring, dtype=np.float64)
     return r if ring_signed_area(r) >= 0 else r[::-1]
-
-
-def clip_ring_halfplane(ring: np.ndarray, ax: float, ay: float, bx: float, by: float) -> np.ndarray | None:
-    """Sutherland–Hodgman step: keep the part of the (closed) ring on or
-    left of the directed line a->b. Returns a closed ring or None."""
-    pts = np.asarray(ring, dtype=np.float64)[:-1]
-    out: list[tuple[float, float]] = []
-    n = len(pts)
-
-    def side(px, py):
-        return (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-
-    for i in range(n):
-        cx, cy = pts[i]
-        nx_, ny_ = pts[(i + 1) % n]
-        sc, sn = side(cx, cy), side(nx_, ny_)
-        if sc >= 0:
-            out.append((cx, cy))
-        if (sc > 0 and sn < 0) or (sc < 0 and sn > 0):
-            t = sc / (sc - sn)
-            out.append((cx + t * (nx_ - cx), cy + t * (ny_ - cy)))
-    if len(out) < 3:
-        return None
-    closed = np.asarray(out + [out[0]], dtype=np.float64)
-    if abs(ring_signed_area(closed)) == 0.0:
-        return None
-    return closed
-
-
-def convex_clip(subject_ring: np.ndarray, clip_ring: np.ndarray) -> np.ndarray | None:
-    """Clip a ring by a CONVEX ring (Sutherland–Hodgman). Exact when the
-    result is connected (always true for convex subjects). Returns a
-    closed ring or None when the intersection has zero area."""
-    clip = _ccw_ring(clip_ring)
-    cur: np.ndarray | None = np.asarray(subject_ring, dtype=np.float64)
-    for i in range(len(clip) - 1):
-        if cur is None:
-            return None
-        cur = clip_ring_halfplane(cur, clip[i, 0], clip[i, 1], clip[i + 1, 0], clip[i + 1, 1])
-    return cur
-
-
-def convex_polygon_intersection(a_ring: np.ndarray, b_ring: np.ndarray) -> np.ndarray | None:
-    """Intersection ring of two rings where at least one is convex (the
-    convex one clips; intersection is symmetric)."""
-    if is_convex_ring(b_ring):
-        return convex_clip(a_ring, b_ring)
-    if is_convex_ring(a_ring):
-        return convex_clip(b_ring, a_ring)
-    return None  # concave×concave: unsupported (documented)
-
-
-def convex_polygon_difference(a_ring: np.ndarray, b_ring: np.ndarray) -> list[np.ndarray] | None:
-    """a_ring minus CONVEX b_ring as disjoint pieces: for the i-th edge of
-    b (CCW), piece_i = a ∩ outside(e_i) ∩ inside(e_1..i-1) — each region
-    is an intersection of half-planes, so Sutherland–Hodgman is exact for
-    convex a. Returns [] when a ⊆ b; None when b is not convex."""
-    if not is_convex_ring(b_ring):
-        return None
-    b = _ccw_ring(b_ring)
-    pieces: list[np.ndarray] = []
-    for i in range(len(b) - 1):
-        # outside(e_i): left of the REVERSED edge
-        cur = clip_ring_halfplane(
-            np.asarray(a_ring, dtype=np.float64), b[i + 1, 0], b[i + 1, 1], b[i, 0], b[i, 1]
-        )
-        for j in range(i):
-            if cur is None:
-                break
-            cur = clip_ring_halfplane(cur, b[j, 0], b[j, 1], b[j + 1, 0], b[j + 1, 1])
-        if cur is not None:
-            pieces.append(cur)
-    return pieces
 
 
 # --- line overlay ----------------------------------------------------------
@@ -1956,6 +1871,31 @@ def line_difference_line(a_coords: np.ndarray, b_coords: np.ndarray) -> list[np.
     return _chain_pieces(kept)
 
 
+def endpoint_snapper(tol: float):
+    """``snap(p) -> (x, y)``: the first point snapped so far that lies
+    within ``tol`` of p in both coordinates, else p itself, which becomes
+    a representative. Representatives live in a grid of tol-sized cells
+    and a lookup searches the 3x3 neighbouring cells, NOT bare grid
+    rounding: two endpoints 1e-12 apart can straddle a cell border and
+    round to different cells (observed: 0.288228115 vs ...1160 → an
+    unbalanced node and a refused graph)."""
+    pool: dict = {}
+
+    def snap(p):
+        x, y = float(p[0]), float(p[1])
+        gx, gy = round(x / tol), round(y / tol)
+        for dx in (0, -1, 1):
+            for dy in (0, -1, 1):
+                q = pool.get((gx + dx, gy + dy))
+                if q is not None and abs(q[0] - x) <= tol and abs(q[1] - y) <= tol:
+                    return q
+        q = (x, y)
+        pool[(gx, gy)] = q
+        return q
+
+    return snap
+
+
 def chain_closed_rings(pieces: list[np.ndarray], tol: float = 1e-9) -> list[np.ndarray] | None:
     """Assemble polyline pieces into closed rings by endpoint matching
     (endpoints snapped within ``tol`` — cut points computed independently
@@ -1979,14 +1919,9 @@ def chain_closed_rings(pieces: list[np.ndarray], tol: float = 1e-9) -> list[np.n
         else:
             open_segs.append(s)
     if open_segs:
-        pts = [e for s in open_segs for e in (s[0], s[-1])]
-        canon = list(range(len(pts)))
-        for i in range(len(pts)):
-            for j in range(i):
-                if canon[j] == j and abs(pts[i][0] - pts[j][0]) <= tol and abs(pts[i][1] - pts[j][1]) <= tol:
-                    canon[i] = j
-                    break
-        at: dict[int, list[tuple[int, bool]]] = {}
+        snap = endpoint_snapper(tol)
+        canon = [snap(e) for s in open_segs for e in (s[0], s[-1])]
+        at: dict[tuple, list[tuple[int, bool]]] = {}
         for si in range(len(open_segs)):
             at.setdefault(canon[2 * si], []).append((si, True))
             at.setdefault(canon[2 * si + 1], []).append((si, False))
@@ -2043,213 +1978,3 @@ def transform_coords(coords: np.ndarray, src: str, dst: str) -> np.ndarray | Non
         lat = np.degrees(2.0 * np.arctan(np.exp(c[:, 1] / _R_MERC)) - np.pi / 2.0)
         return np.column_stack([lon, lat])
     return None
-
-
-# --- general simple-polygon overlay (Greiner–Hormann) -----------------------
-#
-# Exact for two SIMPLE single-ring polygons whose boundaries meet only in
-# PROPER crossings (the generic position). Degenerate contact — vertex on
-# edge, collinear overlap, crossing at a vertex — returns None and the
-# SQL layer yields null (honest unsupported; a convex input falls back to
-# the Sutherland–Hodgman path first, which handles those degeneracies).
-
-
-class _GHNode:
-    __slots__ = ("x", "y", "nxt", "prv", "neighbor", "entry", "is_inter", "visited", "alpha")
-
-    def __init__(self, x, y, is_inter=False, alpha=0.0):
-        self.x, self.y = float(x), float(y)
-        self.nxt = self.prv = self.neighbor = None
-        self.entry = False
-        self.is_inter = is_inter
-        self.visited = False
-        self.alpha = alpha
-
-
-def _gh_build(ring: np.ndarray) -> list[_GHNode]:
-    pts = np.asarray(ring, dtype=np.float64)[:-1]
-    return [_GHNode(x, y) for x, y in pts]
-
-
-def _gh_link(nodes: list[_GHNode]) -> None:
-    n = len(nodes)
-    for i, nd in enumerate(nodes):
-        nd.nxt = nodes[(i + 1) % n]
-        nd.prv = nodes[(i - 1) % n]
-
-
-def greiner_hormann(
-    s_ring: np.ndarray, c_ring: np.ndarray, op: str
-) -> list[np.ndarray] | None:
-    """op in {'intersection', 'difference', 'union'} over simple single
-    rings. Returns a list of closed result rings ([] = no boundary
-    crossings — the caller resolves containment/disjoint), or None when
-    boundaries meet degenerately. For 'union' the traced rings can
-    include HOLES (interlocking shapes enclosing a void) wound in
-    arbitrary orientation — the caller groups them into shells + holes
-    by containment depth (see polygon_overlay_general); intersection
-    and difference of single simple rings with proper crossings never
-    produce holes."""
-    s = _ccw_ring(s_ring)
-    c = _ccw_ring(c_ring)
-    subj = _gh_build(s)
-    clip = _gh_build(c)
-    sn, cn = len(subj), len(clip)
-    s_ins: dict[int, list[_GHNode]] = {i: [] for i in range(sn)}
-    c_ins: dict[int, list[_GHNode]] = {i: [] for i in range(cn)}
-    eps = 1e-12
-    for i in range(sn):
-        p1 = np.asarray([subj[i].x, subj[i].y])
-        p2 = np.asarray([subj[(i + 1) % sn].x, subj[(i + 1) % sn].y])
-        for j in range(cn):
-            q1 = np.asarray([clip[j].x, clip[j].y])
-            q2 = np.asarray([clip[(j + 1) % cn].x, clip[(j + 1) % cn].y])
-            d = (p2[0] - p1[0]) * (q2[1] - q1[1]) - (p2[1] - p1[1]) * (q2[0] - q1[0])
-            if d == 0:
-                # parallel: collinear overlap is degenerate contact
-                cross1 = (q2[0] - q1[0]) * (p1[1] - q1[1]) - (q2[1] - q1[1]) * (p1[0] - q1[0])
-                if cross1 == 0:
-                    # collinear lines — overlap iff 1-D ranges intersect
-                    pm, tm, ovl = segment_contact_matrices(
-                        (p1[:1], p1[1:], p2[:1], p2[1:]), (q1[:1], q1[1:], q2[:1], q2[1:])
-                    )
-                    if ovl.any():
-                        return None
-                continue
-            t = ((q1[0] - p1[0]) * (q2[1] - q1[1]) - (q1[1] - p1[1]) * (q2[0] - q1[0])) / d
-            u = ((q1[0] - p1[0]) * (p2[1] - p1[1]) - (q1[1] - p1[1]) * (p2[0] - p1[0])) / d
-            if -eps < t < eps or 1 - eps < t < 1 + eps or -eps < u < eps or 1 - eps < u < 1 + eps:
-                if (-eps < t < 1 + eps) and (-eps < u < 1 + eps):
-                    return None  # endpoint contact: degenerate
-                continue
-            if 0 < t < 1 and 0 < u < 1:
-                x, y = p1[0] + t * (p2[0] - p1[0]), p1[1] + t * (p2[1] - p1[1])
-                a = _GHNode(x, y, True, t)
-                b = _GHNode(x, y, True, u)
-                a.neighbor, b.neighbor = b, a
-                s_ins[i].append(a)
-                c_ins[j].append(b)
-    # splice intersection nodes, sorted along each edge
-    def splice(base: list[_GHNode], ins: dict[int, list[_GHNode]]) -> list[_GHNode]:
-        out: list[_GHNode] = []
-        for i, nd in enumerate(base):
-            out.append(nd)
-            out.extend(sorted(ins[i], key=lambda n: n.alpha))
-        _gh_link(out)
-        return out
-
-    subj_l = splice(subj, s_ins)
-    clip_l = splice(clip, c_ins)
-    inters = [nd for nd in subj_l if nd.is_inter]
-    if not inters:
-        return []  # caller resolves containment / disjoint
-    # entry/exit marking: alternate from the first vertex's inclusion
-    for lst, other_c, other_o, flip in (
-        (subj_l, c, np.asarray([0, len(c)]), op in ("difference", "union")),
-        (clip_l, s, np.asarray([0, len(s)]), op == "union"),
-    ):
-        first = lst[0]
-        cls = int(classify_points_in_polygon([first.x], [first.y], other_c, other_o)[0])
-        if first.is_inter or cls == 1:
-            return None  # vertex on the other boundary: degenerate
-        entry = cls == 0  # currently outside → next crossing enters
-        if flip:
-            entry = not entry
-        for nd in lst:
-            if nd.is_inter:
-                nd.entry = entry
-                entry = not entry
-    # trace result rings
-    results: list[np.ndarray] = []
-    for start in inters:
-        if start.visited:
-            continue
-        ring_pts = [(start.x, start.y)]
-        cur = start
-        for _guard in range(4 * (len(subj_l) + len(clip_l))):
-            cur.visited = True
-            if cur.neighbor is not None:
-                cur.neighbor.visited = True
-            if cur.entry:
-                while True:
-                    cur = cur.nxt
-                    ring_pts.append((cur.x, cur.y))
-                    if cur.is_inter:
-                        break
-            else:
-                while True:
-                    cur = cur.prv
-                    ring_pts.append((cur.x, cur.y))
-                    if cur.is_inter:
-                        break
-            cur = cur.neighbor
-            if cur is start or (cur.x, cur.y) == (start.x, start.y):
-                break
-        else:
-            return None  # non-terminating trace: inputs were degenerate
-        if len(ring_pts) >= 4:
-            results.append(np.asarray(ring_pts, dtype=np.float64))
-    return results
-
-
-def polygon_overlay_general(
-    a_ring: np.ndarray, b_ring: np.ndarray, op: str
-) -> list[tuple[np.ndarray, np.ndarray]] | None:
-    """Single-ring simple-polygon overlay dispatcher used by the SQL
-    layer when the convex fast paths do not apply. Returns a list of
-    (coords, ring_offsets) polygons (possibly with one hole in the
-    containment case), [] for empty, or None when unsupported."""
-    if not (is_simple_line(a_ring) and is_simple_line(b_ring)):
-        return None
-    rings = greiner_hormann(a_ring, b_ring, op)
-    if rings is None:
-        return None
-    if rings:
-        if op == "union":
-            # interlocking shapes can enclose a void: group traced rings
-            # into shells + holes by containment depth
-            coords = np.concatenate(rings)
-            offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
-            parts = multipolygon_parts(coords, offs)
-            out = []
-            for shell_idx, hole_idxs in parts:
-                member = [_ccw_ring(rings[shell_idx])] + [
-                    _ccw_ring(rings[h])[::-1] for h in hole_idxs
-                ]
-                mc = np.concatenate(member)
-                mo = np.concatenate([[0], np.cumsum([len(r) for r in member])])
-                out.append((mc, mo))
-            return out
-        return [(r, np.asarray([0, len(r)])) for r in rings]
-    # no boundary crossings: disjoint or containment, decided by any vertex
-    a_off = np.asarray([0, len(a_ring)])
-    b_off = np.asarray([0, len(b_ring)])
-    a_in_b = int(classify_points_in_polygon(a_ring[:1, 0], a_ring[:1, 1], b_ring, b_off)[0])
-    b_in_a = int(classify_points_in_polygon(b_ring[:1, 0], b_ring[:1, 1], a_ring, a_off)[0])
-    if a_in_b == 1 or b_in_a == 1:
-        return None  # boundary contact without crossing: degenerate
-    if op == "intersection":
-        if a_in_b == 2:
-            return [(np.asarray(a_ring, dtype=np.float64), a_off)]
-        if b_in_a == 2:
-            return [(np.asarray(b_ring, dtype=np.float64), b_off)]
-        return []
-    if op == "union":
-        if a_in_b == 2:
-            return [(np.asarray(b_ring, dtype=np.float64), b_off)]
-        if b_in_a == 2:
-            return [(np.asarray(a_ring, dtype=np.float64), a_off)]
-        return [
-            (np.asarray(a_ring, dtype=np.float64), a_off),
-            (np.asarray(b_ring, dtype=np.float64), b_off),
-        ]
-    # difference
-    if a_in_b == 2:
-        return []
-    if b_in_a == 2:
-        # A with hole B: shell CCW + hole CW in one polygon
-        shell = _ccw_ring(a_ring)
-        hole = _ccw_ring(b_ring)[::-1]
-        coords = np.concatenate([shell, hole])
-        return [(coords, np.asarray([0, len(shell), len(shell) + len(hole)]))]
-    return [(np.asarray(a_ring, dtype=np.float64), a_off)]

@@ -1,85 +1,109 @@
-"""Slab-sweep boolean overlay for (MULTI)POLYGON pairs — the primary
-areal path of st_intersection / st_union / st_difference /
-st_symDifference (st_functions._areal_overlay).
+"""Slab-sweep region kernel: the primary areal path of st_intersection
+/ st_union / st_difference / st_symDifference (st_functions._areal_overlay,
+via slab_boolean) and the whole of st_buffer (st_functions._buffer_geom,
+via slab_region).
 
 Crossing-based kernels (Greiner–Hormann, half-plane clips, boundary
 rechaining) must special-case boundaries that interact degenerately
 (partially shared edges, vertex-on-edge chains, checkerboard corners).
-This module computes the boolean by vertical trapezoidal decomposition
+This module computes the region by vertical trapezoidal decomposition
 instead, which has NO special cases for degeneracy:
 
-1. Cut the plane into vertical slabs at every vertex x of either
-   operand plus every proper A×B edge-crossing x. Inside a slab no two
-   edges cross, so the covering edges are totally ordered by their
-   midline y.
-2. Walk each slab bottom-up accumulating even-odd parity for A and B
-   separately (holes need no special handling — OGC-valid rings are
-   even-odd compatible); coincident edge groups (shared boundary)
-   toggle both parities at once. The op's indicator (∩, ∪, \\, Δ) over
-   (inA, inB) marks result trapezoids.
+1. Cut the plane into vertical slabs at every vertex x plus every
+   proper edge-crossing x (crossings within one edge set too: buffer
+   capsules cross each other). Inside a slab no two edges cross, so
+   the covering edges are totally ordered by their midline y.
+2. Walk each slab bottom-up accumulating the WINDING NUMBER of each of
+   the two directed edge sets A and B (crossing an edge upward adds +1
+   when it runs left to right, −1 otherwise); coincident edge groups
+   (shared boundary) add all their members at once. A caller's
+   indicator over (wa, wb) marks result trapezoids: slab_boolean takes
+   the op (∩, ∪, \\, Δ) over the parities — OGC-valid rings are
+   even-odd compatible, so holes need no special handling — and the
+   buffer takes wa > 0 (dilation: the union of rings, shells CCW and
+   holes CW, capsules and discs) or wa > 0 and wb == 0 (erosion: the
+   polygon minus its boundary capsules).
 3. The result boundary = edge pieces where the indicator flips across
    an edge (a piece going straight on into the next slab extends, so
    slab cuts add no vertices to straight runs), plus the XOR of
    left/right vertical coverage at each slab border. Pieces chain into closed
    rings (chain_closed_rings: every junction must have degree 2;
-   degree-4 crossings go to a planar face walk), shells/holes recover
-   by containment parity, and the assembled area must match the
-   trapezoid-accumulated area exactly (1e-9 relative) — the same
-   honest gate the rechainer uses. Wrong answers are structurally
-   excluded; failure modes return None.
+   higher even degrees, where boundaries cross, go to a planar face
+   walk), shells/holes recover by containment parity, and the
+   assembled area must match the trapezoid-accumulated area exactly
+   (1e-9 relative) — the same honest gate the rechainer uses. Wrong
+   answers are structurally excluded; failure modes return None.
 
 The result is areal by construction: lower-dimensional contact (the
 shared edge of two touching squares) is invisible here, and the caller
 asks the DE-9IM relate fallback for it.
 
-Cost: O((V + K)·V) per pair with tiny constants — the same
-dimension-table cost class as the GH fold documented in PLANS.md.
+Cost: O(E²) vectorized crossing tests, then O(S·W) Python work for S
+slabs with W edges active in each (an active-edge list, entered by
+left end) — see PLANS.md.
 """
 
 from __future__ import annotations
+
+import bisect
 
 import numpy as np
 
 from geomesa_spark.functions import geometry as geo
 
+# indicators over the two winding numbers' parities
 _OPS = {
-    "intersection": lambda a, b: a and b,
-    "union": lambda a, b: a or b,
-    "difference": lambda a, b: a and not b,
-    "symdifference": lambda a, b: a != b,
+    "intersection": lambda wa, wb: wa % 2 == 1 and wb % 2 == 1,
+    "union": lambda wa, wb: wa % 2 == 1 or wb % 2 == 1,
+    "difference": lambda wa, wb: wa % 2 == 1 and wb % 2 == 0,
+    "symdifference": lambda wa, wb: wa % 2 != wb % 2,
 }
 
+_BLOCK = 256  # edge rows per crossing-test block (bounds the pair arrays' memory)
 
-def _edges(coords, offs):
+
+def ring_edges(coords: np.ndarray, offs) -> np.ndarray:
+    """Directed (x1, y1, x2, y2) edges of the closed rings
+    coords[offs[r]:offs[r + 1]], zero-length edges dropped."""
+    e = np.hstack([coords[:-1], coords[1:]])
+    keep = (e[:, 0] != e[:, 2]) | (e[:, 1] != e[:, 3])
+    keep[np.asarray(offs[1:-1], dtype=int) - 1] = False  # joins between rings
+    return e[keep]
+
+
+def crossings(e: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(i, j, x) of every proper crossing (interior to both edges)
+    between two edges e[i], e[j], i < j, in the order of the pairs."""
+    tab = np.empty((len(e), 6))  # per edge: x1, y1, dx, dy, min x, max x
+    tab[:, :2] = e[:, :2]
+    np.subtract(e[:, 2:], e[:, :2], out=tab[:, 2:4])
+    np.minimum(e[:, 0], e[:, 2], out=tab[:, 4])
+    np.maximum(e[:, 0], e[:, 2], out=tab[:, 5])
     out = []
-    for r in range(len(offs) - 1):
-        ring = coords[offs[r]:offs[r + 1]]
-        for i in range(len(ring) - 1):
-            p, q = ring[i], ring[i + 1]
-            if p[0] != q[0] or p[1] != q[1]:
-                out.append((float(p[0]), float(p[1]), float(q[0]), float(q[1])))
-    return out
-
-
-def _crossing_xs(ea, eb):
-    xs = []
-    for x1, y1, x2, y2 in ea:
-        for x3, y3, x4, y4 in eb:
-            if max(x1, x2) < min(x3, x4) or max(x3, x4) < min(x1, x2):
-                continue
-            d = (x2 - x1) * (y4 - y3) - (y2 - y1) * (x4 - x3)
-            if d == 0.0:
-                continue  # parallel/collinear: endpoints are already cuts
-            t = ((x3 - x1) * (y4 - y3) - (y3 - y1) * (x4 - x3)) / d
-            u = ((x3 - x1) * (y2 - y1) - (y3 - y1) * (x2 - x1)) / d
-            if 0.0 < t < 1.0 and 0.0 < u < 1.0:
-                xs.append(x1 + t * (x2 - x1))
-    return xs
+    idx = np.arange(len(e))
+    for b0 in range(0, len(e), _BLOCK):
+        i, j = np.nonzero(idx[b0:b0 + _BLOCK, None] < idx[None, :])
+        i = i + b0
+        a, b = tab[i], tab[j]
+        d = a[:, 2] * b[:, 3] - a[:, 3] * b[:, 2]
+        # d == 0: parallel/collinear, the endpoints are already cuts
+        m = (d != 0.0) & (a[:, 5] >= b[:, 4]) & (b[:, 5] >= a[:, 4])
+        i, j, a, b, d = i[m], j[m], a[m], b[m], d[m]
+        qx, qy = b[:, 0] - a[:, 0], b[:, 1] - a[:, 1]
+        t = (qx * b[:, 3] - qy * b[:, 2]) / d
+        u = (qx * a[:, 3] - qy * a[:, 2]) / d
+        ok = (np.minimum(t, u) > 0.0) & (np.maximum(t, u) < 1.0)
+        out.append((i[ok], j[ok], (a[:, 0] + t * a[:, 2])[ok]))
+    if len(out) == 1:
+        return out[0]
+    if not out:
+        return np.empty(0, int), np.empty(0, int), np.empty(0)
+    return tuple(np.concatenate(c) for c in zip(*out))
 
 
 def _trace_faces(pieces: list, tol: float):
     """Closed rings from DIRECTED boundary segments (region on the
-    LEFT of each, known at emission from the parity flips) with
+    LEFT of each, known at emission from the indicator flips) with
     even-degree junctions — degree 4 where the operand boundaries
     cross, e.g. every symmetric difference of properly-crossing
     polygons. The planar face walk over the directed edges (next = the
@@ -89,25 +113,7 @@ def _trace_faces(pieces: list, tol: float):
     left). Containment parity downstream re-derives shells vs holes.
     Returns None on unbalanced nodes or exact angular ties (ambiguous
     input — honesty over guessing)."""
-    # neighbor-aware node pooling, NOT bare grid rounding: two endpoints
-    # 1e-12 apart can straddle a grid boundary and round to different
-    # cells (observed: 0.288228115 vs ...1160 → an unbalanced node and a
-    # refused graph). The pool reuses any existing node within tol by
-    # checking the 3x3 neighboring grid cells.
-    pool: dict = {}
-
-    def snap(p):
-        x, y = float(p[0]), float(p[1])
-        gx, gy = round(x / tol), round(y / tol)
-        for dx in (0, -1, 1):
-            for dy in (0, -1, 1):
-                q = pool.get((gx + dx, gy + dy))
-                if q is not None and abs(q[0] - x) <= tol and abs(q[1] - y) <= tol:
-                    return q
-        q = (x, y)
-        pool[(gx, gy)] = q
-        return q
-
+    snap = geo.endpoint_snapper(tol)
     edges: list = []  # directed (tail_key, head_key)
     for seg in pieces:
         a, b = snap(seg[0]), snap(seg[-1])
@@ -165,23 +171,44 @@ def _trace_faces(pieces: list, tol: float):
     return rings or None
 
 
-def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
-    """Boolean of two areal geometries by trapezoidal sweep.
+def slab_region(ea: np.ndarray, eb: np.ndarray, ind, tol: float = 1e-9):
+    """The region where ``ind(wa, wb)`` holds, wa and wb being the
+    winding numbers of the directed edge sets ``ea`` and ``eb`` (n×4
+    arrays of x1, y1, x2, y2 from closed rings), by trapezoidal sweep.
     Returns a list of (coords, ring_offsets) members (possibly empty),
     or None when ring assembly or the area identity fails."""
-    ind = _OPS[op]
-    ea = _edges(ga[1], ga[2])
-    eb = _edges(gb[1], gb[2])
-    if not ea or not eb:
-        return None
+    c = _cuts(ea, eb, tol)
+    return None if c is None else _sweep(ea, eb, c[2], ind, tol)
+
+
+def _cuts(ea: np.ndarray, eb: np.ndarray, tol: float):
+    """crossings() of the edges of both sets, or None when a coordinate
+    is not finite or lies beyond the range of the endpoint snap grid
+    (x / tol overflows)."""
+    e = np.concatenate([ea, eb])
+    return crossings(e) if np.abs(e).max(initial=0.0) < np.finfo(np.float64).max * tol else None
+
+
+def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
+    """slab_region with the x of every crossing between its edges
+    (``cuts``) given."""
+    e = np.concatenate([ea, eb])
     xs = sorted(
         set(
-            [e[0] for e in ea] + [e[2] for e in ea]
-            + [e[0] for e in eb] + [e[2] for e in eb]
-            + _crossing_xs(ea, eb)
+            ea[:, 0].tolist() + ea[:, 2].tolist() + eb[:, 0].tolist() + eb[:, 2].tolist()
+            + cuts.tolist()
         )
     )
-    tagged = [(e, True) for e in ea] + [(e, False) for e in eb]
+    # active-edge list, kept in edge order (so ties in the midline sort
+    # below stay fixed): non-vertical edges enter in order of their left
+    # end and leave once they end left of the slab
+    rows = e.tolist()
+    lo = np.minimum(e[:, 0], e[:, 2]).tolist()
+    hi = np.maximum(e[:, 0], e[:, 2]).tolist()
+    entering = sorted((k for k in range(len(rows)) if lo[k] != hi[k]), key=lo.__getitem__)
+    na = len(ea)
+    nxt = 0
+    active: list = []
     edge_pieces: list = []          # [tail, head] result boundary on edges
     # a boundary piece that goes straight on from the previous slab's
     # piece in the same direction — along an edge the whole piece lies
@@ -197,32 +224,32 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
     vleft: dict = {}                # border x -> intervals approaching from the left slab
     vright: dict = {}               # border x -> intervals from the right slab
     area = 0.0
-    for si in range(len(xs) - 1):
-        x0, x1 = xs[si], xs[si + 1]
-        if x1 <= x0:
-            continue
+    for x0, x1 in zip(xs, xs[1:]):
+        while nxt < len(entering) and lo[entering[nxt]] <= x0:
+            bisect.insort(active, entering[nxt])
+            nxt += 1
+        active = [k for k in active if hi[k] >= x1]
         groups: dict = {}
-        for k, ((ex1, ey1, ex2, ey2), is_a) in enumerate(tagged):
-            lo, hi = (ex1, ex2) if ex1 < ex2 else (ex2, ex1)
-            if lo > x0 or hi < x1 or lo == hi:
-                continue  # doesn't cover the slab, or vertical
+        for k in active:
+            ex1, ey1, ex2, ey2 = rows[k]
             s = (ey2 - ey1) / (ex2 - ex1)
             y0 = ey1 + (x0 - ex1) * s
             y1 = ey1 + (x1 - ex1) * s
             g = groups.setdefault((y0, y1), [0, 0, []])
-            g[0 if is_a else 1] += 1
+            # crossing the edge upward enters the ring's left side when
+            # the edge runs left to right
+            g[0 if k < na else 1] += 1 if ex2 > ex1 else -1
             g[2].append(k)
         order = sorted(groups.items(), key=lambda kv: kv[0][0] + kv[0][1])
-        in_a = in_b = False
+        wa = wb = 0
+        above = ind(wa, wb)
         prev = None  # (y0, y1) of the last group, if status below..above it True
         flips: list = []            # (y0, y1, edge ids, region above) boundary groups
-        for (y0, y1), (na, nb, ids) in order:
-            below = ind(in_a, in_b)
-            if na % 2:
-                in_a = not in_a
-            if nb % 2:
-                in_b = not in_b
-            above = ind(in_a, in_b)
+        for (y0, y1), (da, db, ids) in order:
+            below = above
+            wa += da
+            wb += db
+            above = ind(wa, wb)
             if below != above:
                 flips.append((y0, y1, ids, above))
             if below and prev is not None:
@@ -262,8 +289,8 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
                 edge_pieces.append([(x1, y1), (x0, y0)])
             next_ends.setdefault(y1, []).append((j, above, on))
         ends = next_ends
-        if in_a or in_b or prev is not None:
-            return None  # open parity: numerically inconsistent slab
+        if wa or wb or prev is not None:
+            return None  # open winding: numerically inconsistent slab
     pieces = [np.asarray(p, dtype=np.float64) for p in edge_pieces]
     for x in set(vleft) | set(vright):
         evs: list = []
@@ -320,6 +347,21 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
         mo = np.concatenate([[0], np.cumsum([len(r) for r in member])])
         total += geo.polygon_area_deg2(mc, mo)
         out.append((mc, mo))
-    if abs(total - area) > 1e-9 * max(1.0, abs(area)):
-        return None  # area identity gate: never a wrong polygon
+    if not abs(total - area) <= 1e-9 * max(1.0, abs(area)):
+        return None  # area identity gate (NaN fails it): never a wrong polygon
     return out
+
+
+def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
+    """Boolean ``op`` of two areal geometries: the even-odd region of
+    slab_region. Returns its members, or None when an operand's own
+    edges cross properly (a self-crossing ring is an invalid polygon)
+    or the sweep refuses."""
+    ea = ring_edges(ga[1], ga[2])
+    eb = ring_edges(gb[1], gb[2])
+    if not len(ea) or not len(eb):
+        return None
+    c = _cuts(ea, eb, tol)
+    if c is None or ((c[0] < len(ea)) == (c[1] < len(ea))).any():
+        return None
+    return _sweep(ea, eb, c[2], _OPS[op], tol)

@@ -33,7 +33,7 @@ from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType, In
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as geo
-from geomesa_spark.functions.slab_overlay import slab_boolean
+from geomesa_spark.functions.slab_overlay import crossings, ring_edges, slab_boolean, slab_region
 
 # matches 2-D POINTs and the 2-D projection of POINT Z / M / ZM
 _POINT_NUM = r"POINT\s*(?:ZM|Z|M)?\s*\(\s*(-?[\d.eE+-]+)\s+(-?[\d.eE+-]+)(?:\s+-?[\d.eE+-]+){0,2}\s*\)"
@@ -720,34 +720,37 @@ def st_bufferPoint(lon: pd.Series, lat: pd.Series, radius_m: pd.Series) -> pd.Se
     return pd.Series(out)
 
 
-def _disc(center, r: float, s: int, idx: int) -> np.ndarray:
-    """2s-gon inscribed in the radius-r circle; the start phase varies
-    per-geometry-part (idx) so co-centered arcs from different parts
-    never share sampled vertices (vertex contact would be degenerate
-    for the GH union fold)."""
+_SEGMENTS = 8  # arc steps per half circle of a buffer disc or capsule end
+
+
+def _disc(center, r: float, idx: int) -> np.ndarray:
+    """CCW 2s-gon (s = _SEGMENTS) inscribed in the radius-r circle; the
+    start phase varies per ring (idx), so co-centred arcs of different
+    parts never share sampled vertices — an exact tie the slab sweep's
+    face walk would refuse as an ambiguous junction."""
+    s = _SEGMENTS
     phase = (0.1 + 0.8 * ((idx * 37) % 89) / 89.0) * (np.pi / s)
     th = phase + np.arange(2 * s) * (np.pi / s)
     ring = np.column_stack([center[0] + r * np.cos(th), center[1] + r * np.sin(th)])
     return np.vstack([ring, ring[:1]])
 
 
-def _capsule(p, q, r: float, s: int, idx: int) -> np.ndarray:
-    """Convex stadium around segment p→q, extended by a per-capsule
-    jittered ε ≈ 0.005r along the axis. Without the extension a corner
-    p + r·n̂ lies EXACTLY on the adjacent perpendicular edge of an
-    axis-aligned ring (vertex-on-edge: degenerate for the GH union
-    fold); with it, contacts become proper crossings. The overshoot
-    error is ≤ ε²/2r ≈ 3e-5·r, far inside the inscribed-arc sag the
-    docstring of _buffer_geom already grants. Interior arc samples get a
-    per-capsule phase jitter for the same reason (adjacent capsules
-    share arc centers; identical samples would touch vertex-to-vertex)."""
+def _capsule(p, q, r: float, idx: int) -> np.ndarray:
+    """CCW stadium around the segment p→q (p != q), extended by a
+    per-capsule jittered ε ≈ 0.005r along the axis. Without the
+    extension a corner p + r·n̂ lies EXACTLY on the adjacent
+    perpendicular edge of an axis-aligned ring; with it, the contacts
+    become proper crossings. The overshoot error is ≤ ε²/2r ≈
+    3e-5·r, far inside the inscribed-arc sag _buffer_geom grants.
+    Interior arc samples get a per-capsule phase jitter for the same
+    reason: adjacent capsules share arc centres, and identical samples
+    would touch vertex to vertex. Either contact gives the slab sweep's
+    face walk exact angular ties, which it refuses (honest null)."""
+    s = _SEGMENTS
     p = np.asarray(p, dtype=np.float64)
     q = np.asarray(q, dtype=np.float64)
     d = q - p
-    length = float(np.hypot(*d))
-    if length == 0.0:
-        return _disc(p, r, s, idx)
-    u = d / length
+    u = d / float(np.hypot(*d))
     eps = r * 0.004 * (1.0 + ((idx * 53) % 97) / 97.0)
     p = p - eps * u
     q = q + eps * u
@@ -765,280 +768,93 @@ def _capsule(p, q, r: float, s: int, idx: int) -> np.ndarray:
         th = (aq - np.pi) - (j + jit) * step
         pts.append(p + r * np.asarray([np.cos(th), np.sin(th)]))
     pts.append(p + r * n)
-    return np.asarray(pts, dtype=np.float64)
+    return np.asarray(pts[::-1], dtype=np.float64)  # built clockwise
 
 
-def _ring_union_fallback(all_rings: list) -> list | None:
-    """Union of hole-free rings for _buffer_geom when _shell_union's GH
-    fold refuses (crossing capsules from a self-intersecting polyline):
-    fold pairwise through _overlay_union (the slab sweep, then the
-    DE-9IM rechain), each gated by exact area/round-trip identities.
-    Returns a disjoint piece list in
-    _shell_union's format, or None (honest null)."""
-    cur = ("POLYGON", np.asarray(all_rings[0], dtype=np.float64),
-           np.asarray([0, len(all_rings[0])]))
-    for r in all_rings[1:]:
-        rp = ("POLYGON", np.asarray(r, dtype=np.float64), np.asarray([0, len(r)]))
-        w = _overlay_union(cur, rp)
-        if w is None or w.endswith(" EMPTY"):
-            return None
-        cur = geo.parse_wkt(w)
-    m = _areal_members(*cur)
-    if m is None:
-        return None
-    return [_member_piece(s, h) for s, h in m]
+def _valid_ring(ring: np.ndarray) -> bool:
+    """A closed ring with at least 3 distinct vertices and no zero-width
+    spike (an edge doubling back along its predecessor)."""
+    if len(ring) < 4 or (ring[0] != ring[-1]).any():
+        return False
+    body = ring[:-1]
+    body = body[(body != np.roll(body, 1, axis=0)).any(axis=1)]
+    if len(np.unique(body, axis=0)) < 3:
+        return False
+    d = np.roll(body, -1, axis=0) - body
+    dp = np.roll(d, 1, axis=0)
+    spike = (dp[:, 0] * d[:, 1] == dp[:, 1] * d[:, 0]) & ((dp * d).sum(axis=1) < 0)
+    return not spike.any()
 
 
-def _buffer_geom(ga, radius: float, segments: int = 8) -> str | None:
+def _buffer_geom(ga, radius: float) -> str | None:
     """PLANAR buffer (degrees — the unit convention of the st_* planar
     relate/overlay surface; st_bufferPoint remains the geodesic-meters
-    point form). Negative radius erodes areal subjects (piece minus the
-    ∪edge-capsules boundary band — exact by the same capsule identity;
-    empty for lower-dim subjects, JTS semantics). Positive radius
-    dilates: {x : dist(x, geom) ≤ r} built as the
-    union of per-edge stadium capsules, per-point discs, and filled
-    shells, folded through _shell_union; operand holes re-carve as
-    (hole \\ capsules \\ other fills) via the region algebra, so an
-    island inside a hole buffers correctly. Arcs are inscribed
+    point form). The geometry's rings (shells CCW, holes CW), one CCW
+    capsule per edge and one disc per point go through ONE slab sweep
+    (slab_overlay.slab_region) that counts winding numbers. A positive
+    radius dilates: {x : dist(x, geom) ≤ r} is where the winding over
+    all rings is positive, so holes, islands inside holes and
+    overlapping collection members need no special case. A negative
+    radius erodes areal subjects: the points inside the polygon (fill
+    winding > 0) that no boundary capsule covers — the capsule union IS
+    the ≤|r| boundary band, so its inscribed arcs leave the result
+    overshooting by the same sag bound, at reflex corners only;
+    lower-dimensional subjects erode to POLYGON EMPTY (JTS semantics).
+    Arcs are inscribed
     (error ≤ r·(1−cos(0.7π/s)) — the phase-jittered first/last chords
     span up to 1.4 steps; the JTS quadrant-segments convention).
-    Degenerate union contact returns None — honest null, never an
+    Non-finite coordinates, invalid polygon rings (unclosed, fewer than
+    3 distinct vertices, a zero-width spike, rings crossing each other)
+    and a sweep refusal return None — honest null, never an
     approximation."""
+    kind = ga[0]
+    parts = geo.geom_parts(*ga)
     if not np.isfinite(radius) or radius == 0:
         return None
-    kind, coords, offs = ga
-
-    def _dropcollinear(pts: np.ndarray, closed: bool) -> np.ndarray | None:
-        # collinear FORWARD-continuing edges give exactly-collinear
-        # capsule sides (degenerate overlap for the union fold);
-        # dropping the middle vertex changes nothing geometrically.
-        # A REVERSAL vertex (cross==0 but the path doubles back,
-        # dot<0) is NOT droppable — dropping it silently deletes the
-        # spike's buffer. For closed rings a reversal means a
-        # zero-width spike in the boundary: an INVALID polygon → None
-        # (honest null). Open lines never reach here with reversals
-        # (they go through _line_edges, which merges the collinear
-        # overlap instead).
-        pts = np.asarray(pts, dtype=np.float64)
-        if len(pts) < 3:
-            return pts
-        body = pts[:-1] if closed else pts
-        keep = []
-        n = len(body)
-        for i in range(n):
-            if not closed and (i == 0 or i == n - 1):
-                keep.append(body[i])
-                continue
-            a, b, c = body[(i - 1) % n], body[i], body[(i + 1) % n]
-            cross = (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-            if cross != 0:
-                keep.append(body[i])
-                continue
-            dot = (b[0] - a[0]) * (c[0] - b[0]) + (b[1] - a[1]) * (c[1] - b[1])
-            if dot < 0:
-                if closed:
-                    return None  # spiked ring: invalid polygon
-                keep.append(body[i])
-            # dot >= 0: duplicate point or strict forward continuation
-            # — dropping b is geometrically a no-op
-        out = np.asarray(keep, dtype=np.float64)
-        if closed:
-            out = np.vstack([out, out[:1]])
-        return out
-
-    def _line_edges(pts: np.ndarray) -> list:
-        """Edge list for an open polyline, with exactly-collinear
-        overlapping/touching edges merged into maximal segments.
-        A reversal 'spike' vertex makes one edge (partially) retrace
-        another on the same line; since buffer = ∪ per-edge capsules,
-        merging the collinear overlap preserves the point-set exactly
-        while removing the exactly-collinear capsule sides that are
-        degenerate for the GH union fold."""
-        pts = np.asarray(pts, dtype=np.float64)
-        edges = [
-            (pts[i], pts[i + 1])
-            for i in range(len(pts) - 1)
-            if pts[i][0] != pts[i + 1][0] or pts[i][1] != pts[i + 1][1]
-        ]
-        n = len(edges)
-        used = [False] * n
-        out: list = []
-        for i in range(n):
-            if used[i]:
-                continue
-            p, q = edges[i]
-            d = q - p
-            group = [i]
-            for j in range(i + 1, n):
-                if used[j]:
-                    continue
-                p2, q2 = edges[j]
-                c1 = d[0] * (p2[1] - p[1]) - d[1] * (p2[0] - p[0])
-                c2 = d[0] * (q2[1] - p[1]) - d[1] * (q2[0] - p[0])
-                if c1 == 0.0 and c2 == 0.0:
-                    group.append(j)
-            if len(group) == 1:
-                out.append((p, q))
-                continue
-            ivs = []
-            for j in group:
-                used[j] = True
-                a = float((edges[j][0] - p) @ d)
-                b = float((edges[j][1] - p) @ d)
-                ivs.append((min(a, b), max(a, b)))
-            ivs.sort()
-            lo0, hi0 = ivs[0]
-            dd = float(d @ d)
-            for lo, hi in ivs[1:]:
-                if lo <= hi0:
-                    hi0 = max(hi0, hi)
-                else:
-                    out.append((p + (lo0 / dd) * d, p + (hi0 / dd) * d))
-                    lo0, hi0 = lo, hi
-            out.append((p + (lo0 / dd) * d, p + (hi0 / dd) * d))
-        return out
-    if radius < 0:
-        # erosion, areal subjects only (negative buffer of lines/points
-        # is empty — JTS returns POLYGON EMPTY): {x : dist(x, boundary)
-        # ≥ |r|, x inside} == piece \ ∪edge-capsules, because the capsule
-        # union IS the ≤|r| boundary band. Members erode independently
-        # (erosion only removes area, so a disjoint member can't
-        # contribute). Inscribed arcs under-cover the band, so the
-        # eroded result overshoots by the same sag bound the dilation
-        # grants, at reflex corners only.
-        if kind not in _AREAL:
-            return "POLYGON EMPTY" if kind in _POINTY + _LINEY else None
-        r_abs = -radius
-        out: list = []
-        idx_n = 0
-        for k2, c2, o2 in geo.geom_parts(kind, coords, offs):
-            if k2 != "POLYGON":
-                return None
-            rings2 = [
-                _dropcollinear(c2[o2[ridx]:o2[ridx + 1]], closed=True)
-                for ridx in range(len(o2) - 1)
-            ]
-            if any(r is None or len(r) < 4 for r in rings2):
-                return None
-            cur: list | None = [_member_piece(rings2[0], rings2[1:])]
-            for ring in rings2:
-                for i in range(len(ring) - 1):
-                    cap = _capsule(ring[i], ring[i + 1], r_abs, segments, idx_n)
-                    idx_n += 1
-                    bx0, by0 = cap[:, 0].min(), cap[:, 1].min()
-                    bx1, by1 = cap[:, 0].max(), cap[:, 1].max()
-                    hit: list = []
-                    miss: list = []
-                    for p in cur:
-                        pc = p[0]
-                        if (
-                            pc[:, 0].max() < bx0 or pc[:, 0].min() > bx1
-                            or pc[:, 1].max() < by0 or pc[:, 1].min() > by1
-                        ):
-                            miss.append(p)
-                        else:
-                            hit.append(p)
-                    sub = _region_subtract_ring(hit, cap, pair_diff=_ring_pair_difference_gh)
-                    if sub is None:
-                        return None
-                    cur = sub + miss
-            out.extend(cur)
-        return _polys_to_wkt(out) if out else "POLYGON EMPTY"
-
-
-    fills: list = []   # (shell_ring_ccw, [hole_rings_ccw], part_idx)
-    holes: list = []   # (hole_ring_ccw, part_idx)
-    caps: list = []
-    idx = 0
-    for part_i, (k2, c2, o2) in enumerate(geo.geom_parts(kind, coords, offs)):
-        if k2 == "POINT":
-            caps.append(_disc(c2[0], radius, segments, idx))
-            idx += 1
-        elif k2 == "LINESTRING":
-            for p_e, q_e in _line_edges(c2):
-                caps.append(_capsule(p_e, q_e, radius, segments, idx))
-                idx += 1
-        elif k2 == "POLYGON":
-            clean_rings = [
-                _dropcollinear(c2[o2[ridx]:o2[ridx + 1]], closed=True)
-                for ridx in range(len(o2) - 1)
-            ]
-            if any(r is None or len(r) < 4 for r in clean_rings):
-                return None
-            fills.append((
-                geo._ccw_ring(clean_rings[0]),
-                [geo._ccw_ring(r) for r in clean_rings[1:]],
-                part_i,
-            ))
-            for ring in clean_rings:
-                for i in range(len(ring) - 1):
-                    caps.append(_capsule(ring[i], ring[i + 1], radius, segments, idx))
-                    idx += 1
-            for ring in clean_rings[1:]:
-                holes.append((geo._ccw_ring(ring), part_i))
+    if not all(np.isfinite(c2).all() for _k, c2, _o in parts):
+        return None
+    if radius < 0 and kind not in _AREAL:
+        return "POLYGON EMPTY" if kind in _POINTY + _LINEY else None
+    r = abs(radius)
+    fills: list = []  # polygon rings: shells CCW, holes CW
+    caps: list = []   # CCW capsules and discs
+    for k2, c2, o2 in parts:
+        if k2 == "POLYGON":
+            rings = [c2[o2[i]:o2[i + 1]] for i in range(len(o2) - 1)]
+            if not all(_valid_ring(ring) for ring in rings) or len(crossings(ring_edges(c2, o2))[0]):
+                return None  # invalid polygon
+            paths = []
+            for i, ring in enumerate(rings):
+                ring = geo._ccw_ring(ring)
+                fills.append(ring if i == 0 else ring[::-1])
+                paths.append(ring)
+        elif k2 in ("POINT", "LINESTRING"):
+            paths = [c2]
         else:
             return None
-    all_rings = [f for f, _hs, _pi in fills] + caps
-    if not all_rings:
-        return None
-    parts = _shell_union([all_rings[0]], all_rings[1:])
-    if parts is None:
-        # the GH fold refuses crossing capsules (a self-crossing
-        # polyline buffers its own path twice); fold through
-        # _overlay_union instead — the slab sweep is gated by exact
-        # identities, so this recovers the union or stays honest null,
-        # never approximates
-        parts = _ring_union_fallback(all_rings)
-    if parts is None:
-        return None
-    res: list | None = parts
-    for h, owner in holes:
-        hp: list | None = [(h, np.asarray([0, len(h)]))]
-        hx0, hy0 = h[:, 0].min() - 1e-12, h[:, 1].min() - 1e-12
-        hx1, hy1 = h[:, 0].max() + 1e-12, h[:, 1].max() + 1e-12
+        for path in paths:
+            pts = path[np.r_[True, (path[1:] != path[:-1]).any(axis=1)]]
+            if len(pts) == 1:
+                caps.append(_disc(pts[0], r, len(caps)))
+            for p, q in zip(pts[:-1], pts[1:]):
+                caps.append(_capsule(p, q, r, len(caps)))
+    def edges(rings):
+        return ring_edges(np.concatenate(rings), np.cumsum([0] + [len(r) for r in rings]))
 
-        def _bbox_misses(ring):
-            return (
-                ring[:, 0].max() < hx0 or ring[:, 0].min() > hx1
-                or ring[:, 1].max() < hy0 or ring[:, 1].min() > hy1
-            )
-
-        for ring in caps:
-            if _bbox_misses(ring):
-                continue  # bbox-disjoint from the hole: nothing to carve
-            hp = _region_subtract_ring(hp, ring, pair_diff=_ring_pair_difference_gh)
-            if hp is None:
-                return None
-        for f_shell, _f_holes, pi in fills:
-            if pi == owner or _bbox_misses(f_shell):
-                continue
-            # Only members NESTED INSIDE this hole partition the carve:
-            # an uncovered point belongs to the INNERMOST hole containing
-            # it, so a nested island's bare shell removes exactly the
-            # points the island's own holes will carve instead (keeps
-            # the per-hole carves disjoint — subtracting the island as a
-            # region would double-carve its hole interior and hit the
-            # first carve's boundary). A member CONTAINING this hole
-            # must not subtract at all: its bare shell covers the whole
-            # hole and would wrongly erase the carve.
-            if geo.classify_points_in_polygon(
-                f_shell[:1, 0], f_shell[:1, 1], h, np.asarray([0, len(h)])
-            )[0] != 2:
-                continue
-            hp = _region_subtract_ring(hp, f_shell, pair_diff=_ring_pair_difference_gh)
-            if hp is None:
-                return None
-        res = _region_subtract_pieces(res, hp)
-        if res is None:
-            return None
-    return _polys_to_wkt(res)
+    if radius > 0:
+        members = slab_region(edges(fills + caps), np.empty((0, 4)), lambda w, _w: w > 0)
+    else:
+        members = slab_region(edges(fills), edges(caps), lambda wf, wc: wf > 0 and wc == 0)
+    return _polys_to_wkt(members)
 
 
 @F.pandas_udf(StringType())
 def st_buffer(wkt: pd.Series, radius: pd.Series) -> pd.Series:
     """Planar buffer for any geometry kind (degrees; negative radius
-    erodes areal subjects) — see _buffer_geom. The GeoMesa surface only ships the geodesic point
-    form (st_bufferPoint); this is the general PostGIS-style op."""
+    erodes areal subjects) by one winding-count slab sweep — see
+    _buffer_geom; null where it refuses. The GeoMesa surface only ships
+    the geodesic point form (st_bufferPoint); this is the general
+    PostGIS-style op."""
     cache = _parse_cache(wkt)
     r_v = radius.to_numpy(np.float64)
     out = []
@@ -1047,13 +863,7 @@ def st_buffer(wkt: pd.Series, radius: pd.Series) -> pd.Series:
         g = cache.get(w)
         key = (w, float(r))
         if key not in memo:
-            if g is None:
-                memo[key] = None
-            else:
-                try:
-                    memo[key] = _buffer_geom(g, float(r))
-                except Exception:
-                    memo[key] = None
+            memo[key] = None if g is None else _buffer_geom(g, float(r))
         out.append(memo[key])
     return pd.Series(out)
 
@@ -1327,263 +1137,6 @@ def _gc_parts_interior_disjoint(parts: list) -> bool:
     return True
 
 
-def _clean_ring(ring) -> np.ndarray | None:
-    """Canonicalize a ring for the region algebra: drop consecutive
-    duplicate vertices and collapse exact zero-width backtrack spikes
-    (v[k-1] == v[k+1] — the doubled edge toggles even-odd parity twice,
-    so removal is point-set EXACT, not an approximation); None when
-    fewer than 3 distinct vertices remain (such a ring encloses exactly
-    zero area). Upstream overlays can emit both artifacts under
-    degenerate contact — observed: a sliver ((0 7, 8.9e-16 7, 0 7))
-    from an intersection, and a hole-union ring threading a nested
-    hole's corners via a spike ((-0.5 0.5, -0.5 0, -0.5 0.5)) that made
-    the downstream intersect kernel answer EMPTY instead of the patch
-    region — and the ring-pair kernels choke on zero-length and doubled
-    edges."""
-    ring = np.asarray(ring, dtype=np.float64)
-    body = ring[:-1] if len(ring) > 1 and (ring[0] == ring[-1]).all() else ring
-    changed = True
-    while changed and len(body) >= 3:
-        changed = False
-        n = len(body)
-        keep = np.ones(n, dtype=bool)
-        for k in range(n):
-            if (body[k] == body[(k + 1) % n]).all():
-                keep[(k + 1) % n] = False
-        if not keep.all():
-            body = body[keep]
-            changed = True
-            continue
-        for k in range(n):
-            if (body[(k - 1) % n] == body[(k + 1) % n]).all():
-                body = np.delete(body, sorted({k, (k + 1) % n}, reverse=True), axis=0)
-                changed = True
-                break
-    if len(body) < 3 or len(np.unique(body, axis=0)) < 3:
-        return None
-    return np.vstack([body, body[:1]])
-
-
-def _areal_members(kind, coords, offs) -> list | None:
-    """(MULTI)POLYGON members as (shell_ring, [hole_ring, ...]) with all
-    rings closed, consecutive-duplicate-free, and CCW-normalized; None
-    for non-polygonal parts. Members with a degenerate (<3 distinct
-    vertices ⇒ exactly zero area) shell are dropped, as are degenerate
-    hole rings."""
-    out = []
-    for k2, c2, o2 in geo.geom_parts(kind, coords, offs):
-        if k2 != "POLYGON":
-            return None
-        shell = _clean_ring(c2[o2[0]:o2[1]])
-        if shell is None:
-            continue
-        shell = geo._ccw_ring(shell)
-        holes = []
-        for i in range(1, len(o2) - 1):
-            h = _clean_ring(c2[o2[i]:o2[i + 1]])
-            if h is not None:
-                holes.append(geo._ccw_ring(h))
-        out.append((shell, holes))
-    return out
-
-
-def _member_piece(shell, holes) -> tuple[np.ndarray, np.ndarray]:
-    """Assemble (coords, ring_offsets) from a CCW shell + hole rings
-    (holes stored CW, the parity convention of the piece machinery)."""
-    rings = [geo._ccw_ring(np.asarray(shell, dtype=np.float64))] + [
-        geo._ccw_ring(np.asarray(h, dtype=np.float64))[::-1] for h in holes
-    ]
-    cc = np.concatenate(rings)
-    oo = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
-    return cc, oo
-
-
-def _piece_holes(c2, o2) -> list[np.ndarray]:
-    return [geo._ccw_ring(c2[o2[i]:o2[i + 1]]) for i in range(1, len(o2) - 1)]
-
-
-# --- exact region algebra over disjoint piece lists --------------------------
-#
-# A "region" is a list of mutually disjoint (coords, ring_offsets) polygon
-# pieces (shell + parity holes). The three primitives below reduce every
-# holed-operand overlay to single-ring kernel calls via set identities:
-#   (shell \ holes) \ r  ==  (shell \ r) \ holes
-#   (shell \ holes) ∩ r  ==  (shell ∩ r) \ holes
-#   X \ (sb \ ⊎hb)       ==  (X \ sb) ⊎ ⊎ᵢ (X ∩ hbᵢ)
-# Each returns None on degenerate boundary contact the ring-pair kernels
-# cannot trace (the caller falls back to the DE-9IM fast paths).
-
-
-def _region_subtract_ring(pieces, r, pair_diff=None) -> list | None:
-    """Subtract the area enclosed by closed ring ``r`` from a disjoint
-    piece list. ``pair_diff`` overrides the single-ring difference
-    kernel (the buffer carve passes a GH-first variant that keeps
-    connected remainders as ONE piece — half-plane fragments share
-    edges, degenerate for later subtraction consumers)."""
-    diff = pair_diff or _ring_pair_difference
-    rr = geo._ccw_ring(np.asarray(r, dtype=np.float64))
-    out: list = []
-    for c2, o2 in pieces:
-        contact = _piece_contact(c2, o2, rr)
-        if contact == "disjoint":
-            out.append((c2, o2))
-            continue
-        if contact == "interior":
-            # r strictly inside the piece interior: punch it as a hole.
-            # With no boundary contact every existing hole lies entirely
-            # inside or outside r — holes swallowed by r are dropped
-            # (they'd otherwise nest and flip parity).
-            r_off = np.asarray([0, len(rr)])
-            keep = [c2[o2[0]:o2[1]]]
-            for h in _piece_holes(c2, o2):
-                # keep a hole only if ANY strict sample lies outside r
-                # (touch-contact punches make single-vertex tests
-                # ambiguous: a swallowed hole may touch r's ring)
-                hx = np.concatenate([h[:-1, 0], (h[:-1, 0] + h[1:, 0]) / 2.0])
-                hy = np.concatenate([h[:-1, 1], (h[:-1, 1] + h[1:, 1]) / 2.0])
-                if (geo.classify_points_in_polygon(hx, hy, rr, r_off) == 0).any():
-                    keep.append(h[::-1])  # back to stored CW
-            keep.append(rr[::-1])
-            cc = np.concatenate(keep)
-            oo = np.concatenate([[0], np.cumsum([len(k) for k in keep])])
-            out.append((cc, oo))
-            continue
-        # interacting
-        shell = c2[o2[0]:o2[1]]
-        r_off = np.asarray([0, len(rr)])
-        proper, touch, ovl = geo.segment_contact_matrices(
-            geo.line_edges(rr), geo.line_edges(np.asarray(shell, dtype=np.float64))
-        )
-        if not (proper.any() or touch.any() or ovl.any()):
-            # r never meets the shell ring. Either it swallows the whole
-            # piece, or it lies inside the shell crossing only holes: the
-            # excluded region is then the 2-D union of r with the holes
-            # it meets — merged via _shell_union (whose voids are islands
-            # of KEPT area, re-emitted as their own pieces).
-            if geo.classify_points_in_polygon(shell[:1, 0], shell[:1, 1], rr, r_off)[0] == 2:
-                continue  # r swallows the piece entirely
-            # r's boundary provably never meets the shell's boundary
-            # (exact segment matrices above) and r does not swallow the
-            # piece, so r lies strictly on ONE side of the shell.
-            # _piece_contact can still route a fully-OUTSIDE r here when
-            # one sample sits ~1e-16 from a shell edge and classifies
-            # inside (observed: a hole corner 8.9e-16 off a -2/3-slope
-            # edge). A majority vote of r's strict samples vs the shell
-            # alone decides the true side; punching an outside r as a
-            # hole flips every even-odd reader over r's whole area.
-            rx = np.concatenate([rr[:-1, 0], (rr[:-1, 0] + rr[1:, 0]) / 2.0])
-            ry = np.concatenate([rr[:-1, 1], (rr[:-1, 1] + rr[1:, 1]) / 2.0])
-            rcls = geo.classify_points_in_polygon(
-                rx, ry, np.asarray(shell, dtype=np.float64), np.asarray([0, len(shell)])
-            )
-            n_in, n_out = int((rcls == 2).sum()), int((rcls == 0).sum())
-            if n_in == n_out:
-                return None  # genuinely ambiguous: honest null, never a guess
-            if n_in < n_out:
-                out.append((c2, o2))  # r outside the shell: piece untouched
-                continue
-            touching: list = []
-            kept: list = []
-            r_in_kept_hole = False
-            for h in _piece_holes(c2, o2):
-                hp, ht, hv = geo.segment_contact_matrices(geo.line_edges(h), geo.line_edges(rr))
-                if hp.any() or ht.any() or hv.any():
-                    touching.append(h)
-                elif geo.classify_points_in_polygon(h[:1, 0], h[:1, 1], rr, r_off)[0] == 2:
-                    continue  # hole swallowed by r
-                else:
-                    kept.append(h)
-                    # r nested inside this hole ⇒ r ∩ piece = ∅ (punching
-                    # it would nest rings and flip parity back to solid)
-                    hcls = geo.classify_points_in_polygon(
-                        rx, ry, np.asarray(h, dtype=np.float64), np.asarray([0, len(h)])
-                    )
-                    if int((hcls == 2).sum()) > int((hcls == 0).sum()):
-                        r_in_kept_hole = True
-            if r_in_kept_hole:
-                out.append((c2, o2))
-                continue
-            merged = _shell_union([rr], touching)
-            if merged is None:
-                return None
-            hole_rings: list = []
-            islands: list = []
-            for mc, mo in merged:
-                hole_rings.append(mc[mo[0]:mo[1]])
-                for q in range(1, len(mo) - 1):
-                    islands.append(mc[mo[q]:mo[q + 1]])
-            island_holes: list = [[] for _ in islands]
-            main_kept: list = []
-            for h in kept:
-                for t, isl in enumerate(islands):
-                    if geo.classify_points_in_polygon(
-                        h[:1, 0], h[:1, 1], isl, np.asarray([0, len(isl)])
-                    )[0] == 2:
-                        island_holes[t].append(h)
-                        break
-                else:
-                    main_kept.append(h)
-            out.append(_member_piece(shell, hole_rings + main_kept))
-            for t, isl in enumerate(islands):
-                out.append(_member_piece(isl, island_holes[t]))
-            continue
-        # r crosses the shell ring: (shell \ holes) \ r == (shell \ r) \
-        # holes. The crossing guarantees hole-free (shell \ r) pieces, so
-        # the recursion strictly reduces the hole count and terminates.
-        d = diff(shell, rr)
-        if d is None:
-            return None
-        for h in _piece_holes(c2, o2):
-            d = _region_subtract_ring(d, h, pair_diff=pair_diff)
-            if d is None:
-                return None
-        out.extend(d)
-    return out
-
-
-def _region_intersect_ring(pieces, r) -> list | None:
-    """Clip a disjoint piece list to the area enclosed by closed ring
-    ``r``: (shell ∩ r) \\ holes per piece."""
-    rr = geo._ccw_ring(np.asarray(r, dtype=np.float64))
-    out: list = []
-    for c2, o2 in pieces:
-        d = _ring_pair_intersection(c2[o2[0]:o2[1]], rr)
-        if d is None:
-            return None
-        for h in _piece_holes(c2, o2):
-            d = _region_subtract_ring(d, h)
-            if d is None:
-                return None
-        out.extend(d)
-    return out
-
-
-def _region_subtract_member(pieces, sb, hb) -> list | None:
-    """X \\ (sb \\ ⊎hb) == (X \\ sb) ⊎ ⊎ᵢ (X ∩ hbᵢ): the subtracted
-    member's holes add back the parts of X they expose. The two sides
-    are disjoint (each hb lies inside sb), so the result stays a valid
-    disjoint piece list."""
-    out = _region_subtract_ring(pieces, sb)
-    if out is None:
-        return None
-    for h in hb:
-        add = _region_intersect_ring(pieces, h)
-        if add is None:
-            return None
-        out.extend(add)
-    return out
-
-
-def _region_subtract_pieces(pieces, sub) -> list | None:
-    """Subtract a disjoint piece list ``sub`` (pieces may carry holes)
-    from ``pieces``."""
-    for c2, o2 in sub:
-        pieces = _region_subtract_member(pieces, c2[o2[0]:o2[1]], _piece_holes(c2, o2))
-        if pieces is None:
-            return None
-    return pieces
-
-
 def _areal_area(coords, offs) -> float:
     """Area of a (MULTI)POLYGON ring set: Σ|shell| − Σ|holes| grouped by
     containment depth (orientation-agnostic, unlike raw signed sums)."""
@@ -1753,43 +1306,9 @@ def _areal_relate_fallback(ga, gb, op: str) -> str | None:
     return None
 
 
-def _ring_pair_intersection(a2, b2) -> list | None:
-    """Single-ring ∩ single-ring as [(coords, offsets), ...] parts.
-    Sutherland–Hodgman ONLY for convex×convex (a concave subject can
-    have a DISCONNECTED intersection with a convex clip, which S-H
-    silently bridges into one invalid ring); Greiner–Hormann otherwise;
-    None on degenerate contact."""
-    if geo.is_convex_ring(a2) and geo.is_convex_ring(b2):
-        ring = geo.convex_polygon_intersection(a2, b2)
-        return [] if ring is None else [(ring, np.asarray([0, len(ring)]))]
-    return geo.polygon_overlay_general(a2, b2, "intersection")
-
-
-def _ring_pair_difference(a2, b2) -> list | None:
-    r"""Single-ring \ single-ring as [(coords, offsets), ...] parts
-    (the containment case yields one polygon-with-hole part)."""
-    if geo.is_convex_ring(a2) and geo.is_convex_ring(b2):
-        pieces = geo.convex_polygon_difference(a2, b2)
-        return [(r, np.asarray([0, len(r)])) for r in pieces]
-    return geo.polygon_overlay_general(a2, b2, "difference")
-
-
-def _ring_pair_difference_gh(a2, b2) -> list | None:
-    r"""GH-first single-ring difference: a connected remainder stays ONE
-    concave piece instead of half-plane fragments. The buffer's hole
-    carve subtracts many overlapping capsules sequentially — fragments
-    would share edges, which is degenerate contact for every LATER
-    consumer of the piece list. Falls back to the half-plane chain when
-    GH rejects the contact as degenerate."""
-    r = geo.polygon_overlay_general(a2, b2, "difference")
-    if r is not None:
-        return r
-    return _ring_pair_difference(a2, b2)
-
-
 def _polys_to_wkt(parts) -> str | None:
-    """GH overlay result [(coords, ring_offsets), ...] → WKT (None stays
-    None: degenerate-contact inputs are unsupported, not approximated)."""
+    """Slab-sweep members [(coords, ring_offsets), ...] → WKT (None stays
+    None: a refused sweep is unsupported, not approximated)."""
     if parts is None:
         return None
     if not parts:
@@ -1871,74 +1390,6 @@ def _overlay_difference(ga, gb) -> str | None:
             lines.extend(pieces)
         return _pieces_to_wkt([], lines, "GEOMETRYCOLLECTION EMPTY")
     return _areal_overlay(ga, gb, "difference")
-
-
-def _piece_contact(c2, o2, b2) -> str:
-    """Exact classification of ring ``b2`` against piece (c2, o2):
-    'disjoint' (b2's region outside the piece), 'interior' (b2's region
-    inside the piece's closure), or 'interacting' (anything else —
-    boundaries cross or overlap, or the piece sits inside b2).
-
-    Vertex-only contact (boundaries meet at isolated points, no proper
-    crossing, no collinear overlap) still resolves to interior/disjoint
-    when every strict sample (b2's vertices AND edge midpoints) lands on
-    one side: punching a hole that touches the shell at points is
-    parity-exact, and the crossing-based kernels would reject the
-    contact as degenerate for no measurable reason.
-
-    Representation caveat (deliberate): a punched hole touching the
-    shell at TWO OR MORE points pinches the interior — the point set is
-    exact but strict OGC/JTS would split it into a MULTIPOLYGON of
-    components. This engine's own parity kernels (classification,
-    area, relate, further overlays) treat the pinched form exactly;
-    component splitting is not implemented."""
-    b = np.asarray(b2, dtype=np.float64)
-    c = np.asarray(c2, dtype=np.float64)
-    proper, touch, overlap = geo.segment_contact_matrices(
-        geo.line_edges(b), geo.polygon_edges(c, np.asarray(o2))
-    )
-    if proper.any() or overlap.any():
-        return "interacting"
-    b_off = np.asarray([0, len(b)])
-    sx = b[:-1, 0]
-    sy = b[:-1, 1]
-    if touch.any():
-        # b2 can thread THROUGH the piece between touch points
-        # (corner-to-corner slicing), and a touch point can BE an edge
-        # midpoint — so besides each edge midpoint, sample the midpoint
-        # of every interval between consecutive piece vertices on a b2
-        # edge. Every sample lies on b2's boundary by construction, so
-        # extra samples are always sound; missing ones are what made a
-        # slicing edge read 'disjoint'.
-        mx, my = geo._edge_midpoints(b, b_off)
-        ex, ey = geo._contact_interval_samples(b, b_off, c)
-        sx = np.concatenate([sx, mx, ex])
-        sy = np.concatenate([sy, my, ey])
-    cls = geo.classify_points_in_polygon(sx, sy, c2, o2)
-
-    def _piece_in_b2() -> bool:
-        # majority vote over the piece's shell vertices AND edge
-        # midpoints (a single first-vertex probe is arbitrary when it
-        # sits ON b2's boundary)
-        shell = c[o2[0]:o2[1]]
-        qx = np.concatenate([shell[:-1, 0], (shell[:-1, 0] + shell[1:, 0]) / 2.0])
-        qy = np.concatenate([shell[:-1, 1], (shell[:-1, 1] + shell[1:, 1]) / 2.0])
-        qc = geo.classify_points_in_polygon(qx, qy, b, b_off)
-        return int((qc == 2).sum()) > int((qc == 0).sum())
-
-    if (cls != 0).all():
-        # all samples inside-or-boundary: b2 ⊆ closure(piece) — unless
-        # the piece ALSO sits inside b2 (mutual: genuinely interacting)
-        if _piece_in_b2():
-            return "interacting"
-        return "interior"
-    if (cls != 2).all():
-        # all samples outside-or-boundary — unless the PIECE is inside
-        # b2 (b2 swallows the piece: a real subtraction, not disjoint)
-        if _piece_in_b2():
-            return "interacting"
-        return "disjoint"
-    return "interacting"
 
 
 def _overlay_union(ga, gb) -> str | None:
@@ -2063,41 +1514,6 @@ def _parts_canonical_union(parts: list) -> str | None:
         if keep:
             members.append(_pieces_to_wkt(keep, [], "GEOMETRYCOLLECTION EMPTY"))
     return _gc_combine(members)
-
-
-def _shell_union(ra: list, rb: list) -> list | None:
-    """Union of hole-free shell rings: merge B's shells into A's
-    (disjoint) part list one at a time — disjoint member → new part;
-    member interacting with exactly ONE single-ring part → GH pairwise
-    union replaces it (interlocking shapes correctly enclose void
-    holes); interior member absorbs. A member bridging several parts
-    (their transitive merge) and contact with a hole-bearing part
-    return honest null."""
-    parts: list = [(np.asarray(r, dtype=np.float64), np.asarray([0, len(r)])) for r in ra]
-    for b2 in rb:
-        contacts = [_piece_contact(c2, o2, b2) for c2, o2 in parts]
-        hits = [i for i, ct in enumerate(contacts) if ct != "disjoint"]
-        if not hits:
-            b = np.asarray(b2, dtype=np.float64)
-            parts.append((b, np.asarray([0, len(b)])))
-            continue
-        if len(hits) == 1 and contacts[hits[0]] == "interior":
-            continue  # swallowed by the part's interior
-        # a member hitting several parts merges them transitively: fold
-        # pairwise GH unions through the hit list (each intermediate must
-        # stay a single void-free ring — a void mid-fold is honest null)
-        cur = (np.asarray(b2, dtype=np.float64), np.asarray([0, len(b2)]))
-        for i in hits:
-            c2, o2 = parts[i]
-            if len(o2) != 2 or len(cur[1]) != 2:
-                return None  # merging across a void-bearing part
-            merged = geo.polygon_overlay_general(c2, cur[0], "union")
-            if merged is None or len(merged) != 1:
-                return None
-            cur = merged[0]
-        parts = [p for k, p in enumerate(parts) if k not in hits]
-        parts.append(cur)
-    return parts
 
 
 def _null_on_error(fn):

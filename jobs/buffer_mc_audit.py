@@ -9,10 +9,10 @@ Check per input: probe ∈ buffer(G, r) ⟺ dist(probe, G) ≤ r, up to the
 inscribed-arc sag band r·(1−cos(π/(2·S)))+tol (the JTS quadrant-segments
 convention the kernel documents). Erosion: probe ∈ erode(P, r) ⟺
 probe ∈ P and dist(probe, ∂P) > |r|, same band. A None result counts as
-an honest null, never a mismatch.
+an honest null, never a mismatch; an exception counts as an error.
 
 Pure numpy — no Spark. Writes BENCH/buffer_mc_audit.json and exits with
-status 1 when any probe mismatches.
+status 1 when any probe mismatches or any input raises.
 
     python jobs/buffer_mc_audit.py [N_PER_CLASS] [PROBES_PER_INPUT]
 """
@@ -116,18 +116,19 @@ def gen_input(rng, cls) -> str | None:
     raise ValueError(cls)
 
 
-def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 512
-    rng = np.random.default_rng(20260818)
+def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
+    """Run the distance identity over ``n`` inputs of every class with
+    ``n_probes`` probes each. Returns (per-class counters of
+    checked/null/error/probes/mismatch, up to 10 mismatch or error
+    examples). An exception from the kernel is an error, not a null."""
+    rng = np.random.default_rng(seed)
     report: dict = {}
     examples: list = []
-    classes = (
+    for cls in (
         "polyline_float", "polyline_snapped", "polygon_holed",
         "polygon_snapped", "polygon_eroded", "multipoint", "gc_mixed",
-    )
-    for cls in classes:
-        row = {"checked": 0, "null": 0, "probes": 0, "mismatch": 0}
+    ):
+        row = {"checked": 0, "null": 0, "error": 0, "probes": 0, "mismatch": 0}
         made = 0
         while made < n:
             wkt_in = gen_input(rng, cls)
@@ -143,8 +144,11 @@ def main() -> int:
             rad = -r if erode else r
             try:
                 w = sf._buffer_geom(g, rad)
-            except Exception:
-                w = None
+            except Exception as e:
+                row["error"] += 1
+                if len(examples) < 10:
+                    examples.append({"class": cls, "input": wkt_in, "radius": rad, "error": repr(e)})
+                continue
             if w is None:
                 row["null"] += 1
                 continue
@@ -183,6 +187,13 @@ def main() -> int:
                         }
                     )
         report[cls] = row
+    return report, examples
+
+
+def main() -> int:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
+    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 512
+    report, examples = audit(n, n_probes)
     here = os.path.dirname(os.path.abspath(__file__))
     out = {
         "n_per_class": n,
@@ -194,12 +205,13 @@ def main() -> int:
         json.dump(out, f, indent=1)
     total = sum(r["probes"] for r in report.values())
     bad = sum(r["mismatch"] for r in report.values())
-    print(f"probes checked: {total}  mismatches: {bad}")
+    errors = sum(r["error"] for r in report.values())
+    print(f"probes checked: {total}  mismatches: {bad}  errors: {errors}")
     for cls, rrow in report.items():
         print(cls, rrow)
     for e in examples[:3]:
         print(json.dumps(e))
-    return bad
+    return bad + errors
 
 
 if __name__ == "__main__":

@@ -36,8 +36,8 @@ from jobs.overlay_null_rate import OPS, _holed_polygon, _rect, gen_pair  # noqa:
 
 def _nested_island_wkt(rng) -> str:
     """MULTIPOLYGON: big shell with a rect hole, plus an island member
-    nested INSIDE the hole (the region algebra's island-in-hole carve
-    path). Integer-snapped so degenerate contact is common."""
+    nested INSIDE the hole. Integer-snapped so degenerate contact is
+    common."""
     x0, y0 = int(rng.integers(-2, 2)), int(rng.integers(-2, 2))
     hole = (
         f"({x0 - 3} {y0 - 3}, {x0 + 3} {y0 - 3}, {x0 + 3} {y0 + 3}, "

@@ -6,7 +6,7 @@ this measures how often NULL actually happens so a user can predict it.
 
 Classes:
   holed_generic      float-coordinate convex-ish shells with rect holes
-                     (generic position — the GH main path)
+                     (generic position)
   holed_snapped      the same shapes snapped to an integer grid
                      (shared edges/vertices: degenerate-contact rechain)
   rect_grid          axis-aligned integer rectangles (maximal edge

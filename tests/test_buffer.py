@@ -1,5 +1,6 @@
-"""General st_buffer (round-4): union-of-capsules planar buffer over the
-region algebra. Checks are distance-field ground truth: a probe belongs
+"""General st_buffer: planar buffer as one winding-count slab sweep over
+the geometry's rings, per-edge capsules and per-point discs. Checks are
+distance-field ground truth: a probe belongs
 to buffer(G, r) iff dist(probe, G) ≤ r, up to the inscribed-arc sag
 band r·(1−cos(0.7π/s)) which is excluded (the result polygon inscribes
 the true buffer, the JTS quadrant-segments convention; the jittered
@@ -255,12 +256,10 @@ def test_buffer_spiked_ring_honest_null():
 
 
 def test_buffer_self_crossing_polyline():
-    """Round-5: a self-intersecting polyline's capsules cross each other,
-    which the _shell_union GH fold refuses (was honest null ~20% of
-    random zig-zags). _ring_union_fallback now folds the capsules
-    through _overlay_union (the slab sweep, exact-identity gated).
-    Distance-field equivalence on the audit's
-    first previously-null input."""
+    """A self-intersecting polyline's capsules cross each other (once an
+    honest null for ~20% of random zig-zags); the sweep cuts at every
+    crossing within the capsule set. Distance-field equivalence on the
+    audit's first previously-null input."""
     rng = np.random.default_rng(44)
     w = _check_buffer(
         "LINESTRING (0.6349868331 3.848554448, -2.49716731 -1.249264016, "
@@ -273,3 +272,33 @@ def test_buffer_self_crossing_polyline():
     # a figure-eight crossing: buffer must cover the crossing point once
     w2 = _check_buffer("LINESTRING (0 0, 4 4, 4 0, 0 4)", 0.4, rng, 6)
     assert w2 is not None
+
+
+def test_buffer_zero_length_linestring_is_point_disc():
+    """A LINESTRING whose vertices all coincide buffers to the disc of its
+    point (JTS), not to null and not to POLYGON EMPTY."""
+    rng = np.random.default_rng(45)
+    w = _check_buffer("LINESTRING (0 0, 0 0)", 0.5, rng, 2)
+    assert w == stf._buffer_geom(geo.parse_wkt("POINT (0 0)"), 0.5)
+
+
+def test_buffer_non_finite_coordinates_null():
+    for wkt_in in ("POINT (nan 0)", "LINESTRING (0 0, inf 1)"):
+        g = geo.parse_wkt(wkt_in)
+        assert stf._buffer_geom(g, 0.5) is None, wkt_in
+        assert stf._buffer_geom(g, -0.5) is None, wkt_in
+    # a radius so large the capsule coordinates overflow
+    assert stf._buffer_geom(geo.parse_wkt("LINESTRING (0 0, 1 1)"), 1e300) is None
+
+
+def test_buffer_invalid_polygon_rings_null():
+    """Rings that cross each other, and an unclosed ring, are invalid
+    polygons: honest null for dilation and erosion alike."""
+    for wkt_in in (
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (5 5, 12 5, 12 6, 5 6, 5 5))",
+        "POLYGON ((0 0, 4 4, 4 0, 0 4, 0 0))",
+        "POLYGON ((0 0, 4 0, 4 4, 0 4))",
+    ):
+        g = geo.parse_wkt(wkt_in)
+        assert stf._buffer_geom(g, 0.3) is None, wkt_in
+        assert stf._buffer_geom(g, -0.3) is None, wkt_in

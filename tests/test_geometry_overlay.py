@@ -1,7 +1,7 @@
-"""Property tests for the round-3 geometry kernels (no Spark): convex
-overlay area conservation, clip containment, line-clip length
-conservation, and simplicity invariances — seeded random geometry so
-runs are deterministic."""
+"""Property tests for the geometry kernels (no Spark): slab-sweep
+overlay area conservation on convex and star pairs, clip containment,
+line-clip length conservation, and simplicity invariances — seeded
+random geometry so runs are deterministic."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from geomesa_spark.functions import geometry as geo
+from geomesa_spark.functions.slab_overlay import slab_boolean
 
 
 def _random_convex_ring(rng: np.random.Generator, scale: float = 10.0) -> np.ndarray:
@@ -20,50 +21,52 @@ def _random_convex_ring(rng: np.random.Generator, scale: float = 10.0) -> np.nda
             return ring
 
 
-def test_convex_overlay_area_conservation():
+def _poly(ring: np.ndarray) -> tuple:
+    return ("POLYGON", ring, np.asarray([0, len(ring)]))
+
+
+def test_slab_boolean_convex_area_conservation():
     """area(A∩B) + area(A\\B) == area(A) for random convex pairs — the
-    half-plane difference decomposition and the Sutherland–Hodgman clip
-    must tile A exactly."""
+    slab sweep's intersection and difference must tile A exactly."""
     rng = np.random.default_rng(7)
     checked = 0
     for _ in range(60):
         a = _random_convex_ring(rng)
         b = _random_convex_ring(rng) + rng.uniform(-4, 4, size=2)
-        inter = geo.convex_polygon_intersection(a, b)
-        diff = geo.convex_polygon_difference(a, b)
-        assert diff is not None
-        ai = abs(geo.ring_signed_area(inter)) if inter is not None else 0.0
-        ad = sum(abs(geo.ring_signed_area(p)) for p in diff)
+        inter = slab_boolean(_poly(a), _poly(b), "intersection")
+        diff = slab_boolean(_poly(a), _poly(b), "difference")
+        assert inter is not None and diff is not None
+        ai = _area_of(inter)
+        ad = _area_of(diff)
         aa = abs(geo.ring_signed_area(a))
         assert ai + ad == pytest.approx(aa, rel=1e-9, abs=1e-9)
         checked += 1
-        if inter is not None:
+        for c, o in inter:
             # every intersection vertex lies in the closure of both inputs
             for ring, name in ((a, "a"), (b, "b")):
                 cls = geo.classify_points_in_polygon(
-                    inter[:-1, 0], inter[:-1, 1], ring, np.asarray([0, len(ring)])
+                    c[:, 0], c[:, 1], ring, np.asarray([0, len(ring)])
                 )
-                # float clipping can land a vertex an ulp outside; verify
+                # float crossings can land a vertex an ulp outside; verify
                 # via distance to the ring instead of strict classification
                 bad = cls == 0
                 if bad.any():
                     d2, _cx, _cy = geo._point_to_segments(
-                        inter[:-1, 0][bad], inter[:-1, 1][bad], *geo.line_edges(ring)
+                        c[:, 0][bad], c[:, 1][bad], *geo.line_edges(ring)
                     )
                     assert float(d2.min(axis=1).max()) < 1e-16, name
     assert checked == 60
 
 
-def test_convex_intersection_commutes():
+def test_slab_boolean_convex_intersection_commutes():
     rng = np.random.default_rng(11)
     for _ in range(30):
         a = _random_convex_ring(rng)
         b = _random_convex_ring(rng) + rng.uniform(-3, 3, size=2)
-        ab = geo.convex_polygon_intersection(a, b)
-        ba = geo.convex_polygon_intersection(b, a)
-        a_ab = abs(geo.ring_signed_area(ab)) if ab is not None else 0.0
-        a_ba = abs(geo.ring_signed_area(ba)) if ba is not None else 0.0
-        assert a_ab == pytest.approx(a_ba, rel=1e-9, abs=1e-12)
+        ab = slab_boolean(_poly(a), _poly(b), "intersection")
+        ba = slab_boolean(_poly(b), _poly(a), "intersection")
+        assert ab is not None and ba is not None
+        assert _area_of(ab) == pytest.approx(_area_of(ba), rel=1e-9, abs=1e-12)
 
 
 def test_line_clip_length_conservation():
@@ -207,19 +210,19 @@ def _area_of(parts):
     return sum(abs(geo.polygon_area_deg2(c, o)) for c, o in parts)
 
 
-def test_greiner_hormann_random_stars():
+def test_slab_boolean_random_stars():
     """Concave×concave overlay on random star polygons: area conservation
     area(A∩B) + area(A\\B) == area(A) (both orders) and Monte-Carlo
-    membership equivalence, with degenerate-contact inputs honestly
-    skipped (the kernel returns None for them)."""
+    membership equivalence, with refused inputs honestly skipped (the
+    kernel returns None for them)."""
     rng = np.random.default_rng(3)
     ok = skipped = 0
     for trial in range(150):
         a = _star(rng, rng.integers(5, 12), 0, 0)
         b = _star(rng, rng.integers(5, 12), rng.uniform(-3, 3), rng.uniform(-3, 3))
-        inter = geo.polygon_overlay_general(a, b, "intersection")
-        diff = geo.polygon_overlay_general(a, b, "difference")
-        diff_ba = geo.polygon_overlay_general(b, a, "difference")
+        inter = slab_boolean(_poly(a), _poly(b), "intersection")
+        diff = slab_boolean(_poly(a), _poly(b), "difference")
+        diff_ba = slab_boolean(_poly(b), _poly(a), "difference")
         if inter is None or diff is None or diff_ba is None:
             skipped += 1
             continue
@@ -247,23 +250,23 @@ def test_greiner_hormann_random_stars():
     assert ok > 100 and skipped < 30
 
 
-def test_greiner_hormann_containment_and_holes():
-    sq = lambda x0, y0, s: np.asarray(
+def test_slab_boolean_containment_and_holes():
+    sq = lambda x0, y0, s: _poly(np.asarray(
         [[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]], float
-    )
-    inter = geo.polygon_overlay_general(sq(0, 0, 10), sq(2, 2, 2), "intersection")
+    ))
+    inter = slab_boolean(sq(0, 0, 10), sq(2, 2, 2), "intersection")
     assert _area_of(inter) == 4.0
-    diff = geo.polygon_overlay_general(sq(0, 0, 10), sq(2, 2, 2), "difference")
+    diff = slab_boolean(sq(0, 0, 10), sq(2, 2, 2), "difference")
     assert len(diff) == 1 and len(diff[0][1]) == 3  # shell + hole
     assert abs(abs(geo.polygon_area_deg2(*diff[0])) - 96.0) < 1e-9
-    assert geo.polygon_overlay_general(sq(0, 0, 1), sq(5, 5, 1), "intersection") == []
-    assert _area_of(geo.polygon_overlay_general(sq(0, 0, 1), sq(5, 5, 1), "difference")) == 1.0
+    assert slab_boolean(sq(0, 0, 1), sq(5, 5, 1), "intersection") == []
+    assert _area_of(slab_boolean(sq(0, 0, 1), sq(5, 5, 1), "difference")) == 1.0
     # A inside B: difference empty, intersection is A
-    assert geo.polygon_overlay_general(sq(2, 2, 2), sq(0, 0, 10), "difference") == []
-    assert _area_of(geo.polygon_overlay_general(sq(2, 2, 2), sq(0, 0, 10), "intersection")) == 4.0
+    assert slab_boolean(sq(2, 2, 2), sq(0, 0, 10), "difference") == []
+    assert _area_of(slab_boolean(sq(2, 2, 2), sq(0, 0, 10), "intersection")) == 4.0
 
 
-def test_greiner_hormann_union_random_stars():
+def test_slab_boolean_union_random_stars():
     """Union area identity area(A∪B) == area(A)+area(B)−area(A∩B) and
     Monte-Carlo membership on random concave pairs; interlocking shapes
     enclose a hole (parity area + void-probe checked)."""
@@ -272,8 +275,8 @@ def test_greiner_hormann_union_random_stars():
     for trial in range(120):
         a = _star(rng, rng.integers(5, 12), 0, 0)
         b = _star(rng, rng.integers(5, 12), rng.uniform(-3, 3), rng.uniform(-3, 3))
-        inter = geo.polygon_overlay_general(a, b, "intersection")
-        uni = geo.polygon_overlay_general(a, b, "union")
+        inter = slab_boolean(_poly(a), _poly(b), "intersection")
+        uni = slab_boolean(_poly(a), _poly(b), "union")
         if inter is None or uni is None:
             skipped += 1
             continue
@@ -298,7 +301,7 @@ def test_greiner_hormann_union_random_stars():
     # interlocking U and inverted-U in generic position: one polygon, one hole
     U1 = np.asarray([[0, 0], [10, 0], [10, 10], [7, 10], [7, 3], [3, 3], [3, 10], [0, 10], [0, 0]], float)
     U2 = np.asarray([[0.5, 12], [0.5, 2.5], [2, 2.5], [2, 9], [8, 9], [8, 2.5], [9.5, 2.5], [9.5, 12], [0.5, 12]], float)
-    u = geo.polygon_overlay_general(U1, U2, "union")
+    u = slab_boolean(_poly(U1), _poly(U2), "union")
     assert len(u) == 1 and len(u[0][1]) == 3  # shell + hole
     assert not any(
         geo.classify_points_in_polygon([5.0], [6.0], c, o)[0] == 2 for c, o in u

@@ -1,4 +1,4 @@
-"""Round-4 overlay hardening: holed-operand overlay (region algebra),
+"""Round-4 overlay hardening: holed-operand overlay (slab sweep),
 degenerate shared-edge contact (DE-9IM fallback + boundary rechaining),
 transitive member merging, and multi-part DE-9IM goldens.
 
@@ -558,13 +558,12 @@ def test_symdifference_pinch_vertex_hole_grouping():
 
 
 def test_union_hole_partially_covered_by_other_operand():
-    """Regression (round-5 MC audit): A's boundary sliced through B's
+    """Regression (round-5 MC audit): A's boundary slices through B's
     hole purely via touch contacts (edge through one hole corner, a
-    vertex ON the opposite hole edge) — the touch point WAS the edge
-    midpoint, so _piece_contact's midpoint sampling saw only boundary/
-    outside samples and declared 'disjoint', keeping B's hole whole in
-    A ∪ B even though A covers part of it. Contact-interval sampling
-    now threads between touch points."""
+    vertex ON the opposite hole edge), and the touch point IS the edge
+    midpoint. A ∪ B must not keep B's hole whole: A covers part of it
+    (a midpoint-sampling contact test once declared the pair
+    'disjoint')."""
     A = geo.parse_wkt(
         "POLYGON ((-3 -1, 0 -4, 1 -3, 1 2, -1 2, -3 1, -3 -1), "
         "(-1 -0.5, -0 -0.5, -0 0.5, -1 0.5, -1 -0.5))"
@@ -625,7 +624,7 @@ def test_symdifference_shared_edge_chain_degenerate_slivers():
     boundary chain made the intersection emit an exactly-zero-area
     sliver ring and duplicate consecutive vertices; the u \\ i subtract
     kernels then exploded into 29 overlapping pieces (24% probe
-    mismatch). _areal_members now drops degenerate rings exactly."""
+    mismatch)."""
     A = geo.parse_wkt(
         "POLYGON ((-6 1, -5 -2, -4 -3, -2 -4, 6 4, 5 5, -1 8, -6 1), "
         "(-1.5 0, 0 0, 0 2, -1.5 2, -1.5 0))"
@@ -686,8 +685,7 @@ def test_symdifference_nested_holes_spike_ring():
     union ring threading the nested hole's corners via an exact
     zero-width backtrack spike; the u \\ i add-back intersect kernel
     answered EMPTY on the spiked ring, silently losing the H_B \\ H_A
-    patch. _clean_ring now collapses exact backtrack spikes
-    (parity-exact)."""
+    patch."""
     A = geo.parse_wkt(
         "POLYGON ((-4 -1, 2 -2, 3 -2, 2 2, -0 3, -4 -1), "
         "(-1 -1, -0.5 -1, -0.5 -0, -1 -0, -1 -1))"

@@ -844,8 +844,9 @@ def test_track_clip_twin(registered):
 
 
 def test_overlay_review_regressions(registered):
-    """Round-3 self-review fixes: concave∩convex goes through GH (S-H
-    would bridge a disconnected result into one invalid ring); GC
+    """Round-3 self-review fixes: concave∩convex with a disconnected
+    result keeps its members apart (a convex clip would bridge them
+    into one invalid ring); GC
     operands and nested-GC transform are null/handled, never a crashed
     batch; hole-in-hole is invalid; NaN in any st_makePointM arg is
     null; 'FOO EMPTY' is not an empty geometry."""
@@ -889,10 +890,8 @@ def test_union_self_overlapping_linework(registered):
 
 
 def test_multipolygon_overlay(registered):
-    """MULTIPOLYGON operands in st_intersection/st_difference: member
-    parts are disjoint, so pairwise single-ring results concatenate
-    exactly; convex chains decompose via half-planes; operand holes
-    subtract through the region algebra."""
+    """MULTIPOLYGON operands in st_intersection/st_difference: the slab
+    sweep takes every member and hole of both operands at once."""
     spark = registered
     r = spark.sql("""
         select st_intersection('MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((10 0, 14 0, 14 4, 10 4, 10 0)))',
