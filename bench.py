@@ -267,7 +267,7 @@ def run(spark, sf_dir: str) -> dict:
 
 
 def scaling_worker(cpus: int) -> None:
-    """One parallelism level of the inline scaling evidence: fused pages
+    """One parallelism level of the inline scaling evidence: the pages
     pipeline at local[cpus] over the table the parent bench run just wrote
     (reuse=True — same invocation, so the rewrite-every-session rule from
     BENCH/BASELINE.md's stale-table forensics is not violated).
@@ -292,7 +292,7 @@ def scaling_worker(cpus: int) -> None:
         pages_path = materialize_pages(spark, N_PAGES, reuse=True)
         pages = (
             spark.read.parquet(pages_path)
-            .select("url", "html")  # all the fused pipeline reads
+            .select("url", "html")  # all the pages pipeline reads
             .coalesce(cpus * 3)
             .cache()
         )

@@ -10,7 +10,9 @@ Protocol (what two weeks of timing forensics established — the full
 story with GC logs and raw-CPU control experiments is written to
 BENCH/BASELINE.md):
 
-- Workload: the FUSED pages pipeline (contract.fused_pip_stage) over a
+- Workload: the pages pipeline (contract.pages_pipeline, fused=True: a
+  Catalyst plan with no Python worker — regexp_extract_all, explode,
+  one broadcast join against contract.entity_polygon_pdf) over a
   24M-page stored parquet table (~8.8 GB) — large enough that compute
   dominates the per-stage dispatch constants (at 120k pages the whole
   job is ~1 s and the comparison measures scheduler constants).
@@ -49,7 +51,7 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_SCALING_REPEATS", "4"))
 
 
 def worker(cpus: int) -> None:
-    """Run the fused pages pipeline at local[cpus]; print one JSON line."""
+    """Run the pages pipeline at local[cpus]; print one JSON line."""
     from bench import build_spark, materialize_pages
     from geomesa_spark import contract
 
@@ -153,9 +155,9 @@ this sandbox) by the same job at two parallelism levels on one machine.
 
 ## Headline result — N=local[{n}] vs 4N=local[{n4}]
 
-Workload: fused pages pipeline (extract geo-entities -> gazetteer geocode
--> grid-cell encode -> PIP refine, single Arrow crossing; see
-`geomesa_spark/contract.py::fused_pip_stage`) over a stored
+Workload: pages pipeline (regexp_extract_all geo-entities -> broadcast
+join against the driver-side entity -> polygon table, no Python worker;
+see `geomesa_spark/contract.py::pages_pipeline`) over a stored
 {N_PAGES:,}-page parquet table. Fresh JVM per level; input
 coalesced to 3x cores; {REPEATS} runs per JVM x 2 JVMs; MIN taken (runs converge
 monotonically as the JIT warms — min = steady-state capability).

@@ -42,6 +42,7 @@ from geomesa_spark.operators import knn as K
 from geomesa_spark.operators import spatial_join as SJ
 from geomesa_spark.operators import tiling as T
 from geomesa_spark.sources import synth
+from geomesa_spark.sources.extract import GEO_SPAN_PATTERN
 
 # ---------------------------------------------------------------------------
 # worker shipping: UDF closures reference geomesa_spark, which must be
@@ -2958,55 +2959,59 @@ def extract_entities_df(pages: DataFrame) -> DataFrame:
     return pages.select("url", "html").mapInArrow(extract, "url string, entity string")
 
 
-def fused_pip_stage(level: int = GRID_LEVEL):
-    """Factory for the FUSED pages→(url, polygon_id) Arrow stage: extract
-    entities, gazetteer-geocode (pandas merge against the broadcast-sized
-    gazetteer in the closure), grid-cell encode, cover merge, and
-    vectorized PIP refine — all inside ONE mapInArrow pass.
+def entity_polygon_pdf(level: int = GRID_LEVEL) -> pd.DataFrame:
+    """(entity, polygon_id) for every gazetteer name whose point lies in a
+    ``synth.polygons()`` polygon: geocode, grid-cell encode, cover merge
+    and PIP refine, run once on the driver.
 
-    Why fusion: the declarative composition (mapInArrow extract →
-    Catalyst broadcast joins → pandas_udf refine) crosses the JVM↔Python
-    Arrow boundary twice per row; profiling on local[32] showed the
-    boundary (worker dispatch + row↔Arrow conversion), not compute,
-    dominating the stage. One crossing makes the stage scale like the raw
-    Python work. Semantically identical to the unfused path
-    (equality-tested in tests/test_contract.py)."""
-    from geomesa_spark.functions import geometry as geo
+    Every step after extraction depends on the entity name alone, and the
+    gazetteer holds about a thousand names, so the pages pipeline tags a
+    mention by one equi-join against this table instead of running the
+    steps per mention. Row multiplicity is the per-mention one: a name
+    inside k polygons has k rows.
+
+    The JVM extraction decodes malformed UTF-8 differently from Python's
+    ``errors="replace"`` (a surrogate byte run is one U+FFFD in Java, one
+    per byte in Python); only names containing U+FFFD can differ, and
+    none of them can match this table."""
+    gaz = synth.gazetteer_pdf().rename(columns={"name": "entity"})
+    assert not gaz["entity"].str.contains("\ufffd", regex=False).any()
+    polys = synth.polygons()
+    geoms = {p.polygon_id: (p.coords, p.ring_offsets) for p in polys}
+    cell = C.grid_encode(gaz["lon"].to_numpy(np.float64), gaz["lat"].to_numpy(np.float64), level)
+    j = gaz.assign(cell=cell).merge(SJ.polygon_cover_pdf(polys, level), on="cell")
+    lon = j["lon"].to_numpy(np.float64)
+    lat = j["lat"].to_numpy(np.float64)
+    pid = j["polygon_id"].to_numpy(np.int64)
+    full = j["full"].to_numpy(bool)
+    keep = full.copy()
+    for p in np.unique(pid[~full]):
+        m = ~full & (pid == p)
+        keep[m] = geo.points_in_polygon(lon[m], lat[m], *geoms[int(p)])
+    return j.loc[keep, ["entity", "polygon_id"]].reset_index(drop=True)
+
+
+def fused_pip_stage(level: int = GRID_LEVEL):
+    """Factory for the pages→(url, polygon_id) Arrow stage in its Python
+    form: ``extract_entities_arrow`` over a batch's html buffer, then one
+    pandas merge against ``entity_polygon_pdf(level)``.
+
+    ``pages_pipeline`` does not run it: its production plan is the
+    Catalyst form of the same two steps. This form is kept for in-process
+    probes of the extraction kernel on Arrow batches; it returns the same
+    rows as that plan and as the ``fused=False`` composition."""
+    import pyarrow as pa
+
     from geomesa_spark.sources.extract import extract_entities_arrow
 
-    gaz_idx = synth.gazetteer_pdf().set_index("name")
-    polys = synth.polygons()
-    covers = SJ.polygon_cover_pdf(polys, level)
-    geoms = {p.polygon_id: (p.coords, p.ring_offsets) for p in polys}
+    tags = entity_polygon_pdf(level)
+    schema = pa.schema([("url", pa.string()), ("polygon_id", pa.int64())])
 
     def fused(batches):
-        import pyarrow as pa
-
-        schema = pa.schema([("url", pa.string()), ("polygon_id", pa.int64())])
         for batch in batches:
-            # single-pass buffer scan: no per-page decode/allocations
-            # (equality vs the Series path asserted in tests); only
-            # MATCHED rows' urls ever convert to Python objects
             rows, names = extract_entities_arrow(batch.column("html"))
-            e = pd.DataFrame(
-                {
-                    "url": batch.column("url").take(pa.array(rows)).to_pandas(),
-                    "entity": names,
-                }
-            )
-            j = e.join(gaz_idx, on="entity", how="inner")
-            cell = C.grid_encode(j["lon"].to_numpy(np.float64), j["lat"].to_numpy(np.float64), level)
-            j = j.assign(cell=cell).merge(covers, on="cell", how="inner")
-            lon = j["lon"].to_numpy(np.float64)
-            lat = j["lat"].to_numpy(np.float64)
-            pid = j["polygon_id"].to_numpy(np.int64)
-            full = j["full"].to_numpy(bool)
-            keep = full.copy()
-            for p in np.unique(pid[~full]):
-                m = (~full) & (pid == p)
-                c, o = geoms[int(p)]
-                keep[m] = geo.points_in_polygon(lon[m], lat[m], c, o)
-            out = j.loc[keep, ["url", "polygon_id"]]
+            e = pd.DataFrame({"url": batch.column("url").take(pa.array(rows)).to_pandas(), "entity": names})
+            out = e.merge(tags, on="entity")[["url", "polygon_id"]]
             yield pa.RecordBatch.from_pandas(out, preserve_index=False, schema=schema)
 
     return fused
@@ -3019,21 +3024,34 @@ def pages_pipeline(
     fused: bool = True,
 ) -> DataFrame:
     """The north-star pipeline: Common-Crawl-shaped pages →
-    extract geo-entities (Arrow UDF) → geocode via broadcast gazetteer →
-    grid-encode → PIP join vs polygons → per-polygon page counts.
+    extract geo-entities → geocode via the gazetteer → grid-encode → PIP
+    join vs polygons → per-polygon page counts.
 
     ``pages_df`` lets callers supply an already-stored pages table (the
     bench protocol reads parquet so synthesis cost isn't measured);
-    otherwise pages are synthesized on the fly. ``fused=True`` (default)
-    runs the single-Arrow-crossing stage (see fused_pip_stage);
-    ``fused=False`` keeps the declarative Catalyst-join composition —
-    same rows either way."""
+    otherwise pages are synthesized on the fly.
+
+    ``fused=True`` (default) is a plain Catalyst plan with no Python
+    worker on it: ``regexp_extract_all`` of ``GEO_SPAN_PATTERN`` over
+    ``cast(html as string)``, exploded, then one broadcast hash join
+    against ``entity_polygon_pdf`` (geocode, cell encode, cover merge and
+    PIP refine, hoisted to the driver because they depend on the entity
+    name alone). The pattern goes in through ``F.lit`` so no SQL string
+    literal re-escapes it. ``fused=False`` keeps the declarative
+    composition — extraction ``mapInArrow``, Catalyst gazetteer join,
+    ``broadcast_pip_join`` with its PIP pandas UDF — as the oracle. Same
+    rows either way."""
     ensure_py_files(spark)
     pages = pages_df if pages_df is not None else synth.pages(spark, n_pages)
     if fused:
-        matched = pages.select("url", "html").mapInArrow(
-            fused_pip_stage(GRID_LEVEL), "url string, polygon_id long"
+        ents = pages.select(
+            "url",
+            F.explode(
+                F.regexp_extract_all(F.col("html").cast("string"), F.lit(GEO_SPAN_PATTERN), F.lit(1))
+            ).alias("entity"),
         )
+        tags = spark.createDataFrame(entity_polygon_pdf(GRID_LEVEL), "entity string, polygon_id long")
+        matched = ents.join(F.broadcast(tags), "entity")
     else:
         ents = extract_entities_df(pages)
         gaz = F.broadcast(

@@ -297,14 +297,20 @@ def convex_hull(lon, lat) -> np.ndarray:
     return np.asarray(ring)
 
 
-def buffer_point(lon: float, lat: float, radius_m: float, segments: int = 32) -> np.ndarray:
-    """Closed ring approximating a geodesic circle (st_bufferPoint analog).
+def buffer_points(lon, lat, radius_m, segments: int = 32) -> np.ndarray:
+    """Closed rings approximating geodesic circles (st_bufferPoint analog),
+    one per (lon, lat, radius_m) row, as an (n, segments + 1, 2) array.
     Small-circle approximation: radius in degrees scaled by cos(lat) in lon."""
     ang = np.linspace(0.0, 2.0 * np.pi, segments + 1)
-    dlat = np.degrees(radius_m / EARTH_RADIUS_M)
-    coslat = max(np.cos(np.radians(lat)), 1e-9)
-    dlon = dlat / coslat
-    return np.stack([lon + dlon * np.cos(ang), lat + dlat * np.sin(ang)], axis=1)
+    lon, lat, r = (np.asarray(v, dtype=np.float64).reshape(-1, 1) for v in (lon, lat, radius_m))
+    dlat = np.degrees(r / EARTH_RADIUS_M)
+    dlon = dlat / np.maximum(np.cos(np.radians(lat)), 1e-9)
+    return np.stack([lon + dlon * np.cos(ang), lat + dlat * np.sin(ang)], axis=2)
+
+
+def buffer_point(lon: float, lat: float, radius_m: float, segments: int = 32) -> np.ndarray:
+    """One ring of ``buffer_points``."""
+    return buffer_points(lon, lat, radius_m, segments)[0]
 
 
 # ---------------------------------------------------------------------------

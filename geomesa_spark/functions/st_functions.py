@@ -710,14 +710,17 @@ def st_distanceSpheroid(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
 # --- processing -------------------------------------------------------------
 
 
+def _buffer_point_wkt(lon: np.ndarray, lat: np.ndarray, radius_m: np.ndarray) -> list[str]:
+    """POLYGON WKT of every ``geo.buffer_points`` ring, formatted exactly
+    as ``geo.wkt_polygon`` formats one (%.10g per coordinate)."""
+    rings = geo.buffer_points(lon, lat, radius_m)
+    fmt = "POLYGON ((" + ", ".join(["%.10g %.10g"] * rings.shape[1]) + "))"
+    return [fmt % tuple(row) for row in rings.reshape(len(rings), 2 * rings.shape[1]).tolist()]
+
+
 @F.pandas_udf(StringType())
 def st_bufferPoint(lon: pd.Series, lat: pd.Series, radius_m: pd.Series) -> pd.Series:
-    lon_v, lat_v, r_v = (s.to_numpy(np.float64) for s in (lon, lat, radius_m))
-    out = []
-    for i in range(len(lon_v)):
-        ring = geo.buffer_point(lon_v[i], lat_v[i], r_v[i])
-        out.append(geo.wkt_polygon(ring, np.asarray([0, len(ring)])))
-    return pd.Series(out)
+    return pd.Series(_buffer_point_wkt(*(s.to_numpy(np.float64) for s in (lon, lat, radius_m))))
 
 
 _SEGMENTS = 8  # arc steps per half circle of a buffer disc or capsule end
@@ -1137,14 +1140,15 @@ def _gc_parts_interior_disjoint(parts: list) -> bool:
     return True
 
 
-def _areal_area(coords, offs) -> float:
+def _areal_area(coords, offs, parts=None) -> float:
     """Area of a (MULTI)POLYGON ring set: Σ|shell| − Σ|holes| grouped by
-    containment depth (orientation-agnostic, unlike raw signed sums)."""
+    containment depth (orientation-agnostic, unlike raw signed sums);
+    ``parts`` is a precomputed ``geo.multipolygon_parts`` grouping."""
     c = np.asarray(coords, dtype=np.float64)
     o = np.asarray(offs)
     ring = lambda i: c[o[i]:o[i + 1]]
     total = 0.0
-    for s, hs in geo.multipolygon_parts(c, o):
+    for s, hs in geo.multipolygon_parts(c, o) if parts is None else parts:
         total += abs(geo.ring_signed_area(ring(s))) - sum(
             abs(geo.ring_signed_area(ring(h))) for h in hs
         )
@@ -1194,19 +1198,33 @@ def _boundary_rechain(ga, gb, expected_area: float) -> str | None:
 
 
 def _wkt_roundtrip_gate(parts, expected_area: float) -> str | None:
-    """Emit WKT only if the artifact a consumer PARSES BACK reproduces
-    the expected net area. The %.10g writer rounds coordinates
+    """Emit WKT only if the artifact a consumer PARSES BACK keeps the
+    emitted shell/hole structure. The %.10g writer rounds coordinates
     ~1e-10-relative — normally invisible, but a sliver ring sitting
     exactly on another ring's boundary can flip its containment depth
     under that rounding (observed: a 0.02-area island inside a hole
     re-reading as a hole of the outer shell, silently subtracting twice).
-    A result that is not structure-stable through the writer is refused
-    — None, never a wrong polygon."""
+    So the parsed-back rings are regrouped by containment depth and must
+    give exactly the emitted members; then the area may move only by the
+    writer's own rounding bound: each coordinate moves at most
+    5e-10·max|coord|, which moves a ring's area by at most its perimeter
+    times that (times √2 for the two axes). A result that is not
+    structure-stable through the writer is refused — None, never a wrong
+    polygon."""
     w = _polys_to_wkt(parts)
     if w is None or w.endswith(" EMPTY"):
         return w
     _k2, c2, o2 = geo.parse_wkt(w)
-    if abs(_areal_area(c2, o2) - expected_area) > 1e-9 * max(1.0, abs(expected_area)):
+    emitted, base = [], 0
+    for _mc, mo in parts:
+        emitted.append((base, list(range(base + 1, base + len(mo) - 1))))
+        base += len(mo) - 1
+    got = geo.multipolygon_parts(c2, o2)
+    if sorted((s, sorted(hs)) for s, hs in got) != emitted:
+        return None
+    perimeter = sum(np.hypot(*np.diff(c2[o2[i]:o2[i + 1]], axis=0).T).sum() for i in range(len(o2) - 1))
+    tol = 1e-9 * max(1.0, abs(expected_area)) + perimeter * np.sqrt(2.0) * 5e-10 * np.abs(c2).max()
+    if not abs(_areal_area(c2, o2, got) - expected_area) <= tol:
         return None
     return w
 

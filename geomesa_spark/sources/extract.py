@@ -72,16 +72,25 @@ def extract_text(html: bytes | str) -> str:
     return unicodedata.normalize("NFC", s)
 
 
-_GEO_SPAN_RE = re.compile(r'<span class="geo" data-name="([^"]+)">')
+# The one geo-entity pattern: the Python regexes below and the JVM plan
+# (``regexp_extract_all`` in contract.pages_pipeline) all compile this
+# string. It uses no construct whose meaning differs between Python's
+# ``re`` and ``java.util.regex``: literals and one negated class, which
+# matches newlines in both.
+GEO_SPAN_PATTERN = r'<span class="geo" data-name="([^"]+)">'
+
+_GEO_SPAN_RE = re.compile(GEO_SPAN_PATTERN)
 
 
 def extract_entities_series(html: pd.Series) -> pd.Series:
     """All gazetteer mentions per page (list[str]); C-level findall.
 
-    This is the engine's geo-entity extraction step (north_star:
-    "geo-entities extracted from text/html via vectorized Arrow UDFs") —
+    This is the engine's geo-entity extraction step as a pandas kernel —
     the UDTF-shaped 0..n-per-row emitter (SURVEY.md §2.10), exploded by
-    the caller.
+    the caller. It is the reference the JVM form
+    (``regexp_extract_all`` over ``cast(html as string)``) is tested
+    against row for row; the two decode malformed UTF-8 differently
+    only inside names that contain U+FFFD.
     """
     if html.dtype == object and len(html) and isinstance(html.iloc[0], (bytes, bytearray)):
         s = html.str.decode("utf-8", errors="replace")
@@ -90,7 +99,7 @@ def extract_entities_series(html: pd.Series) -> pd.Series:
     return s.str.findall(_GEO_SPAN_RE)
 
 
-_GEO_SPAN_B = re.compile(rb'<span class="geo" data-name="([^"]+)">')
+_GEO_SPAN_B = re.compile(GEO_SPAN_PATTERN.encode())
 
 
 def extract_entities_arrow(col):

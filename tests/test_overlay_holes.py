@@ -840,3 +840,38 @@ def test_covers_slit_square():
     sq = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
     assert not geo._escape_witness(slit[1], slit[2], sq[1], sq[2])
     assert geo.pred_covers(geo.relate_geoms(*slit, *sq))
+
+
+def test_roundtrip_gate_allows_writer_rounding():
+    """The overlay_udf holed_snapped difference pair: the slab sweep
+    answers it with two triangles whose 1/7- and 1/55-coordinate vertices
+    the %.10g writer rounds, moving the area by ~1.4e-9 relative — more
+    than a flat 1e-9 tolerance, well inside the writer's own rounding
+    bound. The shell/hole structure survives the round trip, so the
+    gate emits the answer instead of a null."""
+    a = geo.parse_wkt(
+        "POLYGON ((-2 -2, -1 -3, 4 -1, 4 3, 0 5, -2 -2), (0.5 -0, 1.5 -0, 1.5 1, 0.5 1, 0.5 -0), "
+        "(1 1.5, 2 1.5, 2 2, 1 2, 1 1.5))"
+    )
+    b = geo.parse_wkt("POLYGON ((-6 -2, -2 -5, -1 -5, 4 -3, 4 3, -3 6, -6 -2), (-2 0, -1 0, -1 1.5, -2 1.5, -2 0))")
+    parts = stf.slab_boolean(a, b, "difference")
+    net = sum(geo.polygon_area_deg2(mc, mo) for mc, mo in parts)
+    w = stf._areal_overlay(a, b, "difference")
+    assert w == (
+        "MULTIPOLYGON (((-1.428571429 0, -1 0, -1 1.5, -1.428571429 0)), "
+        "((-0.07272727273 4.745454545, 4 3, 0 5, -0.07272727273 4.745454545)))"
+    )
+    _k, c, o = geo.parse_wkt(w)
+    assert 1e-9 * net < abs(stf._areal_area(c, o) - net) < 1e-8 * net
+
+
+def test_roundtrip_gate_refuses_structure_change():
+    """A member the parsed-back rings regroup differently is refused even
+    when the area it claims matches: a square emitted as its own member
+    inside another member's shell re-reads as that shell's hole."""
+    outer = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=np.float64)
+    inner = np.array([[2, 2], [8, 2], [8, 8], [2, 8], [2, 2]], dtype=np.float64)
+    one = np.array([0, 5])
+    assert stf._wkt_roundtrip_gate([(outer, one), (inner, one)], 64.0) is None
+    holed = (np.vstack([outer, inner[::-1]]), np.array([0, 5, 10]))
+    assert stf._wkt_roundtrip_gate([holed], 64.0) is not None

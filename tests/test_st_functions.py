@@ -956,3 +956,28 @@ def test_multipolygon_union(registered):
     # a member bridging both parts merges them transitively:
     # 16 + 16 + 20 − 4 − 4 (the strip's overlap with each square)
     assert area(r["bridge"]) == pytest.approx(44.0)
+
+
+def test_buffer_point_batched_wkt_matches_per_row(registered):
+    """st_bufferPoint builds every ring in one numpy broadcast; its WKT is
+    byte-identical to the per-row ring + geo.wkt_polygon form, including
+    near-pole latitudes, the clamped cos(lat) at the poles, radius 0 and
+    NaN inputs."""
+    rng = np.random.default_rng(7)
+    lon = np.concatenate([[10.0, -179.9, 0.0, 0.0, 5.0, 1.0, np.nan], rng.uniform(-180, 180, 500)])
+    lat = np.concatenate([[89.99, -89.99, 90.0, -90.0, 45.0, np.nan, 0.0], rng.uniform(-90, 90, 500)])
+    r = np.concatenate([[1e4, 5e3, 100.0, 100.0, 0.0, 1.0, 1.0], rng.exponential(1e4, 500)])
+
+    def per_row(lo, la, rr):
+        ang = np.linspace(0.0, 2.0 * np.pi, 33)
+        dlat = np.degrees(rr / geo.EARTH_RADIUS_M)
+        dlon = dlat / max(np.cos(np.radians(la)), 1e-9)
+        ring = np.stack([lo + dlon * np.cos(ang), la + dlat * np.sin(ang)], axis=1)
+        return geo.wkt_polygon(ring, np.asarray([0, len(ring)]))
+
+    want = [per_row(lon[i], lat[i], r[i]) for i in range(len(lon))]
+    assert ST._buffer_point_wkt(lon, lat, r) == want
+    assert ST._buffer_point_wkt(lon[:0], lat[:0], r[:0]) == []
+    pdf = pd.DataFrame({"lon": lon[:6], "lat": lat[:6], "r": r[:6]})
+    rows = registered.createDataFrame(pdf).select(ST.st_bufferPoint("lon", "lat", "r").alias("w")).collect()
+    assert [row["w"] for row in rows] == want[:6]
