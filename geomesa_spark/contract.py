@@ -25,6 +25,7 @@ use, so fixture evolution cannot desynchronize the two sides.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -54,9 +55,13 @@ from geomesa_spark.sources.extract import GEO_SPAN_PATTERN
 _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _build_pyfiles_zip() -> str:
-    out = os.path.join("/tmp", "geomesa_spark_pyfiles.zip")
-    src = os.path.join(_PKG_ROOT, "geomesa_spark")
+def _build_pyfiles_zip(root: str = _PKG_ROOT) -> str:
+    """Zip ``root``'s ``geomesa_spark`` package, rebuilding only when a
+    source file is newer than the zip. The path is keyed on ``root`` so
+    that two checkouts never ship each other's code."""
+    key = hashlib.sha1(root.encode()).hexdigest()[:12]
+    out = os.path.join("/tmp", f"geomesa_spark_pyfiles_{key}.zip")
+    src = os.path.join(root, "geomesa_spark")
     mtimes = [os.path.getmtime(os.path.join(dp, f)) for dp, _, fs in os.walk(src) for f in fs if f.endswith(".py")]
     if not os.path.exists(out) or os.path.getmtime(out) < max(mtimes):
         tmp = out + f".{os.getpid()}.tmp"
@@ -65,7 +70,7 @@ def _build_pyfiles_zip() -> str:
                 for f in fs:
                     if f.endswith(".py"):
                         p = os.path.join(dp, f)
-                        z.write(p, os.path.relpath(p, _PKG_ROOT))
+                        z.write(p, os.path.relpath(p, root))
         os.replace(tmp, out)
     return out
 

@@ -45,12 +45,14 @@ _POINT_ONLY = r"^\s*" + _POINT_NUM + r"\s*$"
 
 
 def _parse_cache(wkts: pd.Series) -> dict[str, tuple]:
-    """Parse each unique WKT once per batch → {wkt: (kind, coords, offsets)}."""
+    """Parse each unique WKT once per batch → {wkt: (kind, coords, offsets)};
+    malformed, empty or unsupported text (``parse_wkt``'s ValueError) maps
+    to None. Any other exception is a kernel bug and propagates."""
     out = {}
     for w in wkts.dropna().unique():
         try:
             out[w] = geo.parse_wkt(w)
-        except Exception:
+        except ValueError:
             out[w] = None
     return out
 

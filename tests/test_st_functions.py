@@ -981,3 +981,34 @@ def test_buffer_point_batched_wkt_matches_per_row(registered):
     pdf = pd.DataFrame({"lon": lon[:6], "lat": lat[:6], "r": r[:6]})
     rows = registered.createDataFrame(pdf).select(ST.st_bufferPoint("lon", "lat", "r").alias("w")).collect()
     assert [row["w"] for row in rows] == want[:6]
+
+
+def test_parse_cache_nulls_only_malformed_wkt(monkeypatch):
+    """Malformed, empty and unsupported WKT (parse_wkt's ValueError) is
+    null through st_intersection and st_buffer; any other exception
+    raised inside the parser is a kernel bug and propagates."""
+    square = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+    bad = [
+        "POLYGON ((0 0, 4 0, 4 4",  # truncated
+        "garbage",
+        "",
+        "POINT (a b)",  # non-numeric
+        "POLYGON EMPTY",
+        "CIRCULARSTRING (0 0, 1 1, 2 0)",  # unsupported kind
+    ]
+    for w in bad:
+        with pytest.raises(ValueError):
+            geo.parse_wkt(w)
+    got = ST.st_intersection.func(pd.Series(bad + [square]), pd.Series([square] * (len(bad) + 1)))
+    assert got.iloc[:-1].isna().all() and got.iloc[-1] is not None
+    got = ST.st_buffer.func(pd.Series(bad + [square]), pd.Series([1.0] * (len(bad) + 1)))
+    assert got.iloc[:-1].isna().all() and got.iloc[-1] is not None
+
+    def broken(_w):
+        raise IndexError("kernel bug")
+
+    monkeypatch.setattr(geo, "parse_wkt", broken)
+    with pytest.raises(IndexError):
+        ST.st_intersection.func(pd.Series([square]), pd.Series([square]))
+    with pytest.raises(IndexError):
+        ST.st_buffer.func(pd.Series([square]), pd.Series([1.0]))
