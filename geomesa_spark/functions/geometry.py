@@ -1904,12 +1904,13 @@ def endpoint_snapper(tol: float):
 
 def chain_closed_rings(pieces: list[np.ndarray], tol: float = 1e-9) -> list[np.ndarray] | None:
     """Assemble polyline pieces into closed rings by endpoint matching
-    (endpoints snapped within ``tol`` — cut points computed independently
-    on the two operands of a boundary overlay agree only to float eps).
+    (endpoints snapped within ``tol`` — a cut point computed
+    independently for two neighbouring pieces agrees only to float eps).
     Returns None unless every snapped endpoint has degree exactly 2 and
-    every walk closes: the honest-failure contract of the
-    boundary-rechaining overlay fallback (an ambiguous junction or an
-    open chain is never guessed at)."""
+    every walk closes: the honest-failure contract of the slab sweep's
+    ring assembly (an ambiguous junction or an open chain is never
+    guessed at; on None, slab_overlay resolves higher even degrees with
+    its planar face walk)."""
     rings: list[np.ndarray] = []
     open_segs: list[np.ndarray] = []
     for p in pieces:

@@ -1,10 +1,10 @@
-"""Slab-sweep region kernel: the primary areal path of st_intersection
+"""Slab-sweep region kernel: the whole areal path of st_intersection
 / st_union / st_difference / st_symDifference (st_functions._areal_overlay,
 via slab_boolean) and the whole of st_buffer (st_functions._buffer_geom,
 via slab_region).
 
-Crossing-based kernels (Greiner–Hormann, half-plane clips, boundary
-rechaining) must special-case boundaries that interact degenerately
+Crossing-based kernels (Greiner–Hormann, half-plane clips) must
+special-case boundaries that interact degenerately
 (partially shared edges, vertex-on-edge chains, checkerboard corners).
 This module computes the region by vertical trapezoidal decomposition
 instead, which has NO special cases for degeneracy:
@@ -31,12 +31,13 @@ instead, which has NO special cases for degeneracy:
    higher even degrees, where boundaries cross, go to a planar face
    walk), shells/holes recover by containment parity, and the
    assembled area must match the trapezoid-accumulated area exactly
-   (1e-9 relative) — the same honest gate the rechainer uses. Wrong
-   answers are structurally excluded; failure modes return None.
+   (1e-9 relative). Wrong answers are structurally excluded; failure
+   modes return None.
 
 The result is areal by construction: lower-dimensional contact (the
-shared edge of two touching squares) is invisible here, and the caller
-asks the DE-9IM relate fallback for it.
+shared edge of two touching squares) is invisible here. When an
+intersection has no area, the caller returns the line × line overlay of
+the operands' rings; a refusal here is the caller's honest null.
 
 Cost: O(E²) vectorized crossing tests, then O(S·W) Python work for S
 slabs with W edges active in each (an active-edge list, entered by

@@ -1043,8 +1043,8 @@ def _overlay_intersection(ga, gb) -> str | None:
     (MULTI)POLYGON pairs, holes included, via _areal_overlay: the slab
     sweep answers the areal part, and operands whose interiors do not
     meet return their shared boundary linework (or POLYGON EMPTY).
-    What neither path supports returns None: SQL null, honest
-    unsupported, never an approximation."""
+    Unsupported pairings and slab refusals return None: SQL null,
+    honest unsupported, never an approximation."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     if ka == "GEOMETRYCOLLECTION":
@@ -1134,10 +1134,7 @@ def _gc_parts_interior_disjoint(parts: list) -> bool:
                     or ci[:, 1].max() < cj[:, 1].min() or cj[:, 1].max() < ci[:, 1].min()
                 ):
                     continue
-            try:
-                if geo.relate_geoms(ki, ci, oi, kj, cj, oj).ii:
-                    return False
-            except Exception:
+            if geo.relate_geoms(ki, ci, oi, kj, cj, oj).ii:
                 return False
     return True
 
@@ -1155,48 +1152,6 @@ def _areal_area(coords, offs, parts=None) -> float:
             abs(geo.ring_signed_area(ring(h))) for h in hs
         )
     return total
-
-
-def _boundary_rechain(ga, gb, expected_area: float) -> str | None:
-    """Rebuild an overlay result whose interior structure is trivially
-    known (interiors disjoint for a touching union; B filling part of A
-    for a covered difference) from its boundary: collinear shared
-    portions cancel from BOTH operands (a shared edge becomes interior),
-    the surviving arcs re-chain into closed rings, and containment-depth
-    parity recovers shells and holes. The rechained area must reproduce
-    the set-theoretically expected area or the result is rejected —
-    None, never an approximation."""
-    ka, ca, oa = ga
-    kb, cb, ob = gb
-    rings_a = [np.asarray(ca[oa[i]:oa[i + 1]], dtype=np.float64) for i in range(len(oa) - 1)]
-    rings_b = [np.asarray(cb[ob[i]:ob[i + 1]], dtype=np.float64) for i in range(len(ob) - 1)]
-    pieces: list = []
-    for side, other in ((rings_a, rings_b), (rings_b, rings_a)):
-        for r in side:
-            cur = [r]
-            for o2 in other:
-                cur = [seg for p in cur for seg in geo.line_difference_line(p, o2)]
-            pieces.extend(cur)
-    rings = geo.chain_closed_rings(pieces)
-    if rings is None:
-        return None
-    if not rings:
-        return "POLYGON EMPTY" if abs(expected_area) <= 1e-15 else None
-    coords = np.concatenate(rings)
-    offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
-    out: list = []
-    total = 0.0
-    for shell_idx, hole_idxs in geo.multipolygon_parts(coords, offs):
-        member = [geo._ccw_ring(rings[shell_idx])] + [
-            geo._ccw_ring(rings[h])[::-1] for h in hole_idxs
-        ]
-        mc = np.concatenate(member)
-        mo = np.concatenate([[0], np.cumsum([len(r) for r in member])])
-        total += geo.polygon_area_deg2(mc, mo)  # CCW shell + CW holes: net
-        out.append((mc, mo))
-    if abs(total - expected_area) > 1e-9 * max(1.0, abs(expected_area)):
-        return None
-    return _wkt_roundtrip_gate(out, expected_area)
 
 
 def _wkt_roundtrip_gate(parts, expected_area: float) -> str | None:
@@ -1233,97 +1188,23 @@ def _wkt_roundtrip_gate(parts, expected_area: float) -> str | None:
 
 def _areal_overlay(ga, gb, op: str) -> str | None:
     """The (MULTI)POLYGON × (MULTI)POLYGON boolean ``op``, holes
-    included. The slab sweep answers first; its output is areal by
-    construction, so an EMPTY intersection still asks the DE-9IM relate
-    fallback for the shared boundary linework of touching operands
-    (POLYGON EMPTY when there is none). A slab refusal also goes to the
-    relate fallback, which answers equal, covered and touching pairs
-    exactly. Anything else is None — never an approximation."""
-    res = _slab_fallback(ga, gb, op)
-    if res is None or (op == "intersection" and res == "POLYGON EMPTY"):
-        res = _areal_relate_fallback(ga, gb, op) or res
-    return res
-
-
-def _slab_fallback(ga, gb, op: str) -> str | None:
-    """The slab-sweep step of _areal_overlay as WKT: the trapezoidal
-    even-odd boolean of functions/slab_overlay.py (no degeneracy special
-    cases, area-identity gated), then the WKT round-trip gate. An empty
-    result is POLYGON EMPTY; a refusal by either gate is None."""
-    if ga[0] not in _AREAL or gb[0] not in _AREAL:
-        return None
+    included: the trapezoidal even-odd sweep of
+    functions/slab_overlay.py (no degeneracy special cases, area-identity
+    gated), then the WKT round-trip gate. The sweep's output is areal by
+    construction, so an intersection with no area is the operands'
+    shared boundary linework (the LINESTRING × LINESTRING overlay of
+    their rings), POLYGON EMPTY when they do not touch. A refusal by
+    either gate is None — never an approximation."""
     out = slab_boolean(ga, gb, op)
     if out is None:
         return None
     if not out:
-        return "POLYGON EMPTY"
+        if op != "intersection":
+            return "POLYGON EMPTY"
+        w = _overlay_intersection(("MULTILINESTRING", ga[1], ga[2]), ("MULTILINESTRING", gb[1], gb[2]))
+        return "POLYGON EMPTY" if w.endswith(" EMPTY") else w
     net = sum(geo.polygon_area_deg2(mc, mo) for mc, mo in out)
     return _wkt_roundtrip_gate(out, net)
-
-
-def _areal_relate_fallback(ga, gb, op: str) -> str | None:
-    """Exact answers for (MULTI)POLYGON pairs the slab sweep cannot give,
-    recovered from the DE-9IM relationship: equal and covered operands
-    answer set-theoretically; interiors-disjoint (touches) intersections
-    return the shared boundary linework; touching unions and symmetric
-    differences, and differences of covered operands, rebuild by
-    boundary rechaining. Anything else stays None — honest unsupported."""
-    ka, ca, oa = ga
-    kb, cb, ob = gb
-    if ka not in _AREAL or kb not in _AREAL:
-        return None
-    # cheap reject: bbox-disjoint operands can't touch (the fallback
-    # fires for every empty intersection, which is usually just two
-    # far-apart polygons — skip the O(n·m) relate for those)
-    if (
-        ca[:, 0].max() < cb[:, 0].min() or cb[:, 0].max() < ca[:, 0].min()
-        or ca[:, 1].max() < cb[:, 1].min() or cb[:, 1].max() < ca[:, 1].min()
-    ):
-        return None
-    try:
-        r = geo.relate_geoms(ka, ca, oa, kb, cb, ob)
-    except Exception:
-        return None
-    if geo.pred_equals(r):
-        if op in ("difference", "symdifference"):
-            return "POLYGON EMPTY"
-        return geo.wkt_any(ka, ca, oa)
-    if geo.pred_covered_by(r):  # A ⊆ B
-        if op == "intersection":
-            return geo.wkt_any(ka, ca, oa)
-        if op == "union":
-            return geo.wkt_any(kb, cb, ob)
-        if op == "symdifference":  # B \ A
-            return _boundary_rechain(gb, ga, _areal_area(cb, ob) - _areal_area(ca, oa))
-        return "POLYGON EMPTY"  # areal difference of a covered subject
-    if geo.pred_covers(r):  # B ⊆ A
-        if op == "intersection":
-            return geo.wkt_any(kb, cb, ob)
-        if op == "union":
-            return geo.wkt_any(ka, ca, oa)
-        return _boundary_rechain(ga, gb, _areal_area(ca, oa) - _areal_area(cb, ob))
-    if geo.pred_touches(r):  # interiors disjoint, boundaries meet
-        if op == "difference":
-            return geo.wkt_any(ka, ca, oa)
-        if op in ("union", "symdifference"):
-            return _boundary_rechain(ga, gb, _areal_area(ca, oa) + _areal_area(cb, ob))
-        # intersection: the shared boundary linework (segments + isolated
-        # touch points, points on any segment subsumed)
-        pts: list = []
-        lines: list = []
-        for i in range(len(oa) - 1):
-            for j in range(len(ob) - 1):
-                p2, s2 = geo.line_line_overlay(ca[oa[i]:oa[i + 1]], cb[ob[j]:ob[j + 1]])
-                pts.extend(p2)
-                lines.extend(s2)
-        if lines:
-            ex1 = np.asarray([s[0, 0] for s in lines])
-            ey1 = np.asarray([s[0, 1] for s in lines])
-            ex2 = np.asarray([s[1, 0] for s in lines])
-            ey2 = np.asarray([s[1, 1] for s in lines])
-            pts = [p for p in pts if not geo.points_on_segments([p[0]], [p[1]], ex1, ey1, ex2, ey2)[0]]
-        return _pieces_to_wkt(pts, lines, "GEOMETRYCOLLECTION EMPTY")
-    return None
 
 
 def _polys_to_wkt(parts) -> str | None:
@@ -1352,8 +1233,8 @@ def _overlay_difference(ga, gb) -> str | None:
     a GEOMETRYCOLLECTION B subtracts its parts sequentially. Subtracting
     a lower-dimension geometry is identity; point and line subjects are
     exact for any B. (MULTI)POLYGON pairs, holes included, go to
-    _areal_overlay (the slab sweep, then the DE-9IM fast paths).
-    Interactions neither path can express return None."""
+    _areal_overlay (the slab sweep). What the sweep refuses returns
+    None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     dim = {"POINT": 0, "MULTIPOINT": 0, "LINESTRING": 1, "MULTILINESTRING": 1, "POLYGON": 2, "MULTIPOLYGON": 2}
@@ -1415,11 +1296,10 @@ def _overlay_difference(ga, gb) -> str | None:
 def _overlay_union(ga, gb) -> str | None:
     """A ∪ B WKT for same-dimension operands: point sets merge,
     linework merges as A + (B \\ A), (MULTI)POLYGON pairs, holes
-    included, go to _areal_overlay (the slab sweep, then the DE-9IM
-    fast paths). Mixed-dimension
+    included, go to _areal_overlay (the slab sweep). Mixed-dimension
     unions return GEOMETRYCOLLECTION(higher, lower \\ higher) — JTS
     semantics — and GEOMETRYCOLLECTION operands re-union canonically by
-    dimension (_gc_union). What neither path supports returns None."""
+    dimension (_gc_union). What the sweep refuses returns None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     if ka in _POINTY and kb in _POINTY:
@@ -1474,7 +1354,7 @@ def _gc_normalized(g) -> tuple | None:
     becomes sound on it — this turns the former
     GC-with-overlapping-members honest-null class into exact answers
     wherever the union kernels are exact. None when a member union is
-    itself unsupported (degenerate contact the rechainer refuses)."""
+    itself unsupported (a pair the slab sweep refuses)."""
     w = _parts_canonical_union(geo.geom_parts(*g))
     if w is None or w.endswith(" EMPTY"):
         return None
@@ -1552,14 +1432,12 @@ def _null_on_error(fn):
 
 
 def _overlay_symdifference(ga, gb) -> str | None:
-    """A Δ B. (MULTI)POLYGON pairs go to _areal_overlay (the slab sweep,
-    then the DE-9IM fast paths). Other pairings compose, preferring
-    (A ∪ B) \\ (A ∩ B) — the structurally cleanest result (no internal
-    member fragmentation; a lower-dim intersection subtracts as
-    identity) — and falling back to (A \\ B) ∪ (B \\ A), whose
-    differences have disjoint interiors. Both compositions are gated by
-    their exact area identity. Exact wherever the underlying overlays
-    are; None otherwise."""
+    """A Δ B. (MULTI)POLYGON pairs go to _areal_overlay (the slab
+    sweep). Other pairings compose as (A ∪ B) \\ (A ∩ B) — the
+    structurally cleanest result (no internal member fragmentation; a
+    lower-dim intersection subtracts as identity) — gated by its exact
+    area identity. Exact wherever the underlying overlays are; None
+    otherwise."""
     if ga[0] in _AREAL and gb[0] in _AREAL:
         return _areal_overlay(ga, gb, "symdifference")
 
@@ -1577,40 +1455,28 @@ def _overlay_symdifference(ga, gb) -> str | None:
 
     def _area_ok(w: str, want: float) -> bool:
         # EXACT identity gate: a composition that is wrong but non-null
-        # falls through to the next one instead of shipping
+        # is refused instead of shipped
         return abs(_parity_area(w) - want) <= 1e-9 * max(1.0, abs(want))
 
     u = _overlay_union(ga, gb)
     i = _overlay_intersection(ga, gb)
-    if u is not None and i is not None:
-        if i.endswith(" EMPTY"):
-            return u
-        # i ⊆ u, so the areal gap is exactly au − ai (any result kind)
-        d = _overlay_difference(geo.parse_wkt(u), geo.parse_wkt(i))
-        if d is not None and _area_ok(d, _parity_area(u) - _parity_area(i)):
-            return d
-    d1 = _overlay_difference(ga, gb)
-    if d1 is None:
+    if u is None or i is None:
         return None
-    d2 = _overlay_difference(gb, ga)
-    if d2 is None:
+    if i.endswith(" EMPTY"):
+        return u
+    # i ⊆ u, so the areal gap is exactly au − ai (any result kind)
+    d = _overlay_difference(geo.parse_wkt(u), geo.parse_wkt(i))
+    if d is None or not _area_ok(d, _parity_area(u) - _parity_area(i)):
         return None
-    if d2.endswith(" EMPTY"):
-        return d1
-    if d1.endswith(" EMPTY"):
-        return d2
-    out = _overlay_union(geo.parse_wkt(d1), geo.parse_wkt(d2))
-    # the two differences have disjoint interiors: exact additivity
-    if out is not None and not _area_ok(out, _parity_area(d1) + _parity_area(d2)):
-        return None
-    return out
+    return d
 
 
 @F.pandas_udf(StringType())
 def st_symDifference(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
-    """Symmetric difference — exact wherever st_difference and the
-    touching-union rechain are (null, never an approximation, outside
-    them)."""
+    """Symmetric difference — (MULTI)POLYGON pairs in one slab sweep,
+    other pairings as the area-gated (A ∪ B) \\ (A ∩ B); exact wherever
+    st_union, st_intersection and st_difference are (null, never an
+    approximation, outside them)."""
     return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_symdifference)))
 
 

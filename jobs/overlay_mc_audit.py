@@ -1,7 +1,7 @@
 """Monte-Carlo WRONG-ANSWER audit for the overlay kernels over the
 degenerate sweep classes (jobs/overlay_null_rate.py's generator).
 
-The NULL-rate sweep counts honest nulls; this job hunts silent wrong
+It counts honest nulls per class and op, and hunts silent wrong
 answers in the NON-null results: for every pair and operator it samples
 probe points over the joint bounding box and checks the areal-membership
 identity
@@ -12,10 +12,11 @@ which holds almost surely for generic probes (lower-dimensional parts
 have measure zero; probes within ``tol`` of any polygon edge of A, B or
 the result are excluded, matching tests/test_overlay_holes.py's
 estimator). A mismatch is a reproducible wrong answer, printed with the
-operand WKTs and the probe.
+operand WKTs and the probe. An exception from a kernel is an error,
+not a null.
 
 Pure numpy — no Spark. Writes BENCH/overlay_mc_audit.json and exits
-with status 1 when any probe mismatches.
+with status 1 when any probe mismatches or any kernel raises.
 
     python jobs/overlay_mc_audit.py [N_PER_CLASS] [PROBES_PER_PAIR]
 """
@@ -112,7 +113,8 @@ def _bbox(g):
 def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
     """Run the membership identity over ``n`` pairs of every class with
     ``n_probes`` probes each. Returns (per-class per-op counters of
-    checked/null/probes/mismatch, up to 10 mismatch examples)."""
+    checked/null/error/probes/mismatch, up to 10 mismatch or error
+    examples). An exception from a kernel is an error, not a null."""
     rng = np.random.default_rng(seed)
     report: dict = {}
     examples: list = []
@@ -125,7 +127,7 @@ def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
             p = gen_pair_ext(rng, cls)
             if p:
                 pairs.append(p)
-        row = {op: {"checked": 0, "null": 0, "probes": 0, "mismatch": 0} for op in OPS}
+        row = {op: {"checked": 0, "null": 0, "error": 0, "probes": 0, "mismatch": 0} for op in OPS}
         for a, b in pairs:
             ga, gb = geo.parse_wkt(a), geo.parse_wkt(b)
             x0, y0, x1, y1 = _bbox(ga)
@@ -139,8 +141,11 @@ def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
             for op, fn in OPS.items():
                 try:
                     res = fn(ga, gb)
-                except Exception:
-                    res = None
+                except Exception as e:
+                    row[op]["error"] += 1
+                    if len(examples) < 10:
+                        examples.append({"class": cls, "op": op, "a": a, "b": b, "error": repr(e)})
+                    continue
                 if res is None:
                     row[op]["null"] += 1
                     continue
@@ -188,14 +193,15 @@ def main() -> int:
         json.dump(out, f, indent=1)
     total_probes = sum(r[op]["probes"] for r in report.values() for op in OPS)
     total_bad = sum(r[op]["mismatch"] for r in report.values() for op in OPS)
-    print(f"probes checked: {total_probes}  mismatches: {total_bad}")
+    errors = sum(r[op]["error"] for r in report.values() for op in OPS)
+    print(f"probes checked: {total_probes}  mismatches: {total_bad}  errors: {errors}")
     for cls, row in report.items():
-        print(cls, {op: (row[op]["mismatch"], row[op]["null"]) for op in OPS})
+        print(cls, {op: (row[op]["mismatch"], row[op]["null"], row[op]["error"]) for op in OPS})
     if examples:
         print("FIRST EXAMPLES:")
         for e in examples[:3]:
             print(json.dumps(e))
-    return total_bad
+    return total_bad + errors
 
 
 if __name__ == "__main__":

@@ -1,31 +1,26 @@
-"""Quantify the overlay kernels' honest-NULL residue (round-4 verdict
-ask #3): sweep randomized operand pairs per structural class and report
-the NULL rate of st_intersection / st_union / st_difference /
-st_symDifference's underlying kernels. The policy is NULL-never-wrong;
-this measures how often NULL actually happens so a user can predict it.
+"""Randomized overlay operand pairs per structural class (``gen_pair``)
+and the four overlay kernels under test (``OPS``). jobs/overlay_mc_audit.py
+(which counts nulls, errors and wrong answers per class and op),
+jobs/relate_mc_audit.py and perfbench.inputs draw their pairs from
+``gen_pair``; jobs/buffer_mc_audit.py reuses ``_holed_polygon``.
 
 Classes:
   holed_generic      float-coordinate convex-ish shells with rect holes
                      (generic position)
   holed_snapped      the same shapes snapped to an integer grid
-                     (shared edges/vertices: degenerate-contact rechain)
+                     (shared edges and vertices: degenerate contact)
   rect_grid          axis-aligned integer rectangles (maximal edge
                      sharing — worst case for degenerate contact)
   gc_overlap         GEOMETRYCOLLECTION with OVERLAPPING members vs a
-                     polygon (round-5: pre-union normalization — the
-                     class the round-4 verdict flagged as the largest)
+                     polygon (pre-union normalization)
   gc_mixed           mixed-dimension GC (poly + line + point, members
                      may overlap) vs polygon
 
-Pure numpy — no Spark. Writes BENCH/overlay_null_rate.json and prints
-the markdown table PLANS.md embeds.
-
-    python jobs/overlay_null_rate.py [N_PER_CLASS]
+Pure numpy — no Spark; a library module, not a job to run.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -121,39 +116,3 @@ def gen_pair(rng, cls):
         )
         return a, _rect(rng)
     raise ValueError(cls)
-
-
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
-    rng = np.random.default_rng(20260818)
-    table: dict = {}
-    for cls in ("holed_generic", "holed_snapped", "rect_grid", "gc_overlap", "gc_mixed"):
-        pairs = []
-        while len(pairs) < n:
-            p = gen_pair(rng, cls)
-            if p:
-                pairs.append(p)
-        row = {}
-        for op, fn in OPS.items():
-            nulls = 0
-            for a, b in pairs:
-                ga, gb = geo.parse_wkt(a), geo.parse_wkt(b)
-                try:
-                    if fn(ga, gb) is None:
-                        nulls += 1
-                except Exception:
-                    nulls += 1
-            row[op] = round(100.0 * nulls / n, 2)
-        table[cls] = row
-    here = os.path.dirname(os.path.abspath(__file__))
-    os.makedirs(os.path.join(here, "..", "BENCH"), exist_ok=True)
-    with open(os.path.join(here, "..", "BENCH", "overlay_null_rate.json"), "w") as f:
-        json.dump({"n_per_class": n, "null_pct": table}, f, indent=1)
-    print("| class | " + " | ".join(OPS) + " |")
-    print("|---|" + "---|" * len(OPS))
-    for cls, row in table.items():
-        print(f"| {cls} | " + " | ".join(f"{row[op]}%" for op in OPS) + " |")
-
-
-if __name__ == "__main__":
-    main()

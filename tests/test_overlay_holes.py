@@ -1,6 +1,6 @@
-"""Round-4 overlay hardening: holed-operand overlay (slab sweep),
-degenerate shared-edge contact (DE-9IM fallback + boundary rechaining),
-transitive member merging, and multi-part DE-9IM goldens.
+"""Round-4 overlay hardening: holed-operand overlay and degenerate
+shared-edge contact (both answered by the slab sweep), transitive member
+merging, and multi-part DE-9IM goldens.
 
 Pure-numpy tests (no SparkSession): they exercise the same kernels the
 st_intersection/st_difference/st_union pandas UDFs dispatch to. Property
@@ -159,9 +159,10 @@ def test_union_hole_filled_exactly():
 
 
 def test_shared_edge_goldens():
-    """Degenerate contact recovered by the DE-9IM fallback: the JTS
-    canonical answers for edge-adjacent, corner-touching, covered-with-
-    contact, and equal operands."""
+    """Degenerate contact answered by the slab sweep (and, for an
+    intersection with no area, the operands' shared boundary linework):
+    the JTS canonical answers for edge-adjacent, corner-touching,
+    covered-with-contact, and equal operands."""
     g = geo.parse_wkt
     C = g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
     D = g("POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))")
@@ -814,21 +815,67 @@ def test_areal_overlay_empty_interior_meet():
     assert stf._areal_area(*geo.parse_wkt(stf._overlay_union(u, floor))[1:]) == 28.0 + 5.0
 
 
-def test_relate_fallback_symdifference():
-    """The DE-9IM fallback answers every op, symdifference included, for
-    equal, covered and touching operands (it runs when the slab sweep
-    refuses)."""
+def test_symdifference_equal_covered_touching():
+    """The slab sweep answers symdifference exactly for equal, covered
+    and touching operands."""
     g = geo.parse_wkt
     big = g("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
     small = g("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")  # shares two edges
     right = g("POLYGON ((4 0, 6 0, 6 4, 4 4, 4 0))")
-    assert stf._areal_relate_fallback(big, big, "symdifference") == "POLYGON EMPTY"
+    assert stf._overlay_symdifference(big, big) == "POLYGON EMPTY"
     rng = np.random.default_rng(47)
     for A, B, area in ((small, big, 12.0), (big, small, 12.0), (big, right, 24.0)):
-        w = stf._areal_relate_fallback(A, B, "symdifference")
+        w = stf._overlay_symdifference(A, B)
         assert w is not None
         assert stf._areal_area(*geo.parse_wkt(w)[1:]) == area
         _assert_probe_identity(A, B, w, "symdifference", rng, (-1, -1, 7, 5))
+
+
+def _raise_relate(*_args):
+    raise RuntimeError("relate_geoms called")
+
+
+def test_areal_overlay_is_relate_free(monkeypatch):
+    """The (MULTI)POLYGON pairs of test_shared_edge_goldens and
+    test_areal_overlay_empty_interior_meet give the same answer for all
+    four ops when relate_geoms raises: the areal path is the slab sweep
+    (plus the line × line overlay for an intersection with no area),
+    with no DE-9IM step."""
+    g = geo.parse_wkt
+    C = g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+    u = g("POLYGON ((0 0, 6 0, 6 6, 4 6, 4 2, 2 2, 2 6, 0 6, 0 0))")
+    pairs = [
+        (C, g("POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))")),
+        (C, g("POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))")),
+        (g("POLYGON ((0 0, 2 0, 2 1, 0 1, 0 0))"), g("POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))")),
+        (C, C),
+        (g("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"), g("POLYGON ((1 0, 3 0, 3 2, 1 2, 1 0))")),
+        (
+            g("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 3 1, 3 3, 1 3, 1 1))"),
+            g("POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"),
+        ),
+        (g("POLYGON ((0 0, 4 0, 4 4, 2 1, 0 4, 0 0))"), g("POLYGON ((0 5, 4 5, 4 9, 2 6, 0 9, 0 5))")),
+        (u, g("POLYGON ((2.5 3, 3.5 3, 3.5 7, 2.5 7, 2.5 3))")),
+        (u, g("POLYGON ((2.5 2, 3.5 2, 3.5 7, 2.5 7, 2.5 2))")),
+    ]
+    ops = (stf._overlay_intersection, stf._overlay_union, stf._overlay_difference, stf._overlay_symdifference)
+    want = [[fn(a, b) for fn in ops] for a, b in pairs]
+    assert all(w is not None for row in want for w in row)
+    monkeypatch.setattr(geo, "relate_geoms", _raise_relate)
+    assert [[fn(a, b) for fn in ops] for a, b in pairs] == want
+
+
+def test_gc_overlap_check_does_not_swallow_kernel_errors(monkeypatch):
+    """A kernel error in the GEOMETRYCOLLECTION member-overlap check
+    propagates: it is neither a "members overlap" decision nor a null."""
+    gc = geo.parse_wkt(
+        "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1)))"
+    )
+    b = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 1, 0 1, 0 0))")
+    assert stf._overlay_intersection(gc, b) is not None
+    monkeypatch.setattr(geo, "relate_geoms", _raise_relate)
+    with pytest.raises(RuntimeError, match="relate_geoms called"):
+        stf._overlay_intersection(gc, b)
 
 
 def test_covers_slit_square():
