@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + BASELINE.md protocol).
+"""Benchmark harness (headline JSON line + scaling evidence).
 
 Runs the headline operator suite at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
@@ -10,26 +10,29 @@ prints ONE **compact** JSON line::
      "scaling": {"eff_2_to_8": ...}, "detail": "BENCH/run_detail_rN.json"}
 
 The driver captures only the tail of stdout (~2.2 KB): round 3's line
-grew past that (per-query run lists + spreads inline) and the official
-BENCH_r03.json recorded ``parsed: null``. So the printed line now holds
-ONLY the per-query minimums + headline numbers, and everything else
-(per-run lists, spreads, diff-vs-previous-round, scaling worker detail)
-is written to ``BENCH/run_detail_r{N}.json``.
+grew past that (per-query run lists + spreads inline) and that round's
+recorded result came back ``parsed: null``. So the printed line
+holds ONLY the per-query minimums + headline numbers, and everything
+else (per-run lists, spreads, scaling worker detail) is written to
+``BENCH/run_detail_r{N}.json``. Every number in both comes from this run.
 
-The headline number for BASELINE.json's north rule is ``pages_per_sec``:
-throughput of the full pages pipeline (synthesize Common-Crawl-shaped
-pages → Arrow-UDF geo-entity extraction → gazetteer geocode → broadcast
-PIP join → tile counts). North-rule scaling evidence (same job at two
-parallelism levels, N=local[2] vs 4N=local[8] — the regime where this
-VM's hardware actually offers 4x; see BENCH/BASELINE.md for the 8→32
-memory-bandwidth-ceiling control) is regenerated INLINE each bench run
-via taskset-PINNED fresh-JVM subprocesses (each process tree confined to
-exactly N cores — an unpinned small level borrows the idle cores for its
-JVM helper threads and reads ~0.78; forensics in BENCH/BASELINE.md r5)
-over the just-written pages table, cached in executor memory and
-replicated 3× per job, in interleaved (2, 8) passes; the headline
-efficiency is the min-over-passes steady-state ratio.
-``bench_scaling.py`` remains the full 24M-page protocol.
+The headline number is ``pages_per_sec``: throughput of the pages
+pipeline (``contract.pages_pipeline`` over a stored Common-Crawl-shaped
+pages table: ``regexp_extract_all`` geo-entity extraction, explode, one
+broadcast join against the entity→polygon table, per-polygon page
+counts — a Catalyst plan with no Python worker on it).
+
+Scaling evidence (same job at two parallelism levels, N=local[2] vs
+4N=local[8] — the regime where this VM's hardware actually offers 4x;
+BENCH/BASELINE.md keeps the dated 8→32 memory-bandwidth-ceiling record)
+is regenerated INLINE each bench run by ``run_scaling``: fresh-JVM
+subprocesses, taskset-PINNED when ``taskset`` exists (each process tree
+confined to exactly N cores — an unpinned small level borrows the idle
+cores for its JVM helper threads and reads ~0.78; forensics in
+BENCH/BASELINE.md r5), over the just-written pages table, cached in
+executor memory and replicated 3× per job, in interleaved (2, 8) passes;
+the headline efficiency is the ratio of the per-level minimum
+``pipeline_sec`` over all passes.
 """
 
 from __future__ import annotations
@@ -96,41 +99,6 @@ BENCH_QUERIES = [
 ]
 
 
-def bench_diff(current: dict) -> dict | None:
-    """Per-query delta vs the latest BENCH_r{N}.json in the repo (the
-    driver records one per round) — makes regressions visible round-over-
-    round without digging through artifacts."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append((int(m.group(1)), p))
-    if not rounds:
-        return None
-    n, path = max(rounds)
-    try:
-        prev = json.load(open(path)).get("parsed") or {}
-    except Exception:
-        return None
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:
-        same_sf = float(prev.get("sf")) == float(sf)
-    except (TypeError, ValueError):
-        same_sf = str(prev.get("sf")) == sf
-    if not same_sf or prev.get("cpus") != CPUS:
-        return None  # only diff apples-to-apples configs
-    prev_q = prev.get("queries") or {}
-    delta = {}
-    for name, sec in current.items():
-        if name in prev_q and isinstance(prev_q[name], (int, float)) and prev_q[name] > 0 and isinstance(sec, (int, float)):
-            delta[name] = round((sec - prev_q[name]) / prev_q[name] * 100.0, 1)
-    return {"prev_round": n, "delta_pct": delta}
-
-
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -169,9 +137,8 @@ def materialize_pages(spark, n_pages: int, reuse: bool = False) -> str:
     (measured 15-28 s vs 2.3 s for the identical pipeline — round-3
     forensics in BENCH/BASELINE.md). A fresh write leaves the 0.9 GB
     headline table cache-hot, which is the state every prior round's
-    numbers were recorded under. ``reuse=True`` (bench_scaling.py's 8.9
-    GB table, cache-ineligible at ANY freshness, shared across its
-    per-parallelism workers) keeps an existing table."""
+    numbers were recorded under. ``reuse=True`` keeps an existing table:
+    ``scaling_worker`` reads the table its parent bench run just wrote."""
     from geomesa_spark.sources import synth
 
     out = f"/tmp/geomesa_bench_pages_{n_pages}"
@@ -217,12 +184,7 @@ def run(spark, sf_dir: str) -> dict:
     # is visible as spread, not misread as a code regression.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_REPEATS", "3"))
     run_detail: dict[str, dict] = {"pages_pipeline": {"runs": [round(r, 3) for r in runs]}}
-    order = list(BENCH_QUERIES)
-    if os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE"):  # order-shuffled control run
-        import random
-
-        random.Random(int(os.environ["SPARK_GRAFT_BENCH_SHUFFLE"])).shuffle(order)
-    for name in order:
+    for name in BENCH_QUERIES:
         spark.catalog.clearCache()
         runs_q = []
         for _ in range(repeats):
@@ -239,14 +201,6 @@ def run(spark, sf_dir: str) -> dict:
         total += min(runs_q)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    diff = bench_diff(timings)
-    flagged = sorted(
-        name
-        for name, pct in ((diff or {}).get("delta_pct") or {}).items()
-        if isinstance(pct, (int, float)) and pct > 50.0
-    )
-    if flagged and diff is not None:
-        diff["regression_flags"] = flagged  # >1.5x round-over-round: investigate before trusting
     compact = {
         "metric": "headline suite wall time (pages pipeline + operator queries)",
         "value": round(total, 3),
@@ -258,12 +212,7 @@ def run(spark, sf_dir: str) -> dict:
         "cpus": CPUS,
         "n_polygon_rows": int(n_polygon_rows),
     }
-    if flagged:
-        compact["regression_flags"] = flagged[:5]
-    detail = {"query_runs": run_detail}
-    if diff:
-        detail["diff_vs_prev"] = diff
-    return compact, detail
+    return compact, {"query_runs": run_detail}
 
 
 def scaling_worker(cpus: int) -> None:
@@ -344,9 +293,7 @@ def run_scaling() -> tuple[dict | None, dict]:
 
     detail: dict = {}
     passes: list[dict] = []
-    use_pin = os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") != "0" and shutil.which(
-        "taskset"
-    )
+    use_pin = shutil.which("taskset") is not None
     for p in range(int(os.environ.get("SPARK_GRAFT_SCALING_PASSES", "3"))):
         res: dict = {}
         for cpus in (2, 8):
@@ -433,31 +380,6 @@ def main():
         detail["scaling"] = scaling_detail
         if scaling_compact:
             compact["scaling"] = scaling_compact
-    # Drift-resistant headline: this VM's hypervisor windows swing
-    # identical code up to ~2-4x (BENCH/BASELINE.md), and one bad window
-    # halved the official round-4 number (674k vs 1.066M same day). The
-    # trailing best across recorded round windows is the capability
-    # figure; the in-run number stays the honest this-window record.
-    best_pps, best_src = compact["pages_per_sec"], "this_run"
-    import glob as _glob
-    import re as _re
-    for p in _glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")):
-        try:
-            with open(p) as f:
-                prev = json.load(f).get("parsed") or {}
-            pps = prev.get("pages_per_sec")
-            if (
-                isinstance(pps, (int, float))
-                and prev.get("n_pages") == compact["n_pages"]
-                and prev.get("cpus") == compact["cpus"]
-                and pps > best_pps
-            ):
-                m = _re.search(r"(BENCH_r\d+)\.json$", p)
-                best_pps, best_src = pps, (m.group(1) if m else p)
-        except (OSError, ValueError):
-            continue
-    compact["pages_per_sec_best_window"] = best_pps
-    compact["best_window_src"] = best_src
     here = os.path.dirname(os.path.abspath(__file__))
     os.makedirs(os.path.join(here, "BENCH"), exist_ok=True)
     detail_rel = f"BENCH/run_detail_r{_next_round()}.json"

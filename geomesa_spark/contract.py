@@ -1648,8 +1648,8 @@ def q_minhash_signatures(spark, sf_dir):
 
 MINHASH_BUCKET_CAP = 64  # skip over-full LSH buckets (low-information bands)
 # below this many stored band rows, a full index shuffle beats the prune
-# passes' broadcast barriers (measured: bench_dedup_curve.py, BENCH/
-# dedup_incremental_curve.json — 14.5 s vs 23.5 s at 480k stored rows)
+# passes' broadcast barriers (measured: BENCH/dedup_incremental_curve.json
+# — 14.5 s vs 23.5 s at 480k stored rows)
 DEDUP_PRUNE_MIN_STORED = 2_000_000
 
 

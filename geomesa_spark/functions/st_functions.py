@@ -496,9 +496,11 @@ def st_geometryN(wkt: pd.Series, n: pd.Series) -> pd.Series:
 
 
 def _pip_against(poly_wkt: pd.Series, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    cache = _parse_cache(poly_wkt)
-    out = np.zeros(len(lon), dtype=bool)
+    # one hashing pass over the (often long) WKT column: parse only the
+    # factorized uniques (the pip_join_stored refine runs this per batch)
     codes, uniques = pd.factorize(poly_wkt)
+    cache = _parse_cache(pd.Series(uniques))
+    out = np.zeros(len(lon), dtype=bool)
     for i, w in enumerate(uniques):
         g = cache.get(w)
         if g is None:

@@ -224,11 +224,12 @@ def dedupe_and_append(
             # each new doc yields n_bands band rows, so the batch's
             # band-row count is n_bands × |docs| (docs shorter than one
             # gram are the only, negligible, overestimate). The absolute
-            # floor is measured, not guessed: bench_dedup_curve.py at
-            # sf0.1 (stored 480k band rows, 8× the batch) shows the
-            # prune's broadcast barriers costing 23.5 s vs 14.5 s for
-            # the full shuffle — below ~2M stored rows the whole index
-            # shuffles faster than the prune passes amortize.
+            # floor is measured, not guessed: the sf0.1 curve in
+            # BENCH/dedup_incremental_curve.json (stored 480k band rows,
+            # 8× the batch) shows the prune's broadcast barriers costing
+            # 23.5 s vs 14.5 s for the full shuffle — below ~2M stored
+            # rows the whole index shuffles faster than the prune passes
+            # amortize.
             stored_n = stored_bands.count()
             prune = stored_n > max(4 * n_bands * ndocs, int(C.DEDUP_PRUNE_MIN_STORED))
         if prune:
@@ -621,10 +622,10 @@ def _esub_best_spans(m: DataFrame, k: int, step: int) -> DataFrame:
     return runs.groupBy("da", "db").agg(F.max("span").alias("ms"), F.count(F.lit(1)).alias("ns"))
 
 
-# Dense-vs-strided crossover floor (total corpus chars). Measured by
-# bench_esub_crossover.py (curve in BENCH/esub_crossover.json, analysis
-# in BENCH/BASELINE.md): across the entire single-box-measurable range
-# (1.5M-12M chars, disjoint-replica scaling) DENSE wins at every point
+# Dense-vs-strided crossover floor (total corpus chars). Measured curve
+# in BENCH/esub_crossover.json (analysis in BENCH/BASELINE.md): across
+# the entire single-box-measurable range (1.5M-12M chars,
+# disjoint-replica scaling) DENSE wins at every point
 # (strided ≈ 1.3× dense; at the full bench run's settings 4.1×) — the
 # strided config's candidate barriers + dense re-verify cost
 # proportionally more than the ~50% probe-anchor shuffle reduction

@@ -476,9 +476,11 @@ def with_cover_cells(
         for pdf in batches:
             out_pid, out_cell, out_full, out_wkt = [], [], [], []
             for pid, wkt in zip(pdf[id_col], pdf[wkt_col]):
+                if wkt is None:
+                    continue
                 try:
                     _kind, coords, offs = geo_x.parse_wkt(wkt)
-                except Exception:
+                except ValueError:
                     continue
                 cells, fulls = cover_cells_one(coords, offs, level)
                 out_pid.extend([int(pid)] * len(cells))
@@ -488,29 +490,6 @@ def with_cover_cells(
             yield pd.DataFrame({id_col: out_pid, "cell": out_cell, "full": out_full, wkt_col: out_wkt})
 
     return poly_df.select(id_col, wkt_col).mapInPandas(gen, schema)
-
-
-def make_pip_refine_wkt(wkt_col: str = "wkt"):
-    """Arrow-batched (lon, lat, wkt) → bool PIP refine for stored polygon
-    tables: each batch parses every unique WKT once and refines its rows
-    with the vectorized ray-crossing kernel."""
-
-    @F.pandas_udf(BooleanType())
-    def pip_refine_wkt(lon: pd.Series, lat: pd.Series, wkt: pd.Series) -> pd.Series:
-        lon_v = lon.to_numpy(np.float64)
-        lat_v = lat.to_numpy(np.float64)
-        out = np.zeros(len(lon_v), dtype=bool)
-        codes, uniq = pd.factorize(wkt)
-        for i, w in enumerate(uniq):
-            try:
-                _kind, coords, offs = geo.parse_wkt(w)
-            except Exception:
-                continue
-            m = codes == i
-            out[m] = geo.points_in_polygon(lon_v[m], lat_v[m], coords, offs)
-        return pd.Series(out)
-
-    return pip_refine_wkt
 
 
 def pip_join_stored(
@@ -543,6 +522,7 @@ def pip_join_stored(
     else:
         cand = pts.join(covers.hint(strategy), "cell", "inner")
     if refine:
-        pip = make_pip_refine_wkt(wkt_col)
-        cand = cand.where(F.col("full") | pip(F.col(lon_col), F.col(lat_col), F.col(wkt_col)))
+        from geomesa_spark.functions.st_functions import st_containsPoint
+
+        cand = cand.where(F.col("full") | st_containsPoint(F.col(wkt_col), F.col(lon_col), F.col(lat_col)))
     return cand.drop("full", "cell", wkt_col)

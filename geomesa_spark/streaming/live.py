@@ -364,18 +364,9 @@ def streaming_pip_counts(
     vectorized refine), applied to a stream, rolled into event-time
     windows — the "CQL filter on stream" equivalence, per-polygon.
     Stream-static joins need no state; only the windowed count does."""
-    from geomesa_spark.operators.spatial_join import (
-        make_pip_refine,
-        polygon_cover_pdf,
-        with_grid_cell,
-    )
+    from geomesa_spark.operators.spatial_join import broadcast_pip_join
 
-    spark = stream.sparkSession
-    covers = F.broadcast(spark.createDataFrame(polygon_cover_pdf(polys, level)))
-    cells = with_grid_cell(stream.withWatermark(ts_col, watermark), lon_col, lat_col, level)
-    cand = cells.join(covers, "cell", "inner")
-    pip = make_pip_refine(polys)
-    matched = cand.where(F.col("full") | pip(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
+    matched = broadcast_pip_join(stream.withWatermark(ts_col, watermark), polys, lon_col, lat_col, level)
     return (
         matched.groupBy(F.window(ts_col, window).alias("win"), "polygon_id")
         .agg(F.count(F.lit(1)).alias("n"))

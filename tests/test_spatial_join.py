@@ -128,3 +128,18 @@ def test_hot_cells_sampled_matches_full(points_df):
     sampled = set(sj.hot_cells(pts, threshold_fraction=0.05, sample_fraction=0.05))
     # the 30%-concentration hot cell must be found by the 5% sample
     assert full and full <= sampled
+
+
+def test_pip_join_stored_skips_malformed_and_null_wkt(spark, points_df, polys, oracle_pairs):
+    """A polygon table row whose WKT does not parse (or is null) covers
+    nothing: the stored-table join returns exactly the rows it returns
+    without that row, which are the oracle's pairs."""
+    from geomesa_spark.functions import geometry as geo
+
+    rows = [(p.polygon_id, geo.wkt_polygon_exact(p.coords, p.ring_offsets)) for p in polys]
+    schema = "polygon_id long, wkt string"
+    clean = _pairs(sj.pip_join_stored(points_df, spark.createDataFrame(rows, schema)))
+    bad = rows + [(10**6, "POLYGON ((0 0, 10 0, ten ten, 0 0))"), (10**6 + 1, None)]
+    dirty = _pairs(sj.pip_join_stored(points_df, spark.createDataFrame(bad, schema)))
+    assert clean == oracle_pairs
+    assert dirty == clean
