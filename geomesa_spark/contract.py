@@ -39,9 +39,11 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as geo
+from geomesa_spark.operators import dedup as DD
 from geomesa_spark.operators import knn as K
 from geomesa_spark.operators import spatial_join as SJ
 from geomesa_spark.operators import tiling as T
+from geomesa_spark.operators.ann import _dot, ann_ivf_topk, ann_lsh_topk, embed_neardup_pairs_lsh
 from geomesa_spark.sources import synth
 from geomesa_spark.sources.extract import GEO_SPAN_PATTERN
 
@@ -1571,11 +1573,7 @@ def q_dedup_jaccard(spark, sf_dir):
     signal at a 0.9 threshold). The driver-fixture corpus has no such
     heavy words, so the exact path stays cheap and the oracle stays
     byte-identical without a cut here."""
-    d = _load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(filter(split(text, ' '), x -> x <> ''))")).alias("w"),
-    )
+    words = DD.words(_load(spark, sf_dir, "documents")).select("doc_id", "w")
     sizes = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = words.alias("a")
     b = words.alias("b")
@@ -1626,19 +1624,7 @@ def q_minhash_signatures(spark, sf_dir):
     table (codegen `min((a_i*h+b_i) % P)` expressions), then unpivot to
     the (doc_id, i, sig) shape — the word rows shuffle once at 1× volume
     instead of 16× through a coefficient cross-join."""
-    d = _load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(filter(split(text, ' '), x -> x <> ''))")).alias("w"),
-    )
-    wh = words.withColumn(
-        "h", F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10).cast("long") % MINHASH_P
-    )
-    mins = [
-        F.min((F.lit(int(MINHASH_A[i])) * F.col("h") + F.lit(int(MINHASH_B[i]))) % MINHASH_P).alias(f"m{i}")
-        for i in range(MINHASH_N)
-    ]
-    wide = wh.groupBy("doc_id").agg(*mins)
+    wide = DD.minhash_sig(DD.words(_load(spark, sf_dir, "documents")))
     stack = ", ".join(f"cast({i} as bigint), m{i}" for i in range(MINHASH_N))
     return (
         wide.select("doc_id", F.expr(f"stack({MINHASH_N}, {stack}) as (i, sig)"))
@@ -1672,37 +1658,11 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     Buckets larger than MINHASH_BUCKET_CAP are skipped — a band shared by
     that many documents carries no near-dup signal (on web-scale corpora
     such buckets are boilerplate clusters), and the cap bounds the
-    otherwise-quadratic pair blowup. Deterministic and oracle-mirrored."""
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = (
-        sig.withColumn("band", (F.col("i") / MINHASH_BAND_ROWS).cast("long"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "sig"))), lambda x: x["sig"].cast("string")
-                ),
-            ).alias("bsig")
-        )
-    )
-    w = Window.partitionBy("band", "bsig")
-    sized = bands.withColumn("bn", F.count(F.lit(1)).over(w)).where(
-        F.col("bn") <= MINHASH_BUCKET_CAP
-    )
-    a = sized.alias("a")
-    b = sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-        .orderBy("da", "db")
-    )
+    otherwise-quadratic pair blowup. Deterministic and oracle-mirrored.
+    The band keys are ``dedup.band_table`` over the word hashes — the
+    same 4×4 banding the n-gram dedup uses over char-3-gram hashes."""
+    bands = DD.band_table(DD.words(_load(spark, sf_dir, "documents")))
+    return DD.lsh_pairs(bands, "bsig", MINHASH_BUCKET_CAP).orderBy("da", "db")
 
 
 # ---------------------------------------------------------------------------
@@ -1909,7 +1869,6 @@ def q_poly_pair_relations(spark, sf_dir):
 
 
 NGRAM_JACCARD_THRESHOLD = 0.8
-_NGRAM_GRAM_CACHE: list = []  # latest persisted gram table (bounded leak)
 
 
 # char-3-gram shingle table with int64 md5 gram identities — joins and
@@ -1987,59 +1946,21 @@ def q_ngram_minhash_dedup(spark, sf_dir):
     blowup) → 4×4 banded LSH buckets (capped at MINHASH_BUCKET_CAP) →
     candidate pairs → EXACT shingle-Jaccard verification computed only
     for candidates (never all pairs). The oracle mirrors every stage."""
-    from geomesa_spark.operators import dedup as DD
-
     d = _load_docs(spark, sf_dir)
-    # int64 gram identity (md5 60-bit) — distinct/joins shuffle 8-byte
-    # keys; per-doc distinct grams computed ROW-LOCAL (array_distinct
-    # inside codegen) — only ~1/7 of the raw grams ever explode and the
-    # (doc_id, g) distinct shuffle disappears entirely. The expressions
-    # live in operators/dedup.py (shared STRUCTURALLY with the
-    # incremental index, so one-shot/incremental twin equality cannot
-    # drift). Persisted: the gram table feeds FOUR consumers
-    # (signatures, sizes, and both sides of the intersection join).
+    # Every stage is operators/dedup.py's, shared with the incremental
+    # index so one-shot/incremental twin equality cannot drift. The gram
+    # table feeds both the signatures and the gram sets, so it is
+    # persisted; the output is materialized before the cache is released.
     grams = DD.gram_table(d).persist()
-    # bound the cache: a long-lived driver re-invoking this query must not
-    # accumulate persisted gram tables — keep only the latest
-    while _NGRAM_GRAM_CACHE:
-        try:
-            _NGRAM_GRAM_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    _NGRAM_GRAM_CACHE.append(grams)
-    # ONE wide 16-min aggregation + row-local band explode (dedup.py)
-    bands = DD.band_table(grams)
-    w = Window.partitionBy("band", "bsig")
-    sized = bands.withColumn("bn", F.count(F.lit(1)).over(w)).where(F.col("bn") <= MINHASH_BUCKET_CAP)
-    a, b = sized.alias("a"), sized.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    try:
+        cand = DD.lsh_pairs(DD.band_table(grams), "bsig", MINHASH_BUCKET_CAP)
+        return (
+            DD.verify_jaccard(cand, DD.gram_sets(grams), NGRAM_JACCARD_THRESHOLD)
+            .orderBy("da", "db")
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
-    # exact verify via per-doc gram-SET arrays + array_intersect (pure
-    # codegen): each candidate pair costs one in-memory set intersection
-    # instead of fanning out |grams_a| + |grams_b| join rows — at corpus
-    # scale the arrays join by doc id (bounded by the banding cap), no
-    # gram-level shuffle exists at all
-    gram_sets = DD.gram_sets(grams)
-    sa = gram_sets.select(F.col("doc_id").alias("da"), F.col("gset").alias("ga_set"))
-    sb = gram_sets.select(F.col("doc_id").alias("db"), F.col("gset").alias("gb_set"))
-    inter = F.size(F.array_intersect("ga_set", "gb_set"))
-    jac = inter.cast("double") / (F.size("ga_set") + F.size("gb_set") - inter)
-    return (
-        cand.join(sa, "da")
-        .join(sb, "db")
-        .withColumn("jac", jac)
-        .where(F.col("jac") >= NGRAM_JACCARD_THRESHOLD)
-        .select("da", "db", "jac")
-        .orderBy("da", "db")
-    )
+    finally:
+        grams.unpersist()
 
 
 _DEDUP_INCR_SQL = (
@@ -2071,15 +1992,13 @@ def q_dedup_incremental(spark, sf_dir):
     outputs. The oracle mirrors the per-evaluation cap semantics exactly:
     batch 1's LSH bucket sizes are counted over the even-id subpopulation
     only, batch 2's over the full population."""
-    from geomesa_spark.operators import dedup
-
     # fan out before the per-batch gram explodes (see _load_docs):
     # A/B at sf0.1: 14.1 -> 11.6 s warm, 25.8 -> 15.6 s cold
     d = _load_docs(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="geomesa_dedup_idx_")
     try:
-        p1 = dedup.dedupe_and_append(d.where(F.col("doc_id") % 2 == 0), root)
-        p2 = dedup.dedupe_and_append(d.where(F.col("doc_id") % 2 == 1), root)
+        p1 = DD.dedupe_and_append(d.where(F.col("doc_id") % 2 == 0), root)
+        p2 = DD.dedupe_and_append(d.where(F.col("doc_id") % 2 == 1), root)
     finally:
         # both batch outputs are eagerly localCheckpoint-ed inside
         # dedupe_and_append, so the index files are no longer referenced
@@ -2107,26 +2026,9 @@ def q_simhash_fingerprints(spark, sf_dir):
     ±1 votes from each distinct word's hash bit — near-dup docs differ
     in few bits (Hamming-distance dedup). Exact integer arithmetic; all
     16 bit-vote sums run as ONE wide aggregation (no 16× row explode)."""
-    d = _load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(filter(split(text, ' '), x -> x <> ''))")).alias("w"),
-    )
-    wh = words.withColumn(
-        "h", F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10).cast("long") % MINHASH_P
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    wide = wh.groupBy("doc_id").agg(*votes)
-    pack = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        pack = term if pack is None else pack + term
-    return wide.select("doc_id", pack.alias("simhash")).orderBy("doc_id")
+    words = DD.words(_load(spark, sf_dir, "documents"))
+    sig = DD.simhash_sig(words.withColumn("g", F.col("g") % MINHASH_P), SIMHASH_BITS)
+    return sig.select("doc_id", F.col("sh").alias("simhash")).orderBy("doc_id")
 
 
 SIMHASH_HAMMING_MAX = 3
@@ -2172,70 +2074,7 @@ def q_simhash_neardup_pairs(spark, sf_dir):
     keeps pairs with hamming ≤ 3. At 100 TB the band join is a bucketed
     shuffle, never an all-pairs product; the oracle is the brute-force
     twin (identical output by losslessness)."""
-    return simhash_pairs_df(spark, sf_dir).orderBy("da", "db")
-
-
-def simhash_pairs_df(spark, sf_dir) -> DataFrame:
-    """Unordered (da, db, hamming) simhash near-dup pairs — the edge set
-    shared by the pair query and the clustering query."""
-    d = _load(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.expr("array_distinct(filter(split(text, ' '), x -> x <> ''))")).alias("w"),
-    )
-    wh = words.withColumn(
-        "h", F.conv(F.substring(F.md5(F.col("w").cast("binary")), 1, 15), 16, 10).cast("long")
-    )
-    # 60 per-bit vote sums as ONE aggregation (codegen bit tests) — no
-    # 60× row explode: the word table shuffles once on doc_id, period.
-    votes = [
-        F.sum(
-            F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(SIMHASH_PAIR_BITS)
-    ]
-    per_doc = wh.groupBy("doc_id").agg(*votes)
-    pack = None
-    for b in range(SIMHASH_PAIR_BITS):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(1).cast("long") * (1 << b)).otherwise(F.lit(0).cast("long"))
-        pack = term if pack is None else pack + term
-    sig = per_doc.select("doc_id", pack.alias("sh"))
-    n_bands = SIMHASH_PAIR_BITS // SIMHASH_BAND_BITS
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    bands = sig.select(
-        "doc_id",
-        "sh",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("sh", b * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for b in range(n_bands)
-            ])
-        ).alias("bk"),
-    ).select("doc_id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.col("a.sh").alias("sa"),
-            F.col("b.sh").alias("sb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.expr("cast(bit_count(sa ^ sb) as bigint)"))
-        .where(F.col("hamming") <= SIMHASH_HAMMING_MAX)
-        .select("da", "db", "hamming")
-    )
+    return DD.simhash_pairs_df(_load(spark, sf_dir, "documents")).orderBy("da", "db")
 
 
 # ground-truth components of the simhash pair graph by recursive
@@ -2272,9 +2111,7 @@ def q_dedup_clusters(spark, sf_dir):
     The oracle computes ground-truth components via recursive transitive
     closure, so this checks TRANSITIVITY (A~B, B~C ⇒ same cluster even
     when A,C share no band), not just pair agreement."""
-    from geomesa_spark.operators import dedup as DD
-
-    pairs = simhash_pairs_df(spark, sf_dir)
+    pairs = DD.simhash_pairs_df(_load(spark, sf_dir, "documents"))
     comp = DD.connected_components(pairs, src="da", dst="db")
     docs = _load(spark, sf_dir, "documents").select("doc_id")
     asg = docs.join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left").select(
@@ -2335,10 +2172,8 @@ def q_exact_substring_pairs(spark, sf_dir):
     operators.dedup.exact_substring_pairs (exercised by the
     `exact_substring_strided` query below), left off HERE so this oracle
     stays an exact all-pairs twin."""
-    from geomesa_spark.operators import dedup as D
-
     d = _load_docs(spark, sf_dir)
-    return D.exact_substring_pairs(d, k=ESUB_K, dup_span=ESUB_DUP_SPAN).orderBy("da", "db")
+    return DD.exact_substring_pairs(d, k=ESUB_K, dup_span=ESUB_DUP_SPAN).orderBy("da", "db")
 
 
 @_q(
@@ -2369,10 +2204,8 @@ def q_exact_substring_strided(spark, sf_dir):
     operators/dedup.py::exact_substring_pairs for the span-bound proof
     sketch (detected span >= true span - 2(stride-1), requires
     dup_span >= k + stride - 1)."""
-    from geomesa_spark.operators import dedup as D
-
     d = _load_docs(spark, sf_dir)
-    return D.exact_substring_pairs(
+    return DD.exact_substring_pairs(
         d, k=ESUB_K, dup_span=ESUB_DUP_SPAN, stride=ESUB_K // 2, anchor_df_cap=64
     ).orderBy("da", "db")
 
@@ -2403,11 +2236,9 @@ def q_exact_substring_auto(spark, sf_dir):
     its index prune. Both branches return the dup subset, so the DENSE
     all-pairs SQL stays the oracle regardless of which plan auto picks
     (tests/test_exact_substring.py asserts the flip both ways)."""
-    from geomesa_spark.operators import dedup as D
-
     d = _load_docs(spark, sf_dir)
     return (
-        D.exact_substring_pairs(d, k=ESUB_K, dup_span=ESUB_DUP_SPAN, stride="auto")
+        DD.exact_substring_pairs(d, k=ESUB_K, dup_span=ESUB_DUP_SPAN, stride="auto")
         .where(F.col("is_dup") == 1)
         .orderBy("da", "db")
     )
@@ -2450,9 +2281,7 @@ def q_corpus_curation(spark, sf_dir):
     Composes three already-oracled stages (simhash pairs, clustering,
     quality features) into one plan; the oracle recomputes all of it
     independently (recursive-closure ground truth for the clusters)."""
-    from geomesa_spark.operators import dedup as DD
-
-    pairs = simhash_pairs_df(spark, sf_dir)
+    pairs = DD.simhash_pairs_df(_load(spark, sf_dir, "documents"))
     comp = DD.connected_components(pairs, src="da", dst="db")
     d = _load(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
@@ -2518,10 +2347,9 @@ def q_embed_neardup_pairs(spark, sf_dir):
     e = _load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("de")
     )
-    dot = lambda x, y: F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v)
-    n = e.withColumn("nrm", F.sqrt(dot(F.col("de"), F.col("de"))))
+    n = e.withColumn("nrm", F.sqrt(_dot(F.col("de"), F.col("de"))))
     a, b = n.alias("a"), n.alias("b")
-    cos = F.round(dot(F.col("a.de"), F.col("b.de")) / (F.col("a.nrm") * F.col("b.nrm")), 6)
+    cos = F.round(_dot(F.col("a.de"), F.col("b.de")) / (F.col("a.nrm") * F.col("b.nrm")), 6)
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .withColumn("cos", cos)
@@ -2542,8 +2370,6 @@ def q_embed_neardup_lsh(spark, sf_dir):
     that the bucketed path loses nothing, not a recall estimate. At
     corpus scale the knobs move to more/wider bands (e.g. 8×8 bits) and
     the same shape holds with measured recall (tests/test_ann.py)."""
-    from geomesa_spark.operators.ann import embed_neardup_pairs_lsh
-
     e = _load(spark, sf_dir, "embeddings")
     return embed_neardup_pairs_lsh(e, threshold=EMBED_NEARDUP_THRESHOLD, band_bits=2)
 
@@ -2554,8 +2380,6 @@ def q_ann_lsh_topk(spark, sf_dir):
     SimHash over embeddings → candidates sharing a band bucket → exact
     cosine re-rank. The scale path for ANN (rows-only; verified against
     the brute-force baseline in tests/test_ann.py)."""
-    from geomesa_spark.operators.ann import ann_lsh_topk
-
     e = _load(spark, sf_dir, "embeddings")
     return ann_lsh_topk(e, n_queries=ANN_NQ, k=ANN_K)
 
@@ -2568,8 +2392,6 @@ def q_ann_ivf_topk(spark, sf_dir):
     re-rank. The partition-prunable scale path for ANN (rows-only;
     recall-verified against the brute-force baseline in
     tests/test_ann.py)."""
-    from geomesa_spark.operators.ann import ann_ivf_topk
-
     e = _load(spark, sf_dir, "embeddings")
     return ann_ivf_topk(e, n_queries=ANN_NQ, k=ANN_K, n_centroids=16, nprobe=4)
 
@@ -2594,15 +2416,14 @@ def q_ann_cosine_topk(spark, sf_dir):
         e.where(F.col("vec_id") < ANN_NQ)
         .select(F.col("vec_id").alias("qid"), F.col("de").alias("qe"))
     )
-    dot = lambda x, y: F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v)
     d = (
         e.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("qid"))
         .withColumn(
             "score",
             F.round(
-                dot(F.col("de"), F.col("qe"))
-                / (F.sqrt(dot(F.col("de"), F.col("de"))) * F.sqrt(dot(F.col("qe"), F.col("qe")))),
+                _dot(F.col("de"), F.col("qe"))
+                / (F.sqrt(_dot(F.col("de"), F.col("de"))) * F.sqrt(_dot(F.col("qe"), F.col("qe")))),
                 6,
             ),
         )
@@ -2821,8 +2642,6 @@ def q_decontamination(spark, sf_dir):
     table joins it with no shuffle of corpus grams (map-side semi
     filter), then one per-doc aggregation; gram identities are the same
     int64 md5 keys as the dedup pipelines (operators/dedup.py)."""
-    from geomesa_spark.operators import dedup as DD
-
     d = _load_docs(spark, sf_dir)
     grams = DD.gram_table(d).persist()
     try:

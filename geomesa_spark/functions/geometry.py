@@ -308,11 +308,6 @@ def buffer_points(lon, lat, radius_m, segments: int = 32) -> np.ndarray:
     return np.stack([lon + dlon * np.cos(ang), lat + dlat * np.sin(ang)], axis=2)
 
 
-def buffer_point(lon: float, lat: float, radius_m: float, segments: int = 32) -> np.ndarray:
-    """One ring of ``buffer_points``."""
-    return buffer_points(lon, lat, radius_m, segments)[0]
-
-
 # ---------------------------------------------------------------------------
 # WKT (numpy-backed parser/writer for all seven OGC simple-feature kinds).
 #
@@ -1298,7 +1293,9 @@ def wkb_write_any(kind: str, coords, ring_offsets) -> bytes:
 
 
 def wkb_read(buf: bytes):
-    """WKB bytes → (kind, coords, ring_offsets). Accepts both byte orders."""
+    """WKB bytes → (kind, coords, ring_offsets). Accepts both byte orders.
+    Malformed input (truncated bytes, an unknown kind code, a polygon
+    without rings) raises ValueError, whatever step notices it."""
     def u32(b, off, little):
         return struct.unpack_from("<I" if little else ">I", b, off)[0]
 
@@ -1369,7 +1366,10 @@ def wkb_read(buf: bytes):
             return kind, members, None, off
         raise ValueError(f"unsupported WKB kind code: {kind_code}")
 
-    kind, c, o, _ = parse_one(0)
+    try:
+        kind, c, o, _ = parse_one(0)
+    except (IndexError, KeyError, struct.error) as e:
+        raise ValueError(f"malformed WKB: {e!r}") from e
     return kind, c, o
 
 

@@ -106,18 +106,26 @@ def st_makePolygon(line_wkt: pd.Series) -> pd.Series:
     return _per_unique(line_wkt, mk, object)
 
 
-@F.pandas_udf(StringType())
-def st_geomFromWKB(wkb: pd.Series) -> pd.Series:
-    """WKB binary → geometry (WKT form)."""
+def _wkb_to_wkt(wkb: pd.Series, kind: str | None = None) -> pd.Series:
+    """WKB → WKT per row: null for null or malformed WKB, and for a kind
+    other than ``kind`` when one is given."""
+
     def rd(b):
         if b is None:
             return None
         try:
-            return geo.wkt_any(*geo.wkb_read(bytes(b)))
-        except Exception:
+            g = geo.wkb_read(bytes(b))
+        except ValueError:
             return None
+        return geo.wkt_any(*g) if kind is None or g[0] == kind else None
 
     return wkb.map(rd)
+
+
+@F.pandas_udf(StringType())
+def st_geomFromWKB(wkb: pd.Series) -> pd.Series:
+    """WKB binary → geometry (WKT form)."""
+    return _wkb_to_wkt(wkb)
 
 
 def _geohash_cells(gh: pd.Series):
@@ -495,9 +503,11 @@ def st_geometryN(wkt: pd.Series, n: pd.Series) -> pd.Series:
 # --- relations --------------------------------------------------------------
 
 
-def _pip_against(poly_wkt: pd.Series, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
-    # one hashing pass over the (often long) WKT column: parse only the
-    # factorized uniques (the pip_join_stored refine runs this per batch)
+def _pip_against(poly_wkt: pd.Series, lon: np.ndarray, lat: np.ndarray, kernel) -> np.ndarray:
+    """``kernel(lon, lat, coords, offsets)`` per distinct polygon WKT:
+    one hashing pass over the (often long) WKT column, and only the
+    factorized uniques are parsed (the pip_join_stored refine runs this
+    per batch)."""
     codes, uniques = pd.factorize(poly_wkt)
     cache = _parse_cache(pd.Series(uniques))
     out = np.zeros(len(lon), dtype=bool)
@@ -506,24 +516,15 @@ def _pip_against(poly_wkt: pd.Series, lon: np.ndarray, lat: np.ndarray) -> np.nd
         if g is None:
             continue
         m = codes == i
-        out[m] = geo.points_in_polygon(lon[m], lat[m], g[1], g[2])
+        out[m] = kernel(lon[m], lat[m], g[1], g[2])
     return out
 
 
-def _pip_interior_against(poly_wkt: pd.Series, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
+def _pip_interior(lon, lat, coords, offsets) -> np.ndarray:
     """Strict-interior PIP (classify == 2): the st_contains/st_within fast
     path — boundary points answer False, matching the exact relate kernel
     and JTS (raw ray-crossing parity is side-dependent on the boundary)."""
-    cache = _parse_cache(poly_wkt)
-    out = np.zeros(len(lon), dtype=bool)
-    codes, uniques = pd.factorize(poly_wkt)
-    for i, w in enumerate(uniques):
-        g = cache.get(w)
-        if g is None:
-            continue
-        m = codes == i
-        out[m] = geo.classify_points_in_polygon(lon[m], lat[m], g[1], g[2]) == 2
-    return out
+    return geo.classify_points_in_polygon(lon, lat, coords, offsets) == 2
 
 
 def _containment_series(container: pd.Series, contained: pd.Series, pred) -> pd.Series:
@@ -537,7 +538,7 @@ def _containment_series(container: pd.Series, contained: pd.Series, pred) -> pd.
     out = np.empty(len(container), dtype=object)
     if fast.any():
         m = fast.to_numpy()
-        out[m] = _pip_interior_against(container[fast], pts[0].to_numpy()[m], pts[1].to_numpy()[m])
+        out[m] = _pip_against(container[fast], pts[0].to_numpy()[m], pts[1].to_numpy()[m], _pip_interior)
     if (~fast).any():
         a, b = (container[~fast], contained[~fast])
         gen = _per_unique_pair(a, b, lambda ga, gb: pred(geo.relate_geoms(*ga, *gb)))
@@ -556,7 +557,7 @@ def st_contains(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
 @F.pandas_udf(BooleanType())
 def st_containsPoint(poly_wkt: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
     return pd.Series(
-        _pip_against(poly_wkt, lon.to_numpy(np.float64), lat.to_numpy(np.float64))
+        _pip_against(poly_wkt, lon.to_numpy(np.float64), lat.to_numpy(np.float64), geo.points_in_polygon)
     )
 
 
@@ -1636,50 +1637,56 @@ def st_makePointM(x: pd.Series, y: pd.Series, m: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def st_pointFromWKB(wkb: pd.Series) -> pd.Series:
     """WKB → POINT (null for any other WKB kind)."""
+    return _wkb_to_wkt(wkb, "POINT")
 
-    def rd(b):
-        if b is None:
-            return None
-        try:
-            k, c, o = geo.wkb_read(bytes(b))
-            return geo.wkt_any(k, c, o) if k == "POINT" else None
-        except Exception:
-            return None
 
-    return wkb.map(rd)
+def _gj_xy(positions) -> np.ndarray:
+    """GeoJSON positions → (n, 2) float array (extra ordinates dropped;
+    an empty list is an empty array)."""
+    c = np.asarray([p[:2] for p in positions], dtype=np.float64)
+    if c.size == 0:
+        return c.reshape(0, 2)
+    if c.ndim != 2 or c.shape[1] != 2:
+        raise ValueError("GeoJSON positions need two coordinates each")
+    return c
 
 
 def _geojson_to_geom(obj):
     """GeoJSON geometry dict → (kind, coords, ring_offsets)."""
     t = obj["type"]
     if t == "Point":
-        c = np.asarray([obj["coordinates"][:2]], dtype=np.float64)
-        return "POINT", c, np.asarray([0, 1])
+        return "POINT", _gj_xy([obj["coordinates"]]), np.asarray([0, 1])
     if t == "MultiPoint":
-        c = np.asarray([p[:2] for p in obj["coordinates"]], dtype=np.float64)
+        c = _gj_xy(obj["coordinates"])
         return "MULTIPOINT", c, np.arange(len(c) + 1)
     if t == "LineString":
-        c = np.asarray([p[:2] for p in obj["coordinates"]], dtype=np.float64)
+        c = _gj_xy(obj["coordinates"])
         return "LINESTRING", c, np.asarray([0, len(c)])
     if t == "MultiLineString":
-        parts = [np.asarray([p[:2] for p in part], dtype=np.float64) for part in obj["coordinates"]]
+        parts = [_gj_xy(part) for part in obj["coordinates"]]
         offs = np.concatenate([[0], np.cumsum([len(p) for p in parts])])
         return "MULTILINESTRING", np.concatenate(parts), offs
     if t == "Polygon":
-        rings = [np.asarray([p[:2] for p in ring], dtype=np.float64) for ring in obj["coordinates"]]
+        rings = [_gj_xy(ring) for ring in obj["coordinates"]]
         offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
         return "POLYGON", np.concatenate(rings), offs
     if t == "MultiPolygon":
-        rings = [
-            np.asarray([p[:2] for p in ring], dtype=np.float64)
-            for poly in obj["coordinates"]
-            for ring in poly
-        ]
+        rings = [_gj_xy(ring) for poly in obj["coordinates"] for ring in poly]
         offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
         return "MULTIPOLYGON", np.concatenate(rings), offs
     if t == "GeometryCollection":
         return "GEOMETRYCOLLECTION", [_geojson_to_geom(m) for m in obj["geometries"]], None
     raise ValueError(t)
+
+
+def _geojson_read(s: str):
+    """GeoJSON geometry text → (kind, coords, ring_offsets). Malformed
+    input (not JSON, not an object, a missing member, a bad position)
+    raises ValueError, whatever step notices it."""
+    try:
+        return _geojson_to_geom(json.loads(s))
+    except (TypeError, KeyError, IndexError) as e:
+        raise ValueError(f"malformed GeoJSON: {e!r}") from e
 
 
 @F.pandas_udf(StringType())
@@ -1690,9 +1697,10 @@ def st_geomFromGeoJSON(gj: pd.Series) -> pd.Series:
         if s is None:
             return None
         try:
-            return geo.wkt_any(*_geojson_to_geom(json.loads(s)))
-        except Exception:
+            g = _geojson_read(s)
+        except ValueError:
             return None
+        return geo.wkt_any(*g)
 
     return gj.map(rd)
 

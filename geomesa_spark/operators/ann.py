@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from geomesa_spark.operators.dedup import lsh_pairs
 from geomesa_spark.sources import synth
 
 
@@ -281,18 +282,8 @@ def embed_neardup_pairs_lsh(
     recall measured in tests/test_ann.py against the brute output)."""
     e = embeddings.select(id_col, F.col(emb_col).cast("array<double>").alias("de"))
     banded = with_lsh_bands(e, "de", nbits, band_bits).select(id_col, "band", "band_key")
-    w = Window.partitionBy("band", "band_key")
-    sized = banded.withColumn("bn", F.count(F.lit(1)).over(w)).where(F.col("bn") <= bucket_cap)
-    a, b = sized.alias("a"), sized.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("va"), F.col(f"b.{id_col}").alias("vb"))
-        .distinct()
+    cand = lsh_pairs(banded, "band_key", bucket_cap, id_col).select(
+        F.col("da").alias("va"), F.col("db").alias("vb")
     )
     dot = _dot
     n = e.withColumn("nrm", F.sqrt(dot(F.col("de"), F.col("de"))))

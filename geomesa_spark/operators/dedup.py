@@ -1,20 +1,39 @@
-"""Incremental n-gram MinHash-LSH dedup index (SURVEY.md §8.10 scale
-path; driver mandate: dedup that survives corpus growth).
+"""Near-duplicate detection stages and the incremental n-gram
+MinHash-LSH dedup index (SURVEY.md §8.10 scale path).
 
-The one-shot queries in :mod:`geomesa_spark.contract`
-(``ngram_minhash_dedup``) dedupe a corpus against itself. At 100 TB the
-real workload is INCREMENTAL: a new crawl batch must dedupe against
-everything already ingested without re-shingling the whole corpus. This
-module stores the per-document LSH band keys and exact gram sets as a
-persistent index; each new batch
+Every near-dup query in the engine has one shape — shingle or word →
+hash → signature → banded LSH buckets, capped → candidate pairs → exact
+verify — and each stage is written once, here:
 
-  1. shingles/hashes only its own documents (same constants and
-     expressions as the one-shot query — char-3 grams, int64 md5 gram
-     identity, 16-min wide MinHash aggregation, 4×4 banded keys),
+  ``hash60``          60-bit int64 identity: first 15 hex digits of md5
+                      (the DuckDB oracles' ``('0x' || substring(md5(x),
+                      1, 15))::bigint``)
+  ``gram_table``      (doc_id, g): distinct char-3-gram hashes per doc
+  ``words``           (doc_id, w, g): distinct non-empty words + hashes
+  ``minhash_sig``     (doc_id, m0..m15): ONE wide 16-min aggregation
+  ``band_table``      (doc_id, band, bsig): minhash_sig + 4×4 band explode
+  ``lsh_pairs``       (da, db): capped (band, key) bucket self-join
+  ``gram_sets``       (doc_id, gset): gram-set arrays for the verify
+  ``verify_jaccard``  (da, db, jac): exact ``array_intersect`` Jaccard
+  ``simhash_sig``     (doc_id, sh): per-bit ±1 vote sums, bit-packed
+
+The one-shot queries in :mod:`geomesa_spark.contract` (MinHash, SimHash,
+n-gram dedup) and ``ann.embed_neardup_pairs_lsh`` compose these stages;
+so does the incremental index below, so one-shot/incremental twin
+equality cannot drift.
+
+The one-shot ``ngram_minhash_dedup`` dedupes a corpus against itself.
+At 100 TB the real workload is INCREMENTAL: a new crawl batch must
+dedupe against everything already ingested without re-shingling the
+whole corpus. ``dedupe_and_append`` stores the per-document LSH band
+keys and exact gram sets as a persistent index; each new batch
+
+  1. shingles/hashes only its own documents (``gram_table`` +
+     ``band_table``),
   2. equi-joins its band keys against (stored ∪ new) band keys — bucket
      sizes computed over the union, capped like the one-shot path,
-  3. exact-verifies candidates with ``array_intersect`` over gram-set
-     arrays (stored sets read by doc-id join, never re-derived),
+  3. exact-verifies candidates with ``verify_jaccard`` (stored gram sets
+     read by doc-id join, never re-derived),
   4. appends its own bands + gram sets to the index.
 
 When no bucket ever exceeds the cap, the union of per-batch outputs is
@@ -36,45 +55,64 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 BANDS_SCHEMA = "doc_id long, band int, bsig string"
 GSETS_SCHEMA = "doc_id long, gset array<long>"
 
 
 def _c():
-    # lazy: contract owns the shared MinHash constants (oracle-pinned)
+    # lazy: contract owns the shared MinHash/SimHash constants (oracle-pinned)
     from geomesa_spark import contract
 
     return contract
 
 
+def hash60(col: Column) -> Column:
+    """int64 identity of a string column: its md5's first 15 hex digits
+    (60 bits, never negative) — hex-identical in both engines."""
+    return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("long")
+
+
 def gram_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, g): distinct char-3-gram int64 identities per document —
-    row-local array_distinct, md5-derived 60-bit keys (same expressions
-    as the one-shot oracle query)."""
+    row-local array_distinct, then ``hash60``."""
     gram_arr = (
         f"array_distinct(filter(transform(sequence(1, greatest(length({text_col}), 1)), "
         f"i -> substring({text_col}, i, 3)), x -> length(x) = 3))"
     )
     return docs.select(F.col(id_col).alias("doc_id"), F.explode(F.expr(gram_arr)).alias("gs")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5(F.col("gs").cast("binary")), 1, 15), 16, 10).cast("long").alias("g"),
+        "doc_id", hash60(F.col("gs")).alias("g")
     )
 
 
-def band_table(grams: DataFrame) -> DataFrame:
-    """(doc_id, band, bsig): 4×4 banded MinHash keys from a gram table —
-    ONE wide 16-min aggregation, then a row-local band explode."""
+def words(docs: DataFrame) -> DataFrame:
+    """(doc_id, w, g): each document's distinct non-empty space-separated
+    words and their ``hash60`` — the word-level twin of ``gram_table``."""
+    distinct_words = "array_distinct(filter(split(text, ' '), x -> x <> ''))"
+    return docs.select("doc_id", F.explode(F.expr(distinct_words)).alias("w")).select(
+        "doc_id", "w", hash60(F.col("w")).alias("g")
+    )
+
+
+def minhash_sig(grams: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15): MinHash over (doc_id, g) with h = g % P and
+    m_i = min((a_i*h + b_i) % P) — ONE wide aggregation, so the gram rows
+    shuffle once instead of 16× through a coefficient cross-join."""
     C = _c()
-    gh = grams.withColumn("h", F.col("g") % C.MINHASH_P)
     mins = [
         F.min((F.lit(int(C.MINHASH_A[i])) * F.col("h") + F.lit(int(C.MINHASH_B[i]))) % C.MINHASH_P).alias(f"m{i}")
         for i in range(C.MINHASH_N)
     ]
-    sig = gh.groupBy("doc_id").agg(*mins)
+    return grams.withColumn("h", F.col("g") % C.MINHASH_P).groupBy("doc_id").agg(*mins)
+
+
+def band_table(grams: DataFrame) -> DataFrame:
+    """(doc_id, band, bsig): 4×4 banded MinHash keys from a (doc_id, g)
+    table — ``minhash_sig``, then a row-local band explode."""
+    C = _c()
     n_bands = C.MINHASH_N // C.MINHASH_BAND_ROWS
-    return sig.select(
+    return minhash_sig(grams).select(
         "doc_id",
         F.explode(
             F.array(*[
@@ -90,8 +128,107 @@ def band_table(grams: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.bsig").alias("bsig"))
 
 
+def lsh_pairs(banded: DataFrame, key: str, cap: int, id_col: str = "doc_id") -> DataFrame:
+    """(da, db) with da < db, once per pair: ids sharing a (band, key)
+    bucket of at most ``cap`` members. Larger buckets carry no near-dup
+    signal (boilerplate) and are skipped — the cap bounds the otherwise
+    quadratic pair blowup."""
+    w = Window.partitionBy("band", key)
+    sized = banded.withColumn("bn", F.count(F.lit(1)).over(w)).where(F.col("bn") <= cap)
+    a, b = sized.alias("a"), sized.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("da"), F.col(f"b.{id_col}").alias("db"))
+        .distinct()
+    )
+
+
 def gram_sets(grams: DataFrame) -> DataFrame:
     return grams.groupBy("doc_id").agg(F.collect_set("g").alias("gset"))
+
+
+def verify_jaccard(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """(da, db, jac) for the candidate pairs whose exact gram-set Jaccard
+    is at least ``threshold``. Each pair costs one in-memory
+    ``array_intersect`` over the two (doc_id, gset) arrays, joined by doc
+    id — no gram-level shuffle."""
+    sa = sets.select(F.col("doc_id").alias("da"), F.col("gset").alias("ga_set"))
+    sb = sets.select(F.col("doc_id").alias("db"), F.col("gset").alias("gb_set"))
+    inter = F.size(F.array_intersect("ga_set", "gb_set"))
+    jac = inter.cast("double") / (F.size("ga_set") + F.size("gb_set") - inter)
+    return (
+        cand.join(sa, "da")
+        .join(sb, "db")
+        .withColumn("jac", jac)
+        .where(F.col("jac") >= threshold)
+        .select("da", "db", "jac")
+    )
+
+
+def simhash_sig(hashed: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, sh): SimHash over (doc_id, g) — bit b of ``sh`` is set
+    when more of the doc's hashes have bit b set than clear. All ``bits``
+    vote sums run as ONE wide aggregation (no ``bits``× row explode)."""
+    votes = [
+        F.sum(F.when(F.shiftright("g", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"s{b}")
+        for b in range(bits)
+    ]
+    pack = None
+    for b in range(bits):
+        term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
+        pack = term if pack is None else pack + term
+    return hashed.groupBy("doc_id").agg(*votes).select("doc_id", pack.alias("sh"))
+
+
+def simhash_pairs_df(docs: DataFrame) -> DataFrame:
+    """Unordered (da, db, hamming) SimHash near-dup pairs over 60-bit word
+    fingerprints: a band equi-join (4 bands × 15 bits — any pair within
+    Hamming ≤ 3 shares an intact band by pigeonhole, so the banding is
+    lossless), then the exact popcount refine. The fingerprints ride
+    through the join, so the refine needs no second lookup."""
+    C = _c()
+    sig = simhash_sig(words(docs), C.SIMHASH_PAIR_BITS)
+    n_bands = C.SIMHASH_PAIR_BITS // C.SIMHASH_BAND_BITS
+    mask = (1 << C.SIMHASH_BAND_BITS) - 1
+    bands = sig.select(
+        "doc_id",
+        "sh",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.shiftright("sh", b * C.SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask)).alias("key"),
+                )
+                for b in range(n_bands)
+            ])
+        ).alias("bk"),
+    ).select("doc_id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    a, b = bands.alias("a"), bands.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("da"),
+            F.col("b.doc_id").alias("db"),
+            F.col("a.sh").alias("sa"),
+            F.col("b.sh").alias("sb"),
+        )
+        .distinct()
+    )
+    return (
+        cand.withColumn("hamming", F.expr("cast(bit_count(sa ^ sb) as bigint)"))
+        .where(F.col("hamming") <= C.SIMHASH_HAMMING_MAX)
+        .select("da", "db", "hamming")
+    )
 
 
 def _recover_component(path: str) -> None:
@@ -289,18 +426,8 @@ def dedupe_and_append(
             sets_rel = all_sets.join(F.broadcast(cand_ids), "doc_id", "left_semi")
         else:
             sets_rel = all_sets
-        sa = sets_rel.select(F.col("doc_id").alias("da"), F.col("gset").alias("ga_set"))
-        sb = sets_rel.select(F.col("doc_id").alias("db"), F.col("gset").alias("gb_set"))
-        inter = F.size(F.array_intersect("ga_set", "gb_set"))
-        jac = inter.cast("double") / (F.size("ga_set") + F.size("gb_set") - inter)
-        pairs = (
-            cand.join(sa, "da")
-            .join(sb, "db")
-            .withColumn("jac", jac)
-            .where(F.col("jac") >= threshold)
-            .select("da", "db", "jac")
-            .localCheckpoint(eager=True)  # sever lineage from the pre-append index state
-        )
+        # eager: sever lineage from the pre-append index state
+        pairs = verify_jaccard(cand, sets_rel, threshold).localCheckpoint(eager=True)
         if replay_absorbed:
             pass  # rows already folded into consolidated files — no write
         elif partition is not None:
@@ -597,11 +724,7 @@ def _esub_anchors(docs: DataFrame, k: int, id_col: str, text_col: str) -> DataFr
         f"x -> length(x.s) = {k})"
     )
     return docs.select(F.col(id_col).alias("doc_id"), F.explode(expr).alias("ps")).select(
-        "doc_id",
-        F.col("ps.i").alias("i"),
-        F.conv(F.substring(F.md5(F.col("ps.s").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("g"),
+        "doc_id", F.col("ps.i").alias("i"), hash60(F.col("ps.s")).alias("g")
     )
 
 

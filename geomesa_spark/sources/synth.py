@@ -162,18 +162,6 @@ def polygons() -> list[Polygon]:
     return out
 
 
-def polygons_pdf() -> pd.DataFrame:
-    polys = polygons()
-    return pd.DataFrame(
-        {
-            "polygon_id": [p.polygon_id for p in polys],
-            "name": [p.name for p in polys],
-            "category": [p.category for p in polys],
-            "wkt": [p.wkt() for p in polys],
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # pages (FIXTURES.md §1) — the north-rule input table
 # ---------------------------------------------------------------------------

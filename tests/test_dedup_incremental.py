@@ -323,6 +323,32 @@ def test_dedup_job_entrypoint_resume(spark, tmp_path, monkeypatch, capsys):
 # ---------------------------------------------------------------------------
 
 
+def test_lsh_pairs_cap_boundary(spark):
+    """A bucket of exactly ``cap`` members produces all its pairs; a
+    bucket of ``cap + 1`` produces none. Docs sharing several buckets
+    are reported once, always as da < db."""
+    cap = 3
+    rows = [
+        # band 0: "full" holds exactly cap docs, "over" holds cap + 1
+        (3, 0, "full"), (1, 0, "full"), (2, 0, "full"),
+        (7, 0, "over"), (4, 0, "over"), (6, 0, "over"), (5, 0, "over"),
+        # docs 1 and 2 also share bands 1 and 2; 5 and 4 share band 1
+        (2, 1, "x"), (1, 1, "x"), (2, 2, "y"), (1, 2, "y"),
+        (5, 1, "z"), (4, 1, "z"),
+        # same key in another band is another bucket
+        (6, 1, "full"), (8, 1, "full"),
+        (9, 3, "solo"),
+    ]
+    banded = spark.createDataFrame(rows, "doc_id long, band int, bsig string")
+    got = [(r.da, r.db) for r in dedup.lsh_pairs(banded, "bsig", cap).collect()]
+    assert sorted(got) == [(1, 2), (1, 3), (2, 3), (4, 5), (6, 8)]
+    assert len(got) == len(set(got))
+    assert all(da < db for da, db in got)
+    # the same rows under another id column name
+    renamed = banded.withColumnRenamed("doc_id", "vec_id")
+    assert sorted((r.da, r.db) for r in dedup.lsh_pairs(renamed, "bsig", cap, "vec_id").collect()) == sorted(got)
+
+
 def _cc(spark, edge_list):
     from geomesa_spark.operators.dedup import connected_components
 

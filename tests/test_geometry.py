@@ -130,7 +130,7 @@ def test_wkt_round_trip():
 
 
 def test_buffer_point_contains_center_near_radius():
-    ring = geo.buffer_point(10.0, 45.0, 1000.0)
+    ring = geo.buffer_points(10.0, 45.0, 1000.0)[0]
     off = np.asarray([0, len(ring)])
     assert geo.points_in_polygon(np.array([10.0]), np.array([45.0]), ring, off)[0]
     d = geo.haversine_m(10.0, 45.0, ring[:, 0], ring[:, 1])

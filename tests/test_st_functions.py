@@ -983,6 +983,41 @@ def test_buffer_point_batched_wkt_matches_per_row(registered):
     assert [row["w"] for row in rows] == want[:6]
 
 
+def test_wkb_geojson_readers_null_only_malformed_input(monkeypatch):
+    """Malformed WKB (truncated bytes, an unknown kind code) and
+    malformed GeoJSON (not JSON, a JSON list, a Point without
+    ``coordinates``) read as null; the readers raise ValueError for all
+    of them. Any other exception is a kernel bug and propagates."""
+    import struct
+
+    point = struct.pack("<BIdd", 1, 1, 3.0, 4.0)
+    bad_wkb = [point[:12], struct.pack("<BI", 1, 99) + point[5:]]
+    for b in bad_wkb:
+        with pytest.raises(ValueError):
+            geo.wkb_read(b)
+    wkb = pd.Series(bad_wkb + [point, None])
+    assert list(ST.st_geomFromWKB.func(wkb)) == [None, None, "POINT (3 4)", None]
+    assert list(ST.st_pointFromWKB.func(wkb)) == [None, None, "POINT (3 4)", None]
+    bad_gj = ["not json", "[1, 2]", '{"type": "Point"}']
+    for s in bad_gj:
+        with pytest.raises(ValueError):
+            ST._geojson_read(s)
+    gj = pd.Series(bad_gj + ['{"type": "Point", "coordinates": [3, 4]}', None])
+    assert list(ST.st_geomFromGeoJSON.func(gj)) == [None, None, None, "POINT (3 4)", None]
+
+    def broken(*_g):
+        raise RuntimeError("kernel bug")
+
+    monkeypatch.setattr(geo, "wkt_any", broken)
+    for udf, arg in (
+        (ST.st_geomFromWKB, point),
+        (ST.st_pointFromWKB, point),
+        (ST.st_geomFromGeoJSON, '{"type": "Point", "coordinates": [3, 4]}'),
+    ):
+        with pytest.raises(RuntimeError):
+            udf.func(pd.Series([arg]))
+
+
 def test_parse_cache_nulls_only_malformed_wkt(monkeypatch):
     """Malformed, empty and unsupported WKT (parse_wkt's ValueError) is
     null through st_intersection and st_buffer; any other exception
