@@ -20,18 +20,20 @@ instead, which has NO special cases for degeneracy:
    indicator over (wa, wb) marks result trapezoids: slab_boolean takes
    the op (∩, ∪, \\, Δ) over the parities — OGC-valid rings are
    even-odd compatible, so holes need no special handling — and the
-   buffer takes wa > 0 (dilation: the union of rings, shells CCW and
-   holes CW, capsules and discs) or wa > 0 and wb == 0 (erosion: the
-   polygon minus its boundary capsules).
+   buffer takes wa > 0 (dilation: shell convolution cycles, CW holes,
+   capsules and discs) or wa > 0 and wb == 0 (erosion: the polygon
+   minus its boundary capsules).
 3. The result boundary = edge pieces where the indicator flips across
    an edge (a piece going straight on into the next slab extends, so
    slab cuts add no vertices to straight runs), plus the XOR of
    left/right vertical coverage at each slab border. Pieces chain into closed
    rings (chain_closed_rings: every junction must have degree 2;
    higher even degrees, where boundaries cross, go to a planar face
-   walk), shells/holes recover by containment parity, and the
+   walk), shells/holes recover by containment parity — once, from the
+   rings rounded as the WKT writer rounds them (_members) — and the
    assembled area must match the trapezoid-accumulated area exactly
-   (1e-9 relative). Wrong answers are structurally excluded; failure
+   (1e-9 relative), and after that rounding within the writer's
+   rounding bound. Wrong answers are structurally excluded; failure
    modes return None.
 
 The result is areal by construction: lower-dimensional contact (the
@@ -336,21 +338,62 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
         rings = _trace_faces(pieces, tol)
     if rings is None or not rings:
         return None
+    return _members(rings, area)
+
+
+def _members(rings: list, area: float):
+    """The sweep's rings grouped ONCE into members (shell CCW, holes
+    CW), as a consumer of the written WKT groups them.
+
+    The %.10g WKT writer rounds coordinates ~1e-10-relative. That is
+    normally invisible, but a sliver ring sitting exactly on another
+    ring's boundary can flip its containment depth under that rounding
+    (observed: a 0.02-area island inside a hole re-reading as a hole of
+    the outer shell, silently subtracting twice). So the rings are
+    rounded to the writer's values first and grouped by containment
+    depth from those: the WKT (the same text whether written from the
+    rounded or the unrounded coordinates) parses back to exactly these
+    rings, so a consumer re-derives exactly this grouping. Two area
+    identities then gate it:
+    - the unrounded rings under that grouping give the sweep's
+      trapezoid area to 1e-9 relative;
+    - the rounded rings move that area only by the writer's own
+      rounding bound: each coordinate moves at most 5e-10·max|coord|,
+      which moves a ring's area by at most its perimeter times that
+      (times √2 for the two axes).
+    Returns the members with their unrounded coordinates, or None when
+    either identity fails (never a wrong polygon)."""
     coords = np.concatenate(rings)
     offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
+    v = coords.ravel().tolist()
+    written = np.asarray((("%.10g " * len(v)) % tuple(v)).split(), dtype=np.float64).reshape(coords.shape)
+    signed, _ = _ring_sums(coords, offs)
+    signed_w, length_w = _ring_sums(written, offs)
     out: list = []
-    total = 0.0
-    for shell_idx, hole_idxs in geo.multipolygon_parts(coords, offs):
-        member = [geo._ccw_ring(rings[shell_idx])] + [
-            geo._ccw_ring(rings[h])[::-1] for h in hole_idxs
-        ]
-        mc = np.concatenate(member)
-        mo = np.concatenate([[0], np.cumsum([len(r) for r in member])])
-        total += geo.polygon_area_deg2(mc, mo)
-        out.append((mc, mo))
+    total = rounded = perimeter = 0.0
+    for shell_idx, hole_idxs in geo.multipolygon_parts(written, offs):
+        ids = [shell_idx] + hole_idxs
+        member = [rings[i] if (signed[i] >= 0) == (i == shell_idx) else rings[i][::-1] for i in ids]
+        out.append((np.concatenate(member), np.cumsum([0] + [len(r) for r in member])))
+        total += abs(signed[shell_idx]) - sum(abs(signed[h]) for h in hole_idxs)
+        rounded += abs(signed_w[shell_idx]) - sum(abs(signed_w[h]) for h in hole_idxs)
+        perimeter += sum(length_w[i] for i in ids)
     if not abs(total - area) <= 1e-9 * max(1.0, abs(area)):
         return None  # area identity gate (NaN fails it): never a wrong polygon
+    bound = 1e-9 * max(1.0, abs(total)) + perimeter * np.sqrt(2.0) * 5e-10 * np.abs(written).max()
+    if not abs(rounded - total) <= bound:
+        return None  # the writer's rounding moved the area past its own bound
     return out
+
+
+def _ring_sums(c: np.ndarray, offs: np.ndarray) -> tuple[list, list]:
+    """(signed shoelace area, perimeter) of each closed ring
+    c[offs[i]:offs[i + 1]]."""
+    d = c[1:] - c[:-1]
+    cross = c[:-1, 0] * c[1:, 1] - c[1:, 0] * c[:-1, 1]
+    length = np.hypot(d[:, 0], d[:, 1])
+    cross[offs[1:-1] - 1] = length[offs[1:-1] - 1] = 0.0  # joins between rings
+    return (0.5 * np.add.reduceat(cross, offs[:-1])).tolist(), np.add.reduceat(length, offs[:-1]).tolist()
 
 
 def slab_boolean(ga, gb, op: str, tol: float = 1e-9):

@@ -736,16 +736,22 @@ def _disc(center, r: float, idx: int) -> np.ndarray:
     start phase varies per ring (idx), so co-centred arcs of different
     parts never share sampled vertices — an exact tie the slab sweep's
     face walk would refuse as an ambiguous junction."""
-    s = _SEGMENTS
-    phase = (0.1 + 0.8 * ((idx * 37) % 89) / 89.0) * (np.pi / s)
-    th = phase + np.arange(2 * s) * (np.pi / s)
+    th = _phase(idx) + np.arange(2 * _SEGMENTS) * (np.pi / _SEGMENTS)
     ring = np.column_stack([center[0] + r * np.cos(th), center[1] + r * np.sin(th)])
     return np.vstack([ring, ring[:1]])
 
 
+def _phase(idx: int) -> float:
+    """Start angle of the idx-th disc: inside (0.1, 0.9) of one arc step."""
+    return (0.1 + 0.8 * ((idx * 37) % 89) / 89.0) * (np.pi / _SEGMENTS)
+
+
 def _capsule(p, q, r: float, idx: int) -> np.ndarray:
     """CCW stadium around the segment p→q (p != q), extended by a
-    per-capsule jittered ε ≈ 0.005r along the axis. Without the
+    per-capsule jittered ε ≈ 0.005r along the axis. _buffer_geom uses
+    capsules for every edge that has no convolution cycle: polylines,
+    the holes of a dilated polygon, every ring of an eroded one and the
+    polygon members of a GEOMETRYCOLLECTION. Without the
     extension a corner p + r·n̂ lies EXACTLY on the adjacent
     perpendicular edge of an axis-aligned ring; with it, the contacts
     become proper crossings. The overshoot error is ≤ ε²/2r ≈
@@ -779,6 +785,33 @@ def _capsule(p, q, r: float, idx: int) -> np.ndarray:
     return np.asarray(pts[::-1], dtype=np.float64)  # built clockwise
 
 
+def _cycle(ring: np.ndarray, r: float, idx: int) -> np.ndarray:
+    """Convolution cycle of the CCW ring with the 2s-gon _disc(·, r, idx)
+    (Wein, ESA 2006): each edge translated by the disc vertex extreme
+    along its outward normal, joined at each vertex by the disc's arc
+    steps between the two normals — CCW at a convex turn, CW (the short
+    way back) at a reflex one. Its winding number is positive exactly on
+    the ring's polygon ⊕ disc, so the slab sweep dilates a shell from it
+    alone."""
+    s = _SEGMENTS
+    step = np.pi / s
+    disc = _disc((0.0, 0.0), r, idx)[:-1]
+    p = ring[:-1][(ring[:-1] != np.roll(ring[:-1], 1, axis=0)).any(axis=1)]
+    d = np.roll(p, -1, axis=0) - p  # edge i runs p[i] → p[i + 1]
+    k = np.rint((np.arctan2(d[:, 1], d[:, 0]) - np.pi / 2 - _phase(idx)) / step).astype(int) % (2 * s)
+    kp = np.roll(k, 1)  # the incoming edge's disc vertex at p[i]
+    dp = np.roll(d, 1, axis=0)
+    ccw = (k - kp) % (2 * s)
+    turn = dp[:, 0] * d[:, 1] - dp[:, 1] * d[:, 0]
+    fwd = np.where(ccw == s, turn > 0, ccw < s)
+    sign = np.where(fwd, 1, -1)
+    cnt = np.where(fwd, ccw, 2 * s - ccw) % (2 * s) + 1
+    v = np.repeat(np.arange(len(p)), cnt)
+    t = np.arange(len(v)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    pts = p[v] + disc[(kp[v] + sign[v] * t) % (2 * s)]
+    return np.vstack([pts, pts[:1]])
+
+
 def _valid_ring(ring: np.ndarray) -> bool:
     """A closed ring with at least 3 distinct vertices and no zero-width
     spike (an edge doubling back along its predecessor)."""
@@ -797,24 +830,41 @@ def _valid_ring(ring: np.ndarray) -> bool:
 def _buffer_geom(ga, radius: float) -> str | None:
     """PLANAR buffer (degrees — the unit convention of the st_* planar
     relate/overlay surface; st_bufferPoint remains the geodesic-meters
-    point form). The geometry's rings (shells CCW, holes CW), one CCW
-    capsule per edge and one disc per point go through ONE slab sweep
-    (slab_overlay.slab_region) that counts winding numbers. A positive
-    radius dilates: {x : dist(x, geom) ≤ r} is where the winding over
-    all rings is positive, so holes, islands inside holes and
-    overlapping collection members need no special case. A negative
-    radius erodes areal subjects: the points inside the polygon (fill
-    winding > 0) that no boundary capsule covers — the capsule union IS
-    the ≤|r| boundary band, so its inscribed arcs leave the result
-    overshooting by the same sag bound, at reflex corners only;
-    lower-dimensional subjects erode to POLYGON EMPTY (JTS semantics).
-    Arcs are inscribed
-    (error ≤ r·(1−cos(0.7π/s)) — the phase-jittered first/last chords
-    span up to 1.4 steps; the JTS quadrant-segments convention).
-    Non-finite coordinates, invalid polygon rings (unclosed, fewer than
-    3 distinct vertices, a zero-width spike, rings crossing each other)
-    and a sweep refusal return None — honest null, never an
-    approximation."""
+    point form). All rings go through ONE slab sweep
+    (slab_overlay.slab_region) that counts winding numbers.
+
+    A positive radius dilates: {x : dist(x, geom) ≤ r} is where the
+    winding over all rings is positive. The rings are:
+    - per (MULTI)POLYGON shell, its convolution cycle with the 2s-gon
+      disc (_cycle; each shell its own disc phase, so co-located arcs
+      of different shells never tie exactly). Its winding is positive
+      exactly on shell ⊕ disc, about 1 ring edge plus one edge per π/s
+      of turning at each vertex, where one capsule per edge costs 2s + 2;
+    - per hole, its CW ring plus one CCW capsule per edge: −1 inside the
+      hole cancels the shell's cycle there, and the capsule band adds
+      the ≤ r strip back. A hole gets no cycle of its own: a cycle's
+      winding is −1 at the centre of a hole that should close, which
+      would leave a false hole;
+    - no ring at all for a hole whose x or y span is below
+      2·r·cos(0.7π/s): every point of it lies within the capsule band's
+      guaranteed radius of its boundary along that axis, so it closes;
+    - one CCW capsule per edge of a polyline, one disc per point, and
+      for a GEOMETRYCOLLECTION's polygon members their rings (shells
+      CCW, holes CW) plus one capsule per edge.
+    Islands inside holes and overlapping collection members need no
+    special case.
+
+    A negative radius erodes areal subjects: the points inside the
+    polygon (fill winding > 0) that no boundary capsule covers — the
+    capsule union IS the ≤|r| boundary band, so its inscribed arcs leave
+    the result overshooting by the same sag bound, at reflex corners
+    only; lower-dimensional subjects erode to POLYGON EMPTY (JTS
+    semantics). Arcs are inscribed (error ≤ r·(1−cos(0.7π/s)) — the
+    phase-jittered first/last capsule chords span up to 1.4 steps; the
+    JTS quadrant-segments convention). Non-finite coordinates, invalid
+    polygon rings (unclosed, fewer than 3 distinct vertices, a
+    zero-width spike, rings crossing each other) and a sweep refusal
+    return None — honest null, never an approximation."""
     kind = ga[0]
     parts = geo.geom_parts(*ga)
     if not np.isfinite(radius) or radius == 0:
@@ -824,7 +874,8 @@ def _buffer_geom(ga, radius: float) -> str | None:
     if radius < 0 and kind not in _AREAL:
         return "POLYGON EMPTY" if kind in _POINTY + _LINEY else None
     r = abs(radius)
-    fills: list = []  # polygon rings: shells CCW, holes CW
+    cycles = radius > 0 and kind in _AREAL
+    fills: list = []  # shells CCW (or their cycles), holes CW
     caps: list = []   # CCW capsules and discs
     for k2, c2, o2 in parts:
         if k2 == "POLYGON":
@@ -834,8 +885,13 @@ def _buffer_geom(ga, radius: float) -> str | None:
             paths = []
             for i, ring in enumerate(rings):
                 ring = geo._ccw_ring(ring)
-                fills.append(ring if i == 0 else ring[::-1])
-                paths.append(ring)
+                if cycles and i == 0:
+                    fills.append(_cycle(ring, r, len(fills) + len(caps)))
+                elif cycles and np.ptp(ring, axis=0).min() < 2.0 * r * np.cos(0.7 * np.pi / _SEGMENTS):
+                    continue  # a hole the buffer closes
+                else:
+                    fills.append(ring if i == 0 else ring[::-1])
+                    paths.append(ring)
         elif k2 in ("POINT", "LINESTRING"):
             paths = [c2]
         else:
@@ -1142,62 +1198,30 @@ def _gc_parts_interior_disjoint(parts: list) -> bool:
     return True
 
 
-def _areal_area(coords, offs, parts=None) -> float:
+def _areal_area(coords, offs) -> float:
     """Area of a (MULTI)POLYGON ring set: Σ|shell| − Σ|holes| grouped by
-    containment depth (orientation-agnostic, unlike raw signed sums);
-    ``parts`` is a precomputed ``geo.multipolygon_parts`` grouping."""
+    containment depth (orientation-agnostic, unlike raw signed sums)."""
     c = np.asarray(coords, dtype=np.float64)
     o = np.asarray(offs)
     ring = lambda i: c[o[i]:o[i + 1]]
     total = 0.0
-    for s, hs in geo.multipolygon_parts(c, o) if parts is None else parts:
+    for s, hs in geo.multipolygon_parts(c, o):
         total += abs(geo.ring_signed_area(ring(s))) - sum(
             abs(geo.ring_signed_area(ring(h))) for h in hs
         )
     return total
 
 
-def _wkt_roundtrip_gate(parts, expected_area: float) -> str | None:
-    """Emit WKT only if the artifact a consumer PARSES BACK keeps the
-    emitted shell/hole structure. The %.10g writer rounds coordinates
-    ~1e-10-relative — normally invisible, but a sliver ring sitting
-    exactly on another ring's boundary can flip its containment depth
-    under that rounding (observed: a 0.02-area island inside a hole
-    re-reading as a hole of the outer shell, silently subtracting twice).
-    So the parsed-back rings are regrouped by containment depth and must
-    give exactly the emitted members; then the area may move only by the
-    writer's own rounding bound: each coordinate moves at most
-    5e-10·max|coord|, which moves a ring's area by at most its perimeter
-    times that (times √2 for the two axes). A result that is not
-    structure-stable through the writer is refused — None, never a wrong
-    polygon."""
-    w = _polys_to_wkt(parts)
-    if w is None or w.endswith(" EMPTY"):
-        return w
-    _k2, c2, o2 = geo.parse_wkt(w)
-    emitted, base = [], 0
-    for _mc, mo in parts:
-        emitted.append((base, list(range(base + 1, base + len(mo) - 1))))
-        base += len(mo) - 1
-    got = geo.multipolygon_parts(c2, o2)
-    if sorted((s, sorted(hs)) for s, hs in got) != emitted:
-        return None
-    perimeter = sum(np.hypot(*np.diff(c2[o2[i]:o2[i + 1]], axis=0).T).sum() for i in range(len(o2) - 1))
-    tol = 1e-9 * max(1.0, abs(expected_area)) + perimeter * np.sqrt(2.0) * 5e-10 * np.abs(c2).max()
-    if not abs(_areal_area(c2, o2, got) - expected_area) <= tol:
-        return None
-    return w
-
-
 def _areal_overlay(ga, gb, op: str) -> str | None:
     """The (MULTI)POLYGON × (MULTI)POLYGON boolean ``op``, holes
     included: the trapezoidal even-odd sweep of
     functions/slab_overlay.py (no degeneracy special cases, area-identity
-    gated), then the WKT round-trip gate. The sweep's output is areal by
+    gated, its rings grouped once as a reader of the written WKT groups
+    them — slab_overlay._members). The sweep's output is areal by
     construction, so an intersection with no area is the operands'
     shared boundary linework (the LINESTRING × LINESTRING overlay of
-    their rings), POLYGON EMPTY when they do not touch. A refusal by
-    either gate is None — never an approximation."""
+    their rings), POLYGON EMPTY when they do not touch. A refusal is
+    None — never an approximation."""
     out = slab_boolean(ga, gb, op)
     if out is None:
         return None
@@ -1206,8 +1230,7 @@ def _areal_overlay(ga, gb, op: str) -> str | None:
             return "POLYGON EMPTY"
         w = _overlay_intersection(("MULTILINESTRING", ga[1], ga[2]), ("MULTILINESTRING", gb[1], gb[2]))
         return "POLYGON EMPTY" if w.endswith(" EMPTY") else w
-    net = sum(geo.polygon_area_deg2(mc, mo) for mc, mo in out)
-    return _wkt_roundtrip_gate(out, net)
+    return _polys_to_wkt(out)
 
 
 def _polys_to_wkt(parts) -> str | None:
@@ -1419,21 +1442,6 @@ def _parts_canonical_union(parts: list) -> str | None:
     return _gc_combine(members)
 
 
-def _null_on_error(fn):
-    """Overlay dispatchers reject unsupported pairings by returning None;
-    this converts any residual exception on an exotic input to the same
-    null. Scoped to the OVERLAY UDFs only — the relation predicates must
-    fail loudly on a kernel bug, not silently drop rows from filters."""
-
-    def safe(ga, gb):
-        try:
-            return fn(ga, gb)
-        except Exception:
-            return None
-
-    return safe
-
-
 def _overlay_symdifference(ga, gb) -> str | None:
     """A Δ B. (MULTI)POLYGON pairs go to _areal_overlay (the slab
     sweep). Other pairings compose as (A ∪ B) \\ (A ∩ B) — the
@@ -1480,7 +1488,7 @@ def st_symDifference(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     other pairings as the area-gated (A ∪ B) \\ (A ∩ B); exact wherever
     st_union, st_intersection and st_difference are (null, never an
     approximation, outside them)."""
-    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_symdifference)))
+    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _overlay_symdifference))
 
 
 def _simplify_ring(pts: np.ndarray, tol: float, closed: bool) -> np.ndarray:
@@ -1561,21 +1569,21 @@ def st_simplify(wkt: pd.Series, tolerance: pd.Series) -> pd.Series:
 def st_union(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """Geometric union — see _overlay_union for the exact supported
     pairings (null, never an approximation, outside them)."""
-    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_union)))
+    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _overlay_union))
 
 
 @F.pandas_udf(StringType())
 def st_intersection(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """Geometric intersection — see _overlay_intersection for the exact
     supported pairings (null, never an approximation, outside them)."""
-    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_intersection)))
+    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _overlay_intersection))
 
 
 @F.pandas_udf(StringType())
 def st_difference(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """Geometric difference A \\ B — see _overlay_difference for the exact
     supported pairings (null outside them)."""
-    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_difference)))
+    return pd.Series(_per_unique_pair(a_wkt, b_wkt, _overlay_difference))
 
 
 @F.pandas_udf(StringType())

@@ -302,3 +302,71 @@ def test_buffer_invalid_polygon_rings_null():
         g = geo.parse_wkt(wkt_in)
         assert stf._buffer_geom(g, 0.3) is None, wkt_in
         assert stf._buffer_geom(g, -0.3) is None, wkt_in
+
+
+def _sweep_input_sizes(monkeypatch):
+    """Record the number of edges each slab_region call of _buffer_geom
+    receives."""
+    seen = []
+    real = stf.slab_region
+
+    def spy(ea, eb, ind, tol=1e-9):
+        seen.append(len(ea) + len(eb))
+        return real(ea, eb, ind, tol)
+
+    monkeypatch.setattr(stf, "slab_region", spy)
+    return seen
+
+
+def test_buffer_shell_is_one_convolution_cycle(monkeypatch):
+    """A polygon shell reaches the sweep as its convolution cycle with
+    the 2s-gon: a unit square at r = 1 is 4 translated edges plus 4 arc
+    steps per right-angle corner, 20 edges (one capsule per edge plus
+    the fill ring was 76)."""
+    seen = _sweep_input_sizes(monkeypatch)
+    w = _check_buffer("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", 1.0, np.random.default_rng(9), 3)
+    assert len(seen) == 1 and seen[0] <= 20
+    k, c, o = geo.parse_wkt(w)
+    # every vertex is a disc vertex: the area is the 16-gon's plus the
+    # square and its four translated edges, up to the inscribed sag
+    full = 1.0 + 4.0 + np.pi
+    assert full * (1 - 2 * SAG) < stf._areal_area(c, o) <= full
+
+
+@pytest.mark.parametrize(
+    "cx, cy, h",
+    [(5.0, 5.0, 1.0), (5.123456789, 4.87654321, 0.7371234567)],
+    ids=["snapped", "float"],
+)
+@pytest.mark.parametrize("ratio", [0.8, 1.05, 2.0])
+def test_buffer_hole_closes(cx, cy, h, ratio):
+    """A square hole of half-width h: at r = 0.8h exactly one (shrunken)
+    hole survives; at r ≥ 1.05h every point of the hole is within r of
+    a side, so no hole survives and the hole's centre is covered."""
+    hole = [(cx - h, cy - h), (cx - h, cy + h), (cx + h, cy + h), (cx + h, cy - h), (cx - h, cy - h)]
+    wkt_in = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (%s))" % ", ".join("%.10g %.10g" % p for p in hole)
+    r = ratio * h
+    w = _check_buffer(wkt_in, r, np.random.default_rng(10), 12, n=8000)
+    k, c, o = geo.parse_wkt(w)
+    holes = sum(len(oo) - 2 for _k2, _c2, oo in geo.geom_parts(k, c, o))
+    assert holes == (1 if ratio < 1 else 0)
+    assert _member(np.asarray([[cx, cy]]), k, c, o)[0] == (ratio > 1)
+
+
+@pytest.mark.parametrize("sign", [-1.0, 1.0])
+def test_buffer_hole_skip_threshold(monkeypatch, sign):
+    """A hole whose x or y span is below 2·r·cos(0.7π/s) reaches the
+    sweep as no ring at all (every point of it lies within the capsule
+    band's guaranteed radius of its boundary); just above it keeps its
+    ring and capsules. Either way the hole closes."""
+    r = 0.5
+    span = 2.0 * r * np.cos(0.7 * np.pi / S) + sign * 1e-7
+    shell = "(0 0, 10 0, 10 10, 0 10, 0 0)"
+    hole = "(3 5, 3 %r, 7 %r, 7 5, 3 5)" % (5 + span, 5 + span)
+    seen = _sweep_input_sizes(monkeypatch)
+    _check_buffer("POLYGON (%s)" % shell, r, np.random.default_rng(11), 12)
+    w = _check_buffer("POLYGON (%s, %s)" % (shell, hole), r, np.random.default_rng(11), 12)
+    k, c, o = geo.parse_wkt(w)
+    assert sum(len(oo) - 2 for _k2, _c2, oo in geo.geom_parts(k, c, o)) == 0
+    assert _member(np.asarray([[5.0, 5 + span / 2]]), k, c, o)[0]
+    assert (seen[1] == seen[0]) == (sign < 0)

@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from geomesa_spark.functions import geometry as geo
+from geomesa_spark.functions import slab_overlay
 from geomesa_spark.functions import st_functions as stf
 
 
@@ -913,12 +914,13 @@ def test_roundtrip_gate_allows_writer_rounding():
 
 
 def test_roundtrip_gate_refuses_structure_change():
-    """A member the parsed-back rings regroup differently is refused even
-    when the area it claims matches: a square emitted as its own member
-    inside another member's shell re-reads as that shell's hole."""
+    """The sweep's rings are grouped once, as a reader of the written
+    WKT groups them, and the area they claim must match that grouping: a
+    square meant as its own member inside another ring's shell re-reads
+    as that shell's hole, so an area claiming two filled members is
+    refused, and the holed reading is the one emitted."""
     outer = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=np.float64)
     inner = np.array([[2, 2], [8, 2], [8, 8], [2, 8], [2, 2]], dtype=np.float64)
-    one = np.array([0, 5])
-    assert stf._wkt_roundtrip_gate([(outer, one), (inner, one)], 64.0) is None
-    holed = (np.vstack([outer, inner[::-1]]), np.array([0, 5, 10]))
-    assert stf._wkt_roundtrip_gate([holed], 64.0) is not None
+    assert slab_overlay._members([outer, inner], 136.0) is None
+    (mc, mo), = slab_overlay._members([outer, inner], 64.0)
+    assert mo.tolist() == [0, 5, 10] and geo.polygon_area_deg2(mc, mo) == 64.0

@@ -1047,3 +1047,19 @@ def test_parse_cache_nulls_only_malformed_wkt(monkeypatch):
         ST.st_intersection.func(pd.Series([square]), pd.Series([square]))
     with pytest.raises(IndexError):
         ST.st_buffer.func(pd.Series([square]), pd.Series([1.0]))
+
+
+def test_overlay_udfs_propagate_kernel_errors(monkeypatch):
+    """An exception raised inside the areal overlay kernel is a kernel
+    bug: each of the four overlay UDFs propagates it instead of turning
+    the row into a null."""
+    a = pd.Series(["POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"])
+    b = pd.Series(["POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"])
+
+    def broken(*_args):
+        raise RuntimeError("kernel bug")
+
+    monkeypatch.setattr(ST, "slab_boolean", broken)
+    for udf in (ST.st_intersection, ST.st_union, ST.st_difference, ST.st_symDifference):
+        with pytest.raises(RuntimeError, match="kernel bug"):
+            udf.func(a, b)
