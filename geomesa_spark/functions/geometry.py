@@ -1902,68 +1902,6 @@ def endpoint_snapper(tol: float):
     return snap
 
 
-def chain_closed_rings(pieces: list[np.ndarray], tol: float = 1e-9) -> list[np.ndarray] | None:
-    """Assemble polyline pieces into closed rings by endpoint matching
-    (endpoints snapped within ``tol`` — a cut point computed
-    independently for two neighbouring pieces agrees only to float eps).
-    Returns None unless every snapped endpoint has degree exactly 2 and
-    every walk closes: the honest-failure contract of the slab sweep's
-    ring assembly (an ambiguous junction or an open chain is never
-    guessed at; on None, slab_overlay resolves higher even degrees with
-    its planar face walk)."""
-    rings: list[np.ndarray] = []
-    open_segs: list[np.ndarray] = []
-    for p in pieces:
-        s = np.asarray(p, dtype=np.float64)
-        if len(s) < 2:
-            continue
-        if abs(s[0, 0] - s[-1, 0]) <= tol and abs(s[0, 1] - s[-1, 1]) <= tol:
-            if len(s) < 4:
-                return None  # closed sliver: degenerate
-            r = s.copy()
-            r[-1] = r[0]
-            rings.append(r)
-        else:
-            open_segs.append(s)
-    if open_segs:
-        snap = endpoint_snapper(tol)
-        canon = [snap(e) for s in open_segs for e in (s[0], s[-1])]
-        at: dict[tuple, list[tuple[int, bool]]] = {}
-        for si in range(len(open_segs)):
-            at.setdefault(canon[2 * si], []).append((si, True))
-            at.setdefault(canon[2 * si + 1], []).append((si, False))
-        if any(len(v) != 2 for v in at.values()):
-            return None
-        used = [False] * len(open_segs)
-        for start in range(len(open_segs)):
-            if used[start]:
-                continue
-            chain = [open_segs[start]]
-            used[start] = True
-            start_key = canon[2 * start]
-            cur_key = canon[2 * start + 1]
-            for _guard in range(len(open_segs)):
-                if cur_key == start_key:
-                    break
-                nxt = [(si, at_start) for si, at_start in at[cur_key] if not used[si]]
-                if len(nxt) != 1:
-                    return None
-                si, at_start = nxt[0]
-                used[si] = True
-                chain.append(open_segs[si] if at_start else open_segs[si][::-1])
-                cur_key = canon[2 * si + 1] if at_start else canon[2 * si]
-            else:
-                return None  # open chain: junctions never closed a ring
-            # the final piece already ends (within tol) at the start
-            # point — snap it exactly closed rather than appending
-            ring = np.concatenate([chain[0]] + [c[1:] for c in chain[1:]])
-            ring[-1] = ring[0]
-            if len(ring) < 4:
-                return None
-            rings.append(ring)
-    return rings
-
-
 # --- CRS transform (EPSG:4326 <-> EPSG:3857) --------------------------------
 
 _R_MERC = 6378137.0

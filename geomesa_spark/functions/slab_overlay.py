@@ -1,7 +1,8 @@
 """Slab-sweep region kernel: the whole areal path of st_intersection
 / st_union / st_difference / st_symDifference (st_functions._areal_overlay,
-via slab_boolean) and the whole of st_buffer (st_functions._buffer_geom,
-via slab_region).
+via slab_boolean, and the areal part of a GEOMETRYCOLLECTION operand,
+st_functions._gc_normalized via slab_union) and the whole of st_buffer
+(st_functions._buffer_geom, via slab_region).
 
 Crossing-based kernels (Greiner–Hormann, half-plane clips) must
 special-case boundaries that interact degenerately
@@ -22,15 +23,17 @@ instead, which has NO special cases for degeneracy:
    even-odd compatible, so holes need no special handling — and the
    buffer takes wa > 0 (dilation: shell convolution cycles, CW holes,
    capsules and discs) or wa > 0 and wb == 0 (erosion: the polygon
-   minus its boundary capsules).
+   minus its boundary capsules); slab_union takes wa > 0 over the fill
+   rings of a GEOMETRYCOLLECTION's polygon members.
 3. The result boundary = edge pieces where the indicator flips across
    an edge (a piece going straight on into the next slab extends, so
    slab cuts add no vertices to straight runs), plus the XOR of
-   left/right vertical coverage at each slab border. Pieces chain into closed
-   rings (chain_closed_rings: every junction must have degree 2;
-   higher even degrees, where boundaries cross, go to a planar face
-   walk), shells/holes recover by containment parity — once, from the
-   rings rounded as the WKT writer rounds them (_members) — and the
+   left/right vertical coverage at each slab border. One planar face
+   walk (_trace_faces) joins the pieces into closed rings: it goes
+   straight on at a degree-2 junction and takes the next piece
+   clockwise at a higher even degree, where boundaries cross. Shells
+   and holes recover by containment parity — once, from the rings
+   rounded as the WKT writer rounds them (_members) — and the
    assembled area must match the trapezoid-accumulated area exactly
    (1e-9 relative), and after that rounding within the writer's
    rounding bound. Wrong answers are structurally excluded; failure
@@ -127,10 +130,12 @@ def _trace_faces(pieces: list, tol: float):
     for i, (a, b) in enumerate(edges):
         out_at.setdefault(a, []).append(i)
         in_deg[b] = in_deg.get(b, 0) + 1
-    order: dict = {}
+    order: dict = {}  # node with several outgoing edges -> [(angle, edge)] CCW
     for node, ids in out_at.items():
         if in_deg.get(node, 0) != len(ids):
             return None  # boundary of a region alternates in/out
+        if len(ids) == 1:
+            continue  # degree 2: the walk goes straight on, no angles needed
         angs = []
         for i in ids:
             a, b = edges[i]
@@ -150,19 +155,22 @@ def _trace_faces(pieces: list, tol: float):
             used[cur] = True
             tail, head = edges[cur]
             ring.append(head)
-            back = np.arctan2(tail[1] - head[1], tail[0] - head[0])
-            angs = order.get(head)
-            if not angs:
+            ids = out_at.get(head)
+            if not ids:
                 return None
-            # outgoing edge immediately CLOCKWISE of `back` in CCW order
-            idx = None
-            for k, (th, _i) in enumerate(angs):
-                if th >= back:
-                    idx = k - 1
-                    break
-            if idx is None:
+            if len(ids) == 1:
+                nxt = ids[0]
+            else:
+                # outgoing edge immediately CLOCKWISE of the arriving
+                # edge's reverse in CCW order
+                back = np.arctan2(tail[1] - head[1], tail[0] - head[0])
+                angs = order[head]
                 idx = len(angs) - 1
-            nxt = angs[idx][1]
+                for k, (th, _i) in enumerate(angs):
+                    if th >= back:
+                        idx = k - 1
+                        break
+                nxt = angs[idx][1]
             if nxt == start:
                 break
             if used[nxt]:
@@ -218,11 +226,11 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
     # on, or exactly collinear with it — extends that piece instead of
     # starting a new one, so slab cuts and collinear edge joins leave no
     # vertices on straight runs. Only a joint no other boundary piece
-    # meets is joined: the ring chaining and the face walk need every
-    # piece split where boundaries touch. Along a shared edge the joint
-    # is computed from that edge on both sides, so the join is exact;
-    # with the region on the same side before and after the joint no
-    # vertical piece ends there
+    # meets is joined: the face walk needs every piece split where
+    # boundaries touch. Along a shared edge the joint is computed from
+    # that edge on both sides, so the join is exact; with the region on
+    # the same side before and after the joint no vertical piece ends
+    # there
     ends: dict = {}                 # y at x0 -> [(piece index, region above, edges it lies on)]
     vleft: dict = {}                # border x -> intervals approaching from the left slab
     vright: dict = {}               # border x -> intervals from the right slab
@@ -329,16 +337,8 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
                 start = None
     if not pieces:
         return [] if abs(area) <= tol else None
-    rings = geo.chain_closed_rings(pieces, tol=tol)
-    if rings is None:
-        # degree-4 junctions (boundaries crossing at a point — e.g. the
-        # symmetric difference of any two properly-crossing polygons)
-        # are UNAMBIGUOUS for a region boundary: the planar face walk
-        # resolves them deterministically
-        rings = _trace_faces(pieces, tol)
-    if rings is None or not rings:
-        return None
-    return _members(rings, area)
+    rings = _trace_faces(pieces, tol)
+    return None if rings is None else _members(rings, area)
 
 
 def _members(rings: list, area: float):
@@ -394,6 +394,22 @@ def _ring_sums(c: np.ndarray, offs: np.ndarray) -> tuple[list, list]:
     length = np.hypot(d[:, 0], d[:, 1])
     cross[offs[1:-1] - 1] = length[offs[1:-1] - 1] = 0.0  # joins between rings
     return (0.5 * np.add.reduceat(cross, offs[:-1])).tolist(), np.add.reduceat(length, offs[:-1]).tolist()
+
+
+def slab_union(members: list):
+    """Union of polygons, each given as its rings for a winding-count
+    fill (shell CCW, holes CW): the region where the winding over all
+    rings is positive, in one sweep. Overlapping members and a member
+    nested in another's hole need no special case. Returns its members,
+    or None when one member's own edges cross properly (an invalid
+    polygon, as slab_boolean refuses an operand) or the sweep refuses."""
+    es = [ring_edges(np.concatenate(rings), np.cumsum([0] + [len(r) for r in rings])) for rings in members]
+    e = np.concatenate(es)
+    owner = np.repeat(np.arange(len(es)), [len(x) for x in es])
+    c = _cuts(e, e[:0], 1e-9)
+    if c is None or (owner[c[0]] == owner[c[1]]).any():
+        return None
+    return _sweep(e, e[:0], c[2], lambda w, _w: w > 0, 1e-9)
 
 
 def slab_boolean(ga, gb, op: str, tol: float = 1e-9):

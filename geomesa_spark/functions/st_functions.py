@@ -33,7 +33,7 @@ from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType, In
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as geo
-from geomesa_spark.functions.slab_overlay import crossings, ring_edges, slab_boolean, slab_region
+from geomesa_spark.functions.slab_overlay import crossings, ring_edges, slab_boolean, slab_region, slab_union
 
 # matches 2-D POINTs and the 2-D projection of POINT Z / M / ZM
 _POINT_NUM = r"POINT\s*(?:ZM|Z|M)?\s*\(\s*(-?[\d.eE+-]+)\s+(-?[\d.eE+-]+)(?:\s+-?[\d.eE+-]+){0,2}\s*\)"
@@ -479,8 +479,10 @@ def st_numGeometries(wkt: pd.Series) -> pd.Series:
 
 @F.pandas_udf(StringType())
 def st_geometryN(wkt: pd.Series, n: pd.Series) -> pd.Series:
-    """n-th member geometry (1-based) of a multi-geometry or collection;
-    the geometry itself for n=1 on simple kinds."""
+    """n-th member geometry (1-based) of a multi-geometry or collection
+    (a collection's members as written, nested collections included);
+    the geometry itself for n=1 on simple kinds. Null for n outside
+    1..members."""
     cache = _parse_cache(wkt)
     out = []
     for w, i in zip(wkt.to_numpy(object), n.to_numpy()):
@@ -488,15 +490,8 @@ def st_geometryN(wkt: pd.Series, n: pd.Series) -> pd.Series:
         if g is None or _null_idx(i) or int(i) < 1:
             out.append(None)
             continue
-        try:
-            if g[0] == "GEOMETRYCOLLECTION":
-                members = g[1]
-                out.append(geo.wkt_any(*members[int(i) - 1]) if int(i) <= len(members) else None)
-            else:
-                parts = geo.geom_parts(*g)
-                out.append(geo.wkt_any(*parts[int(i) - 1]) if int(i) <= len(parts) else None)
-        except Exception:
-            out.append(None)
+        members = g[1] if g[0] == "GEOMETRYCOLLECTION" else geo.geom_parts(*g)
+        out.append(geo.wkt_any(*members[int(i) - 1]) if int(i) <= len(members) else None)
     return pd.Series(out)
 
 
@@ -812,6 +807,13 @@ def _cycle(ring: np.ndarray, r: float, idx: int) -> np.ndarray:
     return np.vstack([pts, pts[:1]])
 
 
+def _fill_rings(coords: np.ndarray, offs) -> list:
+    """A polygon's rings oriented for a winding-count fill: shell CCW,
+    holes CW, so the winding is 1 inside the polygon and 0 in a hole."""
+    rings = [geo._ccw_ring(coords[offs[i]:offs[i + 1]]) for i in range(len(offs) - 1)]
+    return rings[:1] + [h[::-1] for h in rings[1:]]
+
+
 def _valid_ring(ring: np.ndarray) -> bool:
     """A closed ring with at least 3 distinct vertices and no zero-width
     spike (an edge doubling back along its predecessor)."""
@@ -882,16 +884,17 @@ def _buffer_geom(ga, radius: float) -> str | None:
             rings = [c2[o2[i]:o2[i + 1]] for i in range(len(o2) - 1)]
             if not all(_valid_ring(ring) for ring in rings) or len(crossings(ring_edges(c2, o2))[0]):
                 return None  # invalid polygon
-            paths = []
-            for i, ring in enumerate(rings):
-                ring = geo._ccw_ring(ring)
-                if cycles and i == 0:
-                    fills.append(_cycle(ring, r, len(fills) + len(caps)))
-                elif cycles and np.ptp(ring, axis=0).min() < 2.0 * r * np.cos(0.7 * np.pi / _SEGMENTS):
-                    continue  # a hole the buffer closes
-                else:
-                    fills.append(ring if i == 0 else ring[::-1])
-                    paths.append(ring)
+            shell, *holes = _fill_rings(c2, o2)
+            if cycles:
+                fills.append(_cycle(shell, r, len(fills) + len(caps)))
+                # a hole the buffer closes gets no ring
+                holes = [h for h in holes if np.ptp(h, axis=0).min() >= 2.0 * r * np.cos(0.7 * np.pi / _SEGMENTS)]
+                paths = []
+            else:
+                fills.append(shell)
+                paths = [shell]
+            fills.extend(holes)
+            paths += [h[::-1] for h in holes]
         elif k2 in ("POINT", "LINESTRING"):
             paths = [c2]
         else:
@@ -1098,36 +1101,30 @@ _AREAL = ("POLYGON", "MULTIPOLYGON")
 def _overlay_intersection(ga, gb) -> str | None:
     """A ∩ B WKT. Exact for every pairing involving points or linework
     (any polygon shape, holes included), for GEOMETRYCOLLECTION operands
-    (disjoint parts intersect independently and concatenate), and for
-    (MULTI)POLYGON pairs, holes included, via _areal_overlay: the slab
-    sweep answers the areal part, and operands whose interiors do not
-    meet return their shared boundary linework (or POLYGON EMPTY).
-    Unsupported pairings and slab refusals return None: SQL null,
-    honest unsupported, never an approximation."""
+    (each split once into the disjoint strata of its normal form,
+    _gc_normalized, which intersect pairwise and concatenate), and
+    for (MULTI)POLYGON pairs, holes included, via _areal_overlay: the
+    slab sweep answers the areal part, and operands whose interiors do
+    not meet return their shared boundary linework (or POLYGON EMPTY).
+    Unsupported pairings, invalid collection members and slab refusals
+    return None: SQL null, honest unsupported, never an approximation."""
     ka, ca, oa = ga
     kb, cb, ob = gb
-    if ka == "GEOMETRYCOLLECTION":
-        # per-part intersections concatenate only when the parts share
-        # no interior (overlapping members would double-count a region);
-        # overlapping members first re-union into the canonical
-        # interior-disjoint form (point-set identity), honest null only
-        # when that union is itself unsupported
-        parts = geo.geom_parts(ka, ca, oa)
-        if not _gc_parts_interior_disjoint(parts):
-            norm = _gc_normalized(ga)
-            if norm is None:
-                return None
-            return _overlay_intersection(norm, gb)
-        members = []
-        for p in parts:
-            w = _overlay_intersection(p, gb)
-            if w is None:
-                return None
-            if not w.endswith(" EMPTY"):
-                members.append(w)
-        return _gc_combine(members)
-    if kb == "GEOMETRYCOLLECTION":
+    if kb == "GEOMETRYCOLLECTION" and ka != "GEOMETRYCOLLECTION":
         return _overlay_intersection(gb, ga)
+    if ka == "GEOMETRYCOLLECTION":
+        na, nb = _gc_normalized(ga), _gc_normalized(gb)
+        if na is None or nb is None:
+            return None
+        members = []
+        for p in na:
+            for q in nb:
+                w = _overlay_intersection(p, q)
+                if w is None:
+                    return None
+                if not w.endswith(" EMPTY"):
+                    members.append(w)
+        return _gc_combine(members)
     if kb in _POINTY and ka not in _POINTY:
         return _overlay_intersection(gb, ga)
     if ka in _POINTY:
@@ -1175,27 +1172,6 @@ def _gc_combine(members: list, empty: str = "GEOMETRYCOLLECTION EMPTY") -> str:
     if len(members) == 1:
         return members[0]
     return "GEOMETRYCOLLECTION (" + ", ".join(members) + ")"
-
-
-def _gc_parts_interior_disjoint(parts: list) -> bool:
-    """True when no two collection parts share interior points — the
-    precondition for concatenating per-part overlay results (overlapping
-    members would double-count a region; the per-part decomposition must
-    return honest null instead)."""
-    for i in range(len(parts)):
-        ki, ci, oi = parts[i]
-        for j in range(i + 1, len(parts)):
-            kj, cj, oj = parts[j]
-            if ki != "POINT" and kj != "POINT":
-                # cheap bbox reject before the O(n·m) relate
-                if (
-                    ci[:, 0].max() < cj[:, 0].min() or cj[:, 0].max() < ci[:, 0].min()
-                    or ci[:, 1].max() < cj[:, 1].min() or cj[:, 1].max() < ci[:, 1].min()
-                ):
-                    continue
-            if geo.relate_geoms(ki, ci, oi, kj, cj, oj).ii:
-                return False
-    return True
 
 
 def _areal_area(coords, offs) -> float:
@@ -1255,46 +1231,32 @@ def _polys_to_wkt(parts) -> str | None:
 
 
 def _overlay_difference(ga, gb) -> str | None:
-    """A \\ B WKT. GEOMETRYCOLLECTION subjects subtract per-part;
-    a GEOMETRYCOLLECTION B subtracts its parts sequentially. Subtracting
-    a lower-dimension geometry is identity; point and line subjects are
-    exact for any B. (MULTI)POLYGON pairs, holes included, go to
-    _areal_overlay (the slab sweep). What the sweep refuses returns
-    None."""
+    """A \\ B WKT. A GEOMETRYCOLLECTION operand is normalized once
+    (_gc_normalized): each stratum of A loses B's strata one after the
+    other (set subtraction composes) and the disjoint remainders
+    concatenate. Subtracting a lower-dimension geometry is identity;
+    point and line subjects are exact for any B. (MULTI)POLYGON pairs,
+    holes included, go to _areal_overlay (the slab sweep). What the
+    sweep refuses, and an invalid collection member, return None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
-    dim = {"POINT": 0, "MULTIPOINT": 0, "LINESTRING": 1, "MULTILINESTRING": 1, "POLYGON": 2, "MULTIPOLYGON": 2}
-    if ka == "GEOMETRYCOLLECTION":
-        # per-part differences concatenate only for interior-disjoint
-        # parts; overlapping members re-union first (see the
-        # intersection branch)
-        parts = geo.geom_parts(ka, ca, oa)
-        if not _gc_parts_interior_disjoint(parts):
-            norm = _gc_normalized(ga)
-            if norm is None:
-                return None
-            return _overlay_difference(norm, gb)
+    if "GEOMETRYCOLLECTION" in (ka, kb):
+        na, nb = _gc_normalized(ga), _gc_normalized(gb)
+        if na is None or nb is None:
+            return None
         members = []
-        for p in parts:
-            w = _overlay_difference(p, gb)
-            if w is None:
-                return None
-            if not w.endswith(" EMPTY"):
+        for cur in na:
+            for q in nb:
+                w = _overlay_difference(cur, q)
+                if w is None:
+                    return None
+                if w.endswith(" EMPTY"):
+                    break
+                cur = geo.parse_wkt(w)
+            else:
                 members.append(w)
         return _gc_combine(members)
-    if kb == "GEOMETRYCOLLECTION":
-        # subtract B's parts sequentially (exact even for overlapping
-        # parts — set subtraction composes)
-        cur = ga
-        for p in geo.geom_parts(kb, cb, ob):
-            w = _overlay_difference(cur, p)
-            if w is None:
-                return None
-            if w.endswith(" EMPTY"):
-                return w
-            cur = geo.parse_wkt(w)
-        return geo.wkt_any(*cur)
-    if dim[kb] < dim[ka]:
+    if geo._DIM[kb] < geo._DIM[ka]:
         return geo.wkt_any(ka, ca, oa)  # measure-zero subtraction
     if ka in _POINTY:
         keep = [
@@ -1325,9 +1287,17 @@ def _overlay_union(ga, gb) -> str | None:
     included, go to _areal_overlay (the slab sweep). Mixed-dimension
     unions return GEOMETRYCOLLECTION(higher, lower \\ higher) — JTS
     semantics — and GEOMETRYCOLLECTION operands re-union canonically by
-    dimension (_gc_union). What the sweep refuses returns None."""
+    dimension: the normal form of all members of both (_gc_strata).
+    What the sweep refuses returns None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
+    if "GEOMETRYCOLLECTION" in (ka, kb):
+        strata = _gc_strata(geo.geom_parts(*ga) + geo.geom_parts(*gb))
+        if strata is None:
+            return None
+        members, lines, pts = strata
+        ws = [_polys_to_wkt(members)] if members else []
+        return _gc_combine(ws + [w for w in (_pieces_to_wkt([], lines, ""), _pieces_to_wkt(pts, [], "")) if w])
     if ka in _POINTY and kb in _POINTY:
         pts = list(dict.fromkeys((float(x), float(y)) for x, y in np.concatenate([ca, cb])))
         return _pieces_to_wkt(pts, [], "GEOMETRYCOLLECTION EMPTY")
@@ -1335,111 +1305,100 @@ def _overlay_union(ga, gb) -> str | None:
         # A ∪ B = A + (B \ everything accumulated so far): subtracting
         # against the RUNNING list also removes B-part-vs-B-part overlap
         # (A's own parts pass through unchanged — input structure kept)
-        lines = [c2 for c2, _o2 in _linear_parts(ka, ca, oa)]
-        for b2, _ob in _linear_parts(kb, cb, ob):
-            pieces = [b2]
-            for covered in list(lines):
-                pieces = [seg for p in pieces for seg in geo.line_difference_line(p, covered)]
-            lines.extend(pieces)
+        lines = _line_union(
+            [c2 for c2, _o2 in _linear_parts(ka, ca, oa)], [b2 for b2, _ob in _linear_parts(kb, cb, ob)]
+        )
         return _pieces_to_wkt([], lines, "GEOMETRYCOLLECTION EMPTY")
     if ka in _AREAL and kb in _AREAL:
         return _areal_overlay(ga, gb, "union")
     # mixed dimensions (JTS semantics): the lower-dim operand survives
     # only outside the higher-dim one — GEOMETRYCOLLECTION(high, low \ high)
-    dim = {"POINT": 0, "MULTIPOINT": 0, "LINESTRING": 1, "MULTILINESTRING": 1,
-           "POLYGON": 2, "MULTIPOLYGON": 2}
-    if ka in dim and kb in dim and dim[ka] != dim[kb]:
-        lo, hi = (ga, gb) if dim[ka] < dim[kb] else (gb, ga)
-        rest = _overlay_difference(lo, hi)
-        if rest is None:
-            return None
-        hi_wkt = geo.wkt_any(*hi)
-        if rest.endswith(" EMPTY"):
-            return hi_wkt
-        return f"GEOMETRYCOLLECTION ({hi_wkt}, {rest})"
-    if ka == "GEOMETRYCOLLECTION" or kb == "GEOMETRYCOLLECTION":
-        return _gc_union(ga, gb)
-    return None
-
-
-def _gc_union(ga, gb) -> str | None:
-    """Union with GEOMETRYCOLLECTION operand(s): canonical re-union of
-    ALL parts from both sides, by dimension — areal parts fold through
-    the areal union, linework folds through the linear union, then each
-    lower dimension keeps only what lies outside every higher dimension
-    (the same JTS rule as the mixed-dimension pair)."""
-    return _parts_canonical_union(geo.geom_parts(*ga) + geo.geom_parts(*gb))
-
-
-def _gc_normalized(g) -> tuple | None:
-    """Canonical interior-disjoint form of a GEOMETRYCOLLECTION: its own
-    parts re-unioned by dimension (overlapping areal members merge via
-    the areal union kernel, linework dedupes against itself and the
-    areal, points keep only what no higher dimension covers). The result
-    is point-set-equal to the input, so per-part overlay decomposition
-    becomes sound on it — this turns the former
-    GC-with-overlapping-members honest-null class into exact answers
-    wherever the union kernels are exact. None when a member union is
-    itself unsupported (a pair the slab sweep refuses)."""
-    w = _parts_canonical_union(geo.geom_parts(*g))
-    if w is None or w.endswith(" EMPTY"):
+    lo, hi = (ga, gb) if geo._DIM[ka] < geo._DIM[kb] else (gb, ga)
+    rest = _overlay_difference(lo, hi)
+    if rest is None:
         return None
-    out = geo.parse_wkt(w)
-    if out[0] == "GEOMETRYCOLLECTION" and not _gc_parts_interior_disjoint(
-        geo.geom_parts(*out)
-    ):
-        return None  # termination guard: normalization must converge
-    return out
+    hi_wkt = geo.wkt_any(*hi)
+    if rest.endswith(" EMPTY"):
+        return hi_wkt
+    return f"GEOMETRYCOLLECTION ({hi_wkt}, {rest})"
 
 
-def _parts_canonical_union(parts: list) -> str | None:
-    by_kind = {"POLYGON": [], "LINESTRING": [], "POINT": []}
-    for p in parts:
-        if p[0] not in by_kind:
-            return None
-        by_kind[p[0]].append(p)
+def _line_union(lines: list, adds: list) -> list:
+    """Polylines ``lines`` plus each of ``adds`` minus everything
+    accumulated so far (the running list, so overlapping ``adds`` also
+    dedupe against each other; ``lines`` pass through unchanged)."""
+    lines = list(lines)
+    for b2 in adds:
+        pieces = [b2]
+        for covered in list(lines):
+            pieces = [seg for p in pieces for seg in geo.line_difference_line(p, covered)]
+        lines.extend(pieces)
+    return lines
 
-    def fold_union(items):
-        cur = items[0]
-        for p in items[1:]:
-            w = _overlay_union(cur, p)
-            if w is None:
-                return None
-            cur = geo.parse_wkt(w)
-        return cur
 
+def _gc_strata(parts: list) -> tuple | None:
+    """Normal form of the point set of POLYGON / LINESTRING / POINT
+    ``parts``: (areal members, lines, points), pairwise disjoint. The
+    areal members are the union of all polygons in ONE slab sweep
+    (slab_union over their fill rings: overlapping members merge, a
+    member nested in another's hole keeps its area); the lines are the
+    linework deduped against itself, minus the areal part; the points
+    are the distinct ones that neither covers. None when a polygon is
+    invalid (its own edges cross), the sweep refuses, or the polygons
+    enclose no area."""
+    polys = [(c2, o2) for k2, c2, o2 in parts if k2 == "POLYGON"]
     members: list = []
-    areal = fold_union(by_kind["POLYGON"]) if by_kind["POLYGON"] else None
-    if by_kind["POLYGON"] and areal is None:
+    covers = []  # the higher strata, as geometries
+    if polys:
+        members = slab_union([_fill_rings(c2, o2) for c2, o2 in polys])
+        if not members:
+            return None
+        covers.append(_polys_geom(members))
+    lines = _line_union([], [c2 for k2, c2, _o in parts if k2 == "LINESTRING"])
+    if covers and lines:
+        _k, pc, po = covers[0]
+        lines = [seg for c2 in lines for seg in geo.line_clip_polygon(c2, pc, po, False)]
+    if lines:
+        covers.append(_lines_geom(lines))
+    pts = [
+        (x, y)
+        for x, y in dict.fromkeys((float(c2[0, 0]), float(c2[0, 1])) for k2, c2, _o in parts if k2 == "POINT")
+        if not any(geo._covered_by_geom(x, y, *g) for g in covers)
+    ]
+    return members, lines, pts
+
+
+def _polys_geom(members: list) -> tuple:
+    """Slab-sweep members [(coords, ring_offsets), ...] as one
+    (MULTI)POLYGON geometry."""
+    if len(members) == 1:
+        return ("POLYGON", *members[0])
+    lens = np.concatenate([np.diff(mo) for _mc, mo in members])
+    return "MULTIPOLYGON", np.concatenate([mc for mc, _mo in members]), np.concatenate([[0], np.cumsum(lens)])
+
+
+def _lines_geom(lines: list) -> tuple:
+    return "MULTILINESTRING", np.concatenate(lines), np.cumsum([0] + [len(c2) for c2 in lines])
+
+
+def _gc_normalized(g) -> list | None:
+    """The strata of a GEOMETRYCOLLECTION's normal form (_gc_strata):
+    one geometry per non-empty stratum — (MULTI)POLYGON,
+    (MULTI)LINESTRING, MULTIPOINT. They are disjoint point sets, so an
+    overlay decomposes over them exactly. Any other geometry is its own
+    one stratum. None where _gc_strata refuses."""
+    if g[0] != "GEOMETRYCOLLECTION":
+        return [g]
+    strata = _gc_strata(geo.geom_parts(*g))
+    if strata is None:
         return None
-    liney = fold_union(by_kind["LINESTRING"]) if by_kind["LINESTRING"] else None
-    if by_kind["LINESTRING"] and liney is None:
-        return None
-    if areal is not None:
-        members.append(geo.wkt_any(*areal))
-        if liney is not None:
-            w = _overlay_difference(liney, areal)
-            if w is None:
-                return None
-            liney = None if w.endswith(" EMPTY") else geo.parse_wkt(w)
-    if liney is not None:
-        members.append(geo.wkt_any(*liney))
-    if by_kind["POINT"]:
-        pts = [
-            (float(c2[0, 0]), float(c2[0, 1])) for _k, c2, _o in by_kind["POINT"]
-        ]
-        keep = []
-        for x, y in dict.fromkeys(pts):
-            covered = False
-            for higher in (areal, liney):
-                if higher is not None and geo._covered_by_geom(x, y, *higher):
-                    covered = True
-                    break
-            if not covered:
-                keep.append((x, y))
-        if keep:
-            members.append(_pieces_to_wkt(keep, [], "GEOMETRYCOLLECTION EMPTY"))
-    return _gc_combine(members)
+    members, lines, pts = strata
+    out = [_polys_geom(members)] if members else []
+    if lines:
+        out.append(_lines_geom(lines))
+    if pts:
+        out.append(("MULTIPOINT", np.asarray(pts, dtype=np.float64), np.arange(len(pts) + 1)))
+    return out
 
 
 def _overlay_symdifference(ga, gb) -> str | None:

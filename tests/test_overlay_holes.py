@@ -325,27 +325,30 @@ def test_de9im_gc_open_linestring_boundary():
     assert geo.de9im(geo.relate_geoms(*A2, *B)) == "1FFFFF212"
 
 
-def test_chain_closed_rings_contract():
-    """The rechainer refuses ambiguity: an open chain and a degree-4
-    junction both return None; a clean split rectangle re-chains."""
+def test_trace_faces_contract():
+    """The sweep's one ring assembly, the planar face walk over directed
+    boundary pieces, refuses what is not a region boundary and joins
+    what is: an open chain and an unbalanced node return None; a
+    rectangle split into pieces closes into one ring; a degree-4
+    crossing (two squares meeting at a corner) gives two rings."""
     seg = lambda *pts: np.asarray(pts, dtype=np.float64)
-    ok = geo.chain_closed_rings(
-        [seg((0, 0), (1, 0)), seg((1, 0), (1, 1), (0, 1)), seg((0, 1), (0, 0))]
-    )
-    assert ok is not None and len(ok) == 1 and len(ok[0]) == 5
-    assert geo.chain_closed_rings([seg((0, 0), (1, 0)), seg((1, 0), (1, 1))]) is None
-    # degree-4 junction at (1, 0)
-    assert (
-        geo.chain_closed_rings(
-            [
-                seg((0, 0), (1, 0)),
-                seg((1, 0), (0, 0)),
-                seg((2, 0), (1, 0)),
-                seg((1, 0), (2, 0)),
-            ]
-        )
-        is None
-    )
+    walk = lambda pieces: slab_overlay._trace_faces(pieces, 1e-9)
+
+    def square(x, y):
+        return [
+            seg((x, y), (x + 1, y)), seg((x + 1, y), (x + 1, y + 1)),
+            seg((x + 1, y + 1), (x, y + 1)), seg((x, y + 1), (x, y)),
+        ]
+
+    assert walk([seg((0, 0), (2, 0)), seg((2, 0), (2, 1)), seg((2, 1), (0, 1))]) is None
+    # every junction has degree 2, but (0 0) has two outgoing pieces
+    assert walk([seg((0, 0), (2, 0)), seg((2, 0), (2, 1)), seg((2, 1), (0, 1)), seg((0, 0), (0, 1))]) is None
+    rings = walk([seg((0, 1), (0, 0)), seg((2, 0), (2, 1)), seg((0, 0), (2, 0)), seg((2, 1), (0, 1))])
+    assert rings is not None and len(rings) == 1 and len(rings[0]) == 5
+    assert (rings[0][0] == rings[0][-1]).all() and geo.ring_signed_area(rings[0]) == 2.0
+    rings = walk(square(0, 0) + square(1, 1))
+    assert rings is not None and len(rings) == 2 and all(len(r) == 5 for r in rings)
+    assert [geo.ring_signed_area(r) for r in rings] == [1.0, 1.0]
 
 
 def test_collection_and_mixed_dim_overlays():
@@ -838,10 +841,15 @@ def _raise_relate(*_args):
 
 def test_areal_overlay_is_relate_free(monkeypatch):
     """The (MULTI)POLYGON pairs of test_shared_edge_goldens and
-    test_areal_overlay_empty_interior_meet give the same answer for all
-    four ops when relate_geoms raises: the areal path is the slab sweep
-    (plus the line × line overlay for an intersection with no area),
-    with no DE-9IM step."""
+    test_areal_overlay_empty_interior_meet, and a GEOMETRYCOLLECTION with
+    overlapping members and a mixed-dimension one (the gc_overlap and
+    gc_mixed classes of jobs/overlay_null_rate.gen_pair), give the same
+    answer for all four ops when relate_geoms raises: the areal path is
+    the slab sweep (plus the line × line overlay for an intersection
+    with no area) and a collection is normalized by one sweep, with no
+    DE-9IM step."""
+    from jobs.overlay_null_rate import gen_pair
+
     g = geo.parse_wkt
     C = g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
     u = g("POLYGON ((0 0, 6 0, 6 6, 4 6, 4 2, 2 2, 2 6, 0 6, 0 0))")
@@ -859,6 +867,9 @@ def test_areal_overlay_is_relate_free(monkeypatch):
         (u, g("POLYGON ((2.5 3, 3.5 3, 3.5 7, 2.5 7, 2.5 3))")),
         (u, g("POLYGON ((2.5 2, 3.5 2, 3.5 7, 2.5 7, 2.5 2))")),
     ]
+    for cls in ("gc_overlap", "gc_mixed"):
+        a, b = gen_pair(np.random.default_rng(1), cls)
+        pairs += [(g(a), g(b)), (g(b), g(a))]
     ops = (stf._overlay_intersection, stf._overlay_union, stf._overlay_difference, stf._overlay_symdifference)
     want = [[fn(a, b) for fn in ops] for a, b in pairs]
     assert all(w is not None for row in want for w in row)
@@ -866,17 +877,60 @@ def test_areal_overlay_is_relate_free(monkeypatch):
     assert [[fn(a, b) for fn in ops] for a, b in pairs] == want
 
 
-def test_gc_overlap_check_does_not_swallow_kernel_errors(monkeypatch):
-    """A kernel error in the GEOMETRYCOLLECTION member-overlap check
-    propagates: it is neither a "members overlap" decision nor a null."""
-    gc = geo.parse_wkt(
-        "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)), POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1)))"
+_OPS = {
+    "intersection": stf._overlay_intersection,
+    "union": stf._overlay_union,
+    "difference": stf._overlay_difference,
+    "symdifference": stf._overlay_symdifference,
+}
+
+
+def test_gc_invalid_member_is_null():
+    """A GEOMETRYCOLLECTION with a self-crossing (bow-tie) polygon member
+    is an invalid operand: all four ops are null on either side, also
+    against a line, where no sweep would meet the member otherwise."""
+    g = geo.parse_wkt
+    gc = g("GEOMETRYCOLLECTION (POLYGON ((0 0, 2 2, 2 0, 0 2, 0 0)), POINT (5 5))")
+    for b in (g("POLYGON ((1 -1, 3 -1, 3 3, 1 3, 1 -1))"), g("LINESTRING (1 -1, 1 3)")):
+        for op, fn in _OPS.items():
+            assert fn(gc, b) is None and fn(b, gc) is None, (op, b[0])
+
+
+def test_gc_members_sharing_an_edge_normalize_to_one_polygon():
+    """Two collection members that share an edge are one polygon: the
+    normal form is a single POLYGON ring (the shared edge and its
+    endpoints gone), and an overlay meets it as one polygon."""
+    g = geo.parse_wkt
+    gc = g("GEOMETRYCOLLECTION (POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)), POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0)))")
+    (k, c, o), = stf._gc_normalized(gc)
+    assert k == "POLYGON" and o.tolist() == [0, 5] and stf._areal_area(c, o) == 2.0
+    b = g("POLYGON ((0.5 -1, 1.5 -1, 1.5 2, 0.5 2, 0.5 -1))")
+    assert stf._overlay_intersection(gc, b) == "POLYGON ((0.5 0, 1.5 0, 1.5 1, 0.5 1, 0.5 0))"
+    u = stf._overlay_union(gc, b)
+    assert u.startswith("POLYGON ") and _result_area(u) == 4.0
+    rng = np.random.default_rng(53)
+    for op, fn in _OPS.items():
+        _assert_probe_identity(gc, b, fn(gc, b), op, rng, (-1, -2, 3, 3))
+
+
+def test_gc_member_in_another_members_hole_keeps_its_area():
+    """A member nested in another member's hole is part of the
+    collection: the normal form keeps it as an island (area 100 − 36 +
+    4), and each op against a polygon cutting through shell, hole and
+    island passes the probe identity."""
+    g = geo.parse_wkt
+    gc = g(
+        "GEOMETRYCOLLECTION (POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 8 2, 8 8, 2 8, 2 2)),"
+        " POLYGON ((4 4, 6 4, 6 6, 4 6, 4 4)))"
     )
-    b = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 1, 0 1, 0 0))")
-    assert stf._overlay_intersection(gc, b) is not None
-    monkeypatch.setattr(geo, "relate_geoms", _raise_relate)
-    with pytest.raises(RuntimeError, match="relate_geoms called"):
-        stf._overlay_intersection(gc, b)
+    (k, c, o), = stf._gc_normalized(gc)
+    assert k == "MULTIPOLYGON" and stf._areal_area(c, o) == 68.0
+    b = g("POLYGON ((5 -1, 11 -1, 11 11, 5 11, 5 -1))")
+    assert _result_area(stf._overlay_intersection(gc, b)) == 50.0 - 18.0 + 2.0
+    rng = np.random.default_rng(59)
+    for op, fn in _OPS.items():
+        _assert_probe_identity(gc, b, fn(gc, b), op, rng, (-1, -2, 12, 12))
+        _assert_probe_identity(b, gc, fn(b, gc), op, rng, (-1, -2, 12, 12))
 
 
 def test_covers_slit_square():

@@ -1063,3 +1063,26 @@ def test_overlay_udfs_propagate_kernel_errors(monkeypatch):
     for udf in (ST.st_intersection, ST.st_union, ST.st_difference, ST.st_symDifference):
         with pytest.raises(RuntimeError, match="kernel bug"):
             udf.func(a, b)
+
+
+def test_geometryN_member_or_null():
+    """st_geometryN answers every index with a member or a null — n = 0,
+    n past the member count, a nested collection member and each multi
+    kind — with no catch-all between the kernel and the row."""
+    members = {
+        "MULTIPOINT ((1 2), (3 4))": ["POINT (1 2)", "POINT (3 4)"],
+        "MULTILINESTRING ((0 0, 1 1), (2 2, 3 3))": ["LINESTRING (0 0, 1 1)", "LINESTRING (2 2, 3 3)"],
+        "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 6 5, 6 6, 5 6, 5 5)))": [
+            "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
+            "POLYGON ((5 5, 6 5, 6 6, 5 6, 5 5))",
+        ],
+        "GEOMETRYCOLLECTION (POINT (1 2), GEOMETRYCOLLECTION (LINESTRING (0 0, 5 5), POINT (3 3)))": [
+            "POINT (1 2)",
+            "GEOMETRYCOLLECTION (LINESTRING (0 0, 5 5), POINT (3 3))",
+        ],
+        "POINT (1 2)": ["POINT (1 2)"],
+    }
+    rows = [(w, n) for w in members for n in (0, 1, 2, 3)]
+    got = ST.st_geometryN.func(pd.Series([w for w, _n in rows]), pd.Series([n for _w, n in rows]))
+    want = [members[w][n - 1] if 1 <= n <= len(members[w]) else None for w, n in rows]
+    assert list(got) == want
