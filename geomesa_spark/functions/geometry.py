@@ -172,13 +172,8 @@ def polygon_bbox(coords: np.ndarray) -> tuple[float, float, float, float]:
 
 
 def polygon_area_deg2(coords: np.ndarray, ring_offsets: np.ndarray) -> float:
-    """Signed shoelace area in degree^2 (exterior CCW positive, holes negative)."""
-    total = 0.0
-    for r in range(len(ring_offsets) - 1):
-        s, e = ring_offsets[r], ring_offsets[r + 1]
-        x, y = coords[s:e, 0], coords[s:e, 1]
-        total += 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
-    return total
+    """Area in degree² of one POLYGON: polygon_area_centroid's area."""
+    return polygon_area_centroid(coords, ring_offsets)[0]
 
 
 def line_centroid(coords: np.ndarray, ring_offsets: np.ndarray) -> tuple[float, float]:
@@ -198,8 +193,12 @@ def line_centroid(coords: np.ndarray, ring_offsets: np.ndarray) -> tuple[float, 
     return wx / wtot, wy / wtot
 
 
-def polygon_centroid(coords: np.ndarray, ring_offsets: np.ndarray) -> tuple[float, float]:
-    """Area-weighted centroid (shoelace), holes subtract via signed area."""
+def polygon_area_centroid(coords: np.ndarray, ring_offsets: np.ndarray) -> tuple[float, float, float]:
+    """(area, centroid x, centroid y) of one POLYGON, ring 0 its shell and
+    the rest its holes, from shoelace sums over its rings oriented by
+    role (shell CCW, holes CW, as a winding fill orients them): the area
+    is |shell| − Σ|holes| however the WKT wound the rings. A polygon
+    with no area has its vertex mean as centroid."""
     a_total, cx, cy = 0.0, 0.0, 0.0
     for r in range(len(ring_offsets) - 1):
         s, e = ring_offsets[r], ring_offsets[r + 1]
@@ -208,12 +207,13 @@ def polygon_centroid(coords: np.ndarray, ring_offsets: np.ndarray) -> tuple[floa
         a = 0.5 * float(np.sum(cross))
         if a == 0.0:
             continue
-        cx += float(np.sum((x[:-1] + x[1:]) * cross)) / 6.0
-        cy += float(np.sum((y[:-1] + y[1:]) * cross)) / 6.0
-        a_total += a
+        role = 1.0 if (a > 0) == (r == 0) else -1.0  # reverses a ring wound against its role
+        cx += role * float(np.sum((x[:-1] + x[1:]) * cross)) / 6.0
+        cy += role * float(np.sum((y[:-1] + y[1:]) * cross)) / 6.0
+        a_total += role * a
     if a_total == 0.0:
-        return float(coords[:, 0].mean()), float(coords[:, 1].mean())
-    return cx / a_total, cy / a_total
+        return 0.0, float(coords[:, 0].mean()), float(coords[:, 1].mean())
+    return a_total, cx / a_total, cy / a_total
 
 
 # ---------------------------------------------------------------------------
@@ -324,17 +324,29 @@ def buffer_points(lon, lat, radius_m, segments: int = 32) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def wkt_coords(coords, point: str = "%.10g %.10g") -> str:
+    """The WKT text of an (n, 2) coordinate array, "x y, x y, ...": each
+    ordinate as %.10g, the one coordinate format of every WKT writer
+    here (wkt_polygon_exact's repr is the full-precision second one).
+    ``point`` is the per-vertex template ("(%.10g %.10g)" for MULTIPOINT
+    members). Adding 0.0 first writes a negative zero as 0."""
+    v = (np.asarray(coords, dtype=np.float64).reshape(-1) + 0.0).tolist()
+    return ", ".join([point] * (len(v) // 2)) % tuple(v)
+
+
 def wkt_point(lon: float, lat: float) -> str:
-    return f"POINT ({lon:.10g} {lat:.10g})"
+    return f"POINT ({wkt_coords((lon, lat))})"
+
+
+def _wkt_rings(coords: np.ndarray, ring_offsets) -> str:
+    """"(ring), (ring), ..." of the runs coords[offs[r]:offs[r + 1]]."""
+    return ", ".join(
+        f"({wkt_coords(coords[ring_offsets[r]:ring_offsets[r + 1]])})" for r in range(len(ring_offsets) - 1)
+    )
 
 
 def wkt_polygon(coords: np.ndarray, ring_offsets: np.ndarray) -> str:
-    rings = []
-    for r in range(len(ring_offsets) - 1):
-        s, e = ring_offsets[r], ring_offsets[r + 1]
-        pts = ", ".join(f"{x:.10g} {y:.10g}" for x, y in coords[s:e])
-        rings.append(f"({pts})")
-    return f"POLYGON ({', '.join(rings)})"
+    return f"POLYGON ({_wkt_rings(coords, ring_offsets)})"
 
 
 def _split_top_level(inner: str) -> list[str]:
@@ -525,10 +537,7 @@ def segment_contact_matrices(a_edges, b_edges) -> tuple[np.ndarray, np.ndarray, 
     """
     ax1, ay1, ax2, ay2 = (np.asarray(v, dtype=np.float64)[:, None] for v in a_edges)
     bx1, by1, bx2, by2 = (np.asarray(v, dtype=np.float64)[None, :] for v in b_edges)
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)  # a1 vs b
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)  # a2 vs b
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)  # b1 vs a
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)  # b2 vs a
+    d1, d2, d3, d4 = _sides(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
     proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
 
     def on_seg(px, py, sx1, sy1, sx2, sy2):
@@ -557,11 +566,26 @@ def segment_contact_matrices(a_edges, b_edges) -> tuple[np.ndarray, np.ndarray, 
     return proper, touch, overlap
 
 
-def segment_sets_relate(a_edges, b_edges) -> tuple[bool, bool, bool]:
-    """(any_proper_cross, any_touch, any_collinear_overlap) between two
-    edge sets — the scalar reduction of segment_contact_matrices."""
-    proper, touch, overlap = segment_contact_matrices(a_edges, b_edges)
-    return bool(proper.any()), bool(touch.any()), bool(overlap.any())
+def _sides(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """The four orientation determinants of segment pairs a, b
+    (broadcasting): the sides of a's endpoints to b's line (d1, d2),
+    then of b's endpoints to a's line (d3, d4)."""
+    return (
+        (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1),
+        (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1),
+        (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1),
+        (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1),
+    )
+
+
+def _crossing_points(a_edges, b_edges, proper) -> np.ndarray:
+    """The crossing point of every pair segment_contact_matrices marks
+    ``proper``, in row-major pair order: a's edge at t = d1/(d1 − d2)."""
+    i, j = np.nonzero(proper)
+    ax1, ay1, ax2, ay2 = (np.asarray(v, dtype=np.float64)[i] for v in a_edges)
+    d1, d2, _d3, _d4 = _sides(ax1, ay1, ax2, ay2, *(np.asarray(v, dtype=np.float64)[j] for v in b_edges))
+    t = d1 / (d1 - d2)
+    return np.column_stack([ax1 + t * (ax2 - ax1), ay1 + t * (ay2 - ay1)])
 
 
 def _edge_midpoints(coords, ring_offsets):
@@ -953,7 +977,7 @@ def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
     # both are 1/2-dimensional: edge machinery
     ea = polygon_edges(ca, oa)
     eb = polygon_edges(cb, ob)
-    proper, touch, col_overlap = segment_sets_relate(ea, eb)
+    proper, touch, col_overlap = (bool(m.any()) for m in segment_contact_matrices(ea, eb))
     r.proper_cross = proper
     r.bb_dim1 = col_overlap
 
@@ -1212,8 +1236,7 @@ _WKB_NAME = {v: k for k, v in _WKB_KIND.items()}
 
 
 def wkt_linestring(coords: np.ndarray) -> str:
-    pts = ", ".join(f"{x:.10g} {y:.10g}" for x, y in coords)
-    return f"LINESTRING ({pts})"
+    return f"LINESTRING ({wkt_coords(coords)})"
 
 
 def wkt_any(kind: str, coords, ring_offsets) -> str:
@@ -1224,25 +1247,18 @@ def wkt_any(kind: str, coords, ring_offsets) -> str:
     if kind == "POLYGON":
         return wkt_polygon(coords, ring_offsets)
     if kind == "MULTIPOINT":
-        pts = ", ".join(f"({x:.10g} {y:.10g})" for x, y in coords)
-        return f"MULTIPOINT ({pts})"
+        return f"MULTIPOINT ({wkt_coords(coords, '(%.10g %.10g)')})"
     if kind == "MULTILINESTRING":
-        parts = []
-        for r in range(len(ring_offsets) - 1):
-            run = coords[ring_offsets[r]:ring_offsets[r + 1]]
-            parts.append("(" + ", ".join(f"{x:.10g} {y:.10g}" for x, y in run) + ")")
-        return f"MULTILINESTRING ({', '.join(parts)})"
+        return f"MULTILINESTRING ({_wkt_rings(coords, ring_offsets)})"
     if kind == "GEOMETRYCOLLECTION":
         return f"GEOMETRYCOLLECTION ({', '.join(wkt_any(*m) for m in coords)})"
     # MULTIPOLYGON: reconstruct shell/hole grouping by containment depth
-    def ring_txt(r):
-        ring = coords[ring_offsets[r]:ring_offsets[r + 1]]
-        return "(" + ", ".join(f"{x:.10g} {y:.10g}" for x, y in ring) + ")"
+    return wkt_multipolygon([p[1:] for p in geom_parts(kind, coords, ring_offsets)])
 
-    members = []
-    for shell, holes in multipolygon_parts(coords, ring_offsets):
-        members.append("(" + ", ".join(ring_txt(r) for r in [shell] + holes) + ")")
-    return f"MULTIPOLYGON ({', '.join(members)})"
+
+def wkt_multipolygon(members) -> str:
+    """MULTIPOLYGON WKT of [(coords, ring_offsets), ...] polygons."""
+    return "MULTIPOLYGON (" + ", ".join(f"({_wkt_rings(c, o)})" for c, o in members) + ")"
 
 
 def wkb_write(kind: str, coords: np.ndarray, ring_offsets: np.ndarray) -> bytes:
@@ -1403,26 +1419,6 @@ def _covered_by_geom(px, py, kind, coords, ring_offsets) -> bool:
     return bool(points_on_segments([px], [py], *polygon_edges(coords, ring_offsets))[0])
 
 
-def _crossing_witness(ea, eb):
-    """The intersection point of the first properly-crossing segment pair
-    (None if no transversal crossing exists)."""
-    ax1, ay1, ax2, ay2 = (np.asarray(v, dtype=np.float64)[:, None] for v in ea)
-    bx1, by1, bx2, by2 = (np.asarray(v, dtype=np.float64)[None, :] for v in eb)
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    if not proper.any():
-        return None
-    i, j = np.argwhere(proper)[0]
-    t = d1[i, j] / (d1[i, j] - d2[i, j])
-    return (
-        float(ax1[i, 0] + t * (ax2[i, 0] - ax1[i, 0])),
-        float(ay1[i, 0] + t * (ay2[i, 0] - ay1[i, 0])),
-    )
-
-
 def _is_pointlike(kind: str) -> bool:
     return kind in ("POINT", "MULTIPOINT")
 
@@ -1461,9 +1457,10 @@ def min_distance_and_closest(ka, ca, oa, kb, cb, ob):
                 return 0.0, (float(x), float(y))
         # no vertex of either lies in the other: a transversal crossing
         # must exist — solve the segment-segment intersection
-        w = _crossing_witness(polygon_edges(ca, oa), polygon_edges(cb, ob))
-        if w is not None:
-            return 0.0, w
+        ea, eb = polygon_edges(ca, oa), polygon_edges(cb, ob)
+        w = _crossing_points(ea, eb, segment_contact_matrices(ea, eb)[0])
+        if len(w):
+            return 0.0, (float(w[0, 0]), float(w[0, 1]))
         return 0.0, (float(ca[0, 0]), float(ca[0, 1]))
     best_d2 = np.inf
     best_pt = (float(ca[0, 0]), float(ca[0, 1]))
@@ -1708,8 +1705,7 @@ def boundary_wkt(kind: str, coords, ring_offsets) -> str:
         pts = line_boundary_points(np.asarray(coords, dtype=np.float64), np.asarray(ring_offsets))
         if len(pts) == 0:
             return "MULTIPOINT EMPTY"
-        inner = ", ".join(f"({x:.10g} {y:.10g})" for x, y in pts)
-        return f"MULTIPOINT ({inner})"
+        return wkt_any("MULTIPOINT", pts, None)
     if kind in ("POLYGON", "MULTIPOLYGON"):
         rings = [
             coords[ring_offsets[r]:ring_offsets[r + 1]] for r in range(len(ring_offsets) - 1)
@@ -1795,42 +1791,24 @@ def line_line_overlay(a_coords: np.ndarray, b_coords: np.ndarray):
     a = np.asarray(a_coords, dtype=np.float64)
     b = np.asarray(b_coords, dtype=np.float64)
     ea, eb = line_edges(a), line_edges(b)
-    ax1, ay1, ax2, ay2 = (v[:, None] for v in ea)
-    bx1, by1, bx2, by2 = (v[None, :] for v in eb)
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    points: list[tuple[float, float]] = []
-    segs: list[np.ndarray] = []
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    for i, j in np.argwhere(proper):
-        t = d1[i, j] / (d1[i, j] - d2[i, j])
-        points.append((float(ax1[i, 0] + t * (ax2[i, 0] - ax1[i, 0])), float(ay1[i, 0] + t * (ay2[i, 0] - ay1[i, 0]))))
+    proper, _touch, overlap = segment_contact_matrices(ea, eb)
+    points = [(float(x), float(y)) for x, y in _crossing_points(ea, eb, proper)]
     # vertex-on-other touches (includes endpoints meeting mid-segment)
     for va, eo in ((a, eb), (b, ea)):
         on = points_on_segments(va[:, 0], va[:, 1], *eo)
         points.extend((float(x), float(y)) for x, y in va[on])
-    # collinear overlaps
-    collinear = (d1 == 0) & (d2 == 0) & (d3 == 0) & (d4 == 0)
-    for i, j in np.argwhere(collinear):
-        pa = np.asarray([[ax1[i, 0], ay1[i, 0]], [ax2[i, 0], ay2[i, 0]]])
-        pb = np.asarray([[bx1[0, j], by1[0, j]], [bx2[0, j], by2[0, j]]])
-        dx, dy = pa[1] - pa[0]
-        usex = abs(dx) >= abs(dy)
-        key = 0 if usex else 1
+    # collinear overlaps, recovered by parameterizing a's segment along
+    # its dominant axis
+    segs: list[np.ndarray] = []
+    for i, j in np.argwhere(overlap):
+        pa = np.asarray([[ea[0][i], ea[1][i]], [ea[2][i], ea[3][i]]])
+        pb = np.asarray([[eb[0][j], eb[1][j]], [eb[2][j], eb[3][j]]])
+        d = pa[1] - pa[0]
+        key = 0 if abs(d[0]) >= abs(d[1]) else 1
         lo = max(pa[:, key].min(), pb[:, key].min())
         hi = min(pa[:, key].max(), pb[:, key].max())
-        if hi > lo:
-            # recover both coordinates by parameterizing a's segment
-            if usex:
-                t0 = (lo - pa[0, 0]) / dx if dx != 0 else 0.0
-                t1 = (hi - pa[0, 0]) / dx if dx != 0 else 0.0
-            else:
-                t0 = (lo - pa[0, 1]) / dy if dy != 0 else 0.0
-                t1 = (hi - pa[0, 1]) / dy if dy != 0 else 0.0
-            s0, s1 = sorted((t0, t1))
-            segs.append(np.asarray([pa[0] + s0 * np.asarray([dx, dy]), pa[0] + s1 * np.asarray([dx, dy])]))
+        t0, t1 = sorted(((lo - pa[0, key]) / d[key], (hi - pa[0, key]) / d[key]))
+        segs.append(np.asarray([pa[0] + t0 * d, pa[0] + t1 * d]))
     if segs:
         # points on an overlap piece (endpoints included) are subsumed by it
         ex1, ey1 = np.asarray([s[0, 0] for s in segs]), np.asarray([s[0, 1] for s in segs])

@@ -66,6 +66,7 @@ _OPS = {
 }
 
 _BLOCK = 256  # edge rows per crossing-test block (bounds the pair arrays' memory)
+_TOL = 1e-9  # the face walk's endpoint snap grid; the least vertical piece and empty-result area
 
 
 def ring_edges(coords: np.ndarray, offs) -> np.ndarray:
@@ -107,7 +108,7 @@ def crossings(e: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return tuple(np.concatenate(c) for c in zip(*out))
 
 
-def _trace_faces(pieces: list, tol: float):
+def _trace_faces(pieces: list):
     """Closed rings from DIRECTED boundary segments (region on the
     LEFT of each, known at emission from the indicator flips) with
     even-degree junctions — degree 4 where the operand boundaries
@@ -119,7 +120,7 @@ def _trace_faces(pieces: list, tol: float):
     left). Containment parity downstream re-derives shells vs holes.
     Returns None on unbalanced nodes or exact angular ties (ambiguous
     input — honesty over guessing)."""
-    snap = geo.endpoint_snapper(tol)
+    snap = geo.endpoint_snapper(_TOL)
     edges: list = []  # directed (tail_key, head_key)
     for seg in pieces:
         a, b = snap(seg[0]), snap(seg[-1])
@@ -182,25 +183,25 @@ def _trace_faces(pieces: list, tol: float):
     return rings or None
 
 
-def slab_region(ea: np.ndarray, eb: np.ndarray, ind, tol: float = 1e-9):
+def slab_region(ea: np.ndarray, eb: np.ndarray, ind):
     """The region where ``ind(wa, wb)`` holds, wa and wb being the
     winding numbers of the directed edge sets ``ea`` and ``eb`` (n×4
     arrays of x1, y1, x2, y2 from closed rings), by trapezoidal sweep.
     Returns a list of (coords, ring_offsets) members (possibly empty),
     or None when ring assembly or the area identity fails."""
-    c = _cuts(ea, eb, tol)
-    return None if c is None else _sweep(ea, eb, c[2], ind, tol)
+    c = _cuts(ea, eb)
+    return None if c is None else _sweep(ea, eb, c[2], ind)
 
 
-def _cuts(ea: np.ndarray, eb: np.ndarray, tol: float):
+def _cuts(ea: np.ndarray, eb: np.ndarray):
     """crossings() of the edges of both sets, or None when a coordinate
     is not finite or lies beyond the range of the endpoint snap grid
-    (x / tol overflows)."""
+    (x / _TOL overflows)."""
     e = np.concatenate([ea, eb])
-    return crossings(e) if np.abs(e).max(initial=0.0) < np.finfo(np.float64).max * tol else None
+    return crossings(e) if np.abs(e).max(initial=0.0) < np.finfo(np.float64).max * _TOL else None
 
 
-def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
+def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind):
     """slab_region with the x of every crossing between its edges
     (``cuts``) given."""
     e = np.concatenate([ea, eb])
@@ -266,9 +267,9 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
             if below and prev is not None:
                 p0, p1 = prev
                 area += (x1 - x0) * ((y0 - p0) + (y1 - p1)) / 2.0
-                if y0 - p0 > tol:
+                if y0 - p0 > _TOL:
                     vright.setdefault(x0, []).append((p0, y0))
-                if y1 - p1 > tol:
+                if y1 - p1 > _TOL:
                     vleft.setdefault(x1, []).append((p1, y1))
             prev = (y0, y1) if above else None
         starts: dict = {}
@@ -328,7 +329,7 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
                     start = last[0]
                     pieces.pop()
             elif was and not now and start is not None:
-                if y - start > tol:
+                if y - start > _TOL:
                     # region-left direction: region on the LEFT slab
                     # side (x-) → upward; on the right → downward
                     p = [(x, start), (x, y)] if start_left else [(x, y), (x, start)]
@@ -336,8 +337,8 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind, tol: float):
                     last = (start, y, start_left)
                 start = None
     if not pieces:
-        return [] if abs(area) <= tol else None
-    rings = _trace_faces(pieces, tol)
+        return [] if abs(area) <= _TOL else None
+    rings = _trace_faces(pieces)
     return None if rings is None else _members(rings, area)
 
 
@@ -350,7 +351,8 @@ def _members(rings: list, area: float):
     ring's boundary can flip its containment depth under that rounding
     (observed: a 0.02-area island inside a hole re-reading as a hole of
     the outer shell, silently subtracting twice). So the rings are
-    rounded to the writer's values first and grouped by containment
+    rounded to the writer's values first (read back from the writer's
+    own text, geo.wkt_coords) and grouped by containment
     depth from those: the WKT (the same text whether written from the
     rounded or the unrounded coordinates) parses back to exactly these
     rings, so a consumer re-derives exactly this grouping. Two area
@@ -365,8 +367,7 @@ def _members(rings: list, area: float):
     either identity fails (never a wrong polygon)."""
     coords = np.concatenate(rings)
     offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
-    v = coords.ravel().tolist()
-    written = np.asarray((("%.10g " * len(v)) % tuple(v)).split(), dtype=np.float64).reshape(coords.shape)
+    written = np.asarray(geo.wkt_coords(coords).replace(",", "").split(), dtype=np.float64).reshape(coords.shape)
     signed, _ = _ring_sums(coords, offs)
     signed_w, length_w = _ring_sums(written, offs)
     out: list = []
@@ -406,13 +407,13 @@ def slab_union(members: list):
     es = [ring_edges(np.concatenate(rings), np.cumsum([0] + [len(r) for r in rings])) for rings in members]
     e = np.concatenate(es)
     owner = np.repeat(np.arange(len(es)), [len(x) for x in es])
-    c = _cuts(e, e[:0], 1e-9)
+    c = _cuts(e, e[:0])
     if c is None or (owner[c[0]] == owner[c[1]]).any():
         return None
-    return _sweep(e, e[:0], c[2], lambda w, _w: w > 0, 1e-9)
+    return _sweep(e, e[:0], c[2], lambda w, _w: w > 0)
 
 
-def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
+def slab_boolean(ga, gb, op: str):
     """Boolean ``op`` of two areal geometries: the even-odd region of
     slab_region. Returns its members, or None when an operand's own
     edges cross properly (a self-crossing ring is an invalid polygon)
@@ -421,7 +422,7 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
     eb = ring_edges(gb[1], gb[2])
     if not len(ea) or not len(eb):
         return None
-    c = _cuts(ea, eb, tol)
+    c = _cuts(ea, eb)
     if c is None or ((c[0] < len(ea)) == (c[1] < len(ea))).any():
         return None
-    return _sweep(ea, eb, c[2], _OPS[op], tol)
+    return _sweep(ea, eb, c[2], _OPS[op])

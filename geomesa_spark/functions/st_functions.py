@@ -261,17 +261,9 @@ def st_numPoints(wkt: pd.Series) -> pd.Series:
 @F.pandas_udf(DoubleType())
 def st_area(wkt: pd.Series) -> pd.Series:
     def area(kind, coords, offs):
-        if kind == "POLYGON":
-            return abs(geo.polygon_area_deg2(coords, offs))
-        if kind == "MULTIPOLYGON":
-            return sum(abs(geo.polygon_area_deg2(c2, o2)) for _k2, c2, o2 in geo.geom_parts(kind, coords, offs))
-        if kind == "GEOMETRYCOLLECTION":
-            return sum(
-                abs(geo.polygon_area_deg2(c2, o2))
-                for k2, c2, o2 in geo.geom_parts(kind, coords, offs)
-                if k2 == "POLYGON"
-            )
-        return 0.0
+        return float(
+            sum(geo.polygon_area_deg2(c2, o2) for k2, c2, o2 in geo.geom_parts(kind, coords, offs) if k2 == "POLYGON")
+        )
 
     return _per_unique(wkt, area, np.float64)
 
@@ -358,15 +350,12 @@ def st_lengthSpheroid(wkt: pd.Series) -> pd.Series:
 def st_centroid(wkt: pd.Series) -> pd.Series:
     def cen(kind, coords, offs):
         if kind == "POLYGON":
-            x, y = geo.polygon_centroid(coords, offs)
+            _a, x, y = geo.polygon_area_centroid(coords, offs)
         elif kind == "MULTIPOLYGON":
-            # |area|-weighted mean of member centroids (JTS semantics;
-            # member rings may carry arbitrary orientations, so signed
-            # shoelace terms across independent shells must not cancel)
+            # area-weighted mean of member centroids (JTS semantics)
             wx = wy = wtot = 0.0
             for _k2, c2, o2 in geo.geom_parts(kind, coords, offs):
-                a = abs(geo.polygon_area_deg2(c2, o2))
-                cx, cy = geo.polygon_centroid(c2, o2)
+                a, cx, cy = geo.polygon_area_centroid(c2, o2)
                 wx, wy, wtot = wx + cx * a, wy + cy * a, wtot + a
             if wtot > 0:
                 x, y = wx / wtot, wy / wtot
@@ -711,11 +700,8 @@ def st_distanceSpheroid(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
 
 
 def _buffer_point_wkt(lon: np.ndarray, lat: np.ndarray, radius_m: np.ndarray) -> list[str]:
-    """POLYGON WKT of every ``geo.buffer_points`` ring, formatted exactly
-    as ``geo.wkt_polygon`` formats one (%.10g per coordinate)."""
-    rings = geo.buffer_points(lon, lat, radius_m)
-    fmt = "POLYGON ((" + ", ".join(["%.10g %.10g"] * rings.shape[1]) + "))"
-    return [fmt % tuple(row) for row in rings.reshape(len(rings), 2 * rings.shape[1]).tolist()]
+    """POLYGON WKT of every ``geo.buffer_points`` ring."""
+    return [f"POLYGON (({geo.wkt_coords(ring)}))" for ring in geo.buffer_points(lon, lat, radius_m)]
 
 
 @F.pandas_udf(StringType())
@@ -745,9 +731,8 @@ def _capsule(p, q, r: float, idx: int) -> np.ndarray:
     """CCW stadium around the segment p→q (p != q), extended by a
     per-capsule jittered ε ≈ 0.005r along the axis. _buffer_geom uses
     capsules for every edge that has no convolution cycle: polylines,
-    the holes of a dilated polygon, every ring of an eroded one and the
-    polygon members of a GEOMETRYCOLLECTION. Without the
-    extension a corner p + r·n̂ lies EXACTLY on the adjacent
+    the holes of a dilated polygon and every ring of an eroded one.
+    Without the extension a corner p + r·n̂ lies EXACTLY on the adjacent
     perpendicular edge of an axis-aligned ring; with it, the contacts
     become proper crossings. The overshoot error is ≤ ε²/2r ≈
     3e-5·r, far inside the inscribed-arc sag _buffer_geom grants.
@@ -836,12 +821,16 @@ def _buffer_geom(ga, radius: float) -> str | None:
     (slab_overlay.slab_region) that counts winding numbers.
 
     A positive radius dilates: {x : dist(x, geom) ≤ r} is where the
-    winding over all rings is positive. The rings are:
-    - per (MULTI)POLYGON shell, its convolution cycle with the 2s-gon
-      disc (_cycle; each shell its own disc phase, so co-located arcs
-      of different shells never tie exactly). Its winding is positive
-      exactly on shell ⊕ disc, about 1 ring edge plus one edge per π/s
-      of turning at each vertex, where one capsule per edge costs 2s + 2;
+    winding over all rings is positive. Every polygon part — a POLYGON,
+    a MULTIPOLYGON member or a GEOMETRYCOLLECTION member — gives the
+    same rings, whose winding is ≥ 0 everywhere and ≥ 1 exactly on
+    part ⊕ disc; windings add over parts, so the total is positive
+    exactly on the union of the parts' dilations. The rings are:
+    - per shell, its convolution cycle with the 2s-gon disc (_cycle;
+      each shell its own disc phase, so co-located arcs of different
+      shells never tie exactly). Its winding is positive exactly on
+      shell ⊕ disc, about 1 ring edge plus one edge per π/s of turning
+      at each vertex, where one capsule per edge costs 2s + 2;
     - per hole, its CW ring plus one CCW capsule per edge: −1 inside the
       hole cancels the shell's cycle there, and the capsule band adds
       the ≤ r strip back. A hole gets no cycle of its own: a cycle's
@@ -850,11 +839,8 @@ def _buffer_geom(ga, radius: float) -> str | None:
     - no ring at all for a hole whose x or y span is below
       2·r·cos(0.7π/s): every point of it lies within the capsule band's
       guaranteed radius of its boundary along that axis, so it closes;
-    - one CCW capsule per edge of a polyline, one disc per point, and
-      for a GEOMETRYCOLLECTION's polygon members their rings (shells
-      CCW, holes CW) plus one capsule per edge.
-    Islands inside holes and overlapping collection members need no
-    special case.
+    - one CCW capsule per edge of a polyline and one disc per point.
+    Islands inside holes and overlapping parts need no special case.
 
     A negative radius erodes areal subjects: the points inside the
     polygon (fill winding > 0) that no boundary capsule covers — the
@@ -876,7 +862,6 @@ def _buffer_geom(ga, radius: float) -> str | None:
     if radius < 0 and kind not in _AREAL:
         return "POLYGON EMPTY" if kind in _POINTY + _LINEY else None
     r = abs(radius)
-    cycles = radius > 0 and kind in _AREAL
     fills: list = []  # shells CCW (or their cycles), holes CW
     caps: list = []   # CCW capsules and discs
     for k2, c2, o2 in parts:
@@ -885,7 +870,7 @@ def _buffer_geom(ga, radius: float) -> str | None:
             if not all(_valid_ring(ring) for ring in rings) or len(crossings(ring_edges(c2, o2))[0]):
                 return None  # invalid polygon
             shell, *holes = _fill_rings(c2, o2)
-            if cycles:
+            if radius > 0:
                 fills.append(_cycle(shell, r, len(fills) + len(caps)))
                 # a hole the buffer closes gets no ring
                 holes = [h for h in holes if np.ptp(h, axis=0).min() >= 2.0 * r * np.cos(0.7 * np.pi / _SEGMENTS)]
@@ -1082,8 +1067,7 @@ def _pieces_to_wkt(points: list, lines: list, empty: str) -> str:
     if pts and not lines:
         if len(pts) == 1:
             return geo.wkt_point(*pts[0])
-        inner = ", ".join(f"({x:.10g} {y:.10g})" for x, y in pts)
-        return f"MULTIPOINT ({inner})"
+        return geo.wkt_any("MULTIPOINT", pts, None)
     if lines and not pts:
         if len(lines) == 1:
             return geo.wkt_linestring(lines[0])
@@ -1175,17 +1159,9 @@ def _gc_combine(members: list, empty: str = "GEOMETRYCOLLECTION EMPTY") -> str:
 
 
 def _areal_area(coords, offs) -> float:
-    """Area of a (MULTI)POLYGON ring set: Σ|shell| − Σ|holes| grouped by
-    containment depth (orientation-agnostic, unlike raw signed sums)."""
-    c = np.asarray(coords, dtype=np.float64)
-    o = np.asarray(offs)
-    ring = lambda i: c[o[i]:o[i + 1]]
-    total = 0.0
-    for s, hs in geo.multipolygon_parts(c, o):
-        total += abs(geo.ring_signed_area(ring(s))) - sum(
-            abs(geo.ring_signed_area(ring(h))) for h in hs
-        )
-    return total
+    """Area of a (MULTI)POLYGON ring set, its rings grouped into polygons
+    by containment depth, whatever their winding."""
+    return sum(geo.polygon_area_deg2(c2, o2) for _k, c2, o2 in geo.geom_parts("MULTIPOLYGON", coords, offs))
 
 
 def _areal_overlay(ga, gb, op: str) -> str | None:
@@ -1216,18 +1192,7 @@ def _polys_to_wkt(parts) -> str | None:
         return None
     if not parts:
         return "POLYGON EMPTY"
-    if len(parts) == 1:
-        return geo.wkt_polygon(*parts[0])
-    inner = ", ".join(
-        "("
-        + ", ".join(
-            "(" + ", ".join(f"{x:.10g} {y:.10g}" for x, y in c[o[r]:o[r + 1]]) + ")"
-            for r in range(len(o) - 1)
-        )
-        + ")"
-        for c, o in parts
-    )
-    return f"MULTIPOLYGON ({inner})"
+    return geo.wkt_polygon(*parts[0]) if len(parts) == 1 else geo.wkt_multipolygon(parts)
 
 
 def _overlay_difference(ga, gb) -> str | None:

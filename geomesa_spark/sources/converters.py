@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from geomesa_spark.operators.spatial_join import grid_cell_expr
@@ -89,7 +90,7 @@ def _avro_df(spark: SparkSession, path: str, spec: dict) -> DataFrame:
     file's header is read driver-side (bounded: a single file)."""
     try:
         return spark.read.format("avro").load(path)
-    except Exception as e:  # noqa: BLE001 — datasource-missing probe
+    except AnalysisException as e:  # "Failed to find data source: avro"
         if "data source" not in str(e).lower():
             raise
 

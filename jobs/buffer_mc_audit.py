@@ -2,8 +2,8 @@
 kernel (_buffer_geom) over RANDOMIZED inputs, including the degenerate
 families the fixed tests only spot-check: snapped-integer polylines with
 duplicate and reversal (spike) vertices, holed polygons (generic and
-snapped), multipoints, and mixed GEOMETRYCOLLECTIONs; negative radii on
-polygons (erosion).
+snapped), multipoints, mixed GEOMETRYCOLLECTIONs and collections of
+overlapping holed polygons; negative radii on polygons (erosion).
 
 Check per input: probe ∈ buffer(G, r) ⟺ dist(probe, G) ≤ r, up to the
 inscribed-arc sag band r·(1−cos(π/(2·S)))+tol (the JTS quadrant-segments
@@ -113,6 +113,16 @@ def gen_input(rng, cls) -> str | None:
         a = _polyline_wkt(rng, snap=True)
         x, y = np.round(rng.uniform(-3, 3, 2), 1)
         return f"GEOMETRYCOLLECTION ({a}, POINT ({x:.10g} {y:.10g}))"
+    if cls == "gc_holed_overlap":
+        # 2-3 overlapping holed polygons, plus a polyline half the time
+        snap = bool(rng.integers(2))
+        members = [
+            _holed_polygon(rng, rng.uniform(-1.5, 1.5), rng.uniform(-1.5, 1.5), rng.uniform(2, 3.5), snap=snap)
+            for _ in range(int(rng.integers(2, 4)))
+        ]
+        if rng.uniform() < 0.5:
+            members.append(_polyline_wkt(rng, snap=snap))
+        return None if None in members else f"GEOMETRYCOLLECTION ({', '.join(members)})"
     raise ValueError(cls)
 
 
@@ -127,6 +137,7 @@ def audit(n: int, n_probes: int, seed: int = 20260818) -> tuple[dict, list]:
     for cls in (
         "polyline_float", "polyline_snapped", "polygon_holed",
         "polygon_snapped", "polygon_eroded", "multipoint", "gc_mixed",
+        "gc_holed_overlap",
     ):
         row = {"checked": 0, "null": 0, "error": 0, "probes": 0, "mismatch": 0}
         made = 0

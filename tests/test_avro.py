@@ -15,7 +15,10 @@ from __future__ import annotations
 import json
 import os
 
+from types import SimpleNamespace
+
 import pytest
+from pyspark.errors import AnalysisException
 
 from geomesa_spark.sources import avro_io as A
 from geomesa_spark.sources import converters as CV
@@ -197,6 +200,31 @@ def test_avro_convert_matches_csv_spec(spark, tmp_path):
     # explicit-schema variant skips the driver-side header peek
     out2 = CV.convert(spark, d, {**AVRO_SPEC, "avro_schema": SITE_SCHEMA}).toPandas()
     assert len(out2) == 2
+
+
+@pytest.mark.parametrize(
+    "exc",
+    [
+        RuntimeError("executor lost"),
+        RuntimeError("lost the connection to the data source"),
+        AnalysisException("[PATH_NOT_FOUND] Path does not exist: file:/nowhere"),
+    ],
+    ids=["other_class", "other_class_same_words", "other_analysis_error"],
+)
+def test_avro_probe_propagates_other_errors(exc):
+    """Only a missing avro datasource falls back to the from-scratch
+    decoder; any other failure of the native read propagates."""
+
+    class Reader:
+        def format(self, _name):
+            return self
+
+        def load(self, _path):
+            raise exc
+
+    with pytest.raises(type(exc)) as got:
+        CV._avro_df(SimpleNamespace(read=Reader()), "/nowhere", {})
+    assert got.value is exc
 
 
 def test_export_avro_roundtrip(spark, tmp_path, jvm_avro):

@@ -310,9 +310,9 @@ def _sweep_input_sizes(monkeypatch):
     seen = []
     real = stf.slab_region
 
-    def spy(ea, eb, ind, tol=1e-9):
+    def spy(ea, eb, ind):
         seen.append(len(ea) + len(eb))
-        return real(ea, eb, ind, tol)
+        return real(ea, eb, ind)
 
     monkeypatch.setattr(stf, "slab_region", spy)
     return seen
@@ -370,3 +370,46 @@ def test_buffer_hole_skip_threshold(monkeypatch, sign):
     assert sum(len(oo) - 2 for _k2, _c2, oo in geo.geom_parts(k, c, o)) == 0
     assert _member(np.asarray([[5.0, 5 + span / 2]]), k, c, o)[0]
     assert (seen[1] == seen[0]) == (sign < 0)
+
+
+def test_buffer_collection_polygon_is_one_convolution_cycle(monkeypatch):
+    """A GEOMETRYCOLLECTION's polygon members reach the sweep as their
+    convolution cycles, as a MULTIPOLYGON's do: two overlapping unit
+    squares at r = 1 are 2 × 20 edges (a fill ring plus one capsule per
+    edge was 152)."""
+    seen = _sweep_input_sizes(monkeypatch)
+    _check_buffer(
+        "GEOMETRYCOLLECTION (POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)), "
+        "POLYGON ((0.5 0.5, 1.5 0.5, 1.5 1.5, 0.5 1.5, 0.5 0.5)))",
+        1.0, np.random.default_rng(12), 4,
+    )
+    assert seen == [40]
+
+
+def test_buffer_collection_of_disjoint_polygons_is_its_multipolygon():
+    """Disjoint holed polygons buffer to the same bytes whether they are
+    spelled as a GEOMETRYCOLLECTION or as a MULTIPOLYGON."""
+    a = "((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 2.5, 2.5 2.5, 2.5 1, 1 1))"
+    b = "((10.5 0.25, 14 0, 13 4.75, 10.5 0.25), (12 1, 12.5 2, 13 1, 12 1))"
+    for r in (0.3, 1.0):
+        gc = stf._buffer_geom(geo.parse_wkt(f"GEOMETRYCOLLECTION (POLYGON {a}, POLYGON {b})"), r)
+        assert gc is not None and gc == stf._buffer_geom(geo.parse_wkt(f"MULTIPOLYGON ({a}, {b})"), r)
+
+
+@pytest.mark.parametrize("dx", [0.0, 0.1234567891], ids=["snapped", "float"])
+@pytest.mark.parametrize("r", [0.2, 0.6, 1.5])
+def test_buffer_collection_overlapping_holed_members(r, dx):
+    """Overlapping holed members, one member inside another member's
+    hole and a polyline across them all: the windings of the members'
+    rings add, so the sweep keeps exactly the union of their dilations."""
+
+    def ring(*pts):
+        return "(" + ", ".join("%.10g %.10g" % (x + dx, y + dx) for x, y in pts) + ")"
+
+    wkt_in = "GEOMETRYCOLLECTION (%s)" % ", ".join([
+        "POLYGON (%s, %s)" % (ring((0, 0), (6, 0), (6, 6), (0, 6), (0, 0)), ring((1, 2), (1, 4), (4, 4), (4, 2), (1, 2))),
+        "POLYGON (%s, %s)" % (ring((3, 1), (9, 1), (9, 7), (3, 7), (3, 1)), ring((6.5, 3.5), (6.5, 4.5), (7.5, 4.5), (7.5, 3.5), (6.5, 3.5))),
+        "POLYGON (%s)" % ring((1.5, 2.5), (2.5, 2.5), (2.5, 3.5), (1.5, 3.5), (1.5, 2.5)),
+        "LINESTRING %s" % ring((-2, -1), (10, 8)),
+    ])
+    _check_buffer(wkt_in, r, np.random.default_rng(13), 12, n=8000)

@@ -10,7 +10,7 @@ from jobs import buffer_mc_audit as bma
 
 def test_buffer_mc_audit_smoke():
     report, examples = bma.audit(25, 64)
-    assert len(report) == 7
+    assert len(report) == 8
     for cls, row in report.items():
         assert row["checked"] == 25, (cls, row)
         assert row["null"] == 0, (cls, row)

@@ -79,7 +79,7 @@ def test_area_and_centroid():
     assert abs(geo.polygon_area_deg2(SQUARE, SQ_OFF) - 100.0) < 1e-9
     # hole subtracts 16
     assert abs(geo.polygon_area_deg2(HOLE_COORDS, HOLE_OFF) + 16 - 100.0) < 1e-9
-    cx, cy = geo.polygon_centroid(SQUARE, SQ_OFF)
+    _a, cx, cy = geo.polygon_area_centroid(SQUARE, SQ_OFF)
     assert abs(cx - 5.0) < 1e-9 and abs(cy - 5.0) < 1e-9
 
 

@@ -332,7 +332,7 @@ def test_trace_faces_contract():
     rectangle split into pieces closes into one ring; a degree-4
     crossing (two squares meeting at a corner) gives two rings."""
     seg = lambda *pts: np.asarray(pts, dtype=np.float64)
-    walk = lambda pieces: slab_overlay._trace_faces(pieces, 1e-9)
+    walk = slab_overlay._trace_faces
 
     def square(x, y):
         return [

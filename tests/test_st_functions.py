@@ -81,6 +81,28 @@ def test_constructors_accessors(registered):
     assert geo.parse_wkt(row["env"])[0] == "POLYGON"
 
 
+def test_area_and_centroid_ignore_ring_orientation():
+    """WKT does not fix ring orientation: a hole wound like its shell is
+    still a hole. Both spellings give |shell| − |hole| and the same
+    centroid, as a POLYGON, a MULTIPOLYGON member and a
+    GEOMETRYCOLLECTION member (whose st_centroid is its vertex mean)."""
+    shell = "(0 0, 4 0, 4 4, 0 4, 0 0)"
+    unit = "((10 10, 11 10, 11 11, 10 11, 10 10))"
+    got = []
+    for hole in ("(1 1, 1 2, 2 2, 2 1, 1 1)", "(1 1, 2 1, 2 2, 1 2, 1 1)"):  # CW, then CCW
+        poly = f"({shell}, {hole})"
+        rows = pd.Series(
+            [f"POLYGON {poly}", f"MULTIPOLYGON ({poly}, {unit})", f"GEOMETRYCOLLECTION (POLYGON {poly}, POLYGON {unit})"]
+        )
+        assert list(ST.st_area.func(rows)) == [15.0, 16.0, 16.0]
+        got.append(list(ST.st_centroid.func(rows)))
+    assert got[0] == got[1]
+    (x, y), = geo.parse_wkt(got[0][0])[1]
+    assert x == y == pytest.approx((16 * 2.0 - 1.5) / 15)
+    (x, y), = geo.parse_wkt(got[0][1])[1]
+    assert x == y == pytest.approx((16 * 2.0 - 1.5 + 10.5) / 16)
+
+
 def test_distance_functions(registered):
     spark = registered
     row = spark.range(1).select(
