@@ -270,7 +270,7 @@ def _q(name: str, sql: str | None):
 def q_pip_count_broadcast(spark, sf_dir):
     """Broadcast PIP join (GeoMesaSpark#shallowJoin analog) → per-polygon counts."""
     pts = events_points(spark, sf_dir)
-    j = SJ.broadcast_pip_join(pts, synth.polygons(), level=GRID_LEVEL)
+    j = SJ.spatial_join(pts, synth.polygons(), strategy="broadcast", level=GRID_LEVEL)
     return j.groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n")).orderBy("polygon_id")
 
 
@@ -284,7 +284,7 @@ def q_pip_count_broadcast(spark, sf_dir):
 def q_pip_count_salted(spark, sf_dir):
     """Grid-partitioned salted SMJ PIP join — identical output to broadcast."""
     pts = events_points(spark, sf_dir)
-    j = SJ.grid_pip_join(pts, synth.polygons(), level=GRID_LEVEL, point_key_col="pid")
+    j = SJ.spatial_join(pts, synth.polygons(), strategy="salted", level=GRID_LEVEL, point_key_col="pid")
     return j.groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n")).orderBy("polygon_id")
 
 
@@ -519,8 +519,8 @@ def q_line_poly_relations(spark, sf_dir):
 def q_pip_semi(spark, sf_dir):
     """Left-semi spatial join: points covered by ≥1 polygon."""
     pts = events_points(spark, sf_dir)
-    j = SJ.broadcast_pip_join(pts, synth.polygons(), level=GRID_LEVEL, how="left_semi", point_key=["pid"])
-    return j.select("pid").orderBy("pid")
+    j = SJ.spatial_join(pts, synth.polygons(), strategy="broadcast", level=GRID_LEVEL)
+    return pts.join(j.select("pid").distinct(), "pid", "left_semi").select("pid").orderBy("pid")
 
 
 @_q(
@@ -532,8 +532,8 @@ def q_pip_semi(spark, sf_dir):
 def q_pip_anti_count(spark, sf_dir):
     """Left-anti spatial join: count of points covered by no polygon."""
     pts = events_points(spark, sf_dir)
-    j = SJ.broadcast_pip_join(pts, synth.polygons(), level=GRID_LEVEL, how="left_anti", point_key=["pid"])
-    return j.agg(F.count(F.lit(1)).alias("n"))
+    j = SJ.spatial_join(pts, synth.polygons(), strategy="broadcast", level=GRID_LEVEL)
+    return pts.join(j.select("pid").distinct(), "pid", "left_anti").agg(F.count(F.lit(1)).alias("n"))
 
 
 def _knn_oracle(k: int) -> str:
@@ -601,7 +601,7 @@ def q_dwithin_stored(spark, sf_dir):
     cell + exact refine — identical output to the broadcast path."""
     pts = events_points(spark, sf_dir)
     qdf = spark.createDataFrame(DWITHIN_QUERIES)
-    out = SJ.distance_join_stored(pts, qdf, DWITHIN_DEG, level=GRID_LEVEL)
+    out = SJ.distance_join(pts, qdf, DWITHIN_DEG, level=GRID_LEVEL, metric="planar")
     return out.select(F.col("qid").cast("long"), F.col("pid").cast("long")).orderBy("qid", "pid")
 
 
@@ -690,7 +690,7 @@ def q_tile_diff(spark, sf_dir):
 def q_zonal_minmax(spark, sf_dir):
     """Zonal statistics: per-polygon count/min/max over the PIP join."""
     pts = events_points(spark, sf_dir)
-    j = SJ.broadcast_pip_join(pts, synth.polygons(), level=GRID_LEVEL)
+    j = SJ.spatial_join(pts, synth.polygons(), strategy="broadcast", level=GRID_LEVEL)
     return (
         j.groupBy("polygon_id")
         .agg(
@@ -2800,19 +2800,7 @@ def entity_polygon_pdf(level: int = GRID_LEVEL) -> pd.DataFrame:
     none of them can match this table."""
     gaz = synth.gazetteer_pdf().rename(columns={"name": "entity"})
     assert not gaz["entity"].str.contains("\ufffd", regex=False).any()
-    polys = synth.polygons()
-    geoms = {p.polygon_id: (p.coords, p.ring_offsets) for p in polys}
-    cell = C.grid_encode(gaz["lon"].to_numpy(np.float64), gaz["lat"].to_numpy(np.float64), level)
-    j = gaz.assign(cell=cell).merge(SJ.polygon_cover_pdf(polys, level), on="cell")
-    lon = j["lon"].to_numpy(np.float64)
-    lat = j["lat"].to_numpy(np.float64)
-    pid = j["polygon_id"].to_numpy(np.int64)
-    full = j["full"].to_numpy(bool)
-    keep = full.copy()
-    for p in np.unique(pid[~full]):
-        m = ~full & (pid == p)
-        keep[m] = geo.points_in_polygon(lon[m], lat[m], *geoms[int(p)])
-    return j.loc[keep, ["entity", "polygon_id"]].reset_index(drop=True)
+    return SJ.pip_match_pdf(gaz, synth.polygons(), level)[["entity", "polygon_id"]]
 
 
 def fused_pip_stage(level: int = GRID_LEVEL):
@@ -2863,7 +2851,7 @@ def pages_pipeline(
     name alone). The pattern goes in through ``F.lit`` so no SQL string
     literal re-escapes it. ``fused=False`` keeps the declarative
     composition — extraction ``mapInArrow``, Catalyst gazetteer join,
-    ``broadcast_pip_join`` with its PIP pandas UDF — as the oracle. Same
+    ``spatial_join(strategy="broadcast")`` with its PIP pandas UDF — as the oracle. Same
     rows either way."""
     ensure_py_files(spark)
     pages = pages_df if pages_df is not None else synth.pages(spark, n_pages)
@@ -2882,7 +2870,7 @@ def pages_pipeline(
             spark.createDataFrame(synth.gazetteer_pdf()).withColumnRenamed("name", "entity")
         )
         located = ents.join(gaz, "entity", "inner")
-        matched = SJ.broadcast_pip_join(located, synth.polygons(), level=GRID_LEVEL)
+        matched = SJ.spatial_join(located, synth.polygons(), strategy="broadcast", level=GRID_LEVEL)
     return (
         matched.groupBy("polygon_id")
         .agg(F.count(F.lit(1)).alias("n_mentions"), F.countDistinct("url").alias("n_pages"))

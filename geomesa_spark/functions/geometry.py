@@ -1025,6 +1025,10 @@ def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
             r.a_covers_b = False
         if r.b_covers_a and not r.equal and _escape_witness(cb, ob, ca, oa):
             r.b_covers_a = False
+        # a polygon covered by the other shares interior with it even when
+        # every sample lands on the other's boundary (B equal to one
+        # member of a MULTIPOLYGON A)
+        r.ii = r.ii or r.a_covers_b or r.b_covers_a
         r.any_contact = bool(r.ii or r.bb)
         return r
 

@@ -219,17 +219,10 @@ def st_y(wkt: pd.Series) -> pd.Series:
 
 
 def _per_unique(wkt: pd.Series, fn, dtype):
-    cache = _parse_cache(wkt)
-
-    def safe(g):
-        if g is None:
-            return None
-        try:
-            return fn(*g)
-        except Exception:
-            return None  # kind not supported by this accessor → null, not a poisoned batch
-
-    vals = {w: safe(g) for w, g in cache.items()}
+    """``fn(kind, coords, offsets)`` once per distinct parseable WKT in the
+    batch; unparseable text is null. An exception inside ``fn`` is a
+    kernel bug and propagates."""
+    vals = {w: None if g is None else fn(*g) for w, g in _parse_cache(wkt).items()}
     return wkt.map(vals).astype(dtype)
 
 
@@ -346,24 +339,36 @@ def st_lengthSpheroid(wkt: pd.Series) -> pd.Series:
     return _per_unique(wkt, ln, np.float64)
 
 
+def _areal_centroid(polys: list) -> tuple[float, float]:
+    """Area-weighted mean of the centroids of [(coords, offsets), ...]
+    polygons (JTS semantics); their vertex mean when none has area."""
+    wx = wy = wtot = 0.0
+    for c2, o2 in polys:
+        a, cx, cy = geo.polygon_area_centroid(c2, o2)
+        wx, wy, wtot = wx + cx * a, wy + cy * a, wtot + a
+    if wtot > 0:
+        return wx / wtot, wy / wtot
+    c = np.concatenate([c2 for c2, _o2 in polys])
+    return float(c[:, 0].mean()), float(c[:, 1].mean())
+
+
 @F.pandas_udf(StringType())
 def st_centroid(wkt: pd.Series) -> pd.Series:
+    """JTS centroid: of a collection's highest-dimension parts only —
+    area-weighted over its polygons, else length-weighted over its lines,
+    else the mean of its points."""
+
     def cen(kind, coords, offs):
         if kind == "POLYGON":
             _a, x, y = geo.polygon_area_centroid(coords, offs)
-        elif kind == "MULTIPOLYGON":
-            # area-weighted mean of member centroids (JTS semantics)
-            wx = wy = wtot = 0.0
-            for _k2, c2, o2 in geo.geom_parts(kind, coords, offs):
-                a, cx, cy = geo.polygon_area_centroid(c2, o2)
-                wx, wy, wtot = wx + cx * a, wy + cy * a, wtot + a
-            if wtot > 0:
-                x, y = wx / wtot, wy / wtot
-            else:
-                c = _flat_coords(kind, coords)
-                x, y = float(c[:, 0].mean()), float(c[:, 1].mean())
-        elif kind in ("LINESTRING", "MULTILINESTRING"):
-            x, y = geo.line_centroid(coords, offs)
+            return f"POINT ({x!r} {y!r})"
+        parts = geo.geom_parts(kind, coords, offs)
+        polys = [(c2, o2) for k2, c2, o2 in parts if k2 == "POLYGON"]
+        lines = [c2 for k2, c2, _o2 in parts if k2 == "LINESTRING"]
+        if polys:
+            x, y = _areal_centroid(polys)
+        elif lines:
+            x, y = geo.line_centroid(np.concatenate(lines), np.cumsum([0] + [len(c2) for c2 in lines]))
         else:
             c = _flat_coords(kind, coords)
             x, y = float(c[:, 0].mean()), float(c[:, 1].mean())
@@ -525,7 +530,7 @@ def _containment_series(container: pd.Series, contained: pd.Series, pred) -> pd.
         out[m] = _pip_against(container[fast], pts[0].to_numpy()[m], pts[1].to_numpy()[m], _pip_interior)
     if (~fast).any():
         a, b = (container[~fast], contained[~fast])
-        gen = _per_unique_pair(a, b, lambda ga, gb: pred(geo.relate_geoms(*ga, *gb)))
+        gen = _per_unique_pair(a, b, lambda ga, gb: pred(_relate(ga, gb)))
         out[(~fast).to_numpy()] = gen
     return pd.Series(out)
 
@@ -551,6 +556,24 @@ def st_within(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     return _containment_series(b_wkt, a_wkt, geo.pred_contains)
 
 
+def _relate(ga, gb) -> geo.Relate:
+    """``geo.relate_geoms`` of two parsed geometries, a
+    GEOMETRYCOLLECTION operand read through its normal form
+    (``_gc_normalized``) when that is one stratum: the kernel takes a
+    collection's members as given, and members that touch or overlap
+    then answer as separate pieces (two abutting squares did not cover a
+    box spanning their shared edge)."""
+
+    def one(g):
+        if g[0] == "GEOMETRYCOLLECTION":
+            strata = _gc_normalized(g)
+            if strata is not None and len(strata) == 1:
+                return strata[0]
+        return g
+
+    return geo.relate_geoms(*one(ga), *one(gb))
+
+
 def _per_unique_pair(a_wkt: pd.Series, b_wkt: pd.Series, fn):
     """Evaluate ``fn(geom_a, geom_b)`` once per unique (a, b) WKT pair in
     the batch (realistic workloads repeat few geometries across many rows),
@@ -570,7 +593,7 @@ def _per_unique_pair(a_wkt: pd.Series, b_wkt: pd.Series, fn):
 
 def _relation_series(a_wkt: pd.Series, b_wkt: pd.Series, pred) -> pd.Series:
     return pd.Series(
-        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: pred(geo.relate_geoms(*ga, *gb)))
+        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: pred(_relate(ga, gb)))
     )
 
 
@@ -623,14 +646,14 @@ def st_relate(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """DE-9IM matrix string — exact dims for point/line/polygon pairings
     (verified against canonical JTS matrices in tests); see geometry.de9im."""
     return pd.Series(
-        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(geo.relate_geoms(*ga, *gb)))
+        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(_relate(ga, gb)))
     )
 
 
 @F.pandas_udf(BooleanType())
 def st_relateBool(a_wkt: pd.Series, b_wkt: pd.Series, pattern: pd.Series) -> pd.Series:
     """DE-9IM pattern match: 'T' = non-F, '*' = any, else exact char."""
-    mats = _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(geo.relate_geoms(*ga, *gb)))
+    mats = _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(_relate(ga, gb)))
     pats = pattern.to_numpy(object)
     out = np.empty(len(mats), dtype=object)
     for i, (m, p) in enumerate(zip(mats, pats)):
@@ -939,7 +962,8 @@ def st_translate(wkt: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
 @F.pandas_udf(StringType())
 def st_convexHull(wkt: pd.Series) -> pd.Series:
     def hull(kind, coords, offs):
-        ring = geo.convex_hull(coords[:, 0], coords[:, 1])
+        c = _flat_coords(kind, coords)
+        ring = geo.convex_hull(c[:, 0], c[:, 1])
         return geo.wkt_polygon(ring, np.asarray([0, len(ring)]))
 
     return _per_unique(wkt, hull, object)
@@ -949,12 +973,14 @@ def st_convexHull(wkt: pd.Series) -> pd.Series:
 def st_idlSafeGeom(wkt: pd.Series) -> pd.Series:
     """Antimeridian-split bboxes (st_idlSafeGeom analog): a POLYGON whose
     bbox spans more than 180° of longitude is read as crossing ±180 and
-    becomes a MULTIPOLYGON of the two halves ([x1,180] ∪ [-180,x0])."""
+    becomes a MULTIPOLYGON of the two halves ([x1,180] ∪ [-180,x0]).
+    Every other geometry comes back unchanged."""
     def split(kind, coords, offs):
+        if kind != "POLYGON":
+            return geo.wkt_any(kind, coords, offs)
         x0, y0, x1, y1 = geo.polygon_bbox(coords)
-        w = geo.wkt_polygon(coords, offs)
-        if kind != "POLYGON" or (x1 - x0) <= 180.0:
-            return w
+        if (x1 - x0) <= 180.0:
+            return geo.wkt_polygon(coords, offs)
         parts = geo.split_antimeridian(x1, y0, x0, y1)
         rings = [geo.make_bbox_ring(*p) for p in parts]
         inner = ", ".join(
@@ -1562,7 +1588,7 @@ def st_makePointM(x: pd.Series, y: pd.Series, m: pd.Series) -> pd.Series:
         if bad(xv) or bad(yv) or bad(mv):
             out.append(None)
             continue
-        out.append(f"POINT M ({float(xv):.10g} {float(yv):.10g} {float(mv):.10g})")
+        out.append(f"POINT M ({geo.wkt_coords((float(xv), float(yv)))} {float(mv) + 0.0:.10g})")
     return pd.Series(out)
 
 

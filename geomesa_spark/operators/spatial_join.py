@@ -1,28 +1,35 @@
 """Spatial joins — the engine's core operator (SURVEY.md §2.4).
 
-From-scratch Spark-first re-expression of GeoMesa's spatial join surface:
+From-scratch Spark-first re-expression of GeoMesa's spatial join surface,
+one body per operator:
 
-- ``broadcast_pip_join``  ~ ``GeoMesaSpark#shallowJoin`` (broadcast small
-  polygon set; north_rule: "broadcast of small polygon sets")
-- ``grid_pip_join``       ~ ``GeoMesaJoinRelation`` + ``RelationUtils#
-  gridPartition`` (grid-partitioned join for big x big; sort-merge /
-  shuffle-hash on cell, with explicit salting of hot cells per north_rule)
-- ``distance_join``       ~ ``ProximitySearchProcess`` (dwithin semantics)
+- ``spatial_join``    PIP join of points against a driver-side polygon
+  list. ``strategy='broadcast'`` ~ ``GeoMesaSpark#shallowJoin`` (north_rule:
+  "broadcast of small polygon sets"); ``'salted'`` ~ ``GeoMesaJoinRelation``
+  + ``RelationUtils#gridPartition`` (sort-merge on cell with explicit
+  salting of hot cells); ``'auto'`` ~ the StrategyDecider, picking by
+  cover size. ``pip_match_pdf`` is the same join on the driver.
+- ``pip_join_stored`` PIP join against a stored polygon table (covers
+  computed on executors, XZ2-extents analog).
+- ``distance_join``   ~ ``ProximitySearchProcess`` (dwithin semantics),
+  broadcast for a pandas query frame, sort-merge for a stored one.
 
 Design (two-phase, SURVEY.md §4):
 1. COARSE: polygons → grid-cell covers (driver-side numpy, exact
    box-vs-polygon test, cells marked *full* when the cell box lies entirely
    inside the polygon); points → cell via a pure Catalyst expression
-   (floor arithmetic — whole-stage-codegen, no UDF). Equi-join on cell.
+   (floor arithmetic — whole-stage-codegen, no UDF). Equi-join on cell
+   (``_cover_join``).
 2. REFINE: candidates in non-*full* cells run the vectorized numpy
-   ray-crossing PIP in an Arrow-batched pandas UDF, grouped by polygon id
-   inside each batch. *full* cells skip refinement entirely (the analog of
-   GeoMesa's LOOSE_BBOX fast path is ``refine=False``).
+   ray-crossing PIP (``_pip_refine``) in an Arrow-batched pandas UDF,
+   grouped by polygon id inside each batch. *full* cells skip refinement
+   entirely (the analog of GeoMesa's LOOSE_BBOX fast path is
+   ``refine=False``).
 
 At 100 TB scale the coarse join is the only shuffle (and broadcast joins
 have none); the refine UDF is a narrow map. Hot cells (20% of web-page
-geo-mentions hit 3 cities — FIXTURES.md §1) are salted explicitly in
-``grid_pip_join``; AQE skew handling stays on as a backstop.
+geo-mentions hit 3 cities — FIXTURES.md §1) are salted explicitly on the
+salted path; AQE skew handling stays on as a backstop.
 """
 
 from __future__ import annotations
@@ -140,27 +147,38 @@ def polygon_cover_pdf(polys: list[Polygon], level: int = DEFAULT_LEVEL) -> pd.Da
     return out
 
 
-def make_pip_refine(polys: list[Polygon]):
-    """Arrow-batched pandas UDF (lon, lat, polygon_id) → bool.
+def _pip_refine(lon: np.ndarray, lat: np.ndarray, pid: np.ndarray, geoms: dict) -> np.ndarray:
+    """The refine kernel of every PIP join over a polygon list: each
+    (lon, lat) ray-crossing tested against polygon ``pid`` (``geoms``:
+    polygon_id → (coords, ring_offsets)), one vectorized test per
+    distinct id — a handful per batch, no per-row Python."""
+    out = np.zeros(len(lon), dtype=bool)
+    for p in np.unique(pid):
+        m = pid == p
+        out[m] = geo.points_in_polygon(lon[m], lat[m], *geoms[int(p)])
+    return out
 
-    Batches are grouped by polygon id inside numpy (a handful of unique
-    ids per batch), each group refined with the vectorized ray-crossing
-    test — no per-row Python."""
-    geoms = {p.polygon_id: (p.coords, p.ring_offsets) for p in polys}
 
-    @F.pandas_udf(BooleanType())
-    def pip_refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        pid_v = pid.to_numpy(dtype=np.int64)
-        out = np.zeros(len(lon_v), dtype=bool)
-        for p in np.unique(pid_v):
-            m = pid_v == p
-            coords, offs = geoms[int(p)]
-            out[m] = geo.points_in_polygon(lon_v[m], lat_v[m], coords, offs)
-        return pd.Series(out)
+def _geoms(polys: list[Polygon]) -> dict:
+    return {p.polygon_id: (p.coords, p.ring_offsets) for p in polys}
 
-    return pip_refine
+
+def pip_match_pdf(points: pd.DataFrame, polys: list[Polygon], level: int = DEFAULT_LEVEL) -> pd.DataFrame:
+    """``spatial_join`` on the driver, for a pandas ``points`` frame with
+    lon/lat columns: its rows joined to the polygons that contain them
+    (a ``polygon_id`` column added; a point inside k polygons has k rows).
+    Same cover, cell encoding and refine kernel as the Spark join."""
+    cell = C.grid_encode(points["lon"].to_numpy(np.float64), points["lat"].to_numpy(np.float64), level)
+    j = points.assign(cell=cell).merge(polygon_cover_pdf(polys, level), on="cell")
+    full = j["full"].to_numpy(bool)
+    keep = full.copy()
+    keep[~full] = _pip_refine(
+        j["lon"].to_numpy(np.float64)[~full],
+        j["lat"].to_numpy(np.float64)[~full],
+        j["polygon_id"].to_numpy(np.int64)[~full],
+        _geoms(polys),
+    )
+    return j.loc[keep].drop(columns=["cell", "full"]).reset_index(drop=True)
 
 
 # ---------------------------------------------------------------------------
@@ -168,41 +186,15 @@ def make_pip_refine(polys: list[Polygon]):
 # ---------------------------------------------------------------------------
 
 
-def broadcast_pip_join(
-    points: DataFrame,
-    polys: list[Polygon],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    level: int = DEFAULT_LEVEL,
-    how: str = "inner",
-    refine: bool = True,
-    point_key=None,
-) -> DataFrame:
-    """Tag each point with the ids of covering polygons.
-
-    ``how``: 'inner' (point x polygon match rows), 'left_semi' (points with
-    ≥1 covering polygon), 'left_anti' (points with none). ``refine=False``
-    is the LOOSE_BBOX fast path (cell-precision superset).
-    The polygon side is broadcast — the join is shuffle-free.
-    """
-    spark = points.sparkSession
-    covers = spark.createDataFrame(polygon_cover_pdf(polys, level))
-    pts = with_grid_cell(points, lon_col, lat_col, level)
-    cand = pts.join(F.broadcast(covers), "cell", "inner")
-    if refine:
-        pip = make_pip_refine(polys)
-        matched = cand.where(F.col("full") | pip(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
-    else:
-        matched = cand
-    matched = matched.drop("full", "cell")
-    if how == "inner":
-        return matched
-    keys = point_key if point_key is not None else [c for c in points.columns]
-    if how == "left_semi":
-        return points.join(matched.select(*keys).distinct(), keys, "left_semi")
-    if how == "left_anti":
-        return points.join(matched.select(*keys).distinct(), keys, "left_anti")
-    raise ValueError(f"unsupported how={how}")
+def _cover_join(pts: DataFrame, cells: DataFrame, on: list[str], broadcast: bool) -> DataFrame:
+    """The coarse phase of every join here: points ⋈ candidate-cell rows
+    on ``on``. ``broadcast`` ships the cell side to every executor (no
+    shuffle); otherwise both sides shuffle and sort-merge (north_rule:
+    "sort-merge for large range joins"; Catalyst cannot size a
+    mapInPandas side, and unhinted it may broadcast the points)."""
+    if broadcast:
+        return pts.join(F.broadcast(cells), on, "inner")
+    return pts.join(cells.hint("merge"), on, "inner")
 
 
 def hot_cells(
@@ -235,63 +227,8 @@ def hot_cells(
         src.unpersist()
 
 
-def grid_pip_join(
-    points: DataFrame,
-    polys: list[Polygon],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    level: int = DEFAULT_LEVEL,
-    refine: bool = True,
-    salt: int = 8,
-    skew_cells: list[int] | None = None,
-    point_key_col: str | None = None,
-    strategy: str = "merge",
-) -> DataFrame:
-    """Grid-partitioned big x big spatial join with EXPLICIT hot-cell
-    salting (north_rule). Both sides shuffle on (cell, salt):
-
-    - points in a hot cell get ``salt = pmod(xxhash64(key), s)`` — spreads
-      one hot city cell over s reducers;
-    - the cover side replicates hot-cell rows s times (explode), others
-      carry salt 0.
-
-    ``strategy='merge'`` hints sort-merge (north_rule: "sort-merge for
-    large range joins"); 'shuffle_hash' is available when the build side
-    fits. Output is identical to ``broadcast_pip_join`` (test-asserted
-    with salting on/off)."""
-    spark = points.sparkSession
-    cover_pdf = polygon_cover_pdf(polys, level)
-    covers = spark.createDataFrame(cover_pdf)
-    pts = with_grid_cell(points, lon_col, lat_col, level)
-
-    if skew_cells is None:
-        skew_cells = hot_cells(pts)
-    skew_arr = F.array(*[F.lit(c) for c in skew_cells]) if skew_cells else F.array().cast("array<long>")
-
-    key = F.col(point_key_col) if point_key_col else F.concat_ws(",", F.col(lon_col), F.col(lat_col))
-    pts = pts.withColumn(
-        "salt",
-        F.when(F.array_contains(skew_arr, F.col("cell")), F.pmod(F.xxhash64(key), F.lit(salt)).cast("int")).otherwise(F.lit(0)),
-    )
-    covers = (
-        covers.withColumn(
-            "salts",
-            F.when(
-                F.array_contains(skew_arr, F.col("cell")),
-                F.array(*[F.lit(i) for i in range(salt)]),
-            ).otherwise(F.array(F.lit(0))),
-        )
-        .withColumn("salt", F.explode("salts"))
-        .drop("salts")
-    )
-    cand = pts.hint(strategy).join(covers, ["cell", "salt"], "inner")
-    if refine:
-        pip = make_pip_refine(polys)
-        cand = cand.where(F.col("full") | pip(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
-    return cand.drop("full", "cell", "salt")
-
-
 BROADCAST_COVER_MAX_ROWS = 1_000_000  # ~24 MB of (cell, pid, full) rows
+SALT = 8  # reducers one hot cell's points spread over on the salted path
 
 
 def spatial_join(
@@ -308,79 +245,125 @@ def spatial_join(
     point_key_col: str | None = None,
     broadcast_max_cover: int = BROADCAST_COVER_MAX_ROWS,
 ) -> DataFrame:
-    """Cost-based PIP-join entry point (~ GeoMesa's StrategyDecider,
-    SURVEY.md §4.1): pick the physical strategy from the cover size and
-    feed the salted path its skew list WITHOUT extra scans.
+    """Tag each point with the ids of the polygons covering it: one
+    (point columns..., polygon_id) row per match. ``refine=False`` is the
+    LOOSE_BBOX fast path (cell-precision superset).
 
-    - cover rows ≤ ``broadcast_max_cover`` → ``broadcast_pip_join``
-      (shuffle-free; the cover is comfortably an executor broadcast);
-    - else → ``grid_pip_join`` (salted SMJ). The skew list comes from, in
-      order: the caller, the table manifest's committed cell histograms
-      (zero extra jobs), or a 5% sample (``hot_cells``).
-    """
+    ``strategy`` picks the physical join (~ GeoMesa's StrategyDecider,
+    SURVEY.md §4.1):
+
+    - 'broadcast' (~ ``GeoMesaSpark#shallowJoin``): the cover is broadcast
+      and the join is shuffle-free;
+    - 'salted' (~ ``GeoMesaJoinRelation``): both sides shuffle on
+      (cell, salt) and sort-merge. Points in a hot cell get
+      ``salt = pmod(xxhash64(key), SALT)`` (key: ``point_key_col``, else
+      lon,lat), and the cover replicates hot-cell rows SALT times, so one
+      hot city cell spreads over SALT reducers. The skew list comes from,
+      in order: the caller, the table manifest's committed cell
+      histograms (zero extra jobs), or a 5% sample (``hot_cells``);
+    - 'auto': broadcast while the cover has at most
+      ``broadcast_max_cover`` rows, else salted.
+
+    Every strategy returns the same rows."""
     cover = polygon_cover_pdf(polys, level)
     if strategy == "auto":
         strategy = "broadcast" if len(cover) <= broadcast_max_cover else "salted"
-    if strategy == "broadcast":
-        return broadcast_pip_join(points, polys, lon_col, lat_col, level, refine=refine)
-    if skew_cells is None and manifest_root is not None:
-        from geomesa_spark.sources.manifest import hot_cells_from_manifest
+    if strategy not in ("broadcast", "salted"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    covers = points.sparkSession.createDataFrame(cover)
+    pts = with_grid_cell(points, lon_col, lat_col, level)
+    on = ["cell"]
+    if strategy != "broadcast":
+        if skew_cells is None and manifest_root is not None:
+            from geomesa_spark.sources.manifest import hot_cells_from_manifest
 
-        skew_cells = hot_cells_from_manifest(manifest_root, manifest_op or "ingest")
-    return grid_pip_join(
-        points,
-        polys,
-        lon_col,
-        lat_col,
-        level,
-        refine=refine,
-        skew_cells=skew_cells,
-        point_key_col=point_key_col,
+            skew_cells = hot_cells_from_manifest(manifest_root, manifest_op or "ingest")
+        if skew_cells is None:
+            skew_cells = hot_cells(pts)
+        skew_arr = F.array(*[F.lit(c) for c in skew_cells]) if skew_cells else F.array().cast("array<long>")
+        hot = F.array_contains(skew_arr, F.col("cell"))
+        key = F.col(point_key_col) if point_key_col else F.concat_ws(",", F.col(lon_col), F.col(lat_col))
+        pts = pts.withColumn("salt", F.when(hot, F.pmod(F.xxhash64(key), F.lit(SALT)).cast("int")).otherwise(F.lit(0)))
+        salts = F.when(hot, F.array(*[F.lit(i) for i in range(SALT)])).otherwise(F.array(F.lit(0)))
+        covers = covers.withColumn("salt", F.explode(salts))
+        on = ["cell", "salt"]
+    cand = _cover_join(pts, covers, on, strategy == "broadcast")
+    if refine:
+        geoms = _geoms(polys)
+
+        @F.pandas_udf(BooleanType())
+        def pip_refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
+            return pd.Series(
+                _pip_refine(lon.to_numpy(np.float64), lat.to_numpy(np.float64), pid.to_numpy(np.int64), geoms)
+            )
+
+        cand = cand.where(F.col("full") | pip_refine(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
+    return cand.drop("full", "cell", "salt")
+
+
+def _cell_disks(queries: pd.DataFrame, radius_m: float, metric: str, level: int) -> pd.DataFrame:
+    """(cell, qid, q_lon, q_lat): each (qid, lon, lat) query's disk of
+    grid cells reaching ``radius_m``, padded by one cell. Haversine radii
+    are meters, the lon reach widened by 1/cos(lat); planar radii are
+    degrees."""
+    nx, ny = C.grid_shape(level)
+    lon = queries["lon"].to_numpy(np.float64)
+    lat = queries["lat"].to_numpy(np.float64)
+    disks = []
+    for qlat, center in zip(lat, C.grid_encode(lon, lat, level)):
+        if metric == "planar":
+            rx = int(radius_m / (360.0 / nx)) + 1
+            ry = int(radius_m / (180.0 / ny)) + 1
+        else:
+            coslat = max(np.cos(np.radians(min(abs(qlat) + 180.0 / ny, 89.9))), 1e-6)
+            rx = int(radius_m / (360.0 / nx * 111_194.93 * coslat)) + 1
+            ry = int(radius_m / (180.0 / ny * 111_194.93)) + 1
+        disks.append(C.grid_disk(int(center), max(rx, ry), level))
+    n = [len(d) for d in disks]
+    return pd.DataFrame(
+        {
+            "cell": np.asarray([c for d in disks for c in d], dtype=np.int64),
+            "qid": np.repeat(queries["qid"].to_numpy(np.int64), n),
+            "q_lon": np.repeat(lon, n),
+            "q_lat": np.repeat(lat, n),
+        }
     )
 
 
 def distance_join(
     points: DataFrame,
-    queries_pdf: pd.DataFrame,
+    queries: pd.DataFrame | DataFrame,
     radius_m: float,
+    metric: str = "haversine",
     lon_col: str = "lon",
     lat_col: str = "lat",
     level: int = DEFAULT_LEVEL,
-    metric: str = "haversine",
 ) -> DataFrame:
-    """dwithin join: points within radius of any query point
-    (ProximitySearchProcess semantics). queries_pdf: (qid, lon, lat) —
-    small, broadcast. Cell-disk prefilter + exact distance (Catalyst
-    expression, JVM-side).
+    """dwithin join: (point columns..., qid, q_lon, q_lat, distance) for
+    every point within ``radius_m`` of a (qid, lon, lat) query
+    (ProximitySearchProcess semantics). Cell-disk prefilter, then the
+    exact distance as a Catalyst expression (JVM-side).
+
+    A pandas ``queries`` frame is small: its cell disks are built on the
+    driver and broadcast. A Spark DataFrame is big: its disks explode on
+    executors (mapInPandas) and both sides sort-merge on cell.
 
     ``metric='haversine'``: radius in meters, output ``dist_m``.
     ``metric='planar'``: radius in DEGREES, output ``dist2`` (squared
     degrees) — exact float64 arithmetic, bit-reproducible in the DuckDB
     oracle (SURVEY.md §5.2).
     """
-    spark = points.sparkSession
-    nx, ny = C.grid_shape(level)
-    if metric == "planar":
-        radius_m_equiv = radius_m * 111_194.93  # degrees → meters for cell sizing
+    if metric not in ("haversine", "planar"):
+        raise ValueError(f"unknown metric {metric!r}")
+    if isinstance(queries, pd.DataFrame):
+        disks = points.sparkSession.createDataFrame(_cell_disks(queries, radius_m, metric, level))
     else:
-        radius_m_equiv = radius_m
-    cell_h_m = 180.0 / ny * 111_194.93
-    rows = []
-    for q in queries_pdf.itertuples(index=False):
-        # radius in cells, padded by one; lon width shrinks by cos(lat)
-        coslat = max(np.cos(np.radians(min(abs(q.lat) + 180.0 / ny, 89.9))), 1e-6)
-        if metric == "planar":
-            rx = int(radius_m / (360.0 / nx)) + 1
-            ry = int(radius_m / (180.0 / ny)) + 1
-        else:
-            rx = int(radius_m_equiv / (360.0 / nx * 111_194.93 * coslat)) + 1
-            ry = int(radius_m_equiv / cell_h_m) + 1
-        center = int(C.grid_encode(np.array([q.lon]), np.array([q.lat]), level)[0])
-        for cell in C.grid_disk(center, max(rx, ry), level):
-            rows.append((int(cell), q.qid, float(q.lon), float(q.lat)))
-    cand_cells = spark.createDataFrame(pd.DataFrame(rows, columns=["cell", "qid", "q_lon", "q_lat"]))
+        disks = queries.select("qid", "lon", "lat").mapInPandas(
+            lambda batches: (_cell_disks(pdf, radius_m, metric, level) for pdf in batches),
+            "cell long, qid long, q_lon double, q_lat double",
+        )
     pts = with_grid_cell(points, lon_col, lat_col, level)
-    joined = pts.join(F.broadcast(cand_cells), "cell", "inner")
+    joined = _cover_join(pts, disks, ["cell"], isinstance(queries, pd.DataFrame))
     if metric == "planar":
         from geomesa_spark.operators.knn import planar_dist2_expr
 
@@ -388,57 +371,6 @@ def distance_join(
         return joined.withColumn("dist2", dist).where(F.col("dist2") <= radius_m * radius_m).drop("cell")
     dist = haversine_expr(lon_col, lat_col, "q_lon", "q_lat")
     return joined.withColumn("dist_m", dist).where(F.col("dist_m") <= radius_m).drop("cell")
-
-
-def distance_join_stored(
-    points: DataFrame,
-    queries: DataFrame,
-    radius_deg: float,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    level: int = DEFAULT_LEVEL,
-    strategy: str = "merge",
-) -> DataFrame:
-    """dwithin join where the QUERY side is a big stored table (planar
-    metric): each query row's cell disk explodes ON EXECUTORS
-    (mapInPandas), both sides shuffle on cell (sort-merge by default —
-    same stats-blindness rationale as ``pip_join_stored``), exact
-    distance refines. ``distance_join`` keeps the broadcast path for
-    small driver-side query sets; this is the big×big twin.
-
-    queries: DataFrame(qid, lon, lat)."""
-    nx, ny = C.grid_shape(level)
-    rx = int(radius_deg / (360.0 / nx)) + 1
-    ry = int(radius_deg / (180.0 / ny)) + 1
-    r_cells = max(rx, ry)
-
-    def explode_disks(batches):
-        for pdf in batches:
-            out_cell, out_qid, out_lon, out_lat = [], [], [], []
-            centers = C.grid_encode(pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64), level)
-            for qid, qlon, qlat, center in zip(pdf["qid"], pdf["lon"], pdf["lat"], centers):
-                disk = C.grid_disk(int(center), r_cells, level)
-                out_cell.extend(int(c) for c in disk)
-                out_qid.extend([int(qid)] * len(disk))
-                out_lon.extend([float(qlon)] * len(disk))
-                out_lat.extend([float(qlat)] * len(disk))
-            yield pd.DataFrame({"cell": out_cell, "qid": out_qid, "q_lon": out_lon, "q_lat": out_lat})
-
-    cand_cells = queries.select("qid", "lon", "lat").mapInPandas(
-        explode_disks, "cell long, qid long, q_lon double, q_lat double"
-    )
-    pts = with_grid_cell(points, lon_col, lat_col, level)
-    if strategy == "broadcast":
-        joined = pts.join(F.broadcast(cand_cells), "cell", "inner")
-    else:
-        joined = pts.join(cand_cells.hint(strategy), "cell", "inner")
-    dx = F.col(lon_col) - F.col("q_lon")
-    dy = F.col(lat_col) - F.col("q_lat")
-    return (
-        joined.withColumn("dist2", dx * dx + dy * dy)
-        .where(F.col("dist2") <= radius_deg * radius_deg)
-        .drop("cell")
-    )
 
 
 def haversine_expr(lon1: str, lat1: str, lon2: str, lat2: str):
@@ -502,25 +434,15 @@ def pip_join_stored(
     wkt_col: str = "wkt",
     id_col: str = "polygon_id",
     covers: DataFrame | None = None,
-    strategy: str = "merge",
 ) -> DataFrame:
     """PIP join where the polygon side is a *stored table* (big×big):
     cover cells computed distributed (``with_cover_cells`` — pass
-    ``covers`` to reuse a persisted index), cell equi-join, then the
-    WKT-batch PIP refine. This is the path that lets polygon tables be
-    the FACT side; the driver never materializes a cover.
-
-    ``strategy='merge'`` (default) pins sort-merge: both sides are big by
-    assumption, and Catalyst cannot estimate the mapInPandas cover's size
-    (without the hint it may broadcast the POINTS side — fatal at scale).
-    Pass ``strategy='broadcast'`` only for known-small cover indexes."""
+    ``covers`` to reuse a persisted index), the sort-merge cell join,
+    then the WKT-batch PIP refine. This is the path that lets polygon
+    tables be the FACT side; the driver never materializes a cover."""
     if covers is None:
         covers = with_cover_cells(poly_df, level, wkt_col, id_col)
-    pts = with_grid_cell(points, lon_col, lat_col, level)
-    if strategy == "broadcast":
-        cand = pts.join(F.broadcast(covers), "cell", "inner")
-    else:
-        cand = pts.join(covers.hint(strategy), "cell", "inner")
+    cand = _cover_join(with_grid_cell(points, lon_col, lat_col, level), covers, ["cell"], broadcast=False)
     if refine:
         from geomesa_spark.functions.st_functions import st_containsPoint
 

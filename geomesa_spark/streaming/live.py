@@ -364,9 +364,10 @@ def streaming_pip_counts(
     vectorized refine), applied to a stream, rolled into event-time
     windows — the "CQL filter on stream" equivalence, per-polygon.
     Stream-static joins need no state; only the windowed count does."""
-    from geomesa_spark.operators.spatial_join import broadcast_pip_join
+    from geomesa_spark.operators.spatial_join import spatial_join
 
-    matched = broadcast_pip_join(stream.withWatermark(ts_col, watermark), polys, lon_col, lat_col, level)
+    # broadcast, never salted: the salted path samples its input for hot cells
+    matched = spatial_join(stream.withWatermark(ts_col, watermark), polys, "broadcast", lon_col, lat_col, level)
     return (
         matched.groupBy(F.window(ts_col, window).alias("win"), "polygon_id")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -59,7 +59,7 @@ def main() -> None:
         spark, args.checkpoint_root, "entities", parts, make_chunk, input_desc=f"synth:{chunk_size}"
     )
 
-    joined = SJ.broadcast_pip_join(entities, synth.polygons(), level=args.level)
+    joined = SJ.spatial_join(entities, synth.polygons(), strategy="broadcast", level=args.level)
     counts = joined.groupBy("polygon_id").agg(
         F.count(F.lit(1)).alias("n_mentions"), F.countDistinct("url").alias("n_pages")
     )

@@ -34,6 +34,7 @@ import numpy as np
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
+from geomesa_spark.functions.st_functions import _relate  # noqa: E402
 from jobs.overlay_mc_audit import _bbox, _member, _near_any_edge, gen_pair_ext  # noqa: E402
 
 
@@ -56,7 +57,7 @@ def main() -> int:
         for a, b in pairs:
             ga, gb = geo.parse_wkt(a), geo.parse_wkt(b)
             try:
-                r = geo.relate_geoms(*ga, *gb)
+                r = _relate(ga, gb)
                 mat = geo.de9im(r)
                 covers = geo.pred_covers(r)
                 covered = geo.pred_covered_by(r)

@@ -153,7 +153,7 @@ def test_entity_polygon_pdf_equals_pip_join(spark):
     tags = contract.entity_polygon_pdf(level)
     gaz = synth.gazetteer_pdf().rename(columns={"name": "entity"})
     pts = spark.createDataFrame(gaz)
-    joined = SJ.broadcast_pip_join(pts, synth.polygons(), level=level).select("entity", "polygon_id").collect()
+    joined = SJ.spatial_join(pts, synth.polygons(), strategy="broadcast", level=level).select("entity", "polygon_id").collect()
     want = sorted((r["entity"], r["polygon_id"]) for r in joined)
     assert sorted(tags.itertuples(index=False, name=None)) == want
     assert not tags.duplicated().any()

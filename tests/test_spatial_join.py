@@ -47,9 +47,20 @@ def _pairs(df):
     return set((r["pid"], r["polygon_id"]) for r in df.select("pid", "polygon_id").collect())
 
 
-def test_broadcast_pip_join_matches_oracle(points_df, polys, oracle_pairs):
-    got = _pairs(sj.broadcast_pip_join(points_df, polys))
+def test_spatial_join_broadcast_matches_oracle(points_df, polys, oracle_pairs):
+    got = _pairs(sj.spatial_join(points_df, polys, strategy="broadcast"))
     assert got == oracle_pairs
+
+
+def test_pip_match_pdf_matches_spatial_join(points_df, points_pdf, polys, oracle_pairs):
+    """The driver-side join (hot cell included) returns the Spark
+    broadcast join's rows and the brute-force oracle's pairs."""
+    got = sj.pip_match_pdf(points_pdf, polys, level=8)
+    pairs = list(zip(got["pid"], got["polygon_id"]))
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == oracle_pairs
+    assert set(pairs) == _pairs(sj.spatial_join(points_df, polys, strategy="broadcast"))
+    assert list(got.columns) == ["pid", "lon", "lat", "polygon_id"]
 
 
 def test_cover_full_cells_short_circuit(polys):
@@ -59,11 +70,11 @@ def test_cover_full_cells_short_circuit(polys):
     assert not cover.duplicated(["cell", "polygon_id"]).any()
 
 
-def test_grid_pip_join_salted_matches_broadcast(points_df, polys, oracle_pairs):
-    got = _pairs(sj.grid_pip_join(points_df, polys, salt=4, point_key_col="pid"))
+def test_spatial_join_salted_matches_broadcast(points_df, polys, oracle_pairs):
+    got = _pairs(sj.spatial_join(points_df, polys, strategy="salted", point_key_col="pid"))
     assert got == oracle_pairs
     # and with salting forced off
-    got_nosalt = _pairs(sj.grid_pip_join(points_df, polys, skew_cells=[], point_key_col="pid"))
+    got_nosalt = _pairs(sj.spatial_join(points_df, polys, strategy="salted", skew_cells=[], point_key_col="pid"))
     assert got_nosalt == oracle_pairs
 
 
@@ -75,8 +86,9 @@ def test_hot_cells_detected(points_df, polys):
 
 def test_semi_anti(points_df, polys, points_pdf, oracle_pairs):
     covered_pids = {p for p, _ in oracle_pairs}
-    semi = sj.broadcast_pip_join(points_df, polys, how="left_semi", point_key=["pid"])
-    anti = sj.broadcast_pip_join(points_df, polys, how="left_anti", point_key=["pid"])
+    matched = sj.spatial_join(points_df, polys, strategy="broadcast").select("pid").distinct()
+    semi = points_df.join(matched, "pid", "left_semi")
+    anti = points_df.join(matched, "pid", "left_anti")
     semi_ids = {r["pid"] for r in semi.select("pid").collect()}
     anti_ids = {r["pid"] for r in anti.select("pid").collect()}
     assert semi_ids == covered_pids
@@ -85,7 +97,7 @@ def test_semi_anti(points_df, polys, points_pdf, oracle_pairs):
 
 
 def test_loose_bbox_superset(points_df, polys, oracle_pairs):
-    loose = _pairs(sj.broadcast_pip_join(points_df, polys, refine=False))
+    loose = _pairs(sj.spatial_join(points_df, polys, strategy="broadcast", refine=False))
     assert loose >= oracle_pairs
 
 
@@ -102,7 +114,7 @@ def test_distance_join_matches_oracle(points_df, points_pdf):
 
 
 def test_broadcast_join_plan_is_broadcast_and_pushes_filters(points_df, polys):
-    plan = sj.broadcast_pip_join(points_df, polys)._jdf.queryExecution().executedPlan().toString()
+    plan = sj.spatial_join(points_df, polys, strategy="broadcast")._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
@@ -120,6 +132,13 @@ def test_spatial_join_auto_strategy_flips_on_cover_size(points_df, polys, oracle
     # both strategies produce identical pairs
     assert _pairs(auto) == oracle_pairs
     assert _pairs(salted) == oracle_pairs
+
+
+def test_unknown_strategy_and_metric_raise(points_df, polys):
+    with pytest.raises(ValueError):
+        sj.spatial_join(points_df, polys, strategy="merge")
+    with pytest.raises(ValueError):
+        sj.distance_join(points_df, pd.DataFrame({"qid": [0], "lon": [0.0], "lat": [0.0]}), 1.0, metric="euclid")
 
 
 def test_hot_cells_sampled_matches_full(points_df):

@@ -85,7 +85,7 @@ def test_area_and_centroid_ignore_ring_orientation():
     """WKT does not fix ring orientation: a hole wound like its shell is
     still a hole. Both spellings give |shell| − |hole| and the same
     centroid, as a POLYGON, a MULTIPOLYGON member and a
-    GEOMETRYCOLLECTION member (whose st_centroid is its vertex mean)."""
+    GEOMETRYCOLLECTION member."""
     shell = "(0 0, 4 0, 4 4, 0 4, 0 0)"
     unit = "((10 10, 11 10, 11 11, 10 11, 10 10))"
     got = []
@@ -1108,3 +1108,115 @@ def test_geometryN_member_or_null():
     got = ST.st_geometryN.func(pd.Series([w for w, _n in rows]), pd.Series([n for _w, n in rows]))
     want = [members[w][n - 1] if 1 <= n <= len(members[w]) else None for w, n in rows]
     assert list(got) == want
+
+
+SEVEN_KINDS = [
+    "POINT (1 2)",
+    "LINESTRING (0 0, 1 1, 2 0)",
+    "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 2, 2 2, 2 1, 1 1))",
+    "MULTIPOINT ((0 0), (3 1))",
+    "MULTILINESTRING ((0 0, 1 1), (2 2, 3 0))",
+    "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((5 5, 6 5, 6 6, 5 6, 5 5)))",
+    "GEOMETRYCOLLECTION (POINT (9 9), LINESTRING (0 0, 1 1), POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0)))",
+]
+
+
+def test_convex_hull_every_kind():
+    """The hull of all vertices, a collection's members included (a
+    collection was null: its kernel indexed the member list)."""
+    got = ST.st_convexHull.func(pd.Series(SEVEN_KINDS))
+    assert got.notna().all()
+    assert got.iloc[6] == "POLYGON ((0 0, 4 0, 9 9, 0 4, 0 0))"
+    assert got.iloc[5] == "POLYGON ((0 0, 1 0, 6 5, 6 6, 5 6, 0 1, 0 0))"
+    assert got.iloc[2] == "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+
+
+def test_idl_safe_geom_every_kind():
+    """Only a POLYGON wider than 180° splits; every other geometry comes
+    back unchanged (a POINT was written as a POLYGON, a LINESTRING as an
+    unclosed POLYGON, a MULTIPOLYGON's second member as a hole, and a
+    collection was null)."""
+    got = ST.st_idlSafeGeom.func(pd.Series(SEVEN_KINDS))
+    assert list(got) == SEVEN_KINDS
+    wide = ST.st_idlSafeGeom.func(pd.Series(["POLYGON ((170 0, -170 0, -170 10, 170 10, 170 0))"]))
+    assert wide.iloc[0].startswith("MULTIPOLYGON")
+
+
+def test_per_unique_propagates_kernel_errors(monkeypatch):
+    """An exception inside an accessor kernel is a kernel bug: it
+    propagates instead of becoming null."""
+
+    def broken(*_g):
+        raise RuntimeError("kernel bug")
+
+    monkeypatch.setattr(geo, "geom_dim", broken)
+    with pytest.raises(RuntimeError):
+        ST.st_dimension.func(pd.Series(["POINT (1 2)"]))
+
+
+def test_centroid_of_collection_uses_highest_dimension():
+    """JTS: a collection's centroid is that of its highest-dimension
+    parts — its polygons area-weighted (the point does not pull it), else
+    its lines length-weighted, else its points' mean."""
+    got = ST.st_centroid.func(
+        pd.Series(
+            [
+                "GEOMETRYCOLLECTION (POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 2, 2 2, 2 1, 1 1)), POINT (9 9))",
+                "GEOMETRYCOLLECTION (LINESTRING (0 0, 4 0), POINT (9 9), LINESTRING (0 2, 0 4))",
+                "GEOMETRYCOLLECTION (POINT (0 0), POINT (3 6))",
+            ]
+        )
+    )
+    (x, y), = geo.parse_wkt(got.iloc[0])[1]
+    assert x == y == pytest.approx((16 * 2.0 - 1.5) / 15)
+    (x, y), = geo.parse_wkt(got.iloc[1])[1]
+    assert (x, y) == pytest.approx(((2.0 * 4 + 0.0 * 2) / 6, (0.0 * 4 + 3.0 * 2) / 6))
+    assert got.iloc[2] == "POINT (1.5 3.0)"
+
+
+def test_make_point_m_writes_negative_zero_as_zero():
+    got = ST.st_makePointM.func(pd.Series([-0.0, 1.5]), pd.Series([1.0, -0.0]), pd.Series([-0.0, 2.0]))
+    assert list(got) == ["POINT M (0 1 0)", "POINT M (1.5 0 2)"]
+
+
+def _relations(a, b):
+    a, b = pd.Series([a]), pd.Series([b])
+    return (
+        ST.st_covers.func(a, b).iloc[0],
+        ST.st_contains.func(a, b).iloc[0],
+        ST.st_within.func(b, a).iloc[0],
+        ST.st_relate.func(a, b).iloc[0],
+        ST.st_relateBool.func(a, b, pd.Series(["T*****FF*"])).iloc[0],
+    )
+
+
+_BOX_ACROSS = "POLYGON ((0.5 0.2, 1.5 0.2, 1.5 0.8, 0.5 0.8, 0.5 0.2))"
+_GC_OVERLAPPING = "GEOMETRYCOLLECTION (POLYGON ((0 0, 1.2 0, 1.2 1, 0 1, 0 0)), POLYGON ((0.8 0, 2 0, 2 1, 0.8 1, 0.8 0)))"
+_ONE_MEMBER = "POLYGON ((1 7, 5 7, 5 9, 1 9, 1 7))"
+
+
+@pytest.mark.parametrize(
+    "a,b,matrix",
+    [
+        pytest.param(
+            "GEOMETRYCOLLECTION (POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0)), POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0)))",
+            _BOX_ACROSS, "212FF1FF2", id="gc_touching_members",
+        ),
+        pytest.param(_GC_OVERLAPPING, _BOX_ACROSS, "212FF1FF2", id="gc_overlapping_members"),
+        pytest.param(_GC_OVERLAPPING, "LINESTRING (0.5 0.5, 1.5 0.5)", "102FF1FF2", id="line_through_gc_overlap"),
+        pytest.param(
+            "MULTIPOLYGON (((8 7, 9 7, 9 8, 8 8, 8 7)), ((1 7, 5 7, 5 9, 1 9, 1 7)))",
+            _ONE_MEMBER, "2F2F11FF2", id="multipolygon_member_equal",
+        ),
+        pytest.param(
+            "GEOMETRYCOLLECTION (POLYGON ((8 7, 9 7, 9 8, 8 8, 8 7)), POLYGON ((1 7, 5 7, 5 9, 1 9, 1 7)))",
+            _ONE_MEMBER, "2F2F11FF2", id="gc_member_equal",
+        ),
+    ],
+)
+def test_relate_inside_multipart(a, b, matrix):
+    """B lies inside A, though A's parts touch or overlap each other
+    (a collection's members were related one by one), or B equals one
+    of A's parts (every sample of either lay on the other's boundary or
+    outside it, and II read F)."""
+    assert _relations(a, b) == (True, True, True, matrix, True)

@@ -261,7 +261,7 @@ def test_stateful_track_assembler_matches_declarative(spark, session_stream_dir)
 def test_streaming_pip_counts_matches_batch(spark, session_stream_dir, tmp_path):
     """The streaming PIP join (stream-static cover join + refine +
     event-time windows) produces exactly the batch engine's counts."""
-    from geomesa_spark.operators.spatial_join import broadcast_pip_join
+    from geomesa_spark.operators.spatial_join import spatial_join
 
     # points stream: deterministic fixes spread across polygons
     d = str(tmp_path / "pip_stream")
@@ -286,7 +286,7 @@ def test_streaming_pip_counts_matches_batch(spark, session_stream_dir, tmp_path)
     )
     got = spark.sql("select * from pip_stream_t").toPandas()
 
-    batch = broadcast_pip_join(spark.createDataFrame(pdf), polys)
+    batch = spatial_join(spark.createDataFrame(pdf), polys, strategy="broadcast")
     want = (
         batch.groupBy(
             F.window("warc_ts", "10 minutes").alias("win"), "polygon_id"

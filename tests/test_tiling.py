@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geomesa_spark.operators import tiling as T
-from geomesa_spark.operators.spatial_join import broadcast_pip_join
+from geomesa_spark.operators.spatial_join import spatial_join
 from geomesa_spark.sources import synth
 from tests.oracle import brute_pip_join
 
@@ -100,7 +100,7 @@ def test_pick_zoom():
 def test_zonal_stats_matches_brute(spark, points_pdf):
     polys = synth.polygons()
     pts = spark.createDataFrame(points_pdf)
-    joined = broadcast_pip_join(pts, polys, level=8)
+    joined = spatial_join(pts, polys, strategy="broadcast", level=8)
     zs = T.zonal_stats(joined, value_col="val").toPandas()
     brute = brute_pip_join(points_pdf.set_index("pid"), polys)
     import collections
