@@ -2326,8 +2326,8 @@ def q_corpus_curation(spark, sf_dir):
 EMBED_NEARDUP_THRESHOLD = 0.45
 
 # brute all-pairs cosine oracle; ALSO the oracle for the LSH-bucketed
-# scale path (embed_neardup_lsh), whose contract at the fixture's band
-# parameters is recall 1.0 — identical output, candidates-only work
+# scale path (embed_neardup_lsh), which matches it at sf0.01 (14 pairs)
+# but not at sf0.1 (0 of 144: see q_embed_neardup_lsh)
 _EMBED_NEARDUP_SQL = (
     "with e as (select vec_id, cast(embedding as double[]) de from embeddings), "
     "n as (select vec_id, de, sqrt(list_dot_product(de, de)) nrm from e) "
@@ -2364,12 +2364,14 @@ def q_embed_neardup_lsh(spark, sf_dir):
     """LSH-bucketed embedding near-dup pairs — the scale twin of the
     brute embed_neardup_pairs: random-hyperplane band buckets generate
     candidate id pairs (equi-join, bucket-capped — never all pairs),
-    exact rounded-cosine verification runs on candidates only. At the
-    fixture's band parameters (8 bands × 2 bits) recall is 1.0, so the
-    oracle is the SAME brute all-pairs SQL — an exact-equality check
-    that the bucketed path loses nothing, not a recall estimate. At
-    corpus scale the knobs move to more/wider bands (e.g. 8×8 bits) and
-    the same shape holds with measured recall (tests/test_ann.py)."""
+    exact rounded-cosine verification runs on candidates only. The
+    oracle is the SAME brute all-pairs SQL. Measured recall at the band
+    parameters used here (16 bits in 8 bands × 2 bits, bucket cap 256):
+    14/14 at sf0.01, but 0/144 at sf0.1, where the largest of the 2,000
+    embeddings' buckets holds 571 members and every bucket is over the
+    cap (uncapped: 143/144; 4-bit bands: 76/144; 24 bits in 3-bit
+    bands: 112/144). Choosing parameters that keep it exact is ROADMAP
+    item 2."""
     e = _load(spark, sf_dir, "embeddings")
     return embed_neardup_pairs_lsh(e, threshold=EMBED_NEARDUP_THRESHOLD, band_bits=2)
 

@@ -278,11 +278,10 @@ def split_antimeridian(min_lon, min_lat, max_lon, max_lat):
 
 
 def convex_hull(lon, lat) -> np.ndarray:
-    """(k, 2) closed CCW hull ring of the input points."""
+    """(k, 2) closed CCW hull ring of the input points; the one distinct
+    point (1, 2), or the two extreme points of collinear input (2, 2)."""
     pts = np.stack([np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64)], axis=1)
     pts = np.unique(pts, axis=0)  # sorts lexicographically
-    if len(pts) <= 2:
-        return np.vstack([pts, pts[:1]])
     def half(points):
         chain = []
         for p in points:
@@ -293,6 +292,8 @@ def convex_hull(lon, lat) -> np.ndarray:
     lower = half(pts)
     upper = half(pts[::-1])
     ring = lower[:-1] + upper[:-1]
+    if len(ring) < 3:
+        return pts[[0, -1]] if len(pts) > 1 else pts
     ring.append(ring[0])
     return np.asarray(ring)
 
@@ -593,43 +594,6 @@ def _edge_midpoints(coords, ring_offsets):
     return (x1 + x2) / 2.0, (y1 + y2) / 2.0
 
 
-def _contact_interval_samples(coords, ring_offsets, other_pts):
-    """Midpoints of every interval between consecutive contact
-    parameters along each edge of (coords, ring_offsets), where a
-    contact parameter is an ``other_pts`` vertex lying ON the edge.
-    Along an edge, classification against the other polygon can change
-    only at such points (with proper crossings excluded), so these
-    samples make vertex+midpoint boundary sampling exact under
-    degenerate contact — e.g. when every plain sample lands ON the
-    other's boundary and misses an interior escape between two of its
-    vertices. Every returned point lies on this geometry's boundary by
-    construction, so extra samples are always sound."""
-    pts = np.asarray(other_pts, dtype=np.float64)
-    ex: list = []
-    ey: list = []
-    for r in range(len(ring_offsets) - 1):
-        ring = np.asarray(coords[ring_offsets[r]:ring_offsets[r + 1]], dtype=np.float64)
-        for e in range(len(ring) - 1):
-            p, q = ring[e], ring[e + 1]
-            d = q - p
-            l2 = float(d @ d)
-            if l2 == 0.0:
-                continue
-            vx = pts[:, 0] - p[0]
-            vy = pts[:, 1] - p[1]
-            crs = d[0] * vy - d[1] * vx
-            t = (vx * d[0] + vy * d[1]) / l2
-            on = (np.abs(crs) < 1e-12 * np.sqrt(l2)) & (t > 1e-12) & (t < 1 - 1e-12)
-            if not on.any():
-                continue
-            ts = sorted({0.0, 1.0, *np.round(t[on], 15).tolist()})
-            for a0, a1 in zip(ts[:-1], ts[1:]):
-                tm = (a0 + a1) / 2.0
-                ex.append(p[0] + tm * d[0])
-                ey.append(p[1] + tm * d[1])
-    return np.asarray(ex), np.asarray(ey)
-
-
 def _normalize_ring(ring: np.ndarray) -> tuple:
     """Canonical form of a closed ring: drop the duplicate endpoint,
     orient CCW (shoelace), rotate to start at the lexicographic min."""
@@ -677,14 +641,13 @@ class Relate:
       bb_dim1 — boundaries share a positive-length (collinear) piece
       a_covers_b / b_covers_a — closure containment
       equal — geometric equality
-      proper_cross — transversal edge crossing exists
+      proper_cross — transversal edge crossing exists (line operands)
       any_contact — closures intersect at all
       dim_a / dim_b — topological dimension (0/1/2)
     """
 
     __slots__ = ("ii", "bb", "bb_dim1", "a_covers_b", "b_covers_a", "equal",
-                 "proper_cross", "any_contact", "dim_a", "dim_b",
-                 "a_sample_in_b", "b_sample_in_a", "matrix")
+                 "proper_cross", "any_contact", "dim_a", "dim_b", "matrix")
 
     def __init__(self, **kw):
         for s in self.__slots__:
@@ -721,47 +684,6 @@ def line_boundary_points(coords: np.ndarray, ring_offsets: np.ndarray) -> np.nda
         cnt[(float(run[-1, 0]), float(run[-1, 1]))] += 1
     pts = [p for p, n in cnt.items() if n % 2 == 1]
     return np.asarray(pts, dtype=np.float64).reshape(-1, 2)
-
-
-def _escape_witness(ca, oa, cb, ob) -> bool:
-    """EXACT disproof of "B ⊆ closure(A)" for regions B's boundary never
-    enters: True iff some point OUTSIDE closure(A) lies strictly inside
-    B. Boundary sampling cannot see such an escape (B's interior
-    swallows a whole complement component of A — a hole region, an
-    island-in-hole annulus, or the gap between two A members), so this
-    sweeps horizontal slices at the midpoint between every pair of
-    consecutive distinct vertex y's of A: within a slice no A edge
-    starts/ends, so the crossing parity between consecutive crossing
-    x's is constant, and every bounded complement component spans at
-    least one slice (segment extrema are vertices). Each even-parity
-    (outside-A) interval midpoint is tested for strict containment in
-    B. O(V_A² + V_A·V_B) like the relate itself."""
-    ca = np.asarray(ca, dtype=np.float64)
-    x1, y1, x2, y2 = polygon_edges(ca, np.asarray(oa))
-    ys = np.unique(ca[:, 1])
-    for ym in (ys[:-1] + ys[1:]) / 2.0:
-        lo = np.minimum(y1, y2)
-        hi = np.maximum(y1, y2)
-        crossing = (lo < ym) & (ym < hi)
-        if not crossing.any():
-            continue
-        t = (ym - y1[crossing]) / (y2[crossing] - y1[crossing])
-        xs = np.sort(x1[crossing] + t * (x2[crossing] - x1[crossing]))
-        if len(xs) < 2:
-            continue
-        mids = (xs[:-1] + xs[1:]) / 2.0
-        # interval k (between xs[k], xs[k+1]) has k+1 crossings to its
-        # left: odd ⇒ inside A, even ⇒ outside — take the even ones.
-        # A zero-width interval (duplicate xs from a doubled or
-        # self-touching edge) has its midpoint ON A's boundary, so it
-        # witnesses nothing
-        outside = mids[((np.arange(len(mids)) + 1) % 2 == 0) & (np.diff(xs) > 0)]
-        if len(outside) == 0:
-            continue
-        cls = classify_points_in_polygon(outside, np.full(len(outside), ym), cb, np.asarray(ob))
-        if (cls == 2).any():
-            return True
-    return False
 
 
 def _transpose_matrix(m: str | None) -> str | None:
@@ -850,7 +772,10 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
     side's own parts (a connected part inside the intersection of
     separated open exteriors lies inside one of them, which makes the
     min exact — holed or touching parts break that argument, so those
-    collections keep the dim-based approximate fallback)."""
+    collections take their exterior cells from the dim-based approximate
+    fallback). The interior and boundary cells presume same-side parts
+    with disjoint interiors, as st_functions._relate's normal form
+    gives them. None where a part relate refuses."""
     parts_a = geom_parts(ka, ca, oa)
     parts_b = geom_parts(kb, cb, ob)
     r = Relate(dim_a=geom_dim(ka, ca), dim_b=geom_dim(kb, cb), equal=geoms_equal(ka, ca, oa, kb, cb, ob))
@@ -861,6 +786,8 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
     for i, pa in enumerate(parts_a):
         for j, pb in enumerate(parts_b):
             rr = relate_geoms(*pa, *pb)
+            if rr is None:
+                return None
             r.ii = r.ii or rr.ii
             r.bb = r.bb or rr.bb
             r.bb_dim1 = r.bb_dim1 or rr.bb_dim1
@@ -876,8 +803,9 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
     # different opposite-part exteriors, breaking the per-opposite-part
     # MIN for the E row/column) and (b) same-side parts have separated
     # closures (a connected opposite part covered by two TOUCHING parts
-    # jointly but neither alone breaks the same MIN). Otherwise leave
-    # the matrix to the dim-based fallback — approximate, documented.
+    # jointly but neither alone breaks the same MIN). Otherwise the E
+    # row/column come from the dim-based fallback — approximate,
+    # documented.
     def _sep(parts):
         for x in range(len(parts)):
             kx, cx, _ox = parts[x]
@@ -889,15 +817,17 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
                         or cx[:, 1].max() < cy[:, 1].min() or cy[:, 1].max() < cx[:, 1].min()
                     ):
                         continue
-                if relate_geoms(*parts[x], *parts[y]).any_contact:
+                rx = relate_geoms(*parts[x], *parts[y])
+                if rx is None:
+                    return None  # a refused relate
+                if rx.any_contact:
                     return False
         return True
 
-    exact_ok = all(
-        k2 != "POLYGON" or len(o2) == 2 for k2, _c2, o2 in parts_a + parts_b
-    ) and _sep(parts_a) and _sep(parts_b)
-    if not exact_ok:
-        return r
+    sep = all(k2 != "POLYGON" or len(o2) == 2 for k2, _c2, o2 in parts_a + parts_b) and _sep(parts_a) and _sep(parts_b)
+    if sep is None:
+        return None
+    approx = None if sep else de9im(r)
     rank = {"F": -1, "0": 0, "1": 1, "2": 2}
     sym = "F012"
 
@@ -933,6 +863,8 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
                 v = 2
             elif row < 2 and col < 2:
                 v = max(max(vr) for vr in vals)
+            elif approx is not None:
+                v = rank[approx[idx]]
             elif col == 2:  # X(A) ∩ E(B): union over A parts, ∩ of B exteriors
                 if row == 1 and nb > 1:
                     v = max(
@@ -957,22 +889,30 @@ def _relate_collection(ka, ca, oa, kb, cb, ob) -> Relate:
     return r
 
 
-def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
-    """Exact relate for all seven OGC kinds (MULTIPOLYGON as multi-ring
-    parity; GEOMETRYCOLLECTION by part decomposition). Containment uses:
-    no transversal crossing + every vertex AND edge-midpoint of the
-    contained geometry inside or on the boundary of the container (exact
-    when crossings are detected, which the edge tests guarantee for
-    non-degenerate inputs)."""
+def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate | None:
+    """Exact relate for all seven OGC kinds (GEOMETRYCOLLECTION by part
+    decomposition). A (MULTI)POLYGON pair is the slab sweep's matrix
+    (slab_overlay.slab_relate), its fields read from the matrix; None
+    where the sweep refuses. Line and point pairs: containment is no
+    transversal crossing + every vertex AND edge-midpoint of the
+    contained geometry inside or on the boundary of the container."""
     if ka == "GEOMETRYCOLLECTION" or kb == "GEOMETRYCOLLECTION":
         return _relate_collection(ka, ca, oa, kb, cb, ob)
     if ka in ("POINT", "MULTIPOINT") or kb in ("POINT", "MULTIPOINT"):
         return _relate_pointset(ka, ca, oa, kb, cb, ob)
+    if ka in ("POLYGON", "MULTIPOLYGON") and kb in ("POLYGON", "MULTIPOLYGON"):
+        from geomesa_spark.functions.slab_overlay import slab_relate  # slab_overlay imports this module
+
+        m = slab_relate((ka, ca, oa), (kb, cb, ob))
+        if m is None:
+            return None
+        return Relate(
+            dim_a=2, dim_b=2, equal=geoms_equal(ka, ca, oa, kb, cb, ob), matrix=m, ii=m[0] != "F",
+            a_covers_b=m[6] == m[7] == "F", b_covers_a=m[2] == m[5] == "F", bb=m[4] != "F",
+            bb_dim1=m[4] == "1", any_contact=any(m[i] != "F" for i in (0, 1, 3, 4)),
+        )
 
     r = Relate(dim_a=_DIM[ka], dim_b=_DIM[kb], equal=geoms_equal(ka, ca, oa, kb, cb, ob))
-
-    def poly_like(k):
-        return k in ("POLYGON", "MULTIPOLYGON")
 
     # both are 1/2-dimensional: edge machinery
     ea = polygon_edges(ca, oa)
@@ -986,51 +926,6 @@ def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
     mbx, mby = _edge_midpoints(cb, ob)
     sax = np.concatenate([ca[:, 0], mx_a]); say = np.concatenate([ca[:, 1], my_a])
     sbx = np.concatenate([cb[:, 0], mbx]); sby = np.concatenate([cb[:, 1], mby])
-
-    if poly_like(ka) and poly_like(kb):
-        if touch or col_overlap:
-            # degenerate contact: plain samples can ALL land on the
-            # other's boundary while an interior escape hides between
-            # two of its vertices — add contact-interval midpoints
-            ax2, ay2 = _contact_interval_samples(ca, oa, cb)
-            if len(ax2):
-                sax = np.concatenate([sax, ax2])
-                say = np.concatenate([say, ay2])
-            bx2, by2 = _contact_interval_samples(cb, ob, ca)
-            if len(bx2):
-                sbx = np.concatenate([sbx, bx2])
-                sby = np.concatenate([sby, by2])
-        cls_b_in_a = classify_points_in_polygon(sbx, sby, ca, oa)
-        cls_a_in_b = classify_points_in_polygon(sax, say, cb, ob)
-        a_sample_in = (cls_a_in_b == 2).any()
-        b_sample_in = (cls_b_in_a == 2).any()
-        # proper crossings are boundary∩boundary points too
-        boundary_contact = proper or touch or (cls_a_in_b == 1).any() or (cls_b_in_a == 1).any()
-        r.ii = bool(proper or a_sample_in or b_sample_in or r.equal)
-        r.a_sample_in_b = bool(a_sample_in)
-        r.b_sample_in_a = bool(b_sample_in)
-        r.bb = bool(boundary_contact or r.equal)
-        # `or r.equal`: identical geometries trivially cover each other —
-        # decided from canonical coordinates, immune to the midpoint
-        # rounding that can misclassify boundary samples on thin shapes
-        r.a_covers_b = bool((not proper and (cls_b_in_a > 0).all()) or r.equal)
-        r.b_covers_a = bool((not proper and (cls_a_in_b > 0).all()) or r.equal)
-        # complement correction: boundary samples can't witness "the
-        # other polygon fills a complement component of mine" — a hole,
-        # an island-in-hole annulus, or the gap between two members
-        # (a single hole-centroid probe missed the annulus case: the
-        # centroid landed inside the nested island). The exact scanline
-        # witness sweeps every complement component instead.
-        if r.a_covers_b and not r.equal and _escape_witness(ca, oa, cb, ob):
-            r.a_covers_b = False
-        if r.b_covers_a and not r.equal and _escape_witness(cb, ob, ca, oa):
-            r.b_covers_a = False
-        # a polygon covered by the other shares interior with it even when
-        # every sample lands on the other's boundary (B equal to one
-        # member of a MULTIPOLYGON A)
-        r.ii = r.ii or r.a_covers_b or r.b_covers_a
-        r.any_contact = bool(r.ii or r.bb)
-        return r
 
     line_like = ("LINESTRING", "MULTILINESTRING")
     if ka in line_like and kb in line_like:
@@ -1076,18 +971,12 @@ def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
         return r
 
     # line × polygon (either order): orient as (line L, polygon P)
-    flip = poly_like(ka)
-    lc, lo, le = (cb, ob, eb) if flip else (ca, oa, ea)
-    pc, po, pe = (ca, oa, ea) if flip else (cb, ob, eb)
-    lmx, lmy = _edge_midpoints(lc, lo)
-    bnd_l = line_boundary_points(lc, lo)
-    bnd_set = set(map(tuple, bnd_l))
-    slx = np.concatenate([lc[:, 0], lmx])
-    sly = np.concatenate([lc[:, 1], lmy])
+    flip = ka in ("POLYGON", "MULTIPOLYGON")
+    lc, lo, le, slx, sly = (cb, ob, eb, sbx, sby) if flip else (ca, oa, ea, sax, say)
+    pc, po, pbx, pby = (ca, oa, sax, say) if flip else (cb, ob, sbx, sby)
+    bnd_set = set(map(tuple, line_boundary_points(lc, lo)))
     cls = classify_points_in_polygon(slx, sly, pc, po)
-    is_bnd = np.asarray(
-        [tuple(p) in bnd_set for p in lc] + [False] * len(lmx), dtype=bool
-    )
+    is_bnd = np.asarray([tuple(p) in bnd_set for p in lc] + [False] * (len(slx) - len(lc)), dtype=bool)
     cls_int, cls_bnd = cls[~is_bnd], cls[is_bnd]
     any_in, any_out, any_bnd = (cls == 2).any(), (cls == 0).any(), (cls == 1).any()
     # polygon vertices sitting on the line (B(P) ∩ L contacts the samples
@@ -1099,8 +988,6 @@ def relate_geoms(ka, ca, oa, kb, cb, ob) -> Relate:
     covers = bool(not proper and (cls > 0).all())
     contact = bool(proper or touch or any_in or any_bnd)
     # polygon boundary ⊆ line? (E(L) ∩ B(P) empty only then)
-    pbx = np.concatenate([pc[:, 0], _edge_midpoints(pc, po)[0]])
-    pby = np.concatenate([pc[:, 1], _edge_midpoints(pc, po)[1]])
     pb_on_l = bool(points_on_segments(pbx, pby, *le).all()) and not proper
     m_lp = (
         ("1" if (proper or any_in) else "F")                       # I(L)∩I(P): a strict-inside point ⇒ a 1-dim piece inside
@@ -1193,16 +1080,6 @@ def de9im(r: Relate) -> str:
     dim-based fallback only for collection combinations."""
     if r.matrix is not None:
         return r.matrix
-    if r.dim_a == 2 and r.dim_b == 2:
-        ii = "2" if r.ii else "F"
-        ib = "1" if (r.b_sample_in_a or (r.proper_cross and not r.a_covers_b)) else "F"
-        ie = "F" if r.b_covers_a else "2"
-        bi = "1" if (r.a_sample_in_b or (r.proper_cross and not r.b_covers_a)) else "F"
-        bb = ("1" if r.bb_dim1 else "0") if r.bb else "F"
-        be = "F" if r.b_covers_a else "1"
-        ei = "F" if r.a_covers_b else "2"
-        eb = "F" if r.a_covers_b else "1"
-        return ii + ib + ie + bi + bb + be + ei + eb + "2"
     if r.dim_a == 0 and r.dim_b == 0:
         return "0FFFFFFF2" if r.ii else "FF0FFFFF2"
     # mixed / line combos: dims approximated from the classification
@@ -1432,16 +1309,21 @@ def min_distance_and_closest(ka, ca, oa, kb, cb, ob):
     When the geometries intersect, returns an actual intersection witness
     (contained vertex, or the solved crossing point of a properly-crossing
     edge pair) — matching JTS DistanceOp: the returned point lies in
-    A ∩ B, never merely "somewhere on A"."""
+    A ∩ B, never merely "somewhere on A". None where the relate
+    refuses."""
     if ka == "GEOMETRYCOLLECTION" or kb == "GEOMETRYCOLLECTION":
         best = (np.inf, None)
         for pa in geom_parts(ka, ca, oa):
             for pb in geom_parts(kb, cb, ob):
-                d, p = min_distance_and_closest(*pa, *pb)
-                if d < best[0]:
-                    best = (d, p)
+                got = min_distance_and_closest(*pa, *pb)
+                if got is None:
+                    return None
+                if got[0] < best[0]:
+                    best = got
         return best
     r = relate_geoms(ka, ca, oa, kb, cb, ob)
+    if r is None:
+        return None
     if r.any_contact:
         if _is_pointlike(ka):
             for x, y in ca:

@@ -1,8 +1,11 @@
 """Slab-sweep region kernel: the whole areal path of st_intersection
 / st_union / st_difference / st_symDifference (st_functions._areal_overlay,
 via slab_boolean, and the areal part of a GEOMETRYCOLLECTION operand,
-st_functions._gc_normalized via slab_union) and the whole of st_buffer
-(st_functions._buffer_geom, via slab_region).
+st_functions._gc_normalized via slab_union), the whole of st_buffer
+(st_functions._buffer_geom, via slab_region) and the DE-9IM matrix of
+two (MULTI)POLYGONs behind every relation predicate
+(geometry.relate_geoms, via slab_relate, which reads the matrix off the
+same slab walk without assembling rings).
 
 Crossing-based kernels (Greiner–Hormann, half-plane clips) must
 special-case boundaries that interact degenerately
@@ -80,7 +83,9 @@ def ring_edges(coords: np.ndarray, offs) -> np.ndarray:
 
 def crossings(e: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(i, j, x) of every proper crossing (interior to both edges)
-    between two edges e[i], e[j], i < j, in the order of the pairs."""
+    between two edges e[i], e[j], i < j, in the order of the pairs. Two
+    edges with a common endpoint do not cross (they meet only there
+    unless collinear), whatever the rounding of t and u says."""
     tab = np.empty((len(e), 6))  # per edge: x1, y1, dx, dy, min x, max x
     tab[:, :2] = e[:, :2]
     np.subtract(e[:, 2:], e[:, :2], out=tab[:, 2:4])
@@ -100,6 +105,7 @@ def crossings(e: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         t = (qx * b[:, 3] - qy * b[:, 2]) / d
         u = (qx * a[:, 3] - qy * a[:, 2]) / d
         ok = (np.minimum(t, u) > 0.0) & (np.maximum(t, u) < 1.0)
+        ok[ok] = ~(e[i[ok]].reshape(-1, 2, 1, 2) == e[j[ok]].reshape(-1, 1, 2, 2)).all(axis=3).any(axis=(1, 2))
         out.append((i[ok], j[ok], (a[:, 0] + t * a[:, 2])[ok]))
     if len(out) == 1:
         return out[0]
@@ -201,9 +207,14 @@ def _cuts(ea: np.ndarray, eb: np.ndarray):
     return crossings(e) if np.abs(e).max(initial=0.0) < np.finfo(np.float64).max * _TOL else None
 
 
-def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind):
-    """slab_region with the x of every crossing between its edges
-    (``cuts``) given."""
+def _slabs(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray):
+    """The one slab walk of the sweep's consumers (_sweep, slab_relate):
+    for each slab between consecutive cuts — every endpoint x of the
+    edges of both sets plus the x of every crossing between them
+    (``cuts``) — yield (x0, x1, groups), the edges spanning the slab
+    grouped by their (y at x0, y at x1) and ordered by midline, each
+    group ((y0, y1), [A winding step, B winding step, edge ids]); edge
+    ids below len(ea) are A's."""
     e = np.concatenate([ea, eb])
     xs = sorted(
         set(
@@ -221,21 +232,6 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind):
     na = len(ea)
     nxt = 0
     active: list = []
-    edge_pieces: list = []          # [tail, head] result boundary on edges
-    # a boundary piece that goes straight on from the previous slab's
-    # piece in the same direction — along an edge the whole piece lies
-    # on, or exactly collinear with it — extends that piece instead of
-    # starting a new one, so slab cuts and collinear edge joins leave no
-    # vertices on straight runs. Only a joint no other boundary piece
-    # meets is joined: the face walk needs every piece split where
-    # boundaries touch. Along a shared edge the joint is computed from
-    # that edge on both sides, so the join is exact; with the region on
-    # the same side before and after the joint no vertical piece ends
-    # there
-    ends: dict = {}                 # y at x0 -> [(piece index, region above, edges it lies on)]
-    vleft: dict = {}                # border x -> intervals approaching from the left slab
-    vright: dict = {}               # border x -> intervals from the right slab
-    area = 0.0
     for x0, x1 in zip(xs, xs[1:]):
         while nxt < len(entering) and lo[entering[nxt]] <= x0:
             bisect.insort(active, entering[nxt])
@@ -252,7 +248,28 @@ def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind):
             # the edge runs left to right
             g[0 if k < na else 1] += 1 if ex2 > ex1 else -1
             g[2].append(k)
-        order = sorted(groups.items(), key=lambda kv: kv[0][0] + kv[0][1])
+        yield x0, x1, sorted(groups.items(), key=lambda kv: kv[0][0] + kv[0][1])
+
+
+def _sweep(ea: np.ndarray, eb: np.ndarray, cuts: np.ndarray, ind):
+    """slab_region with the x of every crossing between its edges
+    (``cuts``) given."""
+    edge_pieces: list = []          # [tail, head] result boundary on edges
+    # a boundary piece that goes straight on from the previous slab's
+    # piece in the same direction — along an edge the whole piece lies
+    # on, or exactly collinear with it — extends that piece instead of
+    # starting a new one, so slab cuts and collinear edge joins leave no
+    # vertices on straight runs. Only a joint no other boundary piece
+    # meets is joined: the face walk needs every piece split where
+    # boundaries touch. Along a shared edge the joint is computed from
+    # that edge on both sides, so the join is exact; with the region on
+    # the same side before and after the joint no vertical piece ends
+    # there
+    ends: dict = {}                 # y at x0 -> [(piece index, region above, edges it lies on)]
+    vleft: dict = {}                # border x -> intervals approaching from the left slab
+    vright: dict = {}               # border x -> intervals from the right slab
+    area = 0.0
+    for x0, x1, order in _slabs(ea, eb, cuts):
         wa = wb = 0
         above = ind(wa, wb)
         prev = None  # (y0, y1) of the last group, if status below..above it True
@@ -413,16 +430,111 @@ def slab_union(members: list):
     return _sweep(e, e[:0], c[2], lambda w, _w: w > 0)
 
 
+def _pair_cuts(ea: np.ndarray, eb: np.ndarray):
+    """_cuts of two operands' edges, or None when one operand's own
+    edges cross properly (a self-crossing ring is an invalid polygon)."""
+    c = _cuts(ea, eb)
+    if c is None or ((c[0] < len(ea)) == (c[1] < len(ea))).any():
+        return None
+    return c
+
+
 def slab_boolean(ga, gb, op: str):
     """Boolean ``op`` of two areal geometries: the even-odd region of
-    slab_region. Returns its members, or None when an operand's own
-    edges cross properly (a self-crossing ring is an invalid polygon)
-    or the sweep refuses."""
+    slab_region. Returns its members, or None when an operand has no
+    edges or its own edges cross properly, or the sweep refuses."""
     ea = ring_edges(ga[1], ga[2])
     eb = ring_edges(gb[1], gb[2])
     if not len(ea) or not len(eb):
         return None
-    c = _cuts(ea, eb)
-    if c is None or ((c[0] < len(ea)) == (c[1] < len(ea))).any():
+    c = _pair_cuts(ea, eb)
+    return None if c is None else _sweep(ea, eb, c[2], _OPS[op])
+
+
+# DE-9IM cell (index into II IB IE BI BB BE EI EB) of a trapezoid by its
+# (A, B) parities, and the dimension of each cell when it is not empty
+_AREA_CELL = {(1, 1): 0, (1, 0): 2, (0, 1): 6}
+_CELL_DIM = "21211121"
+
+
+def slab_relate(ga, gb) -> str | None:
+    """The DE-9IM matrix of two areal geometries from one slab walk
+    (_slabs), without ring assembly. Each edge group of a slab lies on
+    ∂A, ∂B or both, by the edge ids it holds (not by the net winding:
+    coincident edges of opposite direction cancel there), and the even-odd
+    parities of A and B below and above it follow from the counts of
+    those ids:
+    - II, IE, EI are '2' when a trapezoid between two groups has area
+      with parities (odd, odd), (odd, even), (even, odd);
+    - BB is '1' when a group, or a vertical piece, holds edges of both;
+      otherwise '0' when the boundaries cross or touch
+      (geo.segment_contact_matrices), else 'F';
+    - BI / BE are '1' when a group of A's edges alone lies where B's
+      parity is odd / even, and IB / EB likewise for B's edges in A;
+      a vertical edge is split at the other operand's boundary points
+      on its border and each piece classified by the other's parity in
+      the adjacent slab (_vertical_cells).
+    Returns the 9-character matrix, or None when an operand's own edges
+    cross properly or a slab's parities do not close (numerically
+    inconsistent)."""
+    ea = ring_edges(ga[1], ga[2])
+    eb = ring_edges(gb[1], gb[2])
+    c = _pair_cuts(ea, eb)
+    if c is None:
         return None
-    return _sweep(ea, eb, c[2], _OPS[op])
+    na = len(ea)
+    e = np.concatenate([ea, eb])
+    vert: dict = {}  # border x -> [(y low, y high, is B's)] vertical edges
+    for k in np.flatnonzero(e[:, 0] == e[:, 2]).tolist():
+        vert.setdefault(e[k, 0], []).append((min(e[k, 1], e[k, 3]), max(e[k, 1], e[k, 3]), k >= na))
+    cells: set = set()
+    left: dict = {}  # border x -> [(y, A edges, B edges)] of the groups of the slab left of it
+    right: dict = {}  # ... of the slab right of it
+    for x0, x1, order in _slabs(ea, eb, c[2]):
+        pa = pb = 0
+        p0 = p1 = 0.0
+        for (y0, y1), (_da, _db, ids) in order:
+            ka = bisect.bisect_left(ids, na)  # ids ascend: A's come first
+            kb = len(ids) - ka
+            if (pa or pb) and (y0 - p0) + (y1 - p1) > 0.0:
+                cells.add(_AREA_CELL[pa, pb])
+            cells.add(4 if ka and kb else (3 if pb else 5) if ka else (1 if pa else 7))
+            if x0 in vert:
+                right.setdefault(x0, []).append((y0, ka, kb))
+            if x1 in vert:
+                left.setdefault(x1, []).append((y1, ka, kb))
+            pa ^= ka & 1
+            pb ^= kb & 1
+            p0, p1 = y0, y1
+        if pa or pb:
+            return None
+    for x, vs in vert.items():
+        _vertical_cells(vs, left.get(x), right.get(x, ()), cells)
+    m = [_CELL_DIM[i] if i in cells else "F" for i in range(8)]
+    if m[4] == "F" and (len(c[0]) or geo.segment_contact_matrices(ea.T, eb.T)[1].any()):
+        m[4] = "0"
+    return "".join(m) + "2"
+
+
+def _vertical_cells(vs: list, left, right, cells: set) -> None:
+    """Add the cells of the vertical edges ``vs`` [(y low, y high, is
+    B's)] at one border: each is split at the other operand's boundary
+    points on the border (its group ends from the ``left`` and ``right``
+    slabs, [(y, A edges, B edges)], and its vertical edge ends), and a
+    piece lies on the other's vertical edge (BB), or inside or outside
+    the other by its parity in the left slab (the right one at the
+    leftmost border)."""
+    side = left if left is not None else right
+    for lo, hi, is_b in vs:
+        o = 1 if is_b else 2  # the other operand's count in a group tuple
+        on = [(u, v) for u, v, ob in vs if ob != is_b]
+        ys = {g[0] for g in (left or ()) if g[o]} | {g[0] for g in right if g[o]}
+        ys.update(y for u, v in on for y in (u, v))
+        ys = sorted({lo, hi} | {y for y in ys if lo < y < hi})
+        for u, v in zip(ys, ys[1:]):
+            if any(a <= u and v <= b for a, b in on):
+                cells.add(4)
+            elif sum(g[o] for g in side if g[0] <= u) % 2:
+                cells.add(1 if is_b else 3)
+            else:
+                cells.add(7 if is_b else 5)

@@ -530,7 +530,7 @@ def _containment_series(container: pd.Series, contained: pd.Series, pred) -> pd.
         out[m] = _pip_against(container[fast], pts[0].to_numpy()[m], pts[1].to_numpy()[m], _pip_interior)
     if (~fast).any():
         a, b = (container[~fast], contained[~fast])
-        gen = _per_unique_pair(a, b, lambda ga, gb: pred(_relate(ga, gb)))
+        gen = _per_unique_pair(a, b, _relate_then(pred))
         out[(~fast).to_numpy()] = gen
     return pd.Series(out)
 
@@ -556,22 +556,33 @@ def st_within(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     return _containment_series(b_wkt, a_wkt, geo.pred_contains)
 
 
-def _relate(ga, gb) -> geo.Relate:
+def _relate(ga, gb) -> geo.Relate | None:
     """``geo.relate_geoms`` of two parsed geometries, a
     GEOMETRYCOLLECTION operand read through its normal form
-    (``_gc_normalized``) when that is one stratum: the kernel takes a
-    collection's members as given, and members that touch or overlap
-    then answer as separate pieces (two abutting squares did not cover a
-    box spanning their shared edge)."""
+    (``_gc_normalized``): one stratum is that geometry, several are a
+    collection of those disjoint strata. The kernel takes a collection's
+    members as given, and members that touch or overlap then answer as
+    separate pieces (two abutting squares did not cover a box spanning
+    their shared edge). None where the kernel refuses."""
 
     def one(g):
         if g[0] == "GEOMETRYCOLLECTION":
             strata = _gc_normalized(g)
-            if strata is not None and len(strata) == 1:
-                return strata[0]
+            if strata is not None:
+                return strata[0] if len(strata) == 1 else ("GEOMETRYCOLLECTION", strata, None)
         return g
 
     return geo.relate_geoms(*one(ga), *one(gb))
+
+
+def _relate_then(fn):
+    """``fn`` of a pair's ``_relate``, None (SQL null) where it refuses."""
+
+    def go(ga, gb):
+        r = _relate(ga, gb)
+        return None if r is None else fn(r)
+
+    return go
 
 
 def _per_unique_pair(a_wkt: pd.Series, b_wkt: pd.Series, fn):
@@ -593,7 +604,7 @@ def _per_unique_pair(a_wkt: pd.Series, b_wkt: pd.Series, fn):
 
 def _relation_series(a_wkt: pd.Series, b_wkt: pd.Series, pred) -> pd.Series:
     return pd.Series(
-        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: pred(_relate(ga, gb)))
+        _per_unique_pair(a_wkt, b_wkt, _relate_then(pred))
     )
 
 
@@ -646,14 +657,14 @@ def st_relate(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """DE-9IM matrix string — exact dims for point/line/polygon pairings
     (verified against canonical JTS matrices in tests); see geometry.de9im."""
     return pd.Series(
-        _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(_relate(ga, gb)))
+        _per_unique_pair(a_wkt, b_wkt, _relate_then(geo.de9im))
     )
 
 
 @F.pandas_udf(BooleanType())
 def st_relateBool(a_wkt: pd.Series, b_wkt: pd.Series, pattern: pd.Series) -> pd.Series:
     """DE-9IM pattern match: 'T' = non-F, '*' = any, else exact char."""
-    mats = _per_unique_pair(a_wkt, b_wkt, lambda ga, gb: geo.de9im(_relate(ga, gb)))
+    mats = _per_unique_pair(a_wkt, b_wkt, _relate_then(geo.de9im))
     pats = pattern.to_numpy(object)
     out = np.empty(len(mats), dtype=object)
     for i, (m, p) in enumerate(zip(mats, pats)):
@@ -679,9 +690,11 @@ def st_distance(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
             geo.planar_dist2(pa[0].to_numpy()[m], pa[1].to_numpy()[m], pb[0].to_numpy()[m], pb[1].to_numpy()[m])
         )
     if (~fast).any():
-        gen = _per_unique_pair(
-            a_wkt[~fast], b_wkt[~fast], lambda ga, gb: geo.min_distance_and_closest(*ga, *gb)[0]
-        )
+        def dist(ga, gb):
+            got = geo.min_distance_and_closest(*ga, *gb)
+            return None if got is None else got[0]
+
+        gen = _per_unique_pair(a_wkt[~fast], b_wkt[~fast], dist)
         out[(~fast).to_numpy()] = [np.nan if v is None else v for v in gen]
     return pd.Series(out)
 
@@ -690,8 +703,8 @@ def st_distance(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
 def st_closestPoint(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
     """The point ON geometry A closest to geometry B (POINT WKT)."""
     def cp(ga, gb):
-        _d, (x, y) = geo.min_distance_and_closest(*ga, *gb)
-        return geo.wkt_point(x, y)
+        got = geo.min_distance_and_closest(*ga, *gb)
+        return None if got is None else geo.wkt_point(*got[1])
 
     return pd.Series(_per_unique_pair(a_wkt, b_wkt, cp))
 
@@ -964,6 +977,10 @@ def st_convexHull(wkt: pd.Series) -> pd.Series:
     def hull(kind, coords, offs):
         c = _flat_coords(kind, coords)
         ring = geo.convex_hull(c[:, 0], c[:, 1])
+        if len(ring) == 1:
+            return geo.wkt_point(*ring[0])
+        if len(ring) == 2:
+            return geo.wkt_linestring(ring)
         return geo.wkt_polygon(ring, np.asarray([0, len(ring)]))
 
     return _per_unique(wkt, hull, object)

@@ -279,6 +279,48 @@ MULTIPART_DE9IM = [
         "POLYGON ((3 3, 5 3, 5 5, 3 5, 3 3))",
         "FF2FF1212",
     ),
+    # B fills A's hole: ∂B lies on ∂A, so EB is F although A does not
+    # cover B (the sampling relate read EB, BE off covers)
+    (
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 3, 3 3, 3 1, 1 1))",
+        "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))",
+        "FF2F112F2",
+    ),
+    # ... and its transpose
+    (
+        "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))",
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 3, 3 3, 3 1, 1 1))",
+        "FF2F1F212",
+    ),
+    # contains with shared edges, and its within
+    ("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", "212F11FF2"),
+    ("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", "2FF11F212"),
+    # a holed polygon within its own shell: the hole is EI, ∂B is all on ∂A
+    (
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 3, 3 3, 3 1, 1 1))",
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+        "2FF11F2F2",
+    ),
+    # a polygon filling the gap between two MULTIPOLYGON members
+    (
+        "POLYGON ((4 0, 10 0, 10 4, 4 4, 4 0))",
+        "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((10 0, 14 0, 14 4, 10 4, 10 0)))",
+        "FF2F11212",
+    ),
+    # a MULTIPOLYGON within a box spanning its members and the gap
+    (
+        "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 4, 0 0)), ((10 0, 14 0, 14 4, 10 4, 10 0)))",
+        "POLYGON ((0 0, 14 0, 14 4, 0 4, 0 0))",
+        "2FF11F212",
+    ),
+    # overlap with collinear boundary pieces
+    ("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", "POLYGON ((1 0, 3 0, 3 2, 1 2, 1 0))", "212111212"),
+    # a zero-width inward slit: the slit is A's boundary inside B
+    (
+        "POLYGON ((0 0, 4 0, 4 4, 2 4, 2 2, 2 4, 0 4, 0 0))",
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+        "2FF11FFF2",
+    ),
 ]
 
 
@@ -935,12 +977,11 @@ def test_gc_member_in_another_members_hole_keeps_its_area():
 
 def test_covers_slit_square():
     """A square with a zero-width inward slit (a doubled edge) covers the
-    plain square: the duplicate scanline crossings of the slit bound a
-    zero-width interval whose midpoint lies ON A's boundary, so it is no
-    escape witness."""
+    plain square: the slit's two coincident edges leave the sweep's
+    parities unchanged on either side, so no trapezoid of the square
+    lies outside A, and the slit is A's boundary inside the square."""
     slit = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 2 4, 2 2, 2 4, 0 4, 0 0))")
     sq = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
-    assert not geo._escape_witness(slit[1], slit[2], sq[1], sq[2])
     assert geo.pred_covers(geo.relate_geoms(*slit, *sq))
 
 

@@ -193,6 +193,12 @@ SQ_FAR = "POLYGON ((20 20, 30 20, 30 30, 20 30, 20 20))"
 SQ_INNER = "POLYGON ((2 2, 4 2, 4 4, 2 4, 2 2))"
 SQ_EDGE = "POLYGON ((10 0, 20 0, 20 10, 10 10, 10 0))"
 SQ_CORNER = "POLYGON ((10 10, 20 10, 20 20, 10 20, 10 10))"
+HOLED = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 3, 3 3, 3 1, 1 1))"
+HOLE = "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"
+HOLED_SHELL = "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+BOX1 = "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"
+BOX2 = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+BOX2_SHIFT = "POLYGON ((1 0, 3 0, 3 2, 1 2, 1 0))"
 CSHAPE = "POLYGON ((0 0, 10 0, 10 2, 2 2, 2 8, 10 8, 10 10, 0 10, 0 0))"
 NOTCH = "POLYGON ((5 4, 8 4, 8 6, 5 6, 5 4))"  # in C's notch: bbox overlap, disjoint
 
@@ -388,6 +394,12 @@ CANONICAL_DE9IM = [
     (SQ, SQ_SHIFT, "212101212"),               # overlaps
     (SQ, SQ_EDGE, "FF2F11212"),                # edge touch (1-dim boundary)
     (SQ, SQ_CORNER, "FF2F01212"),              # corner touch (0-dim boundary)
+    (HOLED, HOLE, "FF2F112F2"),                # B fills A's hole
+    (HOLE, HOLED, "FF2F1F212"),                # A fills B's hole
+    (BOX2, BOX1, "212F11FF2"),                 # contains, shared edges
+    (BOX1, BOX2, "2FF11F212"),                 # within, shared edges
+    (HOLED, HOLED_SHELL, "2FF11F2F2"),         # holed polygon within its shell
+    (BOX2, BOX2_SHIFT, "212111212"),           # overlap, collinear boundary pieces
     ("POINT (1 1)", "POINT (1 1)", "0FFFFFFF2"),
     # JTS: each point lies in the other's EXTERIOR → IE and EI are 0-dim
     ("POINT (1 1)", "POINT (2 2)", "FF0FFF0F2"),
@@ -1129,6 +1141,23 @@ def test_convex_hull_every_kind():
     assert got.iloc[6] == "POLYGON ((0 0, 4 0, 9 9, 0 4, 0 0))"
     assert got.iloc[5] == "POLYGON ((0 0, 1 0, 6 5, 6 6, 5 6, 0 1, 0 0))"
     assert got.iloc[2] == "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
+    # a degenerate hull is a POINT or a LINESTRING between the extreme
+    # points, as JTS writes it (was a two-vertex POLYGON ring)
+    degenerate = ["POINT (1 2)", "MULTIPOINT ((0 0), (3 1))", "MULTIPOINT ((0 0), (1 1), (3 3), (2 2))"]
+    assert list(ST.st_convexHull.func(pd.Series(degenerate))) == [
+        "POINT (1 2)", "LINESTRING (0 0, 3 1)", "LINESTRING (0 0, 3 3)",
+    ]
+
+
+def test_relation_refusal_is_null():
+    """A polygon whose own edges cross (a bowtie) is refused by the slab
+    sweep's relate: every relation function answers null for it, never
+    an exception or a guessed matrix."""
+    bowtie, sq = pd.Series(["POLYGON ((0 0, 4 4, 4 0, 0 4, 0 0))"]), pd.Series([SQ])
+    for fn in (ST.st_relate, ST.st_intersects, ST.st_covers, ST.st_contains, ST.st_closestPoint):
+        assert fn.func(bowtie, sq).iloc[0] is None, fn
+    assert ST.st_relateBool.func(bowtie, sq, pd.Series(["T********"])).iloc[0] is None
+    assert np.isnan(ST.st_distance.func(bowtie, sq).iloc[0])
 
 
 def test_idl_safe_geom_every_kind():
